@@ -8,6 +8,10 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# resolve dependencies from the local caches only, as the test suite does
+export COURSIER_MODE=offline
+export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+
 echo "[wrap] sbt Test/compile ..."
 sbt -batch Test/compile
 
@@ -15,7 +19,7 @@ if [[ "${1:-}" != "--fast" ]]; then
   OUT=/tmp/wrap_vout
   rm -rf "$OUT"
   echo "[wrap] Verify dump at sf0.001 ..."
-  SPARK_GRAFT_CPUS=8 sbt -batch "runMain graft.Verify /root/testdata/sf0.001 $OUT"
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" sbt -batch "runMain graft.Verify /root/testdata/sf0.001 $OUT"
   echo "[wrap] check.py gate ..."
   RES=$(python3 scripts/check.py /root/testdata/sf0.001 "$OUT" | tail -1)
   echo "[wrap] $RES"

@@ -16,8 +16,11 @@ import org.apache.spark.sql.functions._
   *     → advance watermark to MAX(change_ts)
   *     → record stats
   *
-  * Storage is abstracted behind reader/writer functions so the same run
-  * drives a parquet lakehouse replica, a JDBC target, or a test fixture.
+  * Every target shares that one per-table step and the FK-ordered run
+  * around it; a target supplies only its write step for the staged batch
+  * (parquet read-merge-write, JDBC stage + DB-side MERGE, a Delta commit,
+  * an Iceberg snapshot), so the same run drives a lakehouse replica, a
+  * database, or a test fixture.
   * Failure isolation matches the reference: a failing table is recorded and
   * the run continues (:348-352).
   */
@@ -97,14 +100,9 @@ object Pipeline {
       readSource: String => DataFrame,
       readTarget: String => Option[DataFrame],
       writeTarget: (String, DataFrame) => Unit,
-      watermarks: Map[String, Timestamp]): (RunReport, Map[String, Timestamp]) = {
-
-    val byName = tables.map(t => t.name -> t).toMap
-    val order = TopoSort.order(tables.map(_.name), fkEdges)
-    val results = order.flatMap(byName.get).map(spec =>
-      replicateTable(spec, readSource, readTarget, writeTarget, watermarks))
-    (RunReport(results), advanceMap(watermarks, results))
-  }
+      watermarks: Map[String, Timestamp]): (RunReport, Map[String, Timestamp]) =
+    replicateInFkOrder(tables, fkEdges, readSource, watermarks)(
+      mergeReplica(readTarget, writeTarget))
 
   /** Level-parallel replication: tables with no FK path between them sit
     * in the same topological level and replicate CONCURRENTLY (the
@@ -128,12 +126,13 @@ object Pipeline {
     val byName = tables.map(t => t.name -> t).toMap
     val byLevel = TopoSort.levels(tables.map(_.name), fkEdges)
       .groupBy(_._2).toSeq.sortBy(_._1)
+    val apply = mergeReplica(readTarget, writeTarget) _
     val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
     try {
       val results = byLevel.flatMap { case (_, names) =>
         val fs = names.flatMap(n => byName.get(n._1)).map(spec =>
-          Future(replicateTable(spec, readSource, readTarget, writeTarget, watermarks)))
+          Future(replicateTable(spec, readSource, watermarks)(apply)))
         fs.map(Await.result(_, Duration.Inf)) // level barrier
       }
       (RunReport(results), advanceMap(watermarks, results))
@@ -149,12 +148,35 @@ object Pipeline {
       }
     }
 
+  /** The serial run every target shares: tables in FK order (parents
+    * first), one [[replicateTable]] step each, then the watermark map
+    * advanced by the tables that processed.
+    */
+  private def replicateInFkOrder(
+      tables: Seq[TableSpec],
+      fkEdges: Seq[(String, String)],
+      readSource: String => DataFrame,
+      watermarks: Map[String, Timestamp])(
+      apply: (TableSpec, DataFrame) => Unit): (RunReport, Map[String, Timestamp]) = {
+    val byName = tables.map(t => t.name -> t).toMap
+    val order = TopoSort.order(tables.map(_.name), fkEdges)
+    val results = order.flatMap(byName.get).map(spec =>
+      replicateTable(spec, readSource, watermarks)(apply))
+    (RunReport(results), advanceMap(watermarks, results))
+  }
+
+  /** The per-table CDC step: the rows changed since the table's watermark
+    * (change ts = GREATEST(COALESCE(updated, created), created)), deduped
+    * to the latest row per key, handed to the target's `apply` write
+    * step. The new watermark is MAX(change ts) of the delta. A failure
+    * anywhere, write step included, is recorded and leaves the watermark
+    * where it was.
+    */
   private def replicateTable(
       spec: TableSpec,
       readSource: String => DataFrame,
-      readTarget: String => Option[DataFrame],
-      writeTarget: (String, DataFrame) => Unit,
-      watermarks: Map[String, Timestamp]): TableResult =
+      watermarks: Map[String, Timestamp])(
+      apply: (TableSpec, DataFrame) => Unit): TableResult =
     try {
       val src = readSource(spec.name)
       val chg = Cdc.changeTs(col(spec.createdAt), col(spec.updatedAt))
@@ -171,21 +193,36 @@ object Pipeline {
       } else {
         val staged = Cdc.latestPerKey(delta, spec.pk, Seq(col("__change_ts")))
           .drop("__change_ts")
-        val merged = readTarget(spec.name) match {
-          case Some(target) =>
-            val (t2, s2) = alignSchemas(target, staged)
-            Cdc.mergeSoftDelete(t2, s2, spec.pk)
-          case None => staged.filter(col(Cdc.IsDeleted) === "N")
-        }
-        writeTarget(spec.name, merged)
+        apply(spec, staged)
         TableResult(spec.name, "processed", deltaCount,
           Option(head.getAs[Timestamp]("m")))
       }
     } catch {
       case e: Exception =>
+        // some exceptions carry no message; the run report needs a string
         TableResult(spec.name, "failed", 0, watermarks.get(spec.name),
-          error = Some(e.getMessage))
+          error = Some(Option(e.getMessage).getOrElse(e.toString)))
     }
+
+  /** Rows a bootstrap load keeps, and the insert guard of every merge:
+    * a tombstone for a key the replica never had is not inserted. */
+  private def live: Column = col(Cdc.IsDeleted) === "N"
+
+  /** Parquet write step: soft-delete merge of the staged batch into the
+    * current replica (schemas aligned first), or its live rows on the
+    * initial load.
+    */
+  private def mergeReplica(
+      readTarget: String => Option[DataFrame],
+      writeTarget: (String, DataFrame) => Unit)(spec: TableSpec, staged: DataFrame): Unit = {
+    val merged = readTarget(spec.name) match {
+      case Some(target) =>
+        val (t2, s2) = alignSchemas(target, staged)
+        Cdc.mergeSoftDelete(t2, s2, spec.pk)
+      case None => staged.filter(live)
+    }
+    writeTarget(spec.name, merged)
+  }
 
   /** Database-to-database replication — the reference's exact architecture
     * (JDBC source → Spark transform → JDBC staging table → DB-side MERGE →
@@ -206,38 +243,14 @@ object Pipeline {
       dialect: graft.sources.JdbcMerge.Dialect = graft.sources.JdbcMerge.StandardDialect)
       : (RunReport, Map[String, Timestamp]) = {
     import graft.sources.{Jdbc, JdbcMerge}
-    val byName = tables.map(t => t.name -> t).toMap
-    val order = TopoSort.order(tables.map(_.name), fkEdges)
-    var newWatermarks = watermarks
-    val results = order.flatMap(byName.get).map { spec =>
-      try {
-        val src = Jdbc.read(spark, source, spec.name)
-        val chg = Cdc.changeTs(col(spec.createdAt), col(spec.updatedAt))
-        val delta = Cdc.deltaSince(src, chg, watermarks.get(spec.name).map(ts => lit(ts)))
-          .withColumn("__change_ts", chg)
-        val head = delta.agg(count(lit(1)).as("n"), max(col("__change_ts")).as("m")).head()
-        val deltaCount = head.getAs[Long]("n")
-        if (deltaCount == 0) {
-          TableResult(spec.name, "no_changes", 0, watermarks.get(spec.name))
-        } else {
-          val staged = Cdc.latestPerKey(delta, spec.pk, Seq(col("__change_ts")))
-            .drop("__change_ts")
-          val staging = s"STG_${spec.name}"
-          ensureJdbcTable(target, spec.name, staged.schema, spec.pk)
-          ensureJdbcTable(target, staging, staged.schema, Nil)
-          JdbcMerge.stageAndMerge(staged, target, spec.name, staging, spec.pk,
-            dialect = dialect)
-          val wm = Option(head.getAs[Timestamp]("m"))
-          wm.foreach(ts => newWatermarks += spec.name -> ts)
-          TableResult(spec.name, "processed", deltaCount, wm)
-        }
-      } catch {
-        case e: Exception =>
-          TableResult(spec.name, "failed", 0, watermarks.get(spec.name),
-            error = Some(e.getMessage))
-      }
+    replicateInFkOrder(tables, fkEdges, Jdbc.read(spark, source, _), watermarks) {
+      (spec, staged) =>
+        val staging = s"STG_${spec.name}"
+        ensureJdbcTable(target, spec.name, staged.schema, spec.pk)
+        ensureJdbcTable(target, staging, staged.schema, Nil)
+        JdbcMerge.stageAndMerge(staged, target, spec.name, staging, spec.pk,
+          dialect = dialect)
     }
-    (RunReport(results), newWatermarks)
   }
 
   /** Replication into DELTA-format lake tables (r13 — the reference's
@@ -257,12 +270,12 @@ object Pipeline {
     * merge rewrites ONLY the files holding matched keys — steady-state
     * incremental runs cost O(changed data), and downstream consumers
     * get the recorded change feed for free.
-    */
-  /** `checkpointEvery` (r14): every N-th merge commit also writes a
-    * classic checkpoint + `_last_checkpoint` — without it a long-lived
-    * replica replays its ENTIRE JSON log on every read, the classic
-    * unbounded-metadata scale-killer (a year of hourly runs is ~9k
-    * commits). 0 disables.
+    *
+    * @param checkpointEvery (r14) every N-th merge commit also writes a
+    *   classic checkpoint + `_last_checkpoint` — without it a long-lived
+    *   replica replays its ENTIRE JSON log on every read, the classic
+    *   unbounded-metadata scale-killer (a year of hourly runs is ~9k
+    *   commits). 0 disables.
     */
   def replicateDelta(
       spark: SparkSession,
@@ -273,45 +286,17 @@ object Pipeline {
       watermarks: Map[String, Timestamp],
       checkpointEvery: Int = 10): (RunReport, Map[String, Timestamp]) = {
     import graft.sources.DeltaWrite
-    val byName = tables.map(t => t.name -> t).toMap
-    val order = TopoSort.order(tables.map(_.name), fkEdges)
-    val results = order.flatMap(byName.get).map { spec =>
-      try {
-        val src = readSource(spec.name)
-        val chg = Cdc.changeTs(col(spec.createdAt), col(spec.updatedAt))
-        val delta = Cdc.deltaSince(src, chg,
-          watermarks.get(spec.name).map(ts => lit(ts)))
-          .withColumn("__change_ts", chg)
-        val head = delta.agg(count(lit(1)).as("n"),
-          max(col("__change_ts")).as("m")).head()
-        val deltaCount = head.getAs[Long]("n")
-        if (deltaCount == 0) {
-          TableResult(spec.name, "no_changes", 0, watermarks.get(spec.name))
-        } else {
-          val staged = Cdc.latestPerKey(delta, spec.pk, Seq(col("__change_ts")))
-            .drop("__change_ts")
-          val path = s"$targetDir/${spec.name}"
-          val v =
-            if (!java.nio.file.Files.isDirectory(
-                java.nio.file.Paths.get(path, "_delta_log")))
-              DeltaWrite.create(spark, path,
-                staged.filter(col(Cdc.IsDeleted) === "N"),
-                configuration = Map("delta.enableChangeDataFeed" -> "true"))
-            else
-              DeltaWrite.merge(spark, path, staged, spec.pk,
-                insertFilter = Some(col(Cdc.IsDeleted) === "N"))
-          if (checkpointEvery > 0 && v > 0 && v % checkpointEvery == 0)
-            graft.sources.DeltaLog.writeCheckpoint(spark, path)
-          TableResult(spec.name, "processed", deltaCount,
-            Option(head.getAs[Timestamp]("m")))
-        }
-      } catch {
-        case e: Exception =>
-          TableResult(spec.name, "failed", 0, watermarks.get(spec.name),
-            error = Some(e.getMessage))
-      }
+    replicateInFkOrder(tables, fkEdges, readSource, watermarks) { (spec, staged) =>
+      val path = s"$targetDir/${spec.name}"
+      val v =
+        if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path, "_delta_log")))
+          DeltaWrite.create(spark, path, staged.filter(live),
+            configuration = Map("delta.enableChangeDataFeed" -> "true"))
+        else
+          DeltaWrite.merge(spark, path, staged, spec.pk, insertFilter = Some(live))
+      if (checkpointEvery > 0 && v > 0 && v % checkpointEvery == 0)
+        graft.sources.DeltaLog.writeCheckpoint(spark, path)
     }
-    (RunReport(results), advanceMap(watermarks, results))
   }
 
   /** Replication into ICEBERG-format lake tables (r14 — the C37 story
@@ -337,45 +322,16 @@ object Pipeline {
       targetDir: String,
       watermarks: Map[String, Timestamp]): (RunReport, Map[String, Timestamp]) = {
     import graft.sources.IcebergCatalog
-    val byName = tables.map(t => t.name -> t).toMap
-    val order = TopoSort.order(tables.map(_.name), fkEdges)
-    val results = order.flatMap(byName.get).map { spec =>
-      try {
-        val src = readSource(spec.name)
-        val chg = Cdc.changeTs(col(spec.createdAt), col(spec.updatedAt))
-        val delta = Cdc.deltaSince(src, chg,
-          watermarks.get(spec.name).map(ts => lit(ts)))
-          .withColumn("__change_ts", chg)
-        val head = delta.agg(count(lit(1)).as("n"),
-          max(col("__change_ts")).as("m")).head()
-        val deltaCount = head.getAs[Long]("n")
-        if (deltaCount == 0) {
-          TableResult(spec.name, "no_changes", 0, watermarks.get(spec.name))
-        } else {
-          val staged = Cdc.latestPerKey(delta, spec.pk, Seq(col("__change_ts")))
-            .drop("__change_ts")
-          val path = s"$targetDir/${spec.name}"
-          if (!java.nio.file.Files.isDirectory(
-              java.nio.file.Paths.get(path, "metadata"))) {
-            IcebergCatalog.createTable(path,
-              IcebergCatalog.icebergFields(staged.schema))
-            IcebergCatalog.commitAppend(spark, path,
-              staged.filter(col(Cdc.IsDeleted) === "N"),
-              IcebergCatalog.nextSnapshotId(path))
-          } else
-            IcebergCatalog.commitMerge(spark, path, staged, spec.pk,
-              IcebergCatalog.nextSnapshotId(path),
-              insertFilter = Some(col(Cdc.IsDeleted) === "N"))
-          TableResult(spec.name, "processed", deltaCount,
-            Option(head.getAs[Timestamp]("m")))
-        }
-      } catch {
-        case e: Exception =>
-          TableResult(spec.name, "failed", 0, watermarks.get(spec.name),
-            error = Some(e.getMessage))
-      }
+    replicateInFkOrder(tables, fkEdges, readSource, watermarks) { (spec, staged) =>
+      val path = s"$targetDir/${spec.name}"
+      if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path, "metadata"))) {
+        IcebergCatalog.createTable(path, IcebergCatalog.icebergFields(staged.schema))
+        IcebergCatalog.commitAppend(spark, path, staged.filter(live),
+          IcebergCatalog.nextSnapshotId(path))
+      } else
+        IcebergCatalog.commitMerge(spark, path, staged, spec.pk,
+          IcebergCatalog.nextSnapshotId(path), insertFilter = Some(live))
     }
-    (RunReport(results), advanceMap(watermarks, results))
   }
 
   /** Zero-config replication — the reference's ENTIRE main() needing only
@@ -464,16 +420,21 @@ object Pipeline {
     }
     def write(name: String, df: DataFrame): Unit = {
       // read-modify-write on the same path needs a materialized source
-      val tmp = s"$dir/.tmp_$name"
-      df.write.mode("overwrite").parquet(tmp)
+      val tmp = new java.io.File(s"$dir/.tmp_$name")
+      df.write.mode("overwrite").parquet(tmp.toString)
       val dest = new java.io.File(s"$dir/$name")
+      val bak = new java.io.File(s"$dir/.bak_$name")
+      // a failed swap fails the table (its watermark stays put) instead of
+      // leaving the old replica in place under a "processed" result
       if (dest.exists()) {
-        val bak = new java.io.File(s"$dir/.bak_$name")
         if (bak.exists()) delete(bak)
-        dest.renameTo(bak)
+        require(dest.renameTo(bak), s"ParquetTarget: rename failed: $dest -> $bak")
       }
-      new java.io.File(tmp).renameTo(dest)
-      delete(new java.io.File(s"$dir/.bak_$name"))
+      if (!tmp.renameTo(dest)) {
+        bak.renameTo(dest) // put the previous replica back
+        throw new IllegalStateException(s"ParquetTarget: rename failed: $tmp -> $dest")
+      }
+      delete(bak)
     }
     private def delete(f: java.io.File): Unit = {
       if (f.isDirectory) f.listFiles().foreach(delete)

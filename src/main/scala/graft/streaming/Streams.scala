@@ -131,26 +131,10 @@ object Streams {
   def cdcApplyDelta(spark: SparkSession, table: String, stagedDir: String,
                     schema: org.apache.spark.sql.types.StructType,
                     pk: Seq[String], orderCol: String,
-                    insertFilter: Option[Column] = None): Int = {
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(stagedDir)
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val staged = Cdc.latestPerKey(batch, pk, Seq(col(orderCol)))
-              .drop(orderCol)
-            graft.sources.DeltaWrite.merge(batch.sparkSession, table,
-              staged, pk, insertFilter)
-          }
-          ()
-        }.start()
-      try {
-        q.processAllAvailable()
-        q.recentProgress.count(_.numInputRows > 0)
-      } finally q.stop()
+                    insertFilter: Option[Column] = None): Int =
+    drainCdcToLake(spark, stagedDir, schema, pk, orderCol) { (s, staged) =>
+      graft.sources.DeltaWrite.merge(s, table, staged, pk, insertFilter)
     }
-  }
 
   /** X66 (r14): streaming CDC apply INTO an ICEBERG table — the
     * [[cdcApplyDelta]] shape with each micro-batch landing as one v2
@@ -167,6 +151,22 @@ object Streams {
                       pk: Seq[String], orderCol: String,
                       insertFilter: Option[Column] = None): Int = {
     import graft.sources.IcebergCatalog
+    drainCdcToLake(spark, stagedDir, schema, pk, orderCol) { (s, staged) =>
+      IcebergCatalog.commitMerge(s, table, staged, pk,
+        IcebergCatalog.nextSnapshotId(table), insertFilter)
+    }
+  }
+
+  /** The lake CDC drain behind [[cdcApplyDelta]] and [[cdcApplyIceberg]]:
+    * change files admitted one per micro-batch, each non-empty batch
+    * deduped to latest-per-key (`orderCol` dropped after) and handed to
+    * `commit` with the batch's session. Returns the number of non-empty
+    * micro-batches applied.
+    */
+  private def drainCdcToLake(spark: SparkSession, stagedDir: String,
+                             schema: org.apache.spark.sql.types.StructType,
+                             pk: Seq[String], orderCol: String)(
+                             commit: (SparkSession, DataFrame) => Unit): Int =
     withStateSession(spark, 8) { iso =>
       val stream = iso.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(stagedDir)
@@ -175,8 +175,7 @@ object Streams {
           if (!batch.isEmpty) {
             val staged = Cdc.latestPerKey(batch, pk, Seq(col(orderCol)))
               .drop(orderCol)
-            IcebergCatalog.commitMerge(batch.sparkSession, table, staged,
-              pk, IcebergCatalog.nextSnapshotId(table), insertFilter)
+            commit(batch.sparkSession, staged)
           }
           ()
         }.start()
@@ -185,7 +184,6 @@ object Streams {
         q.recentProgress.count(_.numInputRows > 0)
       } finally q.stop()
     }
-  }
 
   /** X44: streaming CDC apply FROM the message bus ([[BusSource]]) —
     * the reference's incremental merge loop on its real arrival path:
@@ -206,32 +204,11 @@ object Streams {
   def cdcApplyFromBus(spark: SparkSession, initialTarget: DataFrame,
                       delta: DataFrame, pk: Seq[String],
                       orderCols: Seq[Column], busPartitions: Int,
-                      maxRowsPerTrigger: Long): DataFrame = {
-    val root = Files.createTempDirectory("graft_buscdc").toString
-    val pt = pmod(hash(pk.map(col): _*), lit(busPartitions))
-    BusSource.stage(
-      delta.withColumn("__pt", pt)
-        .withColumn("__v", to_json(struct(delta.columns.map(col): _*))),
-      root, busPartitions, col("__pt"), col("__v"), orderCols: _*)
-    var state = initialTarget.ckpt
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream
-        .format("graft.streaming.BusSourceProvider")
-        .option("path", root)
-        .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
-        .load()
-        .select(from_json(col("value"), delta.schema).as("__r"))
-        .select(col("__r.*"))
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val deduped = Cdc.latestPerKey(batch, pk, orderCols)
-          state = Cdc.mergeSoftDelete(state, deduped, pk).ckpt
-          ()
-        }.start()
-      try { q.processAllAvailable() } finally { q.stop() }
+                      maxRowsPerTrigger: Long): DataFrame =
+    drainCdcFromBus(spark, initialTarget, delta, pk, orderCols, busPartitions,
+      maxRowsPerTrigger, "graft.streaming.BusSourceProvider") {
+      root => drain => drain(Map("path" -> root))
     }
-    state
-  }
 
   /** [[cdcApplyFromBus]] with arrivals crossing the NETWORK transport:
     * the staged bus is served by an in-process TCP broker
@@ -243,21 +220,40 @@ object Streams {
   def cdcApplyFromSocketBus(spark: SparkSession, initialTarget: DataFrame,
                             delta: DataFrame, pk: Seq[String],
                             orderCols: Seq[Column], busPartitions: Int,
-                            maxRowsPerTrigger: Long): DataFrame = {
-    val root = Files.createTempDirectory("graft_sockcdc").toString
+                            maxRowsPerTrigger: Long): DataFrame =
+    drainCdcFromBus(spark, initialTarget, delta, pk, orderCols, busPartitions,
+      maxRowsPerTrigger, "graft.streaming.SocketBusProvider") {
+      root => drain =>
+        val server = BusServer.serve(root)
+        try drain(Map("host" -> "127.0.0.1", "port" -> server.port.toString))
+        finally server.close()
+    }
+
+  /** The bus CDC drain behind [[cdcApplyFromBus]] and
+    * [[cdcApplyFromSocketBus]]: stages `delta` as a keyed bus of JSON
+    * values under a temp root, then `connect(root)` runs the drain with
+    * the reader options of source `format`. The drain decodes each value
+    * with from_json and folds every micro-batch into the replica through
+    * the X2 latest-per-key + soft-delete merge.
+    */
+  private def drainCdcFromBus(spark: SparkSession, initialTarget: DataFrame,
+                              delta: DataFrame, pk: Seq[String],
+                              orderCols: Seq[Column], busPartitions: Int,
+                              maxRowsPerTrigger: Long, format: String)(
+                              connect: String => (Map[String, String] => DataFrame) => DataFrame)
+      : DataFrame = {
+    val root = Files.createTempDirectory("graft_buscdc").toString
     val pt = pmod(hash(pk.map(col): _*), lit(busPartitions))
     BusSource.stage(
       delta.withColumn("__pt", pt)
         .withColumn("__v", to_json(struct(delta.columns.map(col): _*))),
       root, busPartitions, col("__pt"), col("__v"), orderCols: _*)
-    val server = BusServer.serve(root)
-    try {
+    connect(root) { options =>
       var state = initialTarget.ckpt
       withStateSession(spark, 8) { iso =>
         val stream = iso.readStream
-          .format("graft.streaming.SocketBusProvider")
-          .option("host", "127.0.0.1")
-          .option("port", server.port.toString)
+          .format(format)
+          .options(options)
           .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
           .load()
           .select(from_json(col("value"), delta.schema).as("__r"))
@@ -271,7 +267,7 @@ object Streams {
         try { q.processAllAvailable() } finally { q.stop() }
       }
       state
-    } finally server.close()
+    }
   }
 
   /** X4: streaming exact dedup — dropDuplicates on the canonical content

@@ -136,6 +136,83 @@ class PipelineSpec extends AnyFunSuite {
     assert(wm.contains("cust") && !wm.contains("ord"))
   }
 
+  test("a failure with a null message still yields a writable run report") {
+    val dir = Files.createTempDirectory("graft_pipe_nullmsg").toString
+    val target = new Pipeline.ParquetTarget(spark, dir)
+    val src: String => DataFrame = {
+      case "cust" => customers(Seq((1L, "a", "2024-01-01 00:00:00", None, "N")))
+      case "ord"  => throw new IllegalStateException()
+    }
+    val (rep, _) = Pipeline.replicate(specs, edges, src, target.read, target.write, Map.empty)
+    val err = rep.results.find(_.table == "ord").get.error
+    assert(err == Some("java.lang.IllegalStateException"), err)
+    val f = Pipeline.writeRunReport(rep, Files.createTempDirectory("graft_runlog2").toString)
+    val lines = {
+      val s = scala.io.Source.fromFile(f); try s.getLines().toVector finally s.close()
+    }
+    assert(lines.size == 3)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(json.readTree(lines(1)).get("error").asText() == "java.lang.IllegalStateException")
+    lines.foreach(json.readTree)
+  }
+
+  test("parquet, Delta and Iceberg targets agree through the shared CDC step") {
+    import graft.sources.{DeltaLog, IcebergCatalog}
+    val run1 = Map(
+      "cust" -> customers(Seq(
+        (1L, "alice", "2024-01-01 00:00:00", None, "N"),
+        (2L, "bob", "2024-01-02 00:00:00", None, "N"),
+        (4L, "dave", "2024-01-03 00:00:00", None, "N"),
+        (9L, "ghost", "2024-01-03 00:00:00", None, "Y"))), // tombstone of a never-loaded key
+      "ord" -> customers(Seq(
+        (10L, "o-alice", "2024-01-03 00:00:00", None, "N"),
+        (11L, "o-bob", "2024-01-04 00:00:00", None, "N"))))
+    val run2 = Map(
+      "cust" -> run1("cust").unionByName(customers(Seq(
+        (2L, "bob2", "2024-01-02 00:00:00", Some("2024-02-01 00:00:00"), "N"),  // update
+        (2L, "bob3", "2024-01-02 00:00:00", Some("2024-02-02 00:00:00"), "N"),  // updated twice
+        (1L, "alice", "2024-01-01 00:00:00", Some("2024-02-03 00:00:00"), "Y"), // soft delete
+        (3L, "carol", "2024-02-02 00:00:00", None, "N"),                        // insert
+        (8L, "eve", "2024-02-02 00:00:00", None, "Y")))),                      // tombstone, absent key
+      "ord" -> run1("ord")) // unchanged
+    val cols = Seq("id", "name", "created_at", "updated_at", "is_deleted")
+
+    type Run = (Map[String, DataFrame], Map[String, Timestamp]) =>
+      (Pipeline.RunReport, Map[String, Timestamp])
+    def twoRuns(run: Run) = {
+      val (r1, wm1) = run(run1, Map.empty)
+      val (r2, wm2) = run(run2, wm1)
+      (Seq(r1, r2).map(_.results.map(r => (r.table, r.status, r.rowsProcessed, r.newWatermark))),
+        Seq(wm1, wm2))
+    }
+    def liveChecksums(read: String => DataFrame) = Seq("cust", "ord").map(t =>
+      Cdc.tableChecksum(read(t).filter(col(Cdc.IsDeleted) === "N"), cols).head())
+
+    val pq = new Pipeline.ParquetTarget(spark, Files.createTempDirectory("graft_par_pq").toString)
+    val deltaDir = Files.createTempDirectory("graft_par_delta").toString
+    val icebergDir = Files.createTempDirectory("graft_par_ice").toString
+    val viaParquet = twoRuns((src, wm) =>
+      Pipeline.replicate(specs, edges, src(_), pq.read, pq.write, wm))
+    val viaDelta = twoRuns((src, wm) =>
+      Pipeline.replicateDelta(spark, specs, edges, src(_), deltaDir, wm))
+    val viaIceberg = twoRuns((src, wm) =>
+      Pipeline.replicateIceberg(spark, specs, edges, src(_), icebergDir, wm))
+
+    val (reports, watermarks) = viaParquet
+    assert(reports(1) == Seq(
+      ("cust", "processed", 5L, Some(ts("2024-02-03 00:00:00"))),
+      ("ord", "no_changes", 0L, Some(ts("2024-01-04 00:00:00")))), reports)
+    assert(watermarks(1) == Map(
+      "cust" -> ts("2024-02-03 00:00:00"), "ord" -> ts("2024-01-04 00:00:00")))
+    assert(viaDelta == viaParquet)
+    assert(viaIceberg == viaParquet)
+
+    val want = liveChecksums(t => pq.read(t).get)
+    assert(want.map(_.getLong(0)) == Seq(3L, 2L)) // cust 2,3,4 and both orders live
+    assert(liveChecksums(t => DeltaLog.read(spark, s"$deltaDir/$t")) == want)
+    assert(liveChecksums(t => IcebergCatalog.read(spark, s"$icebergDir/$t")) == want)
+  }
+
   test("writeRunReport persists a timestamped JSONL artifact per run") {
     val dir = Files.createTempDirectory("graft_runlog").toString
     val rep = Pipeline.RunReport(Seq(
