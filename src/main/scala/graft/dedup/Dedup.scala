@@ -2,7 +2,8 @@ package graft.dedup
 
 import graft.PlanProbe.CkptOps
 import graft.functions.TextFunctions._
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.operators.Wave
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for corpus-scale pipelines.
@@ -210,6 +211,26 @@ object Dedup {
       .filter(col("cos") > threshold)
   }
 
+  /** Driver-wave connected components (r14): a local union-find over
+    * the collected pair list labels every endpoint (self-loop-only ids
+    * label themselves) with its component's min id — the exact contract
+    * both distributed forms document. The callers collect through
+    * [[graft.operators.Wave.collectIfSmall]], so only a pair list within
+    * the wave row cap lands here: one collect replaces the whole
+    * iterative loop's per-round jobs (each round = 2-3 exchanges + an
+    * eager checkpoint + a convergence action; measured ~0.15-0.5 s of
+    * fixed cost per round at any data size).
+    */
+  private def ccLocal(spark: SparkSession, pairs: Array[(Long, Long)]): DataFrame = {
+    val g = new Wave.LocalDigraph(pairs)
+    val uf = new Wave.UnionFind(g.n)
+    var e = 0
+    while (e < g.m) { uf.union(g.es(e), g.ed(e)); e += 1 }
+    import spark.implicits._
+    Array.tabulate(g.n)(i => (g.ids(i), g.ids(uf.find(i))))
+      .toSeq.toDF("doc_id", "cluster_id")
+  }
+
   /** Connected components over candidate duplicate pairs — the step that
     * turns pair lists (LSH/simhash/Jaccard output) into duplicate GROUPS
     * with one canonical keeper (the minimum id). Min-label propagation:
@@ -229,59 +250,14 @@ object Dedup {
     * @return (doc_id, cluster_id) for every endpoint; cluster_id = min id
     *         of the component
     */
-  /** Edge-count gate for the DRIVER-WAVE connected-components path (r14):
-    * at or under it, the (already projected, id-pair-sized) edge list is
-    * collected and labeled by a local union-find — one collect replaces
-    * the whole iterative loop's per-round jobs (each round = 2-3
-    * exchanges + an eager checkpoint + a convergence action; measured
-    * ~0.15-0.5 s of fixed cost per round at any data size). The labels
-    * are identical by construction (min id per component — the exact
-    * contract both distributed forms document). Above the gate the
-    * distributed loops run unchanged: the gate is measured row count,
-    * never an assumption, so big graphs can never enter the driver path.
-    * 2M edges ≈ 32 MB on the driver — the same budget posture as the
-    * r13 trussness wave mode.
-    */
-  private def ccWaveMaxEdges(df: DataFrame): Long =
-    df.sparkSession.conf.get("spark.graft.dedup.ccWaveMaxEdges", "2000000").toLong
-
-  /** Local union-find over a collected pair list; labels every endpoint
-    * (self-loop-only ids label themselves) with its component's min id.
-    */
-  private def ccLocal(idPairs: DataFrame): DataFrame = {
-    val spark = idPairs.sparkSession
-    val parent = new java.util.HashMap[Long, Long]()
-    def find(x0: Long): Long = {
-      var x = x0
-      var p = parent.getOrDefault(x, x)
-      while (p != x) { // path halving
-        val gp = parent.getOrDefault(p, p)
-        parent.put(x, gp); x = gp; p = parent.getOrDefault(x, x)
-      }
-      x
-    }
-    val nodes = new java.util.HashSet[Long]()
-    idPairs.collect().foreach { r =>
-      val a = r.getLong(0); val b = r.getLong(1)
-      nodes.add(a); nodes.add(b)
-      if (a != b) {
-        val ra = find(a); val rb = find(b)
-        if (ra != rb) parent.put(math.max(ra, rb), math.min(ra, rb))
-      }
-    }
-    // resolve every node to its component min: roots are min-id by the
-    // max-points-to-min union rule above
-    val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](nodes.size)
-    nodes.forEach(n => out += ((n, find(n))))
-    import spark.implicits._
-    out.toSeq.toDF("doc_id", "cluster_id")
-  }
-
   def connectedComponents(edges: DataFrame, maxIter: Int = 20): DataFrame = {
     val pairs = edges
       .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
       .ckpt
-    if (pairs.count() <= ccWaveMaxEdges(edges)) return ccLocal(pairs)
+    Wave.collectIfSmall(pairs, Seq("a", "b"))(Wave.pair) match {
+      case Some(local) => return ccLocal(pairs.sparkSession, local)
+      case None =>
+    }
     val sym = pairs.select(col("a").as("src"), col("b").as("dst"))
       .unionByName(pairs.select(col("b").as("src"), col("a").as("dst")))
       .ckpt
@@ -368,9 +344,12 @@ object Dedup {
       .select(col("id_a").cast("long").as("a"), col("id_b").cast("long").as("b"))
       .ckpt
     // driver-wave dispatch under the measured count gate (see
-    // connectedComponents) — identical min-id labels, one collect
+    // [[ccLocal]]) — identical min-id labels, one collect
     // instead of O(log n) star rounds
-    if (idPairs.count() <= ccWaveMaxEdges(edges)) return ccLocal(idPairs)
+    Wave.collectIfSmall(idPairs, Seq("a", "b"))(Wave.pair) match {
+      case Some(local) => return ccLocal(idPairs.sparkSession, local)
+      case None =>
+    }
     var e = idPairs
       .filter(col("a") =!= col("b"))
       .select(greatest(col("a"), col("b")).as("u"), least(col("a"), col("b")).as("v"))

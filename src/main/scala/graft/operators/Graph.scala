@@ -163,9 +163,9 @@ object Graph {
     // capFactor 2 = the doubled-table form of the waveRows gate, and the
     // waveLabels node bound doubles as int64 headroom for the ppm sums.
     // Over-cap graphs take the loop below unchanged.
-    collectDirectedIfSmall(dir, capFactor = 2) match {
+    Wave.collectIfSmall(dir, Seq("src", "dst"), capFactor = 2)(Wave.pair) match {
       case Some(pairs)
-        if pairNodeCount(pairs) <= waveLabelCap(dir.sparkSession) =>
+        if pairNodeCount(pairs) <= Wave.labelCap(dir.sparkSession) =>
         return pageRankLocal(dir.sparkSession, pairs, iterations)
       case _ =>
     }
@@ -208,7 +208,7 @@ object Graph {
   private def pageRankLocal(ss: org.apache.spark.sql.SparkSession,
                             pairs: Array[(Long, Long)],
                             iterations: Int): DataFrame = {
-    val g = new LocalDigraph(pairs)
+    val g = new Wave.LocalDigraph(pairs)
     val pr = new Array[Long](g.n)
     var has = new Array[Boolean](g.n)
     var i = 0
@@ -243,7 +243,7 @@ object Graph {
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     i = 0
     while (i < g.n) { if (has(i)) rows += ((g.ids(i), pr(i))); i += 1 }
-    localLongPairs(ss, rows.toArray, "node", "pr_ppm")
+    Wave.localResult(ss, rows.toArray, Seq("node", "pr_ppm"))
   }
 
   /** R124: personalized PageRank — proximity to a SEED SET rather than
@@ -283,9 +283,9 @@ object Graph {
     // r14 wave mode — the [[pageRankOnDir]] dispatch with the seeded
     // universe (teleport mass only on seeds, zero-inflow nodes kept)
     val wave = for {
-      pairs <- collectDirectedIfSmall(dir, capFactor = 2)
-      sd <- collectNodeIdsIfSmall(seeds, "node")
-      if pairNodeCount(pairs) + sd.length <= waveLabelCap(dir.sparkSession)
+      pairs <- Wave.collectIfSmall(dir, Seq("src", "dst"), capFactor = 2)(Wave.pair)
+      sd <- Wave.collectIdsIfSmall(seeds, "node", distinct = true)
+      if pairNodeCount(pairs) + sd.length <= Wave.labelCap(dir.sparkSession)
     } yield pprLocal(dir.sparkSession, pairs, sd, iterations)
     wave match {
       case Some(out) => return out
@@ -334,7 +334,7 @@ object Graph {
   private def pprLocal(ss: org.apache.spark.sql.SparkSession,
                        pairs: Array[(Long, Long)], sd: Array[Long],
                        iterations: Int): DataFrame = {
-    val g = new LocalDigraph(pairs, sd)
+    val g = new Wave.LocalDigraph(pairs, sd)
     val seed = new Array[Boolean](g.n)
     sd.foreach(s => seed(g.idxOf(s)) = true)
     // universe = src key set ∪ seeds (the right-joined `seeded` table);
@@ -371,7 +371,7 @@ object Graph {
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     i = 0
     while (i < g.n) { if (uni(i)) rows += ((g.ids(i), pr(i))); i += 1 }
-    localLongPairs(ss, rows.toArray, "node", "ppr_ppm")
+    Wave.localResult(ss, rows.toArray, Seq("node", "ppr_ppm"))
   }
 
   /** Per-node triangle participation and local clustering coefficient in
@@ -555,9 +555,9 @@ object Graph {
     // r14 wave mode: the synchronous histogram argmax is a pure function
     // of the previous round's labels — a local sweep replays it exactly
     // (same (count, −label) total order); dispatch as in [[pageRankOnDir]]
-    collectDirectedIfSmall(dir, capFactor = 2) match {
+    Wave.collectIfSmall(dir, Seq("src", "dst"), capFactor = 2)(Wave.pair) match {
       case Some(pairs)
-        if pairNodeCount(pairs) <= waveLabelCap(dir.sparkSession) =>
+        if pairNodeCount(pairs) <= Wave.labelCap(dir.sparkSession) =>
         return labelPropLocal(dir.sparkSession, pairs, iterations)
       case _ =>
     }
@@ -591,7 +591,7 @@ object Graph {
   private def labelPropLocal(ss: org.apache.spark.sql.SparkSession,
                              pairs: Array[(Long, Long)],
                              iterations: Int): DataFrame = {
-    val g = new LocalDigraph(pairs)
+    val g = new Wave.LocalDigraph(pairs)
     // labels are node ids, so they live in the same dense index space;
     // the histogram is a stamped count array (cleared by stamp compare,
     // not by refill) and the argmax is maintained online: counts grow
@@ -639,7 +639,7 @@ object Graph {
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     i = 0
     while (i < g.n) { if (has(i)) rows += ((g.ids(i), g.ids(lbl(i)))); i += 1 }
-    localLongPairs(ss, rows.toArray, "node", "lbl")
+    Wave.localResult(ss, rows.toArray, Seq("node", "lbl"))
   }
 
   /** Fixed-round k-core peel — repeatedly delete nodes of degree < k
@@ -924,7 +924,7 @@ object Graph {
 
   /** WAVE-MODE single-level peel (r13, the trussness barrier diet —
     * the direct-peel sibling of [[peelCandidates]]): when the level's
-    * edge set is driver-small (`spark.graft.graph.waveRows`, default
+    * edge set is driver-small ([[Wave.rowCap]], default
     * 2*10^6 — adjacency entries are exactly 2|E|, so one row count
     * gates both structures) and node ids are non-negative ints under
     * 2^31 (edge keys pack into one long), collect the edge list ONCE
@@ -941,147 +941,13 @@ object Graph {
     */
   private def kTrussCanonWave(canonical: DataFrame, k: Int,
                               rounds: Int): Option[DataFrame] = {
-    collectEdgesIfSmall(canonical).map { edges =>
-      val lp = new LocalTrussPeel(edges,
-        sys.env.contains("GRAFT_GRAPH_DEBUG"), "ktruss")
+    Wave.collectIfSmall(canonical, Seq("a", "b"), widenInt = true,
+      idBound = true)(Wave.pair).map { edges =>
+      val lp = new LocalTrussPeel(edges)
       lp.peelLevel(k, rounds)
       localSupDf(canonical, lp)
     }
   }
-
-  /** The wave gates: integral node types, edge count within
-    * `spark.graft.graph.waveRows`, ids in [0, 2^31). Returns the
-    * collected canonical edge list when ALL hold.
-    */
-  private def collectEdgesIfSmall(canonical: DataFrame)
-      : Option[Array[(Long, Long)]] = {
-    import org.apache.spark.sql.types.{IntegerType, LongType}
-    val aT = canonical.schema("a").dataType
-    val bT = canonical.schema("b").dataType
-    if (!Seq(aT, bT).forall(t => t == LongType || t == IntegerType))
-      return None
-    val waveCap = canonical.sparkSession.conf
-      .get("spark.graft.graph.waveRows", "2000000").toLong
-    if (canonical.count() > waveCap) return None
-    val ir = fastCollect(canonical.select(col("a"), col("b")))
-    val edges = new Array[(Long, Long)](ir.length)
-    val bad = new java.util.concurrent.atomic.AtomicBoolean(false)
-    java.util.stream.IntStream.range(0, ir.length).parallel().forEach { i =>
-      val r = ir(i)
-      if (r.isNullAt(0) || r.isNullAt(1)) bad.set(true)
-      else {
-        val a = if (aT == LongType) r.getLong(0) else r.getInt(0).toLong
-        val b = if (bT == LongType) r.getLong(1) else r.getInt(1).toLong
-        if (a < 0 || b < 0 || a >= (1L << 31) || b >= (1L << 31))
-          bad.set(true)
-        else edges(i) = (a, b)
-      }
-    }
-    if (bad.get) None else Some(edges)
-  }
-
-  /** Driver materialization of a small projection WITHOUT the per-row
-    * external-Row decode: the executed plan's `executeCollect` hands
-    * back the internal row batch directly (`Dataset.collect` builds a
-    * GenericRow per row — measured ~1 s of single-threaded driver decode
-    * per 2.4M-row wave collect), and the callers' primitive getters then
-    * run across driver cores.
-    */
-  private[operators] def fastCollect(df: DataFrame)
-      : Array[org.apache.spark.sql.catalyst.InternalRow] =
-    df.queryExecution.executedPlan.executeCollect()
-
-  /** Collected DIRECTED (src, dst) pair list of a (usually filtered /
-    * checkpointed) edge table, when driver-small and long-typed — the
-    * cascade-wave collector ([[collectEdgesIfSmall]] canonicalizes to
-    * undirected packed pairs; cascades need direction kept and have no
-    * id-packing, so no 2^31 bound). Nulls bail to the distributed path.
-    */
-  private def collectDirectedIfSmall(live: DataFrame,
-                                     capFactor: Long = 1L)
-      : Option[Array[(Long, Long)]] = {
-    import org.apache.spark.sql.types.LongType
-    if (!Seq("src", "dst").forall(c => live.schema(c).dataType == LongType))
-      return None
-    val waveCap = capFactor * live.sparkSession.conf
-      .get("spark.graft.graph.waveRows", "2000000").toLong
-    if (live.count() > waveCap) return None
-    val ir = fastCollect(live.select(col("src"), col("dst")))
-    val out = new Array[(Long, Long)](ir.length)
-    val bad = new java.util.concurrent.atomic.AtomicBoolean(false)
-    java.util.stream.IntStream.range(0, ir.length).parallel().forEach { i =>
-      val r = ir(i)
-      if (r.isNullAt(0) || r.isNullAt(1)) bad.set(true)
-      else out(i) = (r.getLong(0), r.getLong(1))
-    }
-    if (bad.get) None else Some(out)
-  }
-
-  /** Weighted variant of [[collectDirectedIfSmall]]: (src, dst, w), all
-    * long-typed. `capFactor = 2` for ALREADY-DOUBLED directed tables
-    * (the *OnDir staged-graph inputs hold 2 rows per canonical edge, so
-    * the cap keeps `waveRows`' canonical-edge meaning).
-    */
-  private def collectWeightedIfSmall(live: DataFrame, capFactor: Long)
-      : Option[Array[(Long, Long, Long)]] = {
-    import org.apache.spark.sql.types.LongType
-    if (!Seq("src", "dst", "w").forall(c => live.schema(c).dataType == LongType))
-      return None
-    val waveCap = capFactor * live.sparkSession.conf
-      .get("spark.graft.graph.waveRows", "2000000").toLong
-    if (live.count() > waveCap) return None
-    val ir = fastCollect(live.select(col("src"), col("dst"), col("w")))
-    val out = new Array[(Long, Long, Long)](ir.length)
-    val bad = new java.util.concurrent.atomic.AtomicBoolean(false)
-    java.util.stream.IntStream.range(0, ir.length).parallel().forEach { i =>
-      val r = ir(i)
-      if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) bad.set(true)
-      else out(i) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    if (bad.get) None else Some(out)
-  }
-
-  /** Limit-collected id column WITH duplicates kept (the sssp seed
-    * contract: duplicate seed rows flow through the distributed joins
-    * and surface as duplicate result rows, which a wave twin must
-    * reproduce). None when over-cap, null-bearing, or not long-typed.
-    */
-  private def collectIdsWithDupsIfSmall(ids: DataFrame,
-                                        name: String): Option[Array[Long]] = {
-    import org.apache.spark.sql.types.LongType
-    if (ids.schema(name).dataType != LongType) return None
-    val cap = math.min(ids.sparkSession.conf
-        .get("spark.graft.graph.waveRows", "2000000").toLong,
-      Int.MaxValue.toLong - 1L).toInt
-    val rows = ids.select(col(name)).limit(cap + 1).collect()
-    if (rows.length > cap || rows.exists(_.isNullAt(0))) None
-    else Some(rows.map(_.getLong(0)))
-  }
-
-  /** Collected distinct id panel (seeds / targets), when long-typed and
-    * within the `spark.graft.graph.waveRows` cap (limit-collected, so an
-    * over-cap panel never lands on the driver); None → distributed path.
-    */
-  private[operators] def collectNodeIdsIfSmall(ids: DataFrame,
-                                               name: String): Option[Array[Long]] = {
-    import org.apache.spark.sql.types.LongType
-    if (ids.schema(name).dataType != LongType) return None
-    val cap = math.min(ids.sparkSession.conf
-        .get("spark.graft.graph.waveRows", "2000000").toLong,
-      Int.MaxValue.toLong - 1L).toInt
-    val rows = ids.select(col(name)).distinct().limit(cap + 1).collect()
-    if (rows.length > cap || rows.exists(_.isNullAt(0))) None
-    else Some(rows.map(_.getLong(0)))
-  }
-
-  /** The wave-mode LABEL budget: a per-source label recursion holds up
-    * to |sources| x |nodes| labels on the driver, which the edge-count
-    * gate alone does not bound — `spark.graft.graph.waveLabels` caps the
-    * projected volume (default 8·10⁶ ≈ 64 MB of packed longs); over-cap
-    * instances take the distributed loops unchanged.
-    */
-  private[operators] def waveLabelCap(ss: org.apache.spark.sql.SparkSession): Long =
-    ss.conf.get("spark.graft.graph.waveLabels", "8000000").toLong
 
   /** The alive support table of a finished local peel, re-typed to the
     * canonical frame's node types.
@@ -1091,7 +957,7 @@ object Graph {
     val ss = canonical.sparkSession
     val aT = canonical.schema("a").dataType
     val bT = canonical.schema("b").dataType
-    localLongTriples(ss, lp.aliveEntries.toArray, "a", "b", "support")
+    Wave.localResult(ss, lp.aliveEntries.toArray, Seq("a", "b", "support"))
       .select(col("a").cast(aT).as("a"), col("b").cast(bT).as("b"),
         col("support"))
   }
@@ -1109,7 +975,6 @@ object Graph {
     * like the distributed cross-level seeding.
     */
   private final class LocalTrussPeel(edges: Array[(Long, Long)],
-                                     dbg: Boolean, tag: String,
                                      candidates: Option[Array[Long]] = None) {
     private def pack(a: Long, b: Long): Long = (a << 31) | b
     /** Common neighbors under the STATIC adjacency (removals ignored)
@@ -1119,7 +984,6 @@ object Graph {
     def forCommonStatic(a: Long, b: Long)(f: Long => Unit): Unit =
       common(a, b)(f)
     private val adj = {
-      val t0 = System.nanoTime()
       val b = scala.collection.mutable.LongMap
         .empty[scala.collection.mutable.ArrayBuffer[Long]]
       edges.foreach { case (x, y) =>
@@ -1128,8 +992,6 @@ object Graph {
       }
       val m = scala.collection.mutable.LongMap.empty[Array[Long]]
       b.foreach { case (v, ws) => m(v) = ws.toArray.sorted }
-      if (dbg) System.err.println(
-        f"[$tag]   wave adj ${edges.length} edges ${(System.nanoTime() - t0) / 1e9}%.2f s")
       m
     }
     private val removed = scala.collection.mutable.LongMap
@@ -1192,7 +1054,6 @@ object Graph {
       var it = 0
       var done = alive.isEmpty
       while (it < rounds && !done) {
-        val tRound = System.nanoTime()
         val wave = alive.iterator.filter(_._2 < k - 2).map(_._1).toArray
         if (wave.isEmpty) done = true
         else {
@@ -1226,9 +1087,6 @@ object Graph {
           val affSup = parSupports(affKeys)
           var j = 0
           while (j < affKeys.length) { alive(affKeys(j)) = affSup(j); j += 1 }
-          if (dbg) System.err.println(
-            f"[$tag]   wave round $it removed ${wave.length} " +
-              f"affected ${affKeys.length} ${(System.nanoTime() - tRound) / 1e9}%.2f s")
           it += 1
         }
       }
@@ -1539,8 +1397,8 @@ object Graph {
   }
 
   /** WAVE-MODE coreness (r14): when the canonical edge set passes the
-    * wave gates ([[collectEdgesIfSmall]] — count-gated by
-    * `spark.graft.graph.waveRows`, integral ids), the nested level peel
+    * wave gates ([[Wave.collectIfSmall]] — count-gated by
+    * [[Wave.rowCap]], integral ids), the nested level peel
     * runs as driver arithmetic — one collect plus one parallelized
     * result materialization replace ~4 fixed-cost Spark jobs per peel
     * round (degree aggregate, survivor stats, two-sided semi-join
@@ -1553,7 +1411,8 @@ object Graph {
     */
   private def corenessLocalWave(und: DataFrame, maxK: Int,
                                 rounds: Int): Option[DataFrame] = {
-    collectEdgesIfSmall(und).map { edges =>
+    Wave.collectIfSmall(und, Seq("a", "b"), widenInt = true,
+      idBound = true)(Wave.pair).map { edges =>
       val lp = new LocalDegreePeel(edges)
       val lvl = scala.collection.mutable.LongMap.empty[Long]
       lp.deg.foreach { case (v, d) => if (d > 0) lvl(v) = 1L }
@@ -1566,7 +1425,7 @@ object Graph {
         k += 1
       }
       val aT = und.schema("a").dataType
-      localLongPairs(und.sparkSession, lvl.toArray, "node", "coreness")
+      Wave.localResult(und.sparkSession, lvl.toArray, Seq("node", "coreness"))
         .select(col("node").cast(aT).as("node"), col("coreness"))
     }
   }
@@ -1589,7 +1448,8 @@ object Graph {
                                    delta: DataFrame, maxK: Int,
                                    rounds: Int): Option[DataFrame] = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
-    val edgesU = collectEdgesIfSmall(und) match {
+    val edgesU = Wave.collectIfSmall(und, Seq("a", "b"), widenInt = true,
+      idBound = true)(Wave.pair) match {
       case Some(e) => e
       case None => return None
     }
@@ -1672,7 +1532,7 @@ object Graph {
       k += 1
     }
     val aT = und.schema("a").dataType
-    Some(localLongPairs(und.sparkSession, lvl.toArray, "node", "coreness")
+    Some(Wave.localResult(und.sparkSession, lvl.toArray, Seq("node", "coreness"))
       .select(col("node").cast(aT).as("node"), col("coreness")))
   }
 
@@ -1761,12 +1621,12 @@ object Graph {
     // rounds local, one result materialization — levels compose in
     // [[LocalTrussPeel]] exactly like the distributed cross-level
     // seeding (level k+1 continues from level k's survivor supports)
-    collectEdgesIfSmall(und) match {
+    Wave.collectIfSmall(und, Seq("a", "b"), widenInt = true,
+      idBound = true)(Wave.pair) match {
       case Some(edges) =>
         val ss = und.sparkSession
         import ss.implicits._
-        val lp = new LocalTrussPeel(edges,
-          sys.env.contains("GRAFT_GRAPH_DEBUG"), "trussness")
+        val lp = new LocalTrussPeel(edges)
         val lvl = scala.collection.mutable.LongMap.empty[Long]
         edges.foreach { case (a, b) => lvl((a << 31) | b) = 2L }
         var k = 3
@@ -1777,10 +1637,10 @@ object Graph {
         }
         val aT = und.schema("a").dataType
         val bT = und.schema("b").dataType
-        return localLongTriples(ss,
+        return Wave.localResult(ss,
             lvl.iterator.map { case (key, l) =>
               (key >>> 31, key & ((1L << 31) - 1), l)
-            }.toArray, "a", "b", "trussness")
+            }.toArray, Seq("a", "b", "trussness"))
           .select(col("a").cast(aT).as("a"), col("b").cast(bT).as("b"),
             col("trussness"))
       case None =>
@@ -2127,7 +1987,7 @@ object Graph {
     * honest measured bounds:
     *  - the support table is POOL-bounded by construction (`nPool`
     *    rows, already counted by the caller) vs
-    *    `spark.graft.graph.waveRows` (default 2*10^6);
+    *    [[Wave.rowCap]] (default 2*10^6);
     *  - the peel's adjacency queries are keyed ONLY by pool-edge
     *    endpoints (removals and refreshes touch candidate edges
     *    alone), so the keep0 adjacency restricted to pool nodes is
@@ -2146,7 +2006,7 @@ object Graph {
     */
   private def peelCandidates(und: DataFrame, adjKeep0: DataFrame,
                              supPlan: DataFrame, nPool: Long, k: Int,
-                             rounds: Int, dbg: Boolean, tag: String,
+                             rounds: Int,
                              fallback: (DataFrame, Option[DataFrame], Int) => DataFrame)
       : DataFrame = {
     import org.apache.spark.sql.types.{IntegerType, LongType}
@@ -2155,8 +2015,7 @@ object Graph {
     val aT = und.schema("a").dataType
     val bT = und.schema("b").dataType
     val integral = Seq(aT, bT).forall(t => t == LongType || t == IntegerType)
-    val waveCap = ss.conf.get("spark.graft.graph.waveRows", "2000000").toLong
-    if (!integral || nPool > waveCap)
+    if (!integral || nPool > Wave.rowCap(ss))
       return fallback(supPlan.ckpt, None, 0)
     def num(v: Any): Long = v match {
       case l: Long => l
@@ -2166,7 +2025,6 @@ object Graph {
     def toEdges(pairs: Seq[(Long, Long)]): DataFrame =
       ss.createDataset(pairs).toDF("a", "b")
         .select(col("a").cast(aT).as("a"), col("b").cast(bT).as("b"))
-    val t0 = System.nanoTime()
     val aliveM = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
     supPlan.collect().foreach { r =>
       aliveM((num(r.get(0)), num(r.get(1)))) = num(r.get(2))
@@ -2191,9 +2049,6 @@ object Graph {
       adjLoc(num(r.get(0))) =
         r.getSeq[Any](1).iterator.map(num).toArray.sorted
     }
-    if (dbg) System.err.println(
-      f"[$tag]   wave setup pool=${aliveM.size} nodes=${poolNodes.size} " +
-        f"adjEntries=$entries ${(System.nanoTime() - t0) / 1e9}%.2f s")
     // driver-local peel: identical trajectory to the distributed
     // rounds (removals accumulate per node; supports recompute as
     // |adj0(x) intersect adj0(y)| minus removed-neighbor hits)
@@ -2230,7 +2085,6 @@ object Graph {
     var it = 0
     var done = false
     while (it < rounds && !done) {
-      val tRound = System.nanoTime()
       val wave = aliveM.iterator.filter(_._2 < k - 2).map(_._1).toArray
       if (wave.isEmpty) done = true
       else {
@@ -2256,9 +2110,6 @@ object Graph {
           }
         }
         affected.foreach { case (x, y) => aliveM((x, y)) = supportNow(x, y) }
-        if (dbg) System.err.println(
-          f"[$tag]   wave round $it removed ${wave.length} " +
-            f"affected ${affected.size} ${(System.nanoTime() - tRound) / 1e9}%.2f s")
         it += 1
       }
     }
@@ -2267,7 +2118,7 @@ object Graph {
 
   /** Fully-local incremental sweep (r13, the barrier diet's last leg):
     * when the MERGED graph passes the wave gates
-    * ([[collectEdgesIfSmall]] — count-gated, integral ids), the whole
+    * ([[Wave.collectIfSmall]] — count-gated, integral ids), the whole
     * per-level machinery (old-truss monotonicity, merged-support
     * prefilter, adaptive direct/incremental cutover, delta closure,
     * candidate peel) runs as driver arithmetic over packed edge sets:
@@ -2282,21 +2133,15 @@ object Graph {
     * unchanged.
     */
   private def trussnessIncLocal(baseLabels: DataFrame, und: DataFrame,
-                                delta: DataFrame, maxK: Int, rounds: Int,
-                                dbg: Boolean): Option[DataFrame] = {
-    val edgesU = collectEdgesIfSmall(und) match {
+                                delta: DataFrame, maxK: Int,
+                                rounds: Int): Option[DataFrame] = {
+    val edgesU = Wave.collectIfSmall(und, Seq("a", "b"), widenInt = true,
+      idBound = true)(Wave.pair) match {
       case Some(e) => e
       case None => return None
     }
     val ss = und.sparkSession
-    import ss.implicits._
-    def num(v: Any): Long = v match {
-      case l: Long => l
-      case i: Int => i.toLong
-      case other => throw new IllegalStateException(s"non-integral id $other")
-    }
     def pack(a: Long, b: Long): Long = (a << 31) | b
-    val t0 = System.nanoTime()
     // delta edges and base labels are subsets of the merged graph's
     // edge/id space — bounded by the same cap that admitted edgesU;
     // non-integral label frames bail out before any local work
@@ -2311,7 +2156,7 @@ object Graph {
     def decodePacked(df: DataFrame, withVal: Boolean)
         : (Array[Long], Array[Long]) = {
       val fs = df.schema.fields
-      val ir = fastCollect(df)
+      val ir = Wave.fastCollect(df)
       val keys = new Array[Long](ir.length)
       val vals = if (withVal) new Array[Long](ir.length) else null
       java.util.stream.IntStream.range(0, ir.length).parallel().forEach { i =>
@@ -2337,12 +2182,9 @@ object Graph {
     }
     // merged-graph structure + per-edge merged support, all local:
     // LocalTrussPeel's initial supports ARE ms(a,b) = |N(a) ∩ N(b)|
-    val merged = new LocalTrussPeel(edgesU, dbg, "trussinc")
+    val merged = new LocalTrussPeel(edgesU)
     val ms = scala.collection.mutable.LongMap.empty[Long]
     merged.aliveEntries.foreach { case (a, b, s) => ms(pack(a, b)) = s }
-    if (dbg) System.err.println(
-      f"[trussinc] local prep ${edgesU.length} edges " +
-        f"${(System.nanoTime() - t0) / 1e9}%.2f s")
     def unpackEdges(keys: Iterable[Long]): Array[(Long, Long)] =
       keys.iterator.map(k => (k >>> 31, k & ((1L << 31) - 1))).toArray
     val labels = scala.collection.mutable.LongMap.empty[Long]
@@ -2355,7 +2197,6 @@ object Graph {
     var k = 3
     var empty = false
     while (k <= maxK && !empty) {
-      val tLevel = System.nanoTime()
       // monotonicity: the old k-truss survives any edge addition
       val oldTruss = scala.collection.mutable.LongMap.empty[Unit]
       labelsBase.foreach { case (key, t) => if (t >= k) oldTruss(key) = () }
@@ -2367,15 +2208,12 @@ object Graph {
       }
       val nPool = pool.size.toLong
       val nPrev = prevSet.size.toLong
-      if (dbg) System.err.println(
-        s"[trussinc] k=$k pool=$nPool prev=$nPrev branch=" +
-          (if (nPool * 2 > nPrev) "direct" else "incremental") + " (local)")
       val truss: scala.collection.mutable.LongMap[Unit] =
         if (nPool * 2 > nPrev) {
           // direct peel of the whole level — fresh supports within
           // prev (≡ the distributed branch's seeded kTrussCanon)
           val lp = new LocalTrussPeel(unpackEdges(prevSet.keysIterator
-            .to(Iterable)), dbg, "trussinc")
+            .to(Iterable)))
           lp.peelLevel(k, rounds)
           val out = scala.collection.mutable.LongMap.empty[Unit]
           lp.aliveKeys.foreach(out(_) = ())
@@ -2408,8 +2246,6 @@ object Graph {
                 frontier = next.keysIterator.toArray
                 r += 1
               }
-              if (dbg) System.err.println(
-                s"[trussinc]   closure $r rounds (local)")
               acc
             }
           // candidate peel within keep0 = oldTruss ∪ reached: the old
@@ -2418,7 +2254,7 @@ object Graph {
           oldTruss.foreachKey(keep0(_) = ())
           reached.foreachKey(keep0(_) = ())
           val lp = new LocalTrussPeel(
-            unpackEdges(keep0.keysIterator.to(Iterable)), dbg, "trussinc",
+            unpackEdges(keep0.keysIterator.to(Iterable)),
             candidates = Some(reached.keysIterator.toArray))
           lp.peelLevel(k, rounds)
           val out = scala.collection.mutable.LongMap.empty[Unit]
@@ -2428,8 +2264,6 @@ object Graph {
           }
           out
         }
-      if (dbg) System.err.println(
-        f"[trussinc] k=$k level took ${(System.nanoTime() - tLevel) / 1e9}%.2f s (local)")
       empty = truss.isEmpty
       if (!empty) truss.foreachKey(key => labels(key) = k.toLong)
       prevSet = truss
@@ -2437,72 +2271,13 @@ object Graph {
     }
     val aT = und.schema("a").dataType
     val bT = und.schema("b").dataType
-    val tOut = System.nanoTime()
-    val out = localLongTriples(ss,
+    val out = Wave.localResult(ss,
       labels.iterator.map { case (key, l) =>
         (key >>> 31, key & ((1L << 31) - 1), l)
-      }.toArray, "a", "b", "trussness")
+      }.toArray, Seq("a", "b", "trussness"))
       .select(col("a").cast(aT).as("a"), col("b").cast(bT).as("b"),
         col("trussness"))
-    if (dbg) System.err.println(
-      f"[trussinc] result assembly ${(System.nanoTime() - tOut) / 1e9}%.2f s")
     Some(out)
-  }
-
-  /** Edge-label result materialization for the driver-wave sweeps (r14):
-    * `createDataset(bigSeq)` row-encodes the whole result ON THE DRIVER
-    * and plans it as a single-partition LocalRelation, so the caller's
-    * orderBy/count then sorts 10⁶ rows in one task (measured ~5 s of the
-    * trussness_inc gate). Parallelizing the raw tuples ships the packed
-    * longs to executors and builds/sorts rows at the configured width.
-    */
-  private[operators] def localLongTriples(ss: org.apache.spark.sql.SparkSession,
-                                          rows: Array[(Long, Long, Long)],
-                                          n1: String, n2: String, n3: String): DataFrame = {
-    val parts = math.max(1, math.min(ss.sparkContext.defaultParallelism,
-      rows.length / 50000 + 1))
-    val rdd = ss.sparkContext.parallelize(rows.toIndexedSeq, parts)
-      .map { case (a, b, c) => org.apache.spark.sql.Row(a, b, c) }
-    ss.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(n1,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(n2,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(n3,
-        org.apache.spark.sql.types.LongType, nullable = false))))
-  }
-
-  /** Two-column variant of [[localLongTriples]] for node-label results
-    * (r14): same rationale — parallelize the packed longs so row
-    * encoding and any downstream sort run at executor width instead of
-    * on a one-partition LocalRelation.
-    */
-  private[operators] def localLongPairs(ss: org.apache.spark.sql.SparkSession,
-                                        rows: Array[(Long, Long)],
-                                        n1: String, n2: String): DataFrame = {
-    val parts = math.max(1, math.min(ss.sparkContext.defaultParallelism,
-      rows.length / 50000 + 1))
-    val rdd = ss.sparkContext.parallelize(rows.toIndexedSeq, parts)
-      .map { case (a, b) => org.apache.spark.sql.Row(a, b) }
-    ss.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(n1,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(n2,
-        org.apache.spark.sql.types.LongType, nullable = false))))
-  }
-
-  /** Four-column variant of [[localLongTriples]] (forest rows). */
-  private[operators] def localLongQuads(ss: org.apache.spark.sql.SparkSession,
-                                        rows: Array[(Long, Long, Long, Long)],
-                                        n1: String, n2: String, n3: String,
-                                        n4: String): DataFrame = {
-    val parts = math.max(1, math.min(ss.sparkContext.defaultParallelism,
-      rows.length / 50000 + 1))
-    val rdd = ss.sparkContext.parallelize(rows.toIndexedSeq, parts)
-      .map { case (a, b, c, d) => org.apache.spark.sql.Row(a, b, c, d) }
-    ss.createDataFrame(rdd, org.apache.spark.sql.types.StructType(
-      Seq(n1, n2, n3, n4).map(n => org.apache.spark.sql.types.StructField(n,
-        org.apache.spark.sql.types.LongType, nullable = false))))
   }
 
   def trussnessIncremental(baseLabels: DataFrame, baseEdges: DataFrame,
@@ -2514,20 +2289,15 @@ object Graph {
       df.select(least(col("src"), col("dst")).as("a"),
           greatest(col("src"), col("dst")).as("b"))
         .filter(col("a") =!= col("b")).distinct()
-    val dbg0 = sys.env.contains("GRAFT_GRAPH_DEBUG")
-    val tPrep = System.nanoTime()
-    def lap(tag: String): Unit = if (dbg0) System.err.println(
-      f"[trussinc] prep $tag ${(System.nanoTime() - tPrep) / 1e9}%.2f s cum")
     // canonicalize the delta ONCE (r12): it feeds both the merged set
     // and the closure seeds — the second evaluation re-ran the caller's
     // whole delta-edge construction (the gate's lineitem self-join)
     val delta = canon(deltaEdges).ckpt
     val und = canon(baseEdges).unionAll(delta).distinct()
       .ckpt
-    lap("und")
     // wave sweep first (r13): a driver-small merged graph runs the
     // whole level machinery locally — see [[trussnessIncLocal]]
-    trussnessIncLocal(baseLabels, und, delta, maxK, rounds, dbg0) match {
+    trussnessIncLocal(baseLabels, und, delta, maxK, rounds) match {
       case Some(result) => return result
       case None =>
     }
@@ -2540,7 +2310,6 @@ object Graph {
       .groupBy(col("v"))
       .agg(sort_array(collect_list(col("w"))).as("ns"))
       .ckpt
-    lap("adjAll")
     // merged-graph support of EVERY merged edge, computed ONCE (r11):
     // the per-level pool prefilter below needs ms(a,b) = |N(a) ∩ N(b)|
     // against the STATIC merged adjacency — recomputing the full
@@ -2552,7 +2321,6 @@ object Graph {
       .select(col("a"), col("b"),
         size(array_intersect(col("na"), col("nb"))).as("ms"))
       .ckpt
-    lap("mergedSupport")
     var labels = und.select(col("a"), col("b"), lit(2L).as("lvl"))
     var prev = und // edge set of the new (k-1)-truss
     // supports on `prev` when the last level ran the DIRECT peel (r12
@@ -2607,11 +2375,6 @@ object Graph {
       // `prev` directly and skip the per-edge bookkeeping.
       val nPool = pool.count()
       val nPrev = prev.count()
-      val dbg = sys.env.contains("GRAFT_GRAPH_DEBUG")
-      val tLevel = System.nanoTime()
-      if (dbg) System.err.println(
-        s"[trussinc] k=$k pool=$nPool prev=$nPrev branch=" +
-          (if (nPool * 2 > nPrev) "direct" else "incremental"))
       val truss = (if (nPool * 2 > nPrev) {
         val supK = kTrussCanon(prev, k, rounds, levelSup, hubFree).ckpt
         levelSup = Some(supK)
@@ -2631,7 +2394,6 @@ object Graph {
         // the pool.
         val seeds = delta.join(pool, Seq("a", "b"), "left_semi").ckpt
         val nSeeds = seeds.count()
-        val tClosure = System.nanoTime()
         var reached =
           if (nSeeds * 20 >= nPool) pool
           else {
@@ -2649,8 +2411,6 @@ object Graph {
               acc = acc.unionAll(frontier)
               r += 1
             }
-            if (dbg) System.err.println(
-              f"[trussinc]   closure $r rounds ${(System.nanoTime() - tClosure) / 1e9}%.2f s")
             acc
           }
         // candidate-only peel: support = triangles whose other two
@@ -2693,13 +2453,10 @@ object Graph {
           var it = it0
           var done = false
           while (it < rounds && !done) {
-            val tRound = System.nanoTime()
             val surviving = aliveSup.filter(col("support") >= k - 2)
             val removed = aliveSup.filter(col("support") < k - 2)
               .select(col("a"), col("b")).ckpt
             val nRemoved = removed.count()
-            if (dbg) System.err.println(
-              f"[trussinc]   peel round $it removed $nRemoved filter+ckpt ${(System.nanoTime() - tRound) / 1e9}%.2f s")
             if (nRemoved == 0) done = true
             else {
               removedAcc = Some(removedAcc match {
@@ -2732,8 +2489,6 @@ object Graph {
               aliveSup = surviving
                 .join(affectedB, Seq("a", "b"), "left_anti")
                 .unionAll(refreshed).ckpt
-              if (dbg) System.err.println(
-                f"[trussinc]   peel round $it total ${(System.nanoTime() - tRound) / 1e9}%.2f s")
               it += 1
             }
           }
@@ -2741,11 +2496,9 @@ object Graph {
             .select(col("a"), col("b"))
         }
         val alive = peelCandidates(und, adjKeep0, supPlan, nPool, k, rounds,
-          dbg, "trussinc", peelDistributed)
+          peelDistributed)
         if (alive.isEmpty) oldTruss else oldTruss.unionAll(alive)
       }).ckpt
-      if (dbg) System.err.println(
-        f"[trussinc] k=$k level took ${(System.nanoTime() - tLevel) / 1e9}%.2f s")
       empty = truss.isEmpty
       if (!empty)
         labels = labels.unionAll(
@@ -3121,10 +2874,10 @@ object Graph {
     // multiplier (a k-seed walk holds k labels per node). Over-cap
     // inputs take the distributed vector/row paths below unchanged.
     val wave = for {
-      pairs <- collectDirectedIfSmall(dir, capFactor = 2)
-      sd <- collectNodeIdsIfSmall(seeds, "node")
+      pairs <- Wave.collectIfSmall(dir, Seq("src", "dst"), capFactor = 2)(Wave.pair)
+      sd <- Wave.collectIdsIfSmall(seeds, "node", distinct = true)
       if (pairNodeCount(pairs) + sd.length) * math.max(sd.length, 1L) <=
-        waveLabelCap(dir.sparkSession)
+        Wave.labelCap(dir.sparkSession)
     } yield betweennessLocal(dir.sparkSession, pairs, sd, rounds)
     wave match {
       case Some(out) => return out
@@ -3256,8 +3009,8 @@ object Graph {
                                rounds: Int): DataFrame = {
     val k = sd.length
     if (k == 0)
-      return localLongPairs(ss, Array.empty[(Long, Long)], "node", "bc_ppm")
-    val g = new LocalDigraph(pairs, sd)
+      return Wave.localResult(ss, Array.empty[(Long, Long)], Seq("node", "bc_ppm"))
+    val g = new Wave.LocalDigraph(pairs, sd)
     val n = g.n
     val member = java.util.Arrays.copyOf(g.isSrc, n)
     sd.foreach(s => member(g.idxOf(s)) = true)
@@ -3352,7 +3105,7 @@ object Graph {
       if (any) rows += ((g.ids(i), bc))
       i += 1
     }
-    localLongPairs(ss, rows.toArray, "node", "bc_ppm")
+    Wave.localResult(ss, rows.toArray, Seq("node", "bc_ppm"))
   }
 
   /** R134: eigenvector centrality by power iteration with exact
@@ -3389,8 +3142,8 @@ object Graph {
     // on non-doubled directed inputs — the distributed form turns it
     // into NULL scores) bails back to the loop below.
     val wave = for {
-      pairs <- collectDirectedIfSmall(dir, capFactor = 2)
-      if pairNodeCount(pairs) <= waveLabelCap(dir.sparkSession)
+      pairs <- Wave.collectIfSmall(dir, Seq("src", "dst"), capFactor = 2)(Wave.pair)
+      if pairNodeCount(pairs) <= Wave.labelCap(dir.sparkSession)
       out <- eigenvectorLocal(dir.sparkSession, pairs, iterations)
     } yield out
     wave match {
@@ -3436,7 +3189,7 @@ object Graph {
   private def eigenvectorLocal(ss: org.apache.spark.sql.SparkSession,
                                pairs: Array[(Long, Long)],
                                iterations: Int): Option[DataFrame] = {
-    val g = new LocalDigraph(pairs)
+    val g = new Wave.LocalDigraph(pairs)
     val x = new Array[Long](g.n)
     var has = java.util.Arrays.copyOf(g.isSrc, g.n)
     var i = 0
@@ -3470,7 +3223,7 @@ object Graph {
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     i = 0
     while (i < g.n) { if (has(i)) rows += ((g.ids(i), x(i))); i += 1 }
-    Some(localLongPairs(ss, rows.toArray, "node", "ev_ppm"))
+    Some(Wave.localResult(ss, rows.toArray, Seq("node", "ev_ppm")))
   }
 
   /** R135: degree assortativity — "do hubs link to hubs" (Newman 2002).
@@ -3595,10 +3348,10 @@ object Graph {
     // as local arithmetic (duplicate seed rows kept: they surface as
     // duplicate result rows distributed, so the twin reproduces them)
     val wave = for {
-      tri <- collectWeightedIfSmall(dir, capFactor = 2)
-      sd <- collectIdsWithDupsIfSmall(seeds, "node")
+      tri <- Wave.collectIfSmall(dir, Seq("src", "dst", "w"), capFactor = 2)(Wave.triple)
+      sd <- Wave.collectIdsIfSmall(seeds, "node", distinct = false)
       if pairNodeCount(tri.map(t => (t._1, t._2))) + sd.length <=
-        waveLabelCap(dir.sparkSession)
+        Wave.labelCap(dir.sparkSession)
     } yield ssspLocal(dir.sparkSession, tri, sd, rounds)
     wave match {
       case Some(out) => return out
@@ -3651,7 +3404,7 @@ object Graph {
   private def ssspLocal(ss: org.apache.spark.sql.SparkSession,
                         tri: Array[(Long, Long, Long)], sd: Array[Long],
                         rounds: Int): DataFrame = {
-    val g = new LocalDigraph(tri.map(t => (t._1, t._2)), sd)
+    val g = new Wave.LocalDigraph(tri.map(t => (t._1, t._2)), sd)
     // edge weights in CSR emission order: rebuild the per-source layout
     // the same way LocalDigraph.csr does, carrying w alongside (off the
     // precomputed source-index array — no per-edge id lookups)
@@ -3712,7 +3465,7 @@ object Graph {
       }
       i += 1
     }
-    localLongPairs(ss, rows.toArray, "node", "dist")
+    Wave.localResult(ss, rows.toArray, Seq("node", "dist"))
   }
 
   /** R139: HITS hubs and authorities on a DIRECTED graph (Kleinberg
@@ -3743,8 +3496,8 @@ object Graph {
     // half-step order and both scalar normalizations replay locally, and
     // a zero round max (NULL scores distributed) bails to the loop
     val wave = for {
-      pairs <- collectDirectedIfSmall(dir, capFactor = 2)
-      if pairNodeCount(pairs) <= waveLabelCap(dir.sparkSession)
+      pairs <- Wave.collectIfSmall(dir, Seq("src", "dst"), capFactor = 2)(Wave.pair)
+      if pairNodeCount(pairs) <= Wave.labelCap(dir.sparkSession)
       out <- hitsLocal(dir.sparkSession, pairs, iterations)
     } yield out
     wave match {
@@ -3789,7 +3542,7 @@ object Graph {
   private def hitsLocal(ss: org.apache.spark.sql.SparkSession,
                         pairs: Array[(Long, Long)],
                         iterations: Int): Option[DataFrame] = {
-    val g = new LocalDigraph(pairs)
+    val g = new Wave.LocalDigraph(pairs)
     val h = new Array[Long](g.n)
     var hasH = java.util.Arrays.copyOf(g.isSrc, g.n)
     var i = 0
@@ -3851,26 +3604,8 @@ object Graph {
           if (hasA(i)) java.lang.Long.valueOf(a(i)) else null))
       i += 1
     }
-    Some(localNullableTriples(ss, rows.toArray, "node", "hub_ppm", "auth_ppm"))
-  }
-
-  /** [[localLongTriples]] with NULLABLE second/third columns — the
-    * full-outer result shape (hub/authority merges).
-    */
-  private def localNullableTriples(ss: org.apache.spark.sql.SparkSession,
-                                   rows: Array[(Long, java.lang.Long, java.lang.Long)],
-                                   n1: String, n2: String, n3: String): DataFrame = {
-    val parts = math.max(1, math.min(ss.sparkContext.defaultParallelism,
-      rows.length / 50000 + 1))
-    val rdd = ss.sparkContext.parallelize(rows.toIndexedSeq, parts)
-      .map { case (a, b, c) => org.apache.spark.sql.Row(a, b, c) }
-    ss.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(n1,
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField(n2,
-        org.apache.spark.sql.types.LongType, nullable = true),
-      org.apache.spark.sql.types.StructField(n3,
-        org.apache.spark.sql.types.LongType, nullable = true))))
+    Some(Wave.localResult(ss, rows.toArray, Seq("node", "hub_ppm", "auth_ppm"),
+      nullable = Set("hub_ppm", "auth_ppm")))
   }
 
   /** R140: common-neighbor link prediction with exact neighborhood
@@ -4053,8 +3788,8 @@ object Graph {
     // the distributed label set after round k is exactly the nodes
     // within k live hops, which BFS layers reproduce by construction.
     val wave = for {
-      pairs <- collectDirectedIfSmall(live)
-      sd <- collectNodeIdsIfSmall(seeds, "node")
+      pairs <- Wave.collectIfSmall(live, Seq("src", "dst"))(Wave.pair)
+      sd <- Wave.collectIdsIfSmall(seeds, "node", distinct = true)
       out <- cascadeLabelsLocal(edges.sparkSession, pairs, sd, rounds)
     } yield out
     wave.getOrElse {
@@ -4083,13 +3818,13 @@ object Graph {
     val nodes = scala.collection.mutable.LongMap.empty[Unit]
     pairs.foreach { case (u, v) => nodes(u) = (); nodes(v) = () }
     sd.foreach(s => nodes(s) = ())
-    if (sd.length.toLong * nodes.size.toLong > waveLabelCap(ss)) return None
-    val adj = directedAdjacency(pairs)
+    if (sd.length.toLong * nodes.size.toLong > Wave.labelCap(ss)) return None
+    val adj = Wave.adjacency(pairs)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long)]
     sd.foreach { s =>
-      localDirectedBfs(adj, Seq(s), rounds).foreachKey(v => out += ((s, v)))
+      Wave.bfs(adj, Seq(s), rounds).foreachKey(v => out += ((s, v)))
     }
-    Some(localLongPairs(ss, out.toArray, "seed", "node"))
+    Some(Wave.localResult(ss, out.toArray, Seq("seed", "node")))
   }
 
   /** Distinct endpoint count of a collected pair list. */
@@ -4097,113 +3832,6 @@ object Graph {
     val n = scala.collection.mutable.LongMap.empty[Unit]
     pairs.foreach { case (u, v) => n(u) = (); n(v) = () }
     n.size.toLong
-  }
-
-  /** Dense-index CSR image of a collected (src, dst) pair list — the
-    * shared substrate of the r14 numeric wave sweeps (a LongMap-per-edge
-    * accumulation measured ~2.6 s/gate driver-side at 2.4M edges; the
-    * indexed-array form is O(E) per round with zero per-edge allocation).
-    * `extra` indexes panel ids (seeds) that may lie outside the edge set.
-    */
-  private final class LocalDigraph(pairs: Array[(Long, Long)],
-                                   extra: Array[Long] = Array.emptyLongArray) {
-    val m: Int = pairs.length
-    // Sorted-unique dense index (parallel sort + in-place dedup + binary
-    // search) instead of an insertion-ordered LongMap: the hash build
-    // was ~0.5 s of single-threaded work per 2.4M-edge wave collect; the
-    // sort path uses every driver core. Index ORDER differs (sorted vs
-    // first-seen) — no twin reads meaning into the dense index, only
-    // into the id it maps back to, and every sweep's arithmetic is
-    // keyed by id values.
-    val ids: Array[Long] = {
-      val all = new Array[Long](2 * m + extra.length)
-      java.util.stream.IntStream.range(0, m).parallel().forEach { i =>
-        all(2 * i) = pairs(i)._1
-        all(2 * i + 1) = pairs(i)._2
-      }
-      System.arraycopy(extra, 0, all, 2 * m, extra.length)
-      java.util.Arrays.parallelSort(all)
-      var w = 0
-      var i = 0
-      while (i < all.length) {
-        if (w == 0 || all(i) != all(w - 1)) { all(w) = all(i); w += 1 }
-        i += 1
-      }
-      java.util.Arrays.copyOf(all, w)
-    }
-    val n: Int = ids.length
-    /** Dense index of an id KNOWN to be in pairs ∪ extra. */
-    def idxOf(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
-    private[operators] val es = new Array[Int](m)
-    private[operators] val ed = new Array[Int](m)
-    locally {
-      java.util.stream.IntStream.range(0, m).parallel().forEach { i =>
-        es(i) = idxOf(pairs(i)._1)
-        ed(i) = idxOf(pairs(i)._2)
-      }
-    }
-    /** Whether index i occurs as an edge source (the deg-table key set). */
-    val isSrc: Array[Boolean] = {
-      val b = new Array[Boolean](n)
-      var i = 0
-      while (i < m) { b(es(i)) = true; i += 1 }
-      b
-    }
-    private def csr(key: Array[Int], value: Array[Int]): (Array[Int], Array[Int]) = {
-      val off = new Array[Int](n + 1)
-      var i = 0
-      while (i < m) { off(key(i) + 1) += 1; i += 1 }
-      i = 0
-      while (i < n) { off(i + 1) += off(i); i += 1 }
-      val pos = java.util.Arrays.copyOf(off, n + 1)
-      val tgt = new Array[Int](m)
-      i = 0
-      while (i < m) { tgt(pos(key(i))) = value(i); pos(key(i)) += 1; i += 1 }
-      (off, tgt)
-    }
-    /** Out-adjacency: targets of u are outTgt[outOff(u) until outOff(u+1)). */
-    val (outOff, outTgt) = csr(es, ed)
-    /** In-adjacency, built on first use (only histogram sweeps need it). */
-    lazy val (inOff, inSrc) = csr(ed, es)
-  }
-
-  /** Directed adjacency arrays over collected (src, dst) pairs. */
-  private def directedAdjacency(pairs: Array[(Long, Long)])
-      : scala.collection.mutable.LongMap[Array[Long]] = {
-    val b = scala.collection.mutable.LongMap
-      .empty[scala.collection.mutable.ArrayBuffer[Long]]
-    pairs.foreach { case (u, v) =>
-      b.getOrElseUpdate(u, scala.collection.mutable.ArrayBuffer.empty) += v
-    }
-    val m = scala.collection.mutable.LongMap.empty[Array[Long]]
-    b.foreach { case (u, vs) => m(u) = vs.toArray }
-    m
-  }
-
-  /** Driver-local multi-source DIRECTED bounded BFS: node → hop layer
-    * (≤ rounds) from the seed set — the wave twin of the frontier
-    * distinct-union loops (after round r the settled set holds exactly
-    * the nodes within r directed hops, at their first-reached layer).
-    */
-  private def localDirectedBfs(
-      adj: scala.collection.mutable.LongMap[Array[Long]],
-      seedSet: Iterable[Long], rounds: Int)
-      : scala.collection.mutable.LongMap[Long] = {
-    val layer = scala.collection.mutable.LongMap.empty[Long]
-    seedSet.foreach(s => layer(s) = 0L)
-    var frontier = layer.keysIterator.toArray
-    var r = 1
-    while (r <= rounds && frontier.nonEmpty) {
-      val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-      frontier.foreach { u =>
-        adj.getOrElse(u, Array.emptyLongArray).foreach { v =>
-          if (!layer.contains(v)) { layer(v) = r.toLong; next += v }
-        }
-      }
-      frontier = next.toArray
-      r += 1
-    }
-    layer
   }
 
   /** R187: one greedy influence-maximization step — with the best single
@@ -4237,6 +3865,32 @@ object Graph {
         (col("union_reach") - col("base_reach")).as("marginal"))
   }
 
+  /** Driver-local greedy k-center pick sequence — mirrors
+    * [[kCenterGreedy]]'s trajectory exactly: first center = min node
+    * id; each further pick = argmax of (bounded-BFS distance to the
+    * current centers, tie → smaller id), unreached = rounds+1.
+    */
+  private def localKCenterPicks(adj: scala.collection.mutable.LongMap[Array[Long]],
+                                k: Int, rounds: Int): Seq[(Long, Long, Long)] = {
+    val first = adj.keysIterator.min
+    var picks = Seq((first, 1L, 0L))
+    val centers = scala.collection.mutable.ArrayBuffer(first)
+    for (i <- 2 to k) {
+      val dist = Wave.bfs(adj, centers, rounds)
+      var bestNode = Long.MinValue
+      var bestDist = -1L
+      adj.keysIterator.foreach { v =>
+        val d = dist.getOrElse(v, rounds.toLong + 1)
+        if (d > bestDist || (d == bestDist && v < bestNode)) {
+          bestNode = v; bestDist = d
+        }
+      }
+      picks = picks :+ ((bestNode, i.toLong, bestDist))
+      centers += bestNode
+    }
+    picks
+  }
+
   /** R188: greedy k-center selection (Gonzalez 1985 — the 2-approximation
     * for minimizing the max distance to a center, and data curation's
     * "pick k maximally diverse exemplars" routine): start from the
@@ -4254,74 +3908,6 @@ object Graph {
     *         picked node's distance to the previous centers (0 for the
     *         first center)
     */
-  /** Undirected adjacency arrays over a collected canonical edge list —
-    * shared by the r14 driver-wave sweeps.
-    */
-  private def localAdjacency(edges: Array[(Long, Long)])
-      : scala.collection.mutable.LongMap[Array[Long]] = {
-    val b = scala.collection.mutable.LongMap
-      .empty[scala.collection.mutable.ArrayBuffer[Long]]
-    edges.foreach { case (x, y) =>
-      b.getOrElseUpdate(x, scala.collection.mutable.ArrayBuffer.empty) += y
-      b.getOrElseUpdate(y, scala.collection.mutable.ArrayBuffer.empty) += x
-    }
-    val m = scala.collection.mutable.LongMap.empty[Array[Long]]
-    b.foreach { case (v, ws) => m(v) = ws.toArray }
-    m
-  }
-
-  /** Driver-local multi-source bounded BFS: node → min hop distance
-    * (≤ rounds) from the seed set — the wave twin of the settled-table
-    * relaxation loops (identical fixpoint per round: after round r the
-    * settled table holds exactly the nodes within r hops at their hop
-    * distance).
-    */
-  private def localBfs(adj: scala.collection.mutable.LongMap[Array[Long]],
-                       seeds: Iterable[Long], rounds: Int)
-      : scala.collection.mutable.LongMap[Long] = {
-    val dist = scala.collection.mutable.LongMap.empty[Long]
-    seeds.foreach(s => dist(s) = 0L)
-    var frontier = dist.keysIterator.toArray
-    var r = 1
-    while (r <= rounds && frontier.nonEmpty) {
-      val next = scala.collection.mutable.ArrayBuffer.empty[Long]
-      frontier.foreach { v =>
-        adj.getOrElse(v, Array.emptyLongArray).foreach { w =>
-          if (!dist.contains(w)) { dist(w) = r.toLong; next += w }
-        }
-      }
-      frontier = next.toArray
-      r += 1
-    }
-    dist
-  }
-
-  /** Driver-local greedy k-center pick sequence — mirrors
-    * [[kCenterGreedy]]'s trajectory exactly: first center = min node
-    * id; each further pick = argmax of (bounded-BFS distance to the
-    * current centers, tie → smaller id), unreached = rounds+1.
-    */
-  private def localKCenterPicks(adj: scala.collection.mutable.LongMap[Array[Long]],
-                                k: Int, rounds: Int): Seq[(Long, Long, Long)] = {
-    val first = adj.keysIterator.min
-    var picks = Seq((first, 1L, 0L))
-    val centers = scala.collection.mutable.ArrayBuffer(first)
-    for (i <- 2 to k) {
-      val dist = localBfs(adj, centers, rounds)
-      var bestNode = Long.MinValue
-      var bestDist = -1L
-      adj.keysIterator.foreach { v =>
-        val d = dist.getOrElse(v, rounds.toLong + 1)
-        if (d > bestDist || (d == bestDist && v < bestNode)) {
-          bestNode = v; bestDist = d
-        }
-      }
-      picks = picks :+ ((bestNode, i.toLong, bestDist))
-      centers += bestNode
-    }
-    picks
-  }
-
   def kCenterGreedy(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
@@ -4332,10 +3918,11 @@ object Graph {
     // wave sweep first (r14): k−1 bounded BFS passes over a
     // driver-small graph are pure driver arithmetic — the distributed
     // loop pays rounds ckpt'd relaxations per pick at any data size
-    collectEdgesIfSmall(und) match {
+    Wave.collectIfSmall(und, Seq("a", "b"), widenInt = true,
+      idBound = true)(Wave.pair) match {
       case Some(es) if es.nonEmpty =>
         import und.sparkSession.implicits._
-        return localKCenterPicks(localAdjacency(es), k, rounds)
+        return localKCenterPicks(Wave.adjacency(es ++ es.map(_.swap)), k, rounds)
           .toDF("center", "pick_order", "dist_at_pick")
       case _ =>
     }
@@ -4392,12 +3979,13 @@ object Graph {
     // wave sweep first (r14): the greedy picks AND the coverage BFS run
     // locally over one collected edge list; the histogram is ≤ rounds+2
     // rows
-    collectEdgesIfSmall(und) match {
+    Wave.collectIfSmall(und, Seq("a", "b"), widenInt = true,
+      idBound = true)(Wave.pair) match {
       case Some(es) if es.nonEmpty =>
         import und.sparkSession.implicits._
-        val adj = localAdjacency(es)
+        val adj = Wave.adjacency(es ++ es.map(_.swap))
         val centers = localKCenterPicks(adj, k, rounds).map(_._1)
-        val dist = localBfs(adj, centers.distinct, rounds)
+        val dist = Wave.bfs(adj, centers.distinct, rounds)
         val hist = scala.collection.mutable.LongMap.empty[Long]
         adj.keysIterator.foreach { v =>
           val d = dist.getOrElse(v, rounds.toLong + 1)
@@ -4458,13 +4046,8 @@ object Graph {
     // driver-small canonical edge list the identical pick trajectory —
     // per-component min by the (w, a, b) total order, min-id component
     // labels, first-pick-phase retention — is a few array sweeps.
-    val wave = for {
-      tri <- collectWeightedIfSmall(
-        und.select(col("a").as("src"), col("b").as("dst"), col("w")),
-        capFactor = 1)
-    } yield boruvkaLocal(edges.sparkSession, tri, phases)
-    wave match {
-      case Some(out) => return out
+    Wave.collectIfSmall(und, Seq("a", "b", "w"))(Wave.triple) match {
+      case Some(tri) => return boruvkaLocal(edges.sparkSession, tri, phases)
       case None =>
     }
     val nodes = und.select(col("a").as("node"))
@@ -4518,12 +4101,10 @@ object Graph {
   private def boruvkaLocal(ss: org.apache.spark.sql.SparkSession,
                            tri: Array[(Long, Long, Long)],
                            phases: Int): DataFrame = {
-    val g = new LocalDigraph(tri.map(t => (t._1, t._2)))
+    val g = new Wave.LocalDigraph(tri.map(t => (t._1, t._2)))
     val n = g.n
     val m = tri.length
-    val comp = new Array[Int](n)
-    var i = 0
-    while (i < n) { comp(i) = i; i += 1 }
+    var comp = Array.tabulate(n)(identity)
     val inForest = new Array[Boolean](m)
     val phaseOf = new Array[Long](m)
     // e1 strictly smaller than e2 by (w, a, b)
@@ -4534,14 +4115,6 @@ object Graph {
         val ca = java.lang.Long.compare(tri(e1)._1, tri(e2)._1)
         if (ca != 0) ca < 0 else tri(e1)._2 < tri(e2)._2
       }
-    }
-    val parent = new Array[Int](n)
-    def find(x: Int): Int = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-      r
     }
     var phase = 1
     while (phase <= phases) {
@@ -4563,27 +4136,15 @@ object Graph {
         if (be >= 0 && !inForest(be)) { inForest(be) = true; phaseOf(be) = phase.toLong }
         c += 1
       }
-      // relabel: min node id per forest component (isolated = own id)
-      i = 0
-      while (i < n) { parent(i) = i; i += 1 }
+      // relabel: the min-id node's index per forest component
+      // (isolated = own index)
+      val uf = new Wave.UnionFind(n)
       e = 0
       while (e < m) {
-        if (inForest(e)) {
-          val ra = find(g.es(e)); val rb = find(g.ed(e))
-          if (ra != rb) parent(ra) = rb
-        }
+        if (inForest(e)) uf.union(g.es(e), g.ed(e))
         e += 1
       }
-      val minId = new Array[Long](n)
-      java.util.Arrays.fill(minId, Long.MaxValue)
-      i = 0
-      while (i < n) {
-        val r = find(i)
-        if (g.ids(i) < minId(r)) minId(r) = g.ids(i)
-        i += 1
-      }
-      i = 0
-      while (i < n) { comp(i) = g.idxOf(minId(find(i))); i += 1 }
+      comp = Array.tabulate(n)(uf.find)
       phase += 1
     }
     val rows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
@@ -4592,7 +4153,7 @@ object Graph {
       if (inForest(e)) rows += ((tri(e)._1, tri(e)._2, tri(e)._3, phaseOf(e)))
       e += 1
     }
-    localLongQuads(ss, rows.toArray, "a", "b", "w", "phase")
+    Wave.localResult(ss, rows.toArray, Seq("a", "b", "w", "phase"))
   }
 
   /** R178: independent-cascade influence spread (Kempe–Kleinberg–Tardos
@@ -4628,13 +4189,11 @@ object Graph {
     // multi-source BFS (layer = first-reached round) replaces the
     // per-round join/anti-join/ckpt machinery on driver-small live sets
     val wave = for {
-      pairs <- collectDirectedIfSmall(live)
-      sd <- collectNodeIdsIfSmall(seeds, "node")
+      pairs <- Wave.collectIfSmall(live, Seq("src", "dst"))(Wave.pair)
+      sd <- Wave.collectIdsIfSmall(seeds, "node", distinct = true)
     } yield {
-      val layers = localDirectedBfs(directedAdjacency(pairs), sd, rounds)
-      localLongPairs(edges.sparkSession,
-        layers.iterator.map { case (v, r) => (v, r) }.toArray,
-        "node", "round")
+      val layers = Wave.bfs(Wave.adjacency(pairs), sd, rounds)
+      Wave.localResult(edges.sparkSession, layers.toArray, Seq("node", "round"))
     }
     wave.getOrElse {
       var settled = seeds.select(col("node")).distinct()

@@ -47,8 +47,8 @@ object TemporalGraph {
     // runs as local min-label sweeps (see [[minLabelSweep]]). Over-cap
     // graphs take the loop below unchanged.
     val wave = for {
-      tri <- collectTriplesIfSmall(e)
-      sd <- Graph.collectNodeIdsIfSmall(seeds, "node")
+      tri <- Wave.collectIfSmall(e, Seq("src", "dst", "t"))(Wave.triple)
+      sd <- Wave.collectIdsIfSmall(seeds, "node", distinct = true)
       out <- earliestArrivalLocal(e.sparkSession, tri, sd, rounds)
     } yield out
     wave.getOrElse {
@@ -91,8 +91,8 @@ object TemporalGraph {
     // sweep per start (arr seeded at `start` instead of 0); the label
     // budget gate multiplies by |starts|, the price of exactness
     val wave = for {
-      tri <- collectTriplesIfSmall(e)
-      sd <- Graph.collectNodeIdsIfSmall(seeds, "node")
+      tri <- Wave.collectIfSmall(e, Seq("src", "dst", "t"))(Wave.triple)
+      sd <- Wave.collectIdsIfSmall(seeds, "node", distinct = true)
       out <- fastestJourneyLocal(e.sparkSession, tri, sd, rounds)
     } yield out
     wave.getOrElse {
@@ -147,8 +147,8 @@ object TemporalGraph {
     // r14 wave mode: the max-label mirror — reverse adjacency, offers
     // gated t <= dep, candidates take the max, frontier = increased
     val wave = for {
-      tri <- collectTriplesIfSmall(e)
-      tg <- Graph.collectNodeIdsIfSmall(targets, "node")
+      tri <- Wave.collectIfSmall(e, Seq("src", "dst", "t"))(Wave.triple)
+      tg <- Wave.collectIdsIfSmall(targets, "node", distinct = true)
       out <- latestDepartureLocal(e.sparkSession, tri, tg, rounds, horizon)
     } yield out
     wave.getOrElse {
@@ -171,29 +171,6 @@ object TemporalGraph {
 
   // ───────── r14 driver-wave plumbing (the coreness/k-center dispatch
   // applied to the fixed-round temporal label recursions) ─────────
-
-  /** The temporal wave collector: long-typed src/dst, edge count within
-    * `spark.graft.graph.waveRows`; nulls bail to the distributed path.
-    * `e` must already be the (src, dst, t: long) projection.
-    */
-  private def collectTriplesIfSmall(e: DataFrame)
-      : Option[Array[(Long, Long, Long)]] = {
-    import org.apache.spark.sql.types.LongType
-    if (!Seq("src", "dst").forall(c => e.schema(c).dataType == LongType))
-      return None
-    val waveCap = e.sparkSession.conf
-      .get("spark.graft.graph.waveRows", "2000000").toLong
-    if (e.count() > waveCap) return None
-    val ir = Graph.fastCollect(e)
-    val out = new Array[(Long, Long, Long)](ir.length)
-    val bad = new java.util.concurrent.atomic.AtomicBoolean(false)
-    java.util.stream.IntStream.range(0, ir.length).parallel().forEach { i =>
-      val r = ir(i)
-      if (r.isNullAt(0) || r.isNullAt(1) || r.isNullAt(2)) bad.set(true)
-      else out(i) = (r.getLong(0), r.getLong(1), r.getLong(2))
-    }
-    if (bad.get) None else Some(out)
-  }
 
   /** Interleaved temporal adjacency: key → [nbr0, t0, nbr1, t1, ...],
     * forward (src → dst) or reverse (dst → src).
@@ -300,7 +277,7 @@ object TemporalGraph {
                                    tri: Array[(Long, Long, Long)],
                                    sd: Array[Long], rounds: Int)
       : Option[DataFrame] = {
-    if (sd.length.toLong * nodeCount(tri, sd) > Graph.waveLabelCap(ss))
+    if (sd.length.toLong * nodeCount(tri, sd) > Wave.labelCap(ss))
       return None
     val adj = temporalAdjacency(tri, forward = true)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
@@ -309,7 +286,7 @@ object TemporalGraph {
         out += ((s, v, a))
       }
     }
-    Some(Graph.localLongTriples(ss, out.toArray, "seed", "node", "arr"))
+    Some(Wave.localResult(ss, out.toArray, Seq("seed", "node", "arr")))
   }
 
   private def fastestJourneyLocal(ss: org.apache.spark.sql.SparkSession,
@@ -327,7 +304,7 @@ object TemporalGraph {
       (s, ts.keysIterator.toArray)
     }
     val totalStarts = starts.iterator.map(_._2.length.toLong).sum
-    if (totalStarts * nodeCount(tri, sd) > Graph.waveLabelCap(ss))
+    if (totalStarts * nodeCount(tri, sd) > Wave.labelCap(ss))
       return None
     val best = scala.collection.mutable.HashMap.empty[(Long, Long), Long]
     starts.foreach { case (s, ts) =>
@@ -343,14 +320,14 @@ object TemporalGraph {
     }
     val out = sd.map(s => (s, s, 0L)) ++
       best.iterator.map { case ((s, v), d) => (s, v, d) }
-    Some(Graph.localLongTriples(ss, out, "seed", "node", "dur"))
+    Some(Wave.localResult(ss, out, Seq("seed", "node", "dur")))
   }
 
   private def latestDepartureLocal(ss: org.apache.spark.sql.SparkSession,
                                    tri: Array[(Long, Long, Long)],
                                    tg: Array[Long], rounds: Int,
                                    horizon: Long): Option[DataFrame] = {
-    if (tg.length.toLong * nodeCount(tri, tg) > Graph.waveLabelCap(ss))
+    if (tg.length.toLong * nodeCount(tri, tg) > Wave.labelCap(ss))
       return None
     val radj = temporalAdjacency(tri, forward = false)
     val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
@@ -359,6 +336,6 @@ object TemporalGraph {
         out += ((g, v, d))
       }
     }
-    Some(Graph.localLongTriples(ss, out.toArray, "target", "node", "dep"))
+    Some(Wave.localResult(ss, out.toArray, Seq("target", "node", "dep")))
   }
 }

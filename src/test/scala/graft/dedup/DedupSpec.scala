@@ -62,7 +62,7 @@ class DedupSpec extends AnyFunSuite {
     // Force the DISTRIBUTED path (wave gate off) — the r14 driver-wave
     // union-find always converges, so the guard lives on the loop branch.
     val chain = (1L until 8L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    spark.conf.set("spark.graft.dedup.ccWaveMaxEdges", "0")
+    spark.conf.set("spark.graft.graph.waveRows", "0")
     try {
       val e = intercept[IllegalStateException](
         Dedup.connectedComponents(chain, maxIter = 2).collect())
@@ -71,7 +71,7 @@ class DedupSpec extends AnyFunSuite {
       val ok = Dedup.connectedComponents(chain, maxIter = 10)
         .as[(Long, Long)].collect().toMap
       assert(ok.values.toSet == Set(1L))
-    } finally spark.conf.unset("spark.graft.dedup.ccWaveMaxEdges")
+    } finally spark.conf.unset("spark.graft.graph.waveRows")
   }
 
   test("r14 wave CC: local union-find ≡ both distributed forms, self-loops and singleton ids kept") {
@@ -83,7 +83,7 @@ class DedupSpec extends AnyFunSuite {
       .as[(Long, Long)].collect().toMap
     val waveStar = Dedup.connectedComponentsStar(edges)
       .as[(Long, Long)].collect().toMap
-    spark.conf.set("spark.graft.dedup.ccWaveMaxEdges", "0")
+    spark.conf.set("spark.graft.graph.waveRows", "0")
     try {
       val dist = Dedup.connectedComponents(edges, maxIter = 60)
         .as[(Long, Long)].collect().toMap
@@ -91,7 +91,7 @@ class DedupSpec extends AnyFunSuite {
         .as[(Long, Long)].collect().toMap
       assert(wave == dist && waveStar == distStar && wave == waveStar)
       assert(wave(200L) == 200L)
-    } finally spark.conf.unset("spark.graft.dedup.ccWaveMaxEdges")
+    } finally spark.conf.unset("spark.graft.graph.waveRows")
   }
 
   test("star CC: deep chain converges in O(log n) rounds, matches min-label on random graphs") {
