@@ -2,7 +2,7 @@
 # End-of-round wrap gate: NO snapshot commit may land without this passing.
 #
 #   scripts/wrap.sh            # Test/compile + full sf0.001 gate (~5 min)
-#   scripts/wrap.sh --fast     # Test/compile only (~30 s)
+#   scripts/wrap.sh --fast     # memo guard + Test/compile only (~30 s)
 #
 # Exit 0 = safe to commit. Any red build or gate failure exits non-zero.
 set -euo pipefail
@@ -11,6 +11,12 @@ cd "$(dirname "$0")/.."
 # resolve dependencies from the local caches only, as the test suite does
 export COURSIER_MODE=offline
 export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.config=$HOME/.sbt/repositories -Dsbt.offline=true -Xmx4g}"
+
+# shared inputs are staged through graft.Staged only: no per-file memo maps
+if grep -nE 'computeIfAbsent|ConcurrentHashMap' src/main/scala/graft/Queries*.scala; then
+  echo "[wrap] per-file memo in Queries*.scala — stage through graft.Staged"
+  exit 1
+fi
 
 echo "[wrap] sbt Test/compile ..."
 sbt -batch Test/compile

@@ -24,45 +24,29 @@ object QueriesR15 {
   // Staged order-contact graph (r14): the distinct customer→part-supplier
   // contact events from orders⋈lineitem — the shared input of the six
   // temporal/cascade gates below, which each rebuilt it (~2 s at sf0.1:
-  // a broadcast-side timestamp-cast scan plus the join+distinct). Same
-  // once-per-process discipline as the staged co-purchase tables
-  // (QueriesR6.coPurchaseWeighted): persist() compressed columnar, eager
-  // count, keyed by (applicationId, dir) so a restarted context can
-  // never see a stale handle. At production scale this is the bucketed
-  // materialization of the contact fact the gates would all read.
-  private val contactMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  // a broadcast-side timestamp-cast scan plus the join+distinct). At
+  // production scale this is the bucketed materialization of the contact
+  // fact the gates would all read.
 
   /** Distinct (c, p, t) contact triples, t = order-date day number. */
   private[graft] def contactTriples(s: SparkSession, dir: String): DataFrame =
-    contactMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
-      val d = t(s, dir, "orders")
+    Staged.frame(s, dir, "contact_triples")(
+      t(s, dir, "orders")
         .join(t(s, dir, "lineitem").select(col("l_orderkey"), col("l_suppkey")),
           col("o_orderkey") === col("l_orderkey"))
         .select(col("o_custkey").as("c"),
           (col("l_suppkey") + 1000000L).as("p"),
           expr("unix_micros(CAST(o_orderdate AS TIMESTAMP)) div 86400000000")
             .as("t"))
-        .distinct()
-        .persist()
-      d.count()
-      d
-    })
-
-  private val contactPairsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+        .distinct())
 
   /** Distinct (c, p) contact pairs — the untimed projection of
     * [[contactTriples]] (identical pair set: distinct of a projection of
     * a distinct join is the distinct projection of the join).
     */
   private[graft] def contactPairs(s: SparkSession, dir: String): DataFrame =
-    contactPairsMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
-      val d = contactTriples(s, dir).select(col("c"), col("p")).distinct()
-        .persist()
-      d.count()
-      d
-    })
+    Staged.frame(s, dir, "contact_pairs")(
+      contactTriples(s, dir).select(col("c"), col("p")).distinct())
 
   /** Money columns in integer cents: exact in both engines. */
   private def cents(c: org.apache.spark.sql.Column) =

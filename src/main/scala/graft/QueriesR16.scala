@@ -26,28 +26,14 @@ object QueriesR16 {
     */
   val bpeMerges = 24
 
-  // One training per (SparkContext, data dir): the merges and end-state
-  // tables are vocabulary-sized and ckpt'd, and FOUR gates consume them
-  // (merges, tokenize, pack, mixture) — the coPurchaseWeighted staging
-  // idiom applied to the tokenizer. At production scale this is the
-  // "train once, broadcast the vocab everywhere" deployment shape.
-  private val bpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (DataFrame, DataFrame)]()
-
-  private def bpeTrained(s: SparkSession, dir: String)
+  // One staged training: the merges and end-state tables are
+  // vocabulary-sized and ckpt'd, and FOUR gates consume them (merges,
+  // tokenize, pack, mixture). At production scale this is the "train
+  // once, broadcast the vocab everywhere" deployment shape.
+  private[graft] def bpeTrained(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    bpeMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ =>
+    Staged(s, dir, "bpe")(
       Bpe.train(t(s, dir, "documents"), col("text"), bpeMerges))
-
-  /** Force the shared trained-BPE staging for this (session, dir) —
-    * called by [[Bench]] before its timed loop so no gate's measured
-    * time silently carries the one-time training build.
-    */
-  private[graft] def stageShared(s: SparkSession, dir: String): Unit = {
-    val (merges, endState) = bpeTrained(s, dir)
-    merges.count(); endState.count()
-  }
 
   /** Per-doc (doc_id, source, n_bpe) off the shared trained state. */
   private def bpeDocCounts(s: SparkSession, dir: String): DataFrame = {
@@ -444,12 +430,9 @@ object QueriesR16 {
   // protocol-faithful logs/manifests incl. a remove/replace commit),
   // read it back through the graft readers, and hash-compare against
   // plain SQL over the source table: the readers' correctness becomes
-  // oracle-backed, not just spec-backed. Built once per process (the
-  // staging memo idiom); the build cost is a handful of tiny writes.
+  // oracle-backed, not just spec-backed. Staged; the build cost is a
+  // handful of tiny writes.
   // ---------------------------------------------------------------
-
-  private val tableBuildMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
 
   private def writeSingleParquet(df: DataFrame,
                                  target: java.nio.file.Path): Unit = {
@@ -470,15 +453,11 @@ object QueriesR16 {
   private def centsBal = (col("s_acctbal").cast("decimal(12,2)") * 100)
     .cast("long")
 
-  /** The memoized (read-only) F14b table path for cross-round gates. */
-  private[graft] def deltaTablePath(s: SparkSession, dir: String): String =
-    buildDeltaTable(s, dir)
+  /** The staged (read-only) F14b table. */
+  private[graft] def buildDeltaTable(s: SparkSession, dir: String): String =
+    Staged(s, dir, "delta")(buildDeltaFresh(s, dir))
 
-  private def buildDeltaTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta"),
-      _ => buildDeltaFresh(s, dir))
-
+  /** A fresh, unstaged F14b table for fixtures that change it. */
   private[graft] def buildDeltaFresh(s: SparkSession, dir: String): String = {
         val t0 = java.nio.file.Files.createTempDirectory("delta_rt")
         val sup = t(s, dir, "supplier").select(col("s_suppkey"),
@@ -550,15 +529,14 @@ object QueriesR16 {
     * checkpoint the engine wrote.
     */
   private def buildDeltaCkTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_ck"), _ => {
-        val t0 = buildDeltaFresh(s, dir)
-        val v = graft.sources.DeltaLog.writeCheckpoint(s, t0)
-        require(v == 3L, s"checkpoint landed at version $v, want 3")
-        (0L to v).foreach(i => java.nio.file.Files.deleteIfExists(
-          java.nio.file.Paths.get(t0, "_delta_log", f"$i%020d.json")))
-        t0
-      })
+    Staged(s, dir, "delta_ck") {
+      val t0 = buildDeltaFresh(s, dir)
+      val v = graft.sources.DeltaLog.writeCheckpoint(s, t0)
+      require(v == 3L, s"checkpoint landed at version $v, want 3")
+      (0L to v).foreach(i => java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(t0, "_delta_log", f"$i%020d.json")))
+      t0
+    }
 
   /** F14b: Delta round-trip — the [[graft.sources.DeltaLog]] reader
     * against a table this gate wrote (partitioned adds + a
@@ -580,18 +558,12 @@ object QueriesR16 {
       .orderBy(col("s_suppkey"))
 
   private def buildIcebergTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg"),
-      _ => buildIcebergFresh(s, dir))
+    Staged(s, dir, "iceberg")(buildIcebergFresh(s, dir))
 
-  /** Fresh (non-memoized) F15b fixture for gates that MUTATE the table
-    * after building (r11: snapshot expiration) — the memoized copies
-    * must never be touched.
+  /** Fresh (unstaged) F15b fixture for gates that MUTATE the table after
+    * building (r11: snapshot expiration).
     */
-  private[graft] def buildIcebergFreshFor(s: SparkSession, dir: String): String =
-    buildIcebergFresh(s, dir)
-
-  private def buildIcebergFresh(s: SparkSession, dir: String): String = {
+  private[graft] def buildIcebergFresh(s: SparkSession, dir: String): String = {
         import graft.sources.IcebergCatalog._
         val t0 = java.nio.file.Files.createTempDirectory("ice_rt")
         val mdir = t0.resolve("metadata")
@@ -672,15 +644,14 @@ object QueriesR16 {
     * list + v2.metadata.json all engine-written.
     */
   private def buildIcebergDelTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_del"), _ => {
-        val t0 = buildIcebergFresh(s, dir)
-        val snap = graft.sources.IcebergCatalog.commitPositionDelete(
-          s, t0, "rk=3/f0.parquet", col("n_nationkey") % 2 === 1,
-          snapshotId = 40L)
-        require(snap == 40L)
-        t0
-      })
+    Staged(s, dir, "iceberg_del") {
+      val t0 = buildIcebergFresh(s, dir)
+      val snap = graft.sources.IcebergCatalog.commitPositionDelete(
+        s, t0, "rk=3/f0.parquet", col("n_nationkey") % 2 === 1,
+        snapshotId = 40L)
+      require(snap == 40L)
+      t0
+    }
 
   /** F15b: Iceberg round-trip — the [[graft.sources.IcebergCatalog]]
     * reader against a table this gate wrote (Avro manifests with
@@ -702,17 +673,16 @@ object QueriesR16 {
     * over every live data file (snapshot 41).
     */
   private def buildIcebergEqDelTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_eqdel"), _ => {
-        val t0 = buildIcebergFresh(s, dir)
-        val doomed = t(s, dir, "nation")
-          .filter(col("n_nationkey").isin(7L, 21L))
-          .select(col("n_name"))
-        val snap = graft.sources.IcebergCatalog.commitEqualityDelete(
-          s, t0, Seq("n_name"), doomed, snapshotId = 41L)
-        require(snap == 41L)
-        t0
-      })
+    Staged(s, dir, "iceberg_eqdel") {
+      val t0 = buildIcebergFresh(s, dir)
+      val doomed = t(s, dir, "nation")
+        .filter(col("n_nationkey").isin(7L, 21L))
+        .select(col("n_name"))
+      val snap = graft.sources.IcebergCatalog.commitEqualityDelete(
+        s, t0, Seq("n_name"), doomed, snapshotId = 41L)
+      require(snap == 41L)
+      t0
+    }
 
   /** F15d (r10): Iceberg EQUALITY-DELETE write — the engine writes the
     * delete parquet with the doomed value tuples, the content=2

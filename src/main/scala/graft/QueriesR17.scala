@@ -20,24 +20,12 @@ object QueriesR17 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  // One training per (SparkContext, data dir): vocabulary-sized tables,
-  // ckpt'd, consumed by three gates — the BPE staging idiom.
-  private val uniMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (DataFrame, DataFrame)]()
-
-  private def uniTrained(s: SparkSession, dir: String)
+  // One staged training: vocabulary-sized tables, ckpt'd, consumed by
+  // three gates.
+  private[graft] def uniTrained(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    uniMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ =>
+    Staged(s, dir, "unigram")(
       Unigram.train(t(s, dir, "documents"), col("text")))
-
-  /** Force the shared trained-unigram staging for this (session, dir) —
-    * called by [[Bench]] before its timed loop (the stageShared idiom).
-    */
-  private[graft] def stageShared(s: SparkSession, dir: String): Unit = {
-    val (vocab, dp) = uniTrained(s, dir)
-    vocab.count(); dp.count()
-  }
 
   /** Trained unigram piece inventory off the shared staging — the T37
     * WordPiece gates consume it as their piece inventory.
@@ -613,11 +601,6 @@ object QueriesR17 {
       .limit(100)
   }
 
-  // Avro round-trip staging: written once per (session, dir) — the
-  // format-gate memo idiom of the Delta/Iceberg round-trips.
-  private val avroMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** F16: Avro container round-trip — documents written to one Avro
     * object-container file per partition through
     * [[graft.sources.AvroTable]] (avro-core, already on Spark's
@@ -632,36 +615,35 @@ object QueriesR17 {
     * be invisible.
     */
   def avroRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = avroMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_avro").toString
-        graft.sources.AvroTable.write(
-          t(s, dir, "documents")
-            .select(col("doc_id"), col("source"),
-              length(col("text")).cast("long").as("n_chars"),
-              when(col("doc_id") % 7 === 0, lit(null).cast("string"))
-                .otherwise(col("source")).as("source_alt"),
-              // nested columns (r9): a struct and an array ride the
-              // container and are projected back flat after the read,
-              // so the hash compare witnesses the nested encoding
-              struct(col("source").as("nm"),
-                length(col("text")).cast("long").as("ln")).as("meta"),
-              array(col("doc_id"),
-                length(col("text")).cast("long")).as("arr"),
-              // logical types (r10): exact cent-derived decimal,
-              // microsecond timestamp, epoch-offset date, and a map
-              expr("CAST((doc_id * 101 + 25) AS DECIMAL(16,2)) / 100")
-                .cast("decimal(12,2)").as("dec"),
-              expr("timestamp_micros(1577836800000000 + doc_id * 1234567)")
-                .as("ts"),
-              expr("date_add(DATE '2020-01-01', CAST(doc_id % 1000 AS INT))")
-                .as("dt"),
-              map(col("source"),
-                length(col("text")).cast("long")).as("mp"))
-            .repartition(4), out)
-        out
-      })
+    val root = Staged(s, dir, "avro") {
+      val out = java.nio.file.Files
+        .createTempDirectory("graft_avro").toString
+      graft.sources.AvroTable.write(
+        t(s, dir, "documents")
+          .select(col("doc_id"), col("source"),
+            length(col("text")).cast("long").as("n_chars"),
+            when(col("doc_id") % 7 === 0, lit(null).cast("string"))
+              .otherwise(col("source")).as("source_alt"),
+            // nested columns (r9): a struct and an array ride the
+            // container and are projected back flat after the read,
+            // so the hash compare witnesses the nested encoding
+            struct(col("source").as("nm"),
+              length(col("text")).cast("long").as("ln")).as("meta"),
+            array(col("doc_id"),
+              length(col("text")).cast("long")).as("arr"),
+            // logical types (r10): exact cent-derived decimal,
+            // microsecond timestamp, epoch-offset date, and a map
+            expr("CAST((doc_id * 101 + 25) AS DECIMAL(16,2)) / 100")
+              .cast("decimal(12,2)").as("dec"),
+            expr("timestamp_micros(1577836800000000 + doc_id * 1234567)")
+              .as("ts"),
+            expr("date_add(DATE '2020-01-01', CAST(doc_id % 1000 AS INT))")
+              .as("dt"),
+            map(col("source"),
+              length(col("text")).cast("long")).as("mp"))
+          .repartition(4), out)
+      out
+    }
     graft.sources.AvroTable.read(s, root)
       .select(col("doc_id"), col("source"), col("n_chars"), col("source_alt"),
         col("meta.nm").as("meta_nm"), col("meta.ln").as("meta_ln"),
@@ -681,18 +663,17 @@ object QueriesR17 {
     * mix (strings + decimal) so the gate is not a byte-copy of F16's.
     */
   def avroDeflateRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = avroMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir + "#deflate"), _ => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_avro_z").toString
-        graft.sources.AvroTable.write(
-          t(s, dir, "documents")
-            .select(col("doc_id"), col("source"), col("text"),
-              expr("CAST(CAST(doc_id * 37 + 11 AS DECIMAL(16,2)) / 100 AS DECIMAL(12,2))")
-                .as("dec"))
-            .repartition(4), out, codec = "deflate")
-        out
-      })
+    val root = Staged(s, dir, "avro_deflate") {
+      val out = java.nio.file.Files
+        .createTempDirectory("graft_avro_z").toString
+      graft.sources.AvroTable.write(
+        t(s, dir, "documents")
+          .select(col("doc_id"), col("source"), col("text"),
+            expr("CAST(CAST(doc_id * 37 + 11 AS DECIMAL(16,2)) / 100 AS DECIMAL(12,2))")
+              .as("dec"))
+          .repartition(4), out, codec = "deflate")
+      out
+    }
     graft.sources.AvroTable.read(s, root)
       .select(col("doc_id"), col("source"),
         md5(col("text")).as("text_md5"),

@@ -20,13 +20,6 @@ object QueriesR18 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  // Format round-trip staging: written once per (session, dir) — the
-  // format-gate memo idiom of the Delta/Iceberg/Avro round-trips.
-  private val zstdMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-  private val arrowMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   private val zstdSchema = StructType(Seq(
     StructField("doc_id", LongType, nullable = false),
     StructField("source", StringType, nullable = true),
@@ -43,19 +36,18 @@ object QueriesR18 {
     * be invisible.
     */
   def zstdJsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = zstdMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_zstd").toString
-        graft.sources.ZstdJsonl.write(
-          t(s, dir, "documents")
-            .select(col("doc_id"), col("source"),
-              substring(col("text"), 1, 40).as("snippet"),
-              when(col("doc_id") % 7 === 0, lit(null).cast("string"))
-                .otherwise(col("source")).as("source_alt"))
-            .repartition(4), out)
-        out
-      })
+    val root = Staged(s, dir, "zstd_jsonl") {
+      val out = java.nio.file.Files
+        .createTempDirectory("graft_zstd").toString
+      graft.sources.ZstdJsonl.write(
+        t(s, dir, "documents")
+          .select(col("doc_id"), col("source"),
+            substring(col("text"), 1, 40).as("snippet"),
+            when(col("doc_id") % 7 === 0, lit(null).cast("string"))
+              .otherwise(col("source")).as("source_alt"))
+          .repartition(4), out)
+      out
+    }
     graft.sources.ZstdJsonl.read(s, root, zstdSchema)
       .select(col("doc_id"), col("source"), col("snippet"), col("source_alt"))
       .orderBy(col("doc_id"))
@@ -69,26 +61,25 @@ object QueriesR18 {
     * plain SQL.
     */
   def arrowRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = arrowMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_arrow").toString
-        graft.sources.ArrowIpc.write(
-          t(s, dir, "documents")
-            .select(col("doc_id"), col("lang"),
-              col("n_chars").cast("long").as("n_chars"),
-              when(col("doc_id") % 5 === 0, lit(null).cast("string"))
-                .otherwise(col("lang")).as("lang_alt"),
-              // nested columns (r9): a struct and a list ride the IPC
-              // file and project back flat after the read, so the hash
-              // compare witnesses the nested encoding
-              struct(col("lang").as("nm"),
-                col("n_chars").cast("long").as("ln")).as("meta"),
-              array(col("doc_id"),
-                col("n_chars").cast("long")).as("arr"))
-            .repartition(4), out)
-        out
-      })
+    val root = Staged(s, dir, "arrow_ipc") {
+      val out = java.nio.file.Files
+        .createTempDirectory("graft_arrow").toString
+      graft.sources.ArrowIpc.write(
+        t(s, dir, "documents")
+          .select(col("doc_id"), col("lang"),
+            col("n_chars").cast("long").as("n_chars"),
+            when(col("doc_id") % 5 === 0, lit(null).cast("string"))
+              .otherwise(col("lang")).as("lang_alt"),
+            // nested columns (r9): a struct and a list ride the IPC
+            // file and project back flat after the read, so the hash
+            // compare witnesses the nested encoding
+            struct(col("lang").as("nm"),
+              col("n_chars").cast("long").as("ln")).as("meta"),
+            array(col("doc_id"),
+              col("n_chars").cast("long")).as("arr"))
+          .repartition(4), out)
+      out
+    }
     graft.sources.ArrowIpc.read(s, root)
       .select(col("doc_id"), col("lang"), col("n_chars"), col("lang_alt"),
         col("meta.nm").as("meta_nm"), col("meta.ln").as("meta_ln"),
@@ -166,27 +157,16 @@ object QueriesR18 {
       .orderBy(col("doc_id"))
   }
 
-  // One WordPiece segmentation per (SparkContext, data dir): the word
-  // list is the corpus vocabulary, the result 8 ckpt'd rounds — the
-  // trained-tokenizer staging idiom.
-  private val wpMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
-  private def wpSeg(s: SparkSession, dir: String): DataFrame =
-    wpMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
+  // One staged WordPiece segmentation: the word list is the corpus
+  // vocabulary, the result 8 ckpt'd rounds.
+  private[graft] def wpSeg(s: SparkSession, dir: String): DataFrame =
+    Staged(s, dir, "wordpiece") {
       val words = t(s, dir, "documents")
         .select(explode(split(col("text"), " ")).as("w"))
         .filter(col("w") =!= "").distinct()
       graft.operators.WordPiece.encode(
         words, QueriesR17.uniVocab(s, dir))
-    })
-
-  /** Force the shared WordPiece staging for this (session, dir) —
-    * called by [[Bench]] before its timed loop (the stageShared idiom).
-    */
-  private[graft] def stageShared(s: SparkSession, dir: String): Unit = {
-    wpSeg(s, dir).count(): Unit
-  }
+    }
 
   /** T37: per-document token accounting under greedy longest-match
     * WordPiece segmentation over the trained unigram piece inventory —

@@ -14,11 +14,6 @@ object QueriesR19 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  // one staged shard set per (SparkContext, data dir) — the avro/arrow
-  // round-trip memo idiom
-  private val wdsMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** F19: WebDataset round-trip — documents packed as `<key>.txt` +
     * `<key>.json` members of 4 tar shards (the multimodal-corpus
     * shipping layout), read back shard-parallel, re-grouped into
@@ -26,26 +21,25 @@ object QueriesR19 {
     * witnesses both member payloads and the grouping.
     */
   def wdsRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = wdsMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_wds").toString
-        val d = t(s, dir, "documents")
-          .select(col("doc_id"), col("source"), col("text"))
-        val members = d.select(col("doc_id"),
-            concat(lpad(col("doc_id").cast("string"), 8, "0"), lit(".txt"))
-              .as("name"),
-            encode(col("text"), "UTF-8").as("payload"))
-          .unionByName(d.select(col("doc_id"),
-            concat(lpad(col("doc_id").cast("string"), 8, "0"), lit(".json"))
-              .as("name"),
-            encode(to_json(struct(col("source"))), "UTF-8").as("payload")))
-        graft.sources.TarShards.write(
-          members.repartition(4, pmod(col("doc_id"), lit(4)))
-            .sortWithinPartitions(col("name"))
-            .select(col("name"), col("payload")), out)
-        out
-      })
+    val root = Staged(s, dir, "wds") {
+      val out = java.nio.file.Files
+        .createTempDirectory("graft_wds").toString
+      val d = t(s, dir, "documents")
+        .select(col("doc_id"), col("source"), col("text"))
+      val members = d.select(col("doc_id"),
+          concat(lpad(col("doc_id").cast("string"), 8, "0"), lit(".txt"))
+            .as("name"),
+          encode(col("text"), "UTF-8").as("payload"))
+        .unionByName(d.select(col("doc_id"),
+          concat(lpad(col("doc_id").cast("string"), 8, "0"), lit(".json"))
+            .as("name"),
+          encode(to_json(struct(col("source"))), "UTF-8").as("payload")))
+      graft.sources.TarShards.write(
+        members.repartition(4, pmod(col("doc_id"), lit(4)))
+          .sortWithinPartitions(col("name"))
+          .select(col("name"), col("payload")), out)
+      out
+    }
     graft.sources.TarShards.read(s, root)
       .select(substring_index(col("name"), ".", 1).as("key"),
         substring_index(col("name"), ".", -1).as("ext"),
@@ -83,9 +77,6 @@ object QueriesR19 {
       .orderBy(col("doc_id"))
   }
 
-  private val tfMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** F20: TFRecord round-trip — documents as length-framed,
     * double-CRC32C-masked records in 4 shards (the TensorFlow
     * container); payloads carry (doc_id, text) as JSON so the read
@@ -93,20 +84,19 @@ object QueriesR19 {
     * recovery, the F17b posture.
     */
   def tfrecordRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = tfMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_tfrec").toString
-        graft.sources.TfRecord.write(
-          t(s, dir, "documents")
-            .select(col("doc_id"),
-              encode(to_json(struct(col("doc_id"), col("text"))), "UTF-8")
-                .as("payload"))
-            .repartition(4, pmod(col("doc_id"), lit(4)))
-            .sortWithinPartitions(col("doc_id"))
-            .select(col("payload")), out)
-        out
-      })
+    val root = Staged(s, dir, "tfrecord") {
+      val out = java.nio.file.Files
+        .createTempDirectory("graft_tfrec").toString
+      graft.sources.TfRecord.write(
+        t(s, dir, "documents")
+          .select(col("doc_id"),
+            encode(to_json(struct(col("doc_id"), col("text"))), "UTF-8")
+              .as("payload"))
+          .repartition(4, pmod(col("doc_id"), lit(4)))
+          .sortWithinPartitions(col("doc_id"))
+          .select(col("payload")), out)
+      out
+    }
     graft.sources.TfRecord.read(s, root)
       .select(from_json(decode(col("payload"), "UTF-8"),
         org.apache.spark.sql.types.StructType.fromDDL(
@@ -117,9 +107,6 @@ object QueriesR19 {
       .orderBy(col("doc_id"))
   }
 
-  private val tfGzMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** F20b (r10): GZIP-compressed TFRecord round-trip — the same
     * contract as F20 over `.tfrecord.gz` shards (TF tooling's
     * `TFRecordOptions(compression_type="GZIP")` default in many
@@ -128,20 +115,19 @@ object QueriesR19 {
     * codec must be invisible.
     */
   def tfrecordGzipRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = tfGzMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_tfgz").toString
-        graft.sources.TfRecord.write(
-          t(s, dir, "documents")
-            .select(col("doc_id"),
-              encode(to_json(struct(col("doc_id"), col("text"))), "UTF-8")
-                .as("payload"))
-            .repartition(4, pmod(col("doc_id"), lit(4)))
-            .sortWithinPartitions(col("doc_id"))
-            .select(col("payload")), out, codec = "GZIP")
-        out
-      })
+    val root = Staged(s, dir, "tfrecord_gzip") {
+      val out = java.nio.file.Files
+        .createTempDirectory("graft_tfgz").toString
+      graft.sources.TfRecord.write(
+        t(s, dir, "documents")
+          .select(col("doc_id"),
+            encode(to_json(struct(col("doc_id"), col("text"))), "UTF-8")
+              .as("payload"))
+          .repartition(4, pmod(col("doc_id"), lit(4)))
+          .sortWithinPartitions(col("doc_id"))
+          .select(col("payload")), out, codec = "GZIP")
+      out
+    }
     graft.sources.TfRecord.read(s, root)
       .select(from_json(decode(col("payload"), "UTF-8"),
         org.apache.spark.sql.types.StructType.fromDDL(

@@ -58,9 +58,6 @@ object QueriesR20 {
     } finally server.close()
   }
 
-  private val tableBuildMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
-
   /** The F15e fixture: a table BORN EMPTY (snapshot 10 = a manifest
     * list with no manifests) that reaches its full state through two
     * engine-written APPEND commits — suppliers with s_suppkey % 4 ≠ 0
@@ -69,31 +66,30 @@ object QueriesR20 {
     * live set, never replaces it).
     */
   private def buildIcebergAppendTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_append"), _ => {
-        import graft.sources.IcebergCatalog._
-        val t0 = java.nio.file.Files.createTempDirectory("ice_app_rt")
-        val mdir = t0.resolve("metadata")
-        java.nio.file.Files.createDirectories(mdir)
-        val ml1 = mdir.resolve("snap-10.avro")
-        writeManifestList(ml1, Seq.empty)
-        writeMetadataJson(mdir.resolve("v1.metadata.json"),
-          Seq(("s_suppkey", "long", true), ("s_name", "string", false),
-            ("cents", "long", false), ("nk", "string", false)),
-          Seq("nk"), Seq(10L -> ml1))
-        val sup = t(s, dir, "supplier").select(
-          col("s_suppkey").cast("long").as("s_suppkey"), col("s_name"),
-          (col("s_acctbal").cast("decimal(12,2)") * 100)
-            .cast("long").as("cents"),
-          pmod(col("s_suppkey"), lit(5)).cast("string").as("nk"))
-        val s1 = commitAppend(s, t0.toString,
-          sup.filter(col("s_suppkey") % 4 =!= 0), snapshotId = 20L)
-        require(s1 == 20L)
-        val s2 = commitAppend(s, t0.toString,
-          sup.filter(col("s_suppkey") % 4 === 0), snapshotId = 30L)
-        require(s2 == 30L)
-        t0.toString
-      })
+    Staged(s, dir, "iceberg_append") {
+      import graft.sources.IcebergCatalog._
+      val t0 = java.nio.file.Files.createTempDirectory("ice_app_rt")
+      val mdir = t0.resolve("metadata")
+      java.nio.file.Files.createDirectories(mdir)
+      val ml1 = mdir.resolve("snap-10.avro")
+      writeManifestList(ml1, Seq.empty)
+      writeMetadataJson(mdir.resolve("v1.metadata.json"),
+        Seq(("s_suppkey", "long", true), ("s_name", "string", false),
+          ("cents", "long", false), ("nk", "string", false)),
+        Seq("nk"), Seq(10L -> ml1))
+      val sup = t(s, dir, "supplier").select(
+        col("s_suppkey").cast("long").as("s_suppkey"), col("s_name"),
+        (col("s_acctbal").cast("decimal(12,2)") * 100)
+          .cast("long").as("cents"),
+        pmod(col("s_suppkey"), lit(5)).cast("string").as("nk"))
+      val s1 = commitAppend(s, t0.toString,
+        sup.filter(col("s_suppkey") % 4 =!= 0), snapshotId = 20L)
+      require(s1 == 20L)
+      val s2 = commitAppend(s, t0.toString,
+        sup.filter(col("s_suppkey") % 4 === 0), snapshotId = 30L)
+      require(s2 == 30L)
+      t0.toString
+    }
 
   /** F15e (r10b): Iceberg APPEND write — `commitAppend` turns a
     * DataFrame into data parquet files (one distributed partitionBy
@@ -109,9 +105,6 @@ object QueriesR20 {
       .select(col("s_suppkey"), col("s_name"), col("cents"), col("nk"))
       .orderBy(col("s_suppkey"))
 
-  private val avroEvoMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), String]()
-
   /** F16c (r10b): Avro schema RESOLUTION across generations — the
     * evolution rules every long-lived lake table eventually needs,
     * exercised on a directory holding TWO writer-schema generations of
@@ -126,37 +119,36 @@ object QueriesR20 {
     * on the even generation.
     */
   def avroEvolutionRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val root = avroEvoMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir), _ => {
-        val out = java.nio.file.Files
-          .createTempDirectory("graft_avro_evo")
-        val d = t(s, dir, "documents")
-        val g1 = java.nio.file.Files.createTempDirectory("avro_evo_g1")
-        val g2 = java.nio.file.Files.createTempDirectory("avro_evo_g2")
-        graft.sources.AvroTable.write(
-          d.filter(col("doc_id") % 2 === 0)
-            .select(col("doc_id").cast("int").as("doc_id"), col("source")),
-          g1.toString)
-        graft.sources.AvroTable.write(
-          d.filter(col("doc_id") % 2 === 1)
-            .select(col("source"),
-              length(col("text")).cast("long").as("text_len"),
-              col("doc_id")),
-          g2.toString)
-        // both generations land in ONE directory, per-generation names
-        import scala.jdk.CollectionConverters._
-        Seq(("g1", g1), ("g2", g2)).foreach { case (tag, src) =>
-          val st = java.nio.file.Files.list(src)
-          val avros = try st.iterator().asScala
-            .filter(_.getFileName.toString.endsWith(".avro")).toSeq
-          finally st.close()
-          avros.foreach { f =>
-            java.nio.file.Files.move(f,
-              out.resolve(s"$tag-${f.getFileName}"))
-          }
+    val root = Staged(s, dir, "avro_evolution") {
+      val out = java.nio.file.Files
+        .createTempDirectory("graft_avro_evo")
+      val d = t(s, dir, "documents")
+      val g1 = java.nio.file.Files.createTempDirectory("avro_evo_g1")
+      val g2 = java.nio.file.Files.createTempDirectory("avro_evo_g2")
+      graft.sources.AvroTable.write(
+        d.filter(col("doc_id") % 2 === 0)
+          .select(col("doc_id").cast("int").as("doc_id"), col("source")),
+        g1.toString)
+      graft.sources.AvroTable.write(
+        d.filter(col("doc_id") % 2 === 1)
+          .select(col("source"),
+            length(col("text")).cast("long").as("text_len"),
+            col("doc_id")),
+        g2.toString)
+      // both generations land in ONE directory, per-generation names
+      import scala.jdk.CollectionConverters._
+      Seq(("g1", g1), ("g2", g2)).foreach { case (tag, src) =>
+        val st = java.nio.file.Files.list(src)
+        val avros = try st.iterator().asScala
+          .filter(_.getFileName.toString.endsWith(".avro")).toSeq
+        finally st.close()
+        avros.foreach { f =>
+          java.nio.file.Files.move(f,
+            out.resolve(s"$tag-${f.getFileName}"))
         }
-        out.toString
-      })
+      }
+      out.toString
+    }
     val readerSchema = graft.sources.AvroTable.avroSchemaJson(
       org.apache.spark.sql.types.StructType.fromDDL(
         "doc_id BIGINT, source STRING, text_len BIGINT"), "row")

@@ -17,9 +17,6 @@ object QueriesR21 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  private val tableBuildMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
-
   private def writeSingleParquet(df: DataFrame,
                                  target: java.nio.file.Path): Unit = {
     import scala.jdk.CollectionConverters._
@@ -56,71 +53,70 @@ object QueriesR21 {
     "nm" -> "col-n1", "ln" -> "col-l2", "bucket" -> "col-b4k7")
 
   private def buildDeltaColmapTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_colmap"), _ => {
-        import org.apache.spark.sql.types._
-        val t0 = java.nio.file.Files.createTempDirectory("delta_cm")
-        def fld(name: String, dt: DataType, id: Int): StructField =
-          StructField(name, dt, nullable = true,
-            new MetadataBuilder()
-              .putLong("delta.columnMapping.id", id)
-              .putString("delta.columnMapping.physicalName", phys(name))
-              .build())
-        val metaT = StructType(Seq(
-          fld("nm", StringType, 5), fld("ln", LongType, 6)))
-        val schema = StructType(Seq(
-          fld("s_suppkey", LongType, 1), fld("s_name", StringType, 2),
-          fld("cents", LongType, 3), fld("meta", metaT, 4),
-          fld("bucket", StringType, 7)))
-        val sup = t(s, dir, "supplier").select(
-          col("s_suppkey").cast("long").as("s_suppkey"), col("s_name"),
-          (col("s_acctbal").cast("decimal(12,2)") * 100)
-            .cast("long").as("cents"),
-          pmod(col("s_suppkey"), lit(3)).cast("string").as("bucket"))
-        // data files under PHYSICAL names at every nesting level — TWO
-        // per bucket (split by suppkey parity) so the engine-side
-        // compact below has real work in every partition group
-        val adds = (0 until 3).flatMap { b =>
-          (0 until 2).map { half =>
-            val rel = s"data/b$b-$half.parquet"
-            writeSingleParquet(
-              sup.filter(col("bucket") === b.toString &&
-                  pmod(col("s_suppkey"), lit(2)) === half).select(
-                col("s_suppkey").as(phys("s_suppkey")),
-                col("s_name").as(phys("s_name")),
-                col("cents").as(phys("cents")),
-                struct(col("s_name").as(phys("nm")),
-                  length(col("s_name")).cast("long").as(phys("ln")))
-                  .as(phys("meta"))),
-              t0.resolve(rel))
-            s"""{"add":{"path":"$rel","partitionValues":{"${phys("bucket")}":"$b"},"dataChange":true}}"""
-          }
+    Staged(s, dir, "delta_colmap") {
+      import org.apache.spark.sql.types._
+      val t0 = java.nio.file.Files.createTempDirectory("delta_cm")
+      def fld(name: String, dt: DataType, id: Int): StructField =
+        StructField(name, dt, nullable = true,
+          new MetadataBuilder()
+            .putLong("delta.columnMapping.id", id)
+            .putString("delta.columnMapping.physicalName", phys(name))
+            .build())
+      val metaT = StructType(Seq(
+        fld("nm", StringType, 5), fld("ln", LongType, 6)))
+      val schema = StructType(Seq(
+        fld("s_suppkey", LongType, 1), fld("s_name", StringType, 2),
+        fld("cents", LongType, 3), fld("meta", metaT, 4),
+        fld("bucket", StringType, 7)))
+      val sup = t(s, dir, "supplier").select(
+        col("s_suppkey").cast("long").as("s_suppkey"), col("s_name"),
+        (col("s_acctbal").cast("decimal(12,2)") * 100)
+          .cast("long").as("cents"),
+        pmod(col("s_suppkey"), lit(3)).cast("string").as("bucket"))
+      // data files under PHYSICAL names at every nesting level — TWO
+      // per bucket (split by suppkey parity) so the engine-side
+      // compact below has real work in every partition group
+      val adds = (0 until 3).flatMap { b =>
+        (0 until 2).map { half =>
+          val rel = s"data/b$b-$half.parquet"
+          writeSingleParquet(
+            sup.filter(col("bucket") === b.toString &&
+                pmod(col("s_suppkey"), lit(2)) === half).select(
+              col("s_suppkey").as(phys("s_suppkey")),
+              col("s_name").as(phys("s_name")),
+              col("cents").as(phys("cents")),
+              struct(col("s_name").as(phys("nm")),
+                length(col("s_name")).cast("long").as(phys("ln")))
+                .as(phys("meta"))),
+            t0.resolve(rel))
+          s"""{"add":{"path":"$rel","partitionValues":{"${phys("bucket")}":"$b"},"dataChange":true}}"""
         }
-        val metaLine =
-          s"""{"metaData":{"id":"cm","schemaString":"${esc(schema.json)}",""" +
-            s""""partitionColumns":["bucket"],""" +
-            s""""configuration":{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"7"}}}"""
-        // feature-gated protocol: the writerFeatures allowlist must PASS
-        // columnMapping for the engine's own compact to be allowed
-        val protoLine =
-          """{"protocol":{"minReaderVersion":2,"minWriterVersion":7,""" +
-            """"writerFeatures":["columnMapping"]}}"""
-        val logDir = t0.resolve("_delta_log")
-        java.nio.file.Files.createDirectories(logDir)
-        java.nio.file.Files.writeString(logDir.resolve(f"${0L}%020d.json"),
-          (Seq(protoLine, metaLine) ++ adds).mkString("\n"))
-        // engine-side WRITE on the mapped table (r12): compact merges
-        // each bucket's two files into one, emitting PHYSICAL-name
-        // parquet and physical-key partitionValues/stats — the re-read
-        // below hash-fails if any logical name leaked into the files
-        val v = graft.sources.DeltaLog.compact(s, t0.toString)
-        require(v == 1L, s"colmap compact landed at version $v, want 1")
-        val st = graft.sources.DeltaLog.state(s, t0.toString)
-        require(st.files.size == 3 &&
-            st.files.forall(_.path.startsWith("compact-1-")),
-          s"colmap compact did not replace the six files: ${st.files.map(_.path)}")
-        t0.toString
-      })
+      }
+      val metaLine =
+        s"""{"metaData":{"id":"cm","schemaString":"${esc(schema.json)}",""" +
+          s""""partitionColumns":["bucket"],""" +
+          s""""configuration":{"delta.columnMapping.mode":"name","delta.columnMapping.maxColumnId":"7"}}}"""
+      // feature-gated protocol: the writerFeatures allowlist must PASS
+      // columnMapping for the engine's own compact to be allowed
+      val protoLine =
+        """{"protocol":{"minReaderVersion":2,"minWriterVersion":7,""" +
+          """"writerFeatures":["columnMapping"]}}"""
+      val logDir = t0.resolve("_delta_log")
+      java.nio.file.Files.createDirectories(logDir)
+      java.nio.file.Files.writeString(logDir.resolve(f"${0L}%020d.json"),
+        (Seq(protoLine, metaLine) ++ adds).mkString("\n"))
+      // engine-side WRITE on the mapped table (r12): compact merges
+      // each bucket's two files into one, emitting PHYSICAL-name
+      // parquet and physical-key partitionValues/stats — the re-read
+      // below hash-fails if any logical name leaked into the files
+      val v = graft.sources.DeltaLog.compact(s, t0.toString)
+      require(v == 1L, s"colmap compact landed at version $v, want 1")
+      val st = graft.sources.DeltaLog.state(s, t0.toString)
+      require(st.files.size == 3 &&
+          st.files.forall(_.path.startsWith("compact-1-")),
+        s"colmap compact did not replace the six files: ${st.files.map(_.path)}")
+      t0.toString
+    }
 
   /** F14f (r11): Delta columnMapping=name read — the parquet files
     * hold only physical uuid-style names (`col-…`, nested struct
@@ -145,43 +141,42 @@ object QueriesR21 {
   // ---------------------------------------------------------------
 
   private def buildDeltaDvMergeTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_dvmerge"), _ => {
-        val t0 = java.nio.file.Files.createTempDirectory("delta_dvm")
-        val sup = t(s, dir, "supplier").select(
-          col("s_suppkey").cast("long").as("s_suppkey"),
-          (col("s_acctbal").cast("decimal(12,2)") * 100)
-            .cast("long").as("cents"),
-          pmod(col("s_suppkey"), lit(2)).cast("string").as("bucket"))
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "s_suppkey BIGINT, cents BIGINT, bucket STRING")
-        val adds = (0 until 2).map { b =>
-          val rel = s"data/bucket=$b/f0.parquet"
-          writeSingleParquet(
-            sup.filter(col("bucket") === b.toString).drop("bucket")
-              .orderBy(col("s_suppkey")),
-            t0.resolve(rel))
-          s"""{"add":{"path":"$rel","partitionValues":{"bucket":"$b"},"dataChange":true}}"""
-        }
-        val meta =
-          s"""{"metaData":{"id":"dvm","schemaString":"${esc(schema.json)}","partitionColumns":["bucket"]}}"""
-        val logDir = t0.resolve("_delta_log")
-        java.nio.file.Files.createDirectories(logDir)
-        java.nio.file.Files.writeString(logDir.resolve(f"${0L}%020d.json"),
-          (meta +: adds).mkString("\n"))
-        // two DV commits on bucket 0's file (even s_suppkeys): %4 rows
-        // first, then %6 rows — overlapping at multiples of 12, so the
-        // second commit MUST union, not replace
-        val v1 = graft.sources.DeltaLog.deleteWithDv(s, t0.toString,
-          "data/bucket=0/f0.parquet", col("s_suppkey") % 4 === 0,
-          uuid = new java.util.UUID(0x6772616674L, 0x64766d31L)) // fixed
-        require(v1 == 1L, s"first DV commit landed at version $v1, want 1")
-        val v2 = graft.sources.DeltaLog.deleteWithDv(s, t0.toString,
-          "data/bucket=0/f0.parquet", col("s_suppkey") % 6 === 0,
-          uuid = new java.util.UUID(0x6772616674L, 0x64766d32L)) // fixed
-        require(v2 == 2L, s"second DV commit landed at version $v2, want 2")
-        t0.toString
-      })
+    Staged(s, dir, "delta_dvmerge") {
+      val t0 = java.nio.file.Files.createTempDirectory("delta_dvm")
+      val sup = t(s, dir, "supplier").select(
+        col("s_suppkey").cast("long").as("s_suppkey"),
+        (col("s_acctbal").cast("decimal(12,2)") * 100)
+          .cast("long").as("cents"),
+        pmod(col("s_suppkey"), lit(2)).cast("string").as("bucket"))
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        "s_suppkey BIGINT, cents BIGINT, bucket STRING")
+      val adds = (0 until 2).map { b =>
+        val rel = s"data/bucket=$b/f0.parquet"
+        writeSingleParquet(
+          sup.filter(col("bucket") === b.toString).drop("bucket")
+            .orderBy(col("s_suppkey")),
+          t0.resolve(rel))
+        s"""{"add":{"path":"$rel","partitionValues":{"bucket":"$b"},"dataChange":true}}"""
+      }
+      val meta =
+        s"""{"metaData":{"id":"dvm","schemaString":"${esc(schema.json)}","partitionColumns":["bucket"]}}"""
+      val logDir = t0.resolve("_delta_log")
+      java.nio.file.Files.createDirectories(logDir)
+      java.nio.file.Files.writeString(logDir.resolve(f"${0L}%020d.json"),
+        (meta +: adds).mkString("\n"))
+      // two DV commits on bucket 0's file (even s_suppkeys): %4 rows
+      // first, then %6 rows — overlapping at multiples of 12, so the
+      // second commit MUST union, not replace
+      val v1 = graft.sources.DeltaLog.deleteWithDv(s, t0.toString,
+        "data/bucket=0/f0.parquet", col("s_suppkey") % 4 === 0,
+        uuid = new java.util.UUID(0x6772616674L, 0x64766d31L)) // fixed
+      require(v1 == 1L, s"first DV commit landed at version $v1, want 1")
+      val v2 = graft.sources.DeltaLog.deleteWithDv(s, t0.toString,
+        "data/bucket=0/f0.parquet", col("s_suppkey") % 6 === 0,
+        uuid = new java.util.UUID(0x6772616674L, 0x64766d32L)) // fixed
+      require(v2 == 2L, s"second DV commit landed at version $v2, want 2")
+      t0.toString
+    }
 
   /** F14g (r11): deletion-vector merge on re-delete — the engine
     * deletes `%4` rows, then `%6` rows of the SAME file in a second
@@ -203,56 +198,55 @@ object QueriesR21 {
   // ---------------------------------------------------------------
 
   private def buildIcebergTransformTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_transforms"), _ => {
-        import graft.sources.IcebergCatalog._
-        val t0 = java.nio.file.Files.createTempDirectory("ice_tf_rt")
-        val mdir = t0.resolve("metadata")
-        java.nio.file.Files.createDirectories(mdir)
-        val ml1 = mdir.resolve("snap-10.avro")
-        writeManifestList(ml1, Seq.empty)
-        writeMetadataJsonSpec(mdir.resolve("v1.metadata.json"),
-          Seq(("o_orderkey", "long", true), ("cents", "long", false),
-            ("o_orderstatus", "string", false), ("o_orderdate", "date", false),
-            ("o_ts", "timestamp", false)),
-          Seq(("od_year", "year", "o_orderdate"),
-            ("ok_bucket", "bucket[4]", "o_orderkey"),
-            ("ts_bucket", "bucket[8]", "o_ts")),
-          Seq(10L -> ml1))
-        val o = t(s, dir, "orders").select(
-          col("o_orderkey").cast("long").as("o_orderkey"),
-          (col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long").as("cents"),
-          col("o_orderstatus"),
-          col("o_orderdate").cast("date").as("o_orderdate"),
-          // timestamp source for the r12 bucket[8] leg (UTC session)
-          col("o_orderdate").cast("timestamp").as("o_ts"))
-        val snap = commitAppend(s, t0.toString, o, snapshotId = 20L)
-        require(snap == 20L)
-        // the spec values must actually PRUNE: years < 1998 (value 28 =
-        // 1998-1970) drop whole file groups before any scan is planned
-        val st = graft.sources.IcebergCatalog.state(s, t0.toString)
-        val kept = st.files.count(f =>
-          f.partition.get("od_year").exists(_.toString.toInt >= 28))
-        require(kept > 0 && kept < st.files.size,
-          s"transform pruning is not selective: $kept of ${st.files.size}")
-        // write→manifest consistency for the TIMESTAMP bucket (r12):
-        // every file's manifest-borne ts_bucket must equal the
-        // Appendix-B hash of the epoch-micros the file actually holds
-        st.files.foreach { f =>
-          val claimed = f.partition("ts_bucket").toString.toInt
-          val distinct = s.read.parquet(
-              graft.sources.IcebergCatalog.resolve(t0.toString, f.path).toString)
-            .select(org.apache.spark.sql.graftbridge.ColumnBridge.column(
-              graft.sources.IcebergBucketExpr(
-                org.apache.spark.sql.graftbridge.ColumnBridge.expression(
-                  col("o_ts")), 8)).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSeq
-          require(distinct == Seq(claimed),
-            s"ts_bucket mismatch in ${f.path}: manifest=$claimed data=$distinct")
-        }
-        t0.toString
-      })
+    Staged(s, dir, "iceberg_transforms") {
+      import graft.sources.IcebergCatalog._
+      val t0 = java.nio.file.Files.createTempDirectory("ice_tf_rt")
+      val mdir = t0.resolve("metadata")
+      java.nio.file.Files.createDirectories(mdir)
+      val ml1 = mdir.resolve("snap-10.avro")
+      writeManifestList(ml1, Seq.empty)
+      writeMetadataJsonSpec(mdir.resolve("v1.metadata.json"),
+        Seq(("o_orderkey", "long", true), ("cents", "long", false),
+          ("o_orderstatus", "string", false), ("o_orderdate", "date", false),
+          ("o_ts", "timestamp", false)),
+        Seq(("od_year", "year", "o_orderdate"),
+          ("ok_bucket", "bucket[4]", "o_orderkey"),
+          ("ts_bucket", "bucket[8]", "o_ts")),
+        Seq(10L -> ml1))
+      val o = t(s, dir, "orders").select(
+        col("o_orderkey").cast("long").as("o_orderkey"),
+        (col("o_totalprice").cast("decimal(12,2)") * 100)
+          .cast("long").as("cents"),
+        col("o_orderstatus"),
+        col("o_orderdate").cast("date").as("o_orderdate"),
+        // timestamp source for the r12 bucket[8] leg (UTC session)
+        col("o_orderdate").cast("timestamp").as("o_ts"))
+      val snap = commitAppend(s, t0.toString, o, snapshotId = 20L)
+      require(snap == 20L)
+      // the spec values must actually PRUNE: years < 1998 (value 28 =
+      // 1998-1970) drop whole file groups before any scan is planned
+      val st = graft.sources.IcebergCatalog.state(s, t0.toString)
+      val kept = st.files.count(f =>
+        f.partition.get("od_year").exists(_.toString.toInt >= 28))
+      require(kept > 0 && kept < st.files.size,
+        s"transform pruning is not selective: $kept of ${st.files.size}")
+      // write→manifest consistency for the TIMESTAMP bucket (r12):
+      // every file's manifest-borne ts_bucket must equal the
+      // Appendix-B hash of the epoch-micros the file actually holds
+      st.files.foreach { f =>
+        val claimed = f.partition("ts_bucket").toString.toInt
+        val distinct = s.read.parquet(
+            graft.sources.IcebergCatalog.resolve(t0.toString, f.path).toString)
+          .select(org.apache.spark.sql.graftbridge.ColumnBridge.column(
+            graft.sources.IcebergBucketExpr(
+              org.apache.spark.sql.graftbridge.ColumnBridge.expression(
+                col("o_ts")), 8)).as("b"))
+          .distinct().collect().map(_.getInt(0)).toSeq
+        require(distinct == Seq(claimed),
+          s"ts_bucket mismatch in ${f.path}: manifest=$claimed data=$distinct")
+      }
+      t0.toString
+    }
 
   /** F15f (r11): Iceberg partition-transform round-trip — the engine
     * appends orders under `year(o_orderdate)` + `bucket[4](o_orderkey)`
@@ -283,10 +277,6 @@ object QueriesR21 {
     */
   val byteBpeMerges = 16
 
-  private val byteBpeMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (DataFrame, DataFrame)]()
-
   /** The multi-byte corpus text: both engines apply the same 1:1
     * codepoint translation, turning the ASCII fixture into UTF-8 with
     * 2-byte characters in most words.
@@ -294,19 +284,11 @@ object QueriesR21 {
   private def mbText = translate(col("text"), "ae", "äé")
   private val mbTextSql = "translate(text, 'ae', 'äé')"
 
-  private def byteBpeTrained(s: SparkSession, dir: String)
+  private[graft] def byteBpeTrained(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) =
-    byteBpeMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ =>
+    Staged(s, dir, "byte_bpe")(
       graft.operators.Bpe.trainByteLevel(
         t(s, dir, "documents"), mbText, byteBpeMerges))
-
-  /** Force the shared byte-BPE staging (Bench calls this before its
-    * timed loop so no gate's time carries the one-time training).
-    */
-  private[graft] def stageShared(s: SparkSession, dir: String): Unit = {
-    val (merges, endState) = byteBpeTrained(s, dir)
-    merges.count(); endState.count()
-  }
 
   /** T34b (r11): byte-level BPE merges — the learned ranks over the
     * byte-mapped alphabet; the oracle replays the identical loop from
@@ -459,25 +441,24 @@ object QueriesR21 {
   // ---------------------------------------------------------------
 
   private def buildIcebergExpireTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_expire"), _ => {
-        val t0 = QueriesR16.buildIcebergFreshFor(s, dir)
-        val snap = graft.sources.IcebergCatalog.commitPositionDelete(
-          s, t0, "rk=3/f0.parquet", col("n_nationkey") % 2 === 1,
-          snapshotId = 40L)
-        require(snap == 40L)
-        val (kept, deleted) =
-          graft.sources.IcebergCatalog.expireSnapshots(t0, keepLast = 1)
-        require(kept == 1 && deleted > 0,
-          s"expiration must delete expired-only files (kept=$kept, deleted=$deleted)")
-        // time travel to an expired snapshot is gone, loudly
-        val gone = try {
-          graft.sources.IcebergCatalog.read(s, t0, snapshotId = Some(10L))
-          false
-        } catch { case _: IllegalArgumentException => true }
-        require(gone, "expired snapshot must not be readable")
-        t0
-      })
+    Staged(s, dir, "iceberg_expire") {
+      val t0 = QueriesR16.buildIcebergFresh(s, dir)
+      val snap = graft.sources.IcebergCatalog.commitPositionDelete(
+        s, t0, "rk=3/f0.parquet", col("n_nationkey") % 2 === 1,
+        snapshotId = 40L)
+      require(snap == 40L)
+      val (kept, deleted) =
+        graft.sources.IcebergCatalog.expireSnapshots(t0, keepLast = 1)
+      require(kept == 1 && deleted > 0,
+        s"expiration must delete expired-only files (kept=$kept, deleted=$deleted)")
+      // time travel to an expired snapshot is gone, loudly
+      val gone = try {
+        graft.sources.IcebergCatalog.read(s, t0, snapshotId = Some(10L))
+        false
+      } catch { case _: IllegalArgumentException => true }
+      require(gone, "expired snapshot must not be readable")
+      t0
+    }
 
   /** F15h (r11): snapshot expiration round-trip — the F15c table
     * (fixture snapshots 10/20/30 + an engine positional-delete commit
@@ -502,26 +483,25 @@ object QueriesR21 {
   // ---------------------------------------------------------------
 
   private def buildDeltaVacuumTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_vacuum"), _ => {
-        val t0 = QueriesR16.buildDeltaFresh(s, dir)
-        // OPTIMIZE folds the DVs away and rewrites buckets 1/2; VACUUM
-        // with retainLast=1 then deletes every file only pre-compaction
-        // versions could read (incl. bucket 0's replaced original and
-        // both DV bins)
-        val v4 = graft.sources.DeltaLog.compact(s, t0)
-        require(v4 == 4L, s"compaction landed at version $v4, want 4")
-        val removed = java.nio.file.Paths.get(t0, "data/bucket=0/f0.parquet")
-        require(java.nio.file.Files.exists(removed),
-          "pre-vacuum: the replaced original must still be on disk")
-        val (floor, deleted) =
-          graft.sources.DeltaLog.vacuum(s, t0, retainLast = 1)
-        require(floor == 4L && deleted >= 4,
-          s"vacuum should delete the superseded files (floor=$floor, n=$deleted)")
-        require(!java.nio.file.Files.exists(removed),
-          "vacuum must delete the replaced original")
-        t0
-      })
+    Staged(s, dir, "delta_vacuum") {
+      val t0 = QueriesR16.buildDeltaFresh(s, dir)
+      // OPTIMIZE folds the DVs away and rewrites buckets 1/2; VACUUM
+      // with retainLast=1 then deletes every file only pre-compaction
+      // versions could read (incl. bucket 0's replaced original and
+      // both DV bins)
+      val v4 = graft.sources.DeltaLog.compact(s, t0)
+      require(v4 == 4L, s"compaction landed at version $v4, want 4")
+      val removed = java.nio.file.Paths.get(t0, "data/bucket=0/f0.parquet")
+      require(java.nio.file.Files.exists(removed),
+        "pre-vacuum: the replaced original must still be on disk")
+      val (floor, deleted) =
+        graft.sources.DeltaLog.vacuum(s, t0, retainLast = 1)
+      require(floor == 4L && deleted >= 4,
+        s"vacuum should delete the superseded files (floor=$floor, n=$deleted)")
+      require(!java.nio.file.Files.exists(removed),
+        "vacuum must delete the replaced original")
+      t0
+    }
 
   /** F14h (r11): VACUUM round-trip — the F14b table OPTIMIZED (DVs
     * folded away) then vacuumed down to the current version: every
@@ -541,7 +521,7 @@ object QueriesR21 {
     */
   def deltaTableChanges(s: SparkSession, dir: String): DataFrame =
     graft.sources.DeltaLog.tableChanges(s,
-        QueriesR16.deltaTablePath(s, dir), 0L, 3L)
+        QueriesR16.buildDeltaTable(s, dir), 0L, 3L)
       .orderBy(col("_change_type"), col("s_suppkey"))
 
   /** F14i (r11): the change feed with per-VERSION attribution — each
@@ -551,7 +531,7 @@ object QueriesR21 {
     */
   def deltaChangesByVersion(s: SparkSession, dir: String): DataFrame =
     graft.sources.DeltaLog.tableChangesByVersion(s,
-        QueriesR16.deltaTablePath(s, dir), 0L, 3L)
+        QueriesR16.buildDeltaTable(s, dir), 0L, 3L)
       .orderBy(col("_commit_version"), col("_change_type"), col("s_suppkey"))
 
   // ---------------------------------------------------------------
@@ -561,17 +541,16 @@ object QueriesR21 {
   // ---------------------------------------------------------------
 
   private def buildDeltaRestoreTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_restore"), _ => {
-        val t0 = QueriesR16.buildDeltaFresh(s, dir) // v0..v3
-        val v4 = graft.sources.DeltaLog.restore(s, t0, toVersion = 0L)
-        require(v4 == 4L, s"restore landed at version $v4, want 4")
-        // the bad interval is still time-travelable
-        require(graft.sources.DeltaLog.state(s, t0, Some(3L))
-          .files.exists(_.deletionVector.isDefined),
-          "pre-restore history must stay reachable")
-        t0
-      })
+    Staged(s, dir, "delta_restore") {
+      val t0 = QueriesR16.buildDeltaFresh(s, dir) // v0..v3
+      val v4 = graft.sources.DeltaLog.restore(s, t0, toVersion = 0L)
+      require(v4 == 4L, s"restore landed at version $v4, want 4")
+      // the bad interval is still time-travelable
+      require(graft.sources.DeltaLog.state(s, t0, Some(3L))
+        .files.exists(_.deletionVector.isDefined),
+        "pre-restore history must stay reachable")
+      t0
+    }
 
   /** F14j (r11): Delta RESTORE round-trip — the F14b table (replace +
     * two DV commits) restored to v0 in ONE new commit: the head state
@@ -583,13 +562,12 @@ object QueriesR21 {
       .orderBy(col("s_suppkey"))
 
   private def buildIcebergRollbackTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_rollback"), _ => {
-        val t0 = QueriesR16.buildIcebergFreshFor(s, dir) // snaps 10/20/30
-        val ver = graft.sources.IcebergCatalog.rollbackTo(t0, 10L)
-        require(ver == 2L, s"rollback wrote metadata v$ver, want 2")
-        t0
-      })
+    Staged(s, dir, "iceberg_rollback") {
+      val t0 = QueriesR16.buildIcebergFresh(s, dir) // snaps 10/20/30
+      val ver = graft.sources.IcebergCatalog.rollbackTo(t0, 10L)
+      require(ver == 2L, s"rollback wrote metadata v$ver, want 2")
+      t0
+    }
 
   /** F15i (r11): Iceberg ROLLBACK round-trip — the F15b table rolled
     * back to snapshot 10 (before the region-0 renumber and both v2

@@ -119,27 +119,23 @@ object QueriesR22 {
   // timestamp resolution is deterministic.
   // ---------------------------------------------------------------
 
-  private val tableBuildMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
-
   /** Epoch base for the pinned commit clock (any fixed instant works —
     * the gate only relies on v's mtime = base + v minutes).
     */
   private val deltaTsBase = 1700000000000L
 
   private def buildDeltaTsTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_ts"), _ => {
-        val t0 = QueriesR16.buildDeltaFresh(s, dir) // v0..v3
-        val log = java.nio.file.Paths.get(t0, "_delta_log")
-        (0L to 3L).foreach { v =>
-          java.nio.file.Files.setLastModifiedTime(
-            log.resolve(f"$v%020d.json"),
-            java.nio.file.attribute.FileTime.fromMillis(
-              deltaTsBase + v * 60000L))
-        }
-        t0
-      })
+    Staged(s, dir, "delta_ts") {
+      val t0 = QueriesR16.buildDeltaFresh(s, dir) // v0..v3
+      val log = java.nio.file.Paths.get(t0, "_delta_log")
+      (0L to 3L).foreach { v =>
+        java.nio.file.Files.setLastModifiedTime(
+          log.resolve(f"$v%020d.json"),
+          java.nio.file.attribute.FileTime.fromMillis(
+            deltaTsBase + v * 60000L))
+      }
+      t0
+    }
 
   /** F14l (r12): time travel by TIMESTAMP — the table read "as of
     * 30 seconds after the first commit": the resolution must land on
@@ -166,42 +162,40 @@ object QueriesR22 {
 
   /** The ICT drill table: created + appended by the ENGINE with pinned
     * in-commit timestamps (one minute apart), then every log mtime set
-    * to lie. Resolution must follow the stamps. Memoized so the gate
-    * pays the build once per session.
+    * to lie. Resolution must follow the stamps.
     */
   private def buildDeltaIctDrill(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_ict"), _ => {
-        import graft.sources.{DeltaLog, DeltaWrite}
-        import s.implicits._
-        val t0 = java.nio.file.Files.createTempDirectory("delta_ict").toString
-        DeltaWrite.create(s, t0,
-          Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
-          configuration = Map("delta.enableInCommitTimestamps" -> "true"),
-          nowMs = deltaTsBase)
-        DeltaWrite.append(s, t0, Seq((3L, "c")).toDF("id", "v"),
-          nowMs = deltaTsBase + 60000L)
-        require(DeltaLog.ictOf(t0, 0L).contains(deltaTsBase) &&
-          DeltaLog.ictOf(t0, 1L).contains(deltaTsBase + 60000L),
-          "engine commits must carry the pinned in-commit timestamps")
-        val log = java.nio.file.Paths.get(t0, "_delta_log")
-        // mtimes lie in BOTH directions — only the stamps survive
-        java.nio.file.Files.setLastModifiedTime(
-          log.resolve(f"${0L}%020d.json"),
-          java.nio.file.attribute.FileTime.fromMillis(
-            deltaTsBase + 86400000L))
-        java.nio.file.Files.setLastModifiedTime(
-          log.resolve(f"${1L}%020d.json"),
-          java.nio.file.attribute.FileTime.fromMillis(
-            deltaTsBase - 86400000L))
-        require(DeltaLog.versionAtTimestamp(t0, deltaTsBase + 30000L) == 0L,
-          "scrambled mtimes must not move the ICT resolution (v0)")
-        require(DeltaLog.versionAtTimestamp(t0, deltaTsBase + 60000L) == 1L,
-          "scrambled mtimes must not move the ICT resolution (v1)")
-        require(DeltaLog.readAsOfTimestamp(s, t0, deltaTsBase + 30000L)
-          .count() == 2L, "as-of read must see only v0's rows")
-        t0
-      })
+    Staged(s, dir, "delta_ict") {
+      import graft.sources.{DeltaLog, DeltaWrite}
+      import s.implicits._
+      val t0 = java.nio.file.Files.createTempDirectory("delta_ict").toString
+      DeltaWrite.create(s, t0,
+        Seq((1L, "a"), (2L, "b")).toDF("id", "v"),
+        configuration = Map("delta.enableInCommitTimestamps" -> "true"),
+        nowMs = deltaTsBase)
+      DeltaWrite.append(s, t0, Seq((3L, "c")).toDF("id", "v"),
+        nowMs = deltaTsBase + 60000L)
+      require(DeltaLog.ictOf(t0, 0L).contains(deltaTsBase) &&
+        DeltaLog.ictOf(t0, 1L).contains(deltaTsBase + 60000L),
+        "engine commits must carry the pinned in-commit timestamps")
+      val log = java.nio.file.Paths.get(t0, "_delta_log")
+      // mtimes lie in BOTH directions — only the stamps survive
+      java.nio.file.Files.setLastModifiedTime(
+        log.resolve(f"${0L}%020d.json"),
+        java.nio.file.attribute.FileTime.fromMillis(
+          deltaTsBase + 86400000L))
+      java.nio.file.Files.setLastModifiedTime(
+        log.resolve(f"${1L}%020d.json"),
+        java.nio.file.attribute.FileTime.fromMillis(
+          deltaTsBase - 86400000L))
+      require(DeltaLog.versionAtTimestamp(t0, deltaTsBase + 30000L) == 0L,
+        "scrambled mtimes must not move the ICT resolution (v0)")
+      require(DeltaLog.versionAtTimestamp(t0, deltaTsBase + 60000L) == 1L,
+        "scrambled mtimes must not move the ICT resolution (v1)")
+      require(DeltaLog.readAsOfTimestamp(s, t0, deltaTsBase + 30000L)
+        .count() == 2L, "as-of read must see only v0's rows")
+      t0
+    }
 
   /** F14k (r12): the change feed consumed as a STREAM — readStream
     * over the delta log with `maxVersionsPerTrigger=1`, so the three
@@ -238,32 +232,31 @@ object QueriesR22 {
   // ---------------------------------------------------------------
 
   private def buildIcebergRefTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_refs"), _ => {
-        import graft.sources.IcebergCatalog
-        val t0 = QueriesR16.buildIcebergFreshFor(s, dir) // snaps 10/20/30
-        IcebergCatalog.createRef(t0, "audited", 10L, "tag")
-        IcebergCatalog.createRef(t0, "main", 30L, "branch")
-        require(IcebergCatalog.refs(t0) ==
-          Map("audited" -> ((10L, "tag")), "main" -> ((30L, "branch"))),
-          s"refs round-trip: ${IcebergCatalog.refs(t0)}")
-        // unknown names reject loudly — never fall back to current
-        val loud =
-          try { IcebergCatalog.snapshotForRef(t0, "nope"); false }
-          catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("unknown ref 'nope'") }
-        require(loud, "unknown ref must reject loudly")
-        // a tag PINS its snapshot through expiration: keepLast=1 would
-        // collect snaps 10 and 20, but 'audited' rescues 10
-        val (keptN, _) = IcebergCatalog.expireSnapshots(t0, keepLast = 1)
-        require(keptN == 2, s"tag must pin snap 10 through expire: kept $keptN")
-        // time travel to the unpinned middle snapshot is gone
-        val expiredLoud =
-          try { IcebergCatalog.state(s, t0, Some(20L)); false }
-          catch { case _: IllegalArgumentException => true }
-        require(expiredLoud, "snap 20 must be expired")
-        t0
-      })
+    Staged(s, dir, "iceberg_refs") {
+      import graft.sources.IcebergCatalog
+      val t0 = QueriesR16.buildIcebergFresh(s, dir) // snaps 10/20/30
+      IcebergCatalog.createRef(t0, "audited", 10L, "tag")
+      IcebergCatalog.createRef(t0, "main", 30L, "branch")
+      require(IcebergCatalog.refs(t0) ==
+        Map("audited" -> ((10L, "tag")), "main" -> ((30L, "branch"))),
+        s"refs round-trip: ${IcebergCatalog.refs(t0)}")
+      // unknown names reject loudly — never fall back to current
+      val loud =
+        try { IcebergCatalog.snapshotForRef(t0, "nope"); false }
+        catch { case e: IllegalArgumentException =>
+          e.getMessage.contains("unknown ref 'nope'") }
+      require(loud, "unknown ref must reject loudly")
+      // a tag PINS its snapshot through expiration: keepLast=1 would
+      // collect snaps 10 and 20, but 'audited' rescues 10
+      val (keptN, _) = IcebergCatalog.expireSnapshots(t0, keepLast = 1)
+      require(keptN == 2, s"tag must pin snap 10 through expire: kept $keptN")
+      // time travel to the unpinned middle snapshot is gone
+      val expiredLoud =
+        try { IcebergCatalog.state(s, t0, Some(20L)); false }
+        catch { case _: IllegalArgumentException => true }
+      require(expiredLoud, "snap 20 must be expired")
+      t0
+    }
 
   /** F15j (r12): read a TAGGED snapshot by name — `audited` pins snap
     * 10 (the pristine nation projection) while the table head is snap
@@ -304,65 +297,64 @@ object QueriesR22 {
   }
 
   private def buildDeltaCdfActionsTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_cdf_actions"), _ => {
-        val t0 = java.nio.file.Files.createTempDirectory("delta_cdfact")
-        val sup = t(s, dir, "supplier").select(
-          col("s_suppkey").cast("long").as("s_suppkey"),
-          (col("s_acctbal").cast("decimal(12,2)") * 100)
-            .cast("long").as("cents"),
-          pmod(col("s_suppkey"), lit(2)).cast("string").as("bucket"))
-        val schema = org.apache.spark.sql.types.StructType.fromDDL(
-          "s_suppkey BIGINT, cents BIGINT, bucket STRING")
-        def data(b: Int) = sup.filter(col("bucket") === b.toString)
-          .drop("bucket").orderBy(col("s_suppkey"))
-        // v0: CDF-enabled table, two partition files (pure-add commit —
-        // the spec's DERIVED-insert shape, no cdc action on purpose)
-        val adds = (0 until 2).map { b =>
-          val rel = s"data/bucket=$b/f0.parquet"
-          writeSingleParquet(data(b), t0.resolve(rel))
-          s"""{"add":{"path":"$rel","partitionValues":{"bucket":"$b"},"dataChange":true}}"""
-        }
-        val meta =
-          s"""{"metaData":{"id":"cdfa","schemaString":"${esc(schema.json)}",""" +
-            s""""partitionColumns":["bucket"],""" +
-            s""""configuration":{"delta.enableChangeDataFeed":"true"}}}"""
-        val logDir = t0.resolve("_delta_log")
-        java.nio.file.Files.createDirectories(logDir)
-        java.nio.file.Files.writeString(logDir.resolve(f"${0L}%020d.json"),
-          (meta +: adds).mkString("\n"))
-        // v1: hand-written UPDATE on bucket 0 — rewrite with %5==0 rows
-        // bumped by 100 cents, cdc file carrying ONLY the changed rows
-        // as pre/post images (what a snapshot diff cannot reconstruct)
-        val b0 = data(0)
-        val updated = b0.withColumn("cents",
-          when(col("s_suppkey") % 5 === 0, col("cents") + 100)
-            .otherwise(col("cents")))
-        writeSingleParquet(updated, t0.resolve("data/bucket=0/f1.parquet"))
-        val pre = b0.filter(col("s_suppkey") % 5 === 0)
-          .withColumn("_change_type", lit("update_preimage"))
-        val post = updated.filter(col("s_suppkey") % 5 === 0)
-          .withColumn("_change_type", lit("update_postimage"))
-        writeSingleParquet(pre.unionAll(post).orderBy(
-            col("_change_type"), col("s_suppkey")),
-          t0.resolve("_change_data/cdc-v1.parquet"))
-        java.nio.file.Files.writeString(logDir.resolve(f"${1L}%020d.json"), Seq(
-          """{"remove":{"path":"data/bucket=0/f0.parquet","dataChange":true}}""",
-          """{"add":{"path":"data/bucket=0/f1.parquet","partitionValues":{"bucket":"0"},"dataChange":true}}""",
-          """{"cdc":{"path":"_change_data/cdc-v1.parquet","partitionValues":{"bucket":"0"},"dataChange":false}}""")
-          .mkString("\n"))
-        // v2: ENGINE delete on bucket 1 — the CDF-enabled writer must
-        // record the deleted rows itself
-        val v2 = graft.sources.DeltaLog.deleteWithDv(s, t0.toString,
-          "data/bucket=1/f0.parquet", col("s_suppkey") % 3 === 0,
-          uuid = new java.util.UUID(0x6772616674L, 0x63646631L))
-        require(v2 == 2L, s"engine CDF delete landed at v$v2, want 2")
-        val v2Lines = java.nio.file.Files.readString(
-          logDir.resolve(f"${2L}%020d.json"))
-        require(v2Lines.contains("\"cdc\""),
-          "CDF-enabled deleteWithDv must record a cdc action")
-        t0.toString
-      })
+    Staged(s, dir, "delta_cdf_actions") {
+      val t0 = java.nio.file.Files.createTempDirectory("delta_cdfact")
+      val sup = t(s, dir, "supplier").select(
+        col("s_suppkey").cast("long").as("s_suppkey"),
+        (col("s_acctbal").cast("decimal(12,2)") * 100)
+          .cast("long").as("cents"),
+        pmod(col("s_suppkey"), lit(2)).cast("string").as("bucket"))
+      val schema = org.apache.spark.sql.types.StructType.fromDDL(
+        "s_suppkey BIGINT, cents BIGINT, bucket STRING")
+      def data(b: Int) = sup.filter(col("bucket") === b.toString)
+        .drop("bucket").orderBy(col("s_suppkey"))
+      // v0: CDF-enabled table, two partition files (pure-add commit —
+      // the spec's DERIVED-insert shape, no cdc action on purpose)
+      val adds = (0 until 2).map { b =>
+        val rel = s"data/bucket=$b/f0.parquet"
+        writeSingleParquet(data(b), t0.resolve(rel))
+        s"""{"add":{"path":"$rel","partitionValues":{"bucket":"$b"},"dataChange":true}}"""
+      }
+      val meta =
+        s"""{"metaData":{"id":"cdfa","schemaString":"${esc(schema.json)}",""" +
+          s""""partitionColumns":["bucket"],""" +
+          s""""configuration":{"delta.enableChangeDataFeed":"true"}}}"""
+      val logDir = t0.resolve("_delta_log")
+      java.nio.file.Files.createDirectories(logDir)
+      java.nio.file.Files.writeString(logDir.resolve(f"${0L}%020d.json"),
+        (meta +: adds).mkString("\n"))
+      // v1: hand-written UPDATE on bucket 0 — rewrite with %5==0 rows
+      // bumped by 100 cents, cdc file carrying ONLY the changed rows
+      // as pre/post images (what a snapshot diff cannot reconstruct)
+      val b0 = data(0)
+      val updated = b0.withColumn("cents",
+        when(col("s_suppkey") % 5 === 0, col("cents") + 100)
+          .otherwise(col("cents")))
+      writeSingleParquet(updated, t0.resolve("data/bucket=0/f1.parquet"))
+      val pre = b0.filter(col("s_suppkey") % 5 === 0)
+        .withColumn("_change_type", lit("update_preimage"))
+      val post = updated.filter(col("s_suppkey") % 5 === 0)
+        .withColumn("_change_type", lit("update_postimage"))
+      writeSingleParquet(pre.unionAll(post).orderBy(
+          col("_change_type"), col("s_suppkey")),
+        t0.resolve("_change_data/cdc-v1.parquet"))
+      java.nio.file.Files.writeString(logDir.resolve(f"${1L}%020d.json"), Seq(
+        """{"remove":{"path":"data/bucket=0/f0.parquet","dataChange":true}}""",
+        """{"add":{"path":"data/bucket=0/f1.parquet","partitionValues":{"bucket":"0"},"dataChange":true}}""",
+        """{"cdc":{"path":"_change_data/cdc-v1.parquet","partitionValues":{"bucket":"0"},"dataChange":false}}""")
+        .mkString("\n"))
+      // v2: ENGINE delete on bucket 1 — the CDF-enabled writer must
+      // record the deleted rows itself
+      val v2 = graft.sources.DeltaLog.deleteWithDv(s, t0.toString,
+        "data/bucket=1/f0.parquet", col("s_suppkey") % 3 === 0,
+        uuid = new java.util.UUID(0x6772616674L, 0x63646631L))
+      require(v2 == 2L, s"engine CDF delete landed at v$v2, want 2")
+      val v2Lines = java.nio.file.Files.readString(
+        logDir.resolve(f"${2L}%020d.json"))
+      require(v2Lines.contains("\"cdc\""),
+        "CDF-enabled deleteWithDv must record a cdc action")
+      t0.toString
+    }
 
   /** F14n (r12): the recorded change feed end-to-end — v0's inserts
     * DERIVED from the pure-add commit, v1's update pre/post images
@@ -416,41 +408,40 @@ object QueriesR22 {
   private val iceTsBase = 1700000000000L
 
   private def buildIcebergTsTable(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_ts"), _ => {
-        import graft.sources.IcebergCatalog._
-        val t0 = java.nio.file.Files.createTempDirectory("ice_ts")
-        val mdir = t0.resolve("metadata")
-        java.nio.file.Files.createDirectories(mdir)
-        val ml1 = mdir.resolve("snap-10.avro")
-        writeManifestList(ml1, Seq.empty)
-        writeMetadataJsonSpec(mdir.resolve("v1.metadata.json"),
-          Seq(("n_nationkey", "long", true), ("cents", "long", false)),
-          Seq.empty, Seq(10L -> ml1)) // snap 10: empty, UNSTAMPED
-        val nat = t(s, dir, "nation").select(
-          col("n_nationkey").cast("long").as("n_nationkey"),
-          (col("n_regionkey").cast("long") * 100 +
-            length(col("n_name")).cast("long")).as("cents"))
-        val s20 = commitAppend(s, t0.toString, nat, snapshotId = 20L,
-          timestampMs = iceTsBase)
-        require(s20 == 20L)
-        val s30 = commitAppend(s, t0.toString,
-          nat.select((col("n_nationkey") + 1000L).as("n_nationkey"),
-            col("cents")),
-          snapshotId = 30L, timestampMs = iceTsBase + 60000L)
-        require(s30 == 30L)
-        // pin the whole resolution surface
-        require(graft.sources.IcebergCatalog
-          .snapshotAtTimestamp(t0.toString, iceTsBase + 60000L) == 30L)
-        require(graft.sources.IcebergCatalog
-          .snapshotAtTimestamp(t0.toString, iceTsBase + 59999L) == 20L)
-        val loud =
-          try { graft.sources.IcebergCatalog
-            .snapshotAtTimestamp(t0.toString, iceTsBase - 1L); false }
-          catch { case _: IllegalArgumentException => true }
-        require(loud, "pre-first-stamp instant must reject loudly")
-        t0.toString
-      })
+    Staged(s, dir, "iceberg_ts") {
+      import graft.sources.IcebergCatalog._
+      val t0 = java.nio.file.Files.createTempDirectory("ice_ts")
+      val mdir = t0.resolve("metadata")
+      java.nio.file.Files.createDirectories(mdir)
+      val ml1 = mdir.resolve("snap-10.avro")
+      writeManifestList(ml1, Seq.empty)
+      writeMetadataJsonSpec(mdir.resolve("v1.metadata.json"),
+        Seq(("n_nationkey", "long", true), ("cents", "long", false)),
+        Seq.empty, Seq(10L -> ml1)) // snap 10: empty, UNSTAMPED
+      val nat = t(s, dir, "nation").select(
+        col("n_nationkey").cast("long").as("n_nationkey"),
+        (col("n_regionkey").cast("long") * 100 +
+          length(col("n_name")).cast("long")).as("cents"))
+      val s20 = commitAppend(s, t0.toString, nat, snapshotId = 20L,
+        timestampMs = iceTsBase)
+      require(s20 == 20L)
+      val s30 = commitAppend(s, t0.toString,
+        nat.select((col("n_nationkey") + 1000L).as("n_nationkey"),
+          col("cents")),
+        snapshotId = 30L, timestampMs = iceTsBase + 60000L)
+      require(s30 == 30L)
+      // pin the whole resolution surface
+      require(graft.sources.IcebergCatalog
+        .snapshotAtTimestamp(t0.toString, iceTsBase + 60000L) == 30L)
+      require(graft.sources.IcebergCatalog
+        .snapshotAtTimestamp(t0.toString, iceTsBase + 59999L) == 20L)
+      val loud =
+        try { graft.sources.IcebergCatalog
+          .snapshotAtTimestamp(t0.toString, iceTsBase - 1L); false }
+        catch { case _: IllegalArgumentException => true }
+      require(loud, "pre-first-stamp instant must reject loudly")
+      t0.toString
+    }
 
   /** F15k (r12): read "as of 30 seconds after the first stamped
     * commit" — resolves to snapshot 20 (the nation projection), not

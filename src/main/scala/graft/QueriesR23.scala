@@ -18,9 +18,6 @@ object QueriesR23 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  private val tableBuildMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
-
   // ---------------------------------------------------------------
   // F14o (r13): CDC replication INTO a Delta table — two
   // Pipeline.replicateDelta runs (bootstrap create + incremental
@@ -31,56 +28,55 @@ object QueriesR23 {
   // ---------------------------------------------------------------
 
   private def buildCdcDeltaApply(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "cdc_delta_apply"), _ => {
-        import graft.cdc.Pipeline
-        val root = java.nio.file.Files.createTempDirectory("cdc_delta_apply")
-        val orders = t(s, dir, "orders").select(
-          col("o_orderkey").cast("long").as("o_orderkey"),
-          col("o_orderstatus"),
-          (col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long").as("cents"),
-          col("o_orderdate").cast("timestamp").as("__odate"))
-        val cutoff = lit("2000-01-01 00:00:00").cast("timestamp")
-        // run 1 (bootstrap): the pre-2000 population, all live
-        val src1 = orders.filter(col("__odate") < cutoff).select(
-          col("o_orderkey"), col("o_orderstatus"), col("cents"),
-          col("__odate").as("created_at"),
-          lit(null).cast("timestamp").as("updated_at"),
-          lit("N").as("is_deleted"))
-        val spec = Seq(Pipeline.TableSpec("orders_rep", Seq("o_orderkey")))
-        val (r1, wm1) = Pipeline.replicateDelta(s, spec, Nil,
-          _ => src1, root.toString, Map.empty)
-        require(r1.processed == 1 && r1.failed == 0,
-          s"bootstrap run failed: ${r1.results}")
-        // run 2 (incremental): every 3rd key updated (+1000, every
-        // 37th a soft delete), post-2000 keys inserted (every 41st a
-        // source-side tombstone the insert guard must drop); the
-        // untouched run-1 rows ride along and the watermark must
-        // filter them out
-        val touch = lit("2005-06-01 00:00:00").cast("timestamp")
-        val upd = src1.filter(col("o_orderkey") % 3 === 0).select(
-          col("o_orderkey"), lit("U").as("o_orderstatus"),
-          (col("cents") + 100000L).as("cents"),
-          col("created_at"), touch.as("updated_at"),
-          when(col("o_orderkey") % 37 === 0, "Y").otherwise("N")
-            .as("is_deleted"))
-        val ins = orders.filter(col("__odate") >= cutoff).select(
-          col("o_orderkey"), col("o_orderstatus"), col("cents"),
-          touch.as("created_at"),
-          lit(null).cast("timestamp").as("updated_at"),
-          when(col("o_orderkey") % 41 === 0, "Y").otherwise("N")
-            .as("is_deleted"))
-        val src2 = src1.unionByName(upd).unionByName(ins)
-        val (r2, _) = Pipeline.replicateDelta(s, spec, Nil,
-          _ => src2, root.toString, wm1)
-        require(r2.processed == 1 && r2.failed == 0,
-          s"incremental run failed: ${r2.results}")
-        val tbl = s"$root/orders_rep"
-        require(DeltaLog.state(s, tbl).version == 1L,
-          "two runs must land exactly two commits (create + merge)")
-        tbl
-      })
+    Staged(s, dir, "cdc_delta_apply") {
+      import graft.cdc.Pipeline
+      val root = java.nio.file.Files.createTempDirectory("cdc_delta_apply")
+      val orders = t(s, dir, "orders").select(
+        col("o_orderkey").cast("long").as("o_orderkey"),
+        col("o_orderstatus"),
+        (col("o_totalprice").cast("decimal(12,2)") * 100)
+          .cast("long").as("cents"),
+        col("o_orderdate").cast("timestamp").as("__odate"))
+      val cutoff = lit("2000-01-01 00:00:00").cast("timestamp")
+      // run 1 (bootstrap): the pre-2000 population, all live
+      val src1 = orders.filter(col("__odate") < cutoff).select(
+        col("o_orderkey"), col("o_orderstatus"), col("cents"),
+        col("__odate").as("created_at"),
+        lit(null).cast("timestamp").as("updated_at"),
+        lit("N").as("is_deleted"))
+      val spec = Seq(Pipeline.TableSpec("orders_rep", Seq("o_orderkey")))
+      val (r1, wm1) = Pipeline.replicateDelta(s, spec, Nil,
+        _ => src1, root.toString, Map.empty)
+      require(r1.processed == 1 && r1.failed == 0,
+        s"bootstrap run failed: ${r1.results}")
+      // run 2 (incremental): every 3rd key updated (+1000, every
+      // 37th a soft delete), post-2000 keys inserted (every 41st a
+      // source-side tombstone the insert guard must drop); the
+      // untouched run-1 rows ride along and the watermark must
+      // filter them out
+      val touch = lit("2005-06-01 00:00:00").cast("timestamp")
+      val upd = src1.filter(col("o_orderkey") % 3 === 0).select(
+        col("o_orderkey"), lit("U").as("o_orderstatus"),
+        (col("cents") + 100000L).as("cents"),
+        col("created_at"), touch.as("updated_at"),
+        when(col("o_orderkey") % 37 === 0, "Y").otherwise("N")
+          .as("is_deleted"))
+      val ins = orders.filter(col("__odate") >= cutoff).select(
+        col("o_orderkey"), col("o_orderstatus"), col("cents"),
+        touch.as("created_at"),
+        lit(null).cast("timestamp").as("updated_at"),
+        when(col("o_orderkey") % 41 === 0, "Y").otherwise("N")
+          .as("is_deleted"))
+      val src2 = src1.unionByName(upd).unionByName(ins)
+      val (r2, _) = Pipeline.replicateDelta(s, spec, Nil,
+        _ => src2, root.toString, wm1)
+      require(r2.processed == 1 && r2.failed == 0,
+        s"incremental run failed: ${r2.results}")
+      val tbl = s"$root/orders_rep"
+      require(DeltaLog.state(s, tbl).version == 1L,
+        "two runs must land exactly two commits (create + merge)")
+      tbl
+    }
 
   /** F14o (r13): the lake-target CDC apply end-to-end — the recorded
     * change feed of the engine's own two commits (v0 derived inserts,
@@ -113,76 +109,75 @@ object QueriesR23 {
   // ---------------------------------------------------------------
 
   private def buildIcebergSpecEvo(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_spec_evo"), _ => {
-        import graft.sources.IcebergCatalog._
-        val t0 = java.nio.file.Files.createTempDirectory("ice_evo")
-        val mdir = t0.resolve("metadata")
-        java.nio.file.Files.createDirectories(mdir)
-        val ml1 = mdir.resolve("snap-10.avro")
-        writeManifestList(ml1, Seq.empty)
-        writeMetadataJsonSpec(mdir.resolve("v1.metadata.json"),
-          Seq(("n_nationkey", "long", true), ("rk", "string", false),
-            ("cents", "long", false)),
-          Seq(("rk", "identity", "rk")), Seq(10L -> ml1))
-        val nat = t(s, dir, "nation").select(
-          col("n_nationkey").cast("long").as("n_nationkey"),
-          col("n_regionkey").cast("string").as("rk"),
-          (col("n_regionkey").cast("long") * 100 +
-            length(col("n_name")).cast("long")).as("cents"))
-        // snapshot 20 under spec 0: rk is an IDENTITY partition —
-        // data files omit it, manifests carry it
-        require(commitAppend(s, t0.toString, nat, snapshotId = 20L) == 20L)
-        // evolve: bucket[4] on the key becomes the default spec —
-        // nothing rewrites, spec-0 files keep meaning identity(rk)
-        val newId = graft.sources.IcebergCatalog.evolveSpec(t0.toString,
-          Seq(("nk_bucket", "bucket[4]", "n_nationkey")))
-        require(newId == 1, s"evolved spec-id: $newId")
-        // snapshot 30 under spec 1: rk rides IN the data files now
-        require(commitAppend(s, t0.toString,
-          nat.select((col("n_nationkey") + 1000L).as("n_nationkey"),
-            col("rk"), col("cents")),
-          snapshotId = 30L) == 30L)
-        val st = graft.sources.IcebergCatalog.state(s, t0.toString)
-        require(st.files.exists(_.specId == 0) &&
-          st.files.exists(_.specId == 1),
-          s"both specs must hold live files: ${st.files.map(_.specId)}")
-        // new files prune by the NEW spec: a point range on the key
-        // keeps only the matching bucket's spec-1 files
-        val spec1 = st.files.filter(_.specId == 1)
-        val keptB = graft.sources.IcebergCatalog.filesByTransformRange(
-          spec1, st.specsById(1), Map("n_nationkey" -> ((1005L, 1005L))))
-        require(keptB.nonEmpty && keptB.size < spec1.size,
-          s"bucket prune on spec-1 files: ${keptB.size} of ${spec1.size}")
-        // and the pruned read still answers exactly
-        val one = graft.sources.IcebergCatalog.read(s, t0.toString,
-          ranges = Map("n_nationkey" -> ((1005L, 1005L))))
-        require(one.count() ==
-          nat.filter(col("n_nationkey") === 5L).count(),
-          "point read across the evolution must hit exactly the row")
-        // an unknown transform in a HISTORICAL spec is still loud
-        val bad = java.nio.file.Files.createTempDirectory("ice_evo_bad")
-        val bdir = bad.resolve("metadata")
-        java.nio.file.Files.createDirectories(bdir)
-        val bml = bdir.resolve("snap-10.avro")
-        writeManifestList(bml, Seq.empty)
-        java.nio.file.Files.writeString(bdir.resolve("v1.metadata.json"),
-          s"""{
-             |  "format-version": 2, "current-snapshot-id": 10,
-             |  "current-schema-id": 0, "default-spec-id": 1,
-             |  "schemas": [{"schema-id": 0, "type": "struct", "fields": [
-             |    {"id": 1, "name": "k", "required": true, "type": "long"}]}],
-             |  "partition-specs": [
-             |    {"spec-id": 0, "fields": [{"name": "p", "transform": "weird[9]", "source-id": 1, "field-id": 1000}]},
-             |    {"spec-id": 1, "fields": []}],
-             |  "snapshots": [{"snapshot-id": 10, "manifest-list": "$bml"}]
-             |}""".stripMargin)
-        val loud =
-          try { graft.sources.IcebergCatalog.state(s, bad.toString); false }
-          catch { case _: IllegalArgumentException => true }
-        require(loud, "unknown transform in a historical spec must reject")
-        t0.toString
-      })
+    Staged(s, dir, "iceberg_spec_evo") {
+      import graft.sources.IcebergCatalog._
+      val t0 = java.nio.file.Files.createTempDirectory("ice_evo")
+      val mdir = t0.resolve("metadata")
+      java.nio.file.Files.createDirectories(mdir)
+      val ml1 = mdir.resolve("snap-10.avro")
+      writeManifestList(ml1, Seq.empty)
+      writeMetadataJsonSpec(mdir.resolve("v1.metadata.json"),
+        Seq(("n_nationkey", "long", true), ("rk", "string", false),
+          ("cents", "long", false)),
+        Seq(("rk", "identity", "rk")), Seq(10L -> ml1))
+      val nat = t(s, dir, "nation").select(
+        col("n_nationkey").cast("long").as("n_nationkey"),
+        col("n_regionkey").cast("string").as("rk"),
+        (col("n_regionkey").cast("long") * 100 +
+          length(col("n_name")).cast("long")).as("cents"))
+      // snapshot 20 under spec 0: rk is an IDENTITY partition —
+      // data files omit it, manifests carry it
+      require(commitAppend(s, t0.toString, nat, snapshotId = 20L) == 20L)
+      // evolve: bucket[4] on the key becomes the default spec —
+      // nothing rewrites, spec-0 files keep meaning identity(rk)
+      val newId = graft.sources.IcebergCatalog.evolveSpec(t0.toString,
+        Seq(("nk_bucket", "bucket[4]", "n_nationkey")))
+      require(newId == 1, s"evolved spec-id: $newId")
+      // snapshot 30 under spec 1: rk rides IN the data files now
+      require(commitAppend(s, t0.toString,
+        nat.select((col("n_nationkey") + 1000L).as("n_nationkey"),
+          col("rk"), col("cents")),
+        snapshotId = 30L) == 30L)
+      val st = graft.sources.IcebergCatalog.state(s, t0.toString)
+      require(st.files.exists(_.specId == 0) &&
+        st.files.exists(_.specId == 1),
+        s"both specs must hold live files: ${st.files.map(_.specId)}")
+      // new files prune by the NEW spec: a point range on the key
+      // keeps only the matching bucket's spec-1 files
+      val spec1 = st.files.filter(_.specId == 1)
+      val keptB = graft.sources.IcebergCatalog.filesByTransformRange(
+        spec1, st.specsById(1), Map("n_nationkey" -> ((1005L, 1005L))))
+      require(keptB.nonEmpty && keptB.size < spec1.size,
+        s"bucket prune on spec-1 files: ${keptB.size} of ${spec1.size}")
+      // and the pruned read still answers exactly
+      val one = graft.sources.IcebergCatalog.read(s, t0.toString,
+        ranges = Map("n_nationkey" -> ((1005L, 1005L))))
+      require(one.count() ==
+        nat.filter(col("n_nationkey") === 5L).count(),
+        "point read across the evolution must hit exactly the row")
+      // an unknown transform in a HISTORICAL spec is still loud
+      val bad = java.nio.file.Files.createTempDirectory("ice_evo_bad")
+      val bdir = bad.resolve("metadata")
+      java.nio.file.Files.createDirectories(bdir)
+      val bml = bdir.resolve("snap-10.avro")
+      writeManifestList(bml, Seq.empty)
+      java.nio.file.Files.writeString(bdir.resolve("v1.metadata.json"),
+        s"""{
+           |  "format-version": 2, "current-snapshot-id": 10,
+           |  "current-schema-id": 0, "default-spec-id": 1,
+           |  "schemas": [{"schema-id": 0, "type": "struct", "fields": [
+           |    {"id": 1, "name": "k", "required": true, "type": "long"}]}],
+           |  "partition-specs": [
+           |    {"spec-id": 0, "fields": [{"name": "p", "transform": "weird[9]", "source-id": 1, "field-id": 1000}]},
+           |    {"spec-id": 1, "fields": []}],
+           |  "snapshots": [{"snapshot-id": 10, "manifest-list": "$bml"}]
+           |}""".stripMargin)
+      val loud =
+        try { graft.sources.IcebergCatalog.state(s, bad.toString); false }
+        catch { case _: IllegalArgumentException => true }
+      require(loud, "unknown transform in a historical spec must reject")
+      t0.toString
+    }
 
   /** F15l (r13): the spec-evolved table read with a partition filter
     * the OLD spec understands — spec-0 files prune to rk=3 by their
@@ -205,58 +200,57 @@ object QueriesR23 {
   // ---------------------------------------------------------------
 
   private def buildIcebergBranch(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_branch"), _ => {
-        import graft.sources.IcebergCatalog
-        import graft.sources.IcebergCatalog._
-        val t0 = java.nio.file.Files.createTempDirectory("ice_branch")
-        val mdir = t0.resolve("metadata")
-        java.nio.file.Files.createDirectories(mdir)
-        val ml1 = mdir.resolve("snap-10.avro")
-        writeManifestList(ml1, Seq.empty)
-        writeMetadataJsonSpec(mdir.resolve("v1.metadata.json"),
-          Seq(("n_nationkey", "long", true), ("cents", "long", false)),
-          Seq.empty, Seq(10L -> ml1))
-        val nat = t(s, dir, "nation").select(
-          col("n_nationkey").cast("long").as("n_nationkey"),
-          (col("n_regionkey").cast("long") * 100 +
-            length(col("n_name")).cast("long")).as("cents"))
-        val baseN = nat.count()
-        require(commitAppend(s, t0.toString, nat, snapshotId = 20L) == 20L)
-        IcebergCatalog.createRef(t0.toString, "main", 20L, "branch")
-        IcebergCatalog.createRef(t0.toString, "audit", 20L, "branch")
-        // staged on the branch: main must NOT move
-        require(commitAppend(s, t0.toString,
-          nat.select((col("n_nationkey") + 1000L).as("n_nationkey"),
-            col("cents")),
-          snapshotId = 30L, branch = "audit") == 30L)
-        require(IcebergCatalog.read(s, t0.toString).count() == baseN,
-          "main must stay pinned while the branch advances")
-        require(IcebergCatalog.readRef(s, t0.toString, "audit")
-          .count() == baseN * 2, "the branch must see its own append")
-        require(IcebergCatalog.refs(t0.toString)("main")._1 == 20L,
-          "the main ref must not move on a branch commit")
-        // a TAG refuses appends
-        IcebergCatalog.createRef(t0.toString, "pin", 20L, "tag")
-        val tagLoud =
-          try {
-            commitAppend(s, t0.toString, nat, snapshotId = 40L,
-              branch = "pin"); false
-          } catch { case e: IllegalArgumentException =>
-            e.getMessage.contains("tag") }
-        require(tagLoud, "appending to a tag must reject loudly")
-        // expiration rescues the branch head (and the pinned main)
-        val (kept, _) = IcebergCatalog.expireSnapshots(t0.toString,
-          keepLast = 1)
-        require(kept == 2, s"branch head + pinned main survive: $kept")
-        // fast-forward main to the audited branch
-        IcebergCatalog.fastForward(t0.toString, "audit")
-        require(IcebergCatalog.read(s, t0.toString).count() == baseN * 2,
-          "fast-forwarded main must equal the branch")
-        require(IcebergCatalog.refs(t0.toString)("main")._1 == 30L,
-          "fast-forward must move the main ref")
-        t0.toString
-      })
+    Staged(s, dir, "iceberg_branch") {
+      import graft.sources.IcebergCatalog
+      import graft.sources.IcebergCatalog._
+      val t0 = java.nio.file.Files.createTempDirectory("ice_branch")
+      val mdir = t0.resolve("metadata")
+      java.nio.file.Files.createDirectories(mdir)
+      val ml1 = mdir.resolve("snap-10.avro")
+      writeManifestList(ml1, Seq.empty)
+      writeMetadataJsonSpec(mdir.resolve("v1.metadata.json"),
+        Seq(("n_nationkey", "long", true), ("cents", "long", false)),
+        Seq.empty, Seq(10L -> ml1))
+      val nat = t(s, dir, "nation").select(
+        col("n_nationkey").cast("long").as("n_nationkey"),
+        (col("n_regionkey").cast("long") * 100 +
+          length(col("n_name")).cast("long")).as("cents"))
+      val baseN = nat.count()
+      require(commitAppend(s, t0.toString, nat, snapshotId = 20L) == 20L)
+      IcebergCatalog.createRef(t0.toString, "main", 20L, "branch")
+      IcebergCatalog.createRef(t0.toString, "audit", 20L, "branch")
+      // staged on the branch: main must NOT move
+      require(commitAppend(s, t0.toString,
+        nat.select((col("n_nationkey") + 1000L).as("n_nationkey"),
+          col("cents")),
+        snapshotId = 30L, branch = "audit") == 30L)
+      require(IcebergCatalog.read(s, t0.toString).count() == baseN,
+        "main must stay pinned while the branch advances")
+      require(IcebergCatalog.readRef(s, t0.toString, "audit")
+        .count() == baseN * 2, "the branch must see its own append")
+      require(IcebergCatalog.refs(t0.toString)("main")._1 == 20L,
+        "the main ref must not move on a branch commit")
+      // a TAG refuses appends
+      IcebergCatalog.createRef(t0.toString, "pin", 20L, "tag")
+      val tagLoud =
+        try {
+          commitAppend(s, t0.toString, nat, snapshotId = 40L,
+            branch = "pin"); false
+        } catch { case e: IllegalArgumentException =>
+          e.getMessage.contains("tag") }
+      require(tagLoud, "appending to a tag must reject loudly")
+      // expiration rescues the branch head (and the pinned main)
+      val (kept, _) = IcebergCatalog.expireSnapshots(t0.toString,
+        keepLast = 1)
+      require(kept == 2, s"branch head + pinned main survive: $kept")
+      // fast-forward main to the audited branch
+      IcebergCatalog.fastForward(t0.toString, "audit")
+      require(IcebergCatalog.read(s, t0.toString).count() == baseN * 2,
+        "fast-forwarded main must equal the branch")
+      require(IcebergCatalog.refs(t0.toString)("main")._1 == 30L,
+        "fast-forward must move the main ref")
+      t0.toString
+    }
 
   /** F15m (r13): main AFTER the audit-then-fast-forward workflow —
     * the base projection plus the branch-staged append. The fixture
@@ -288,70 +282,69 @@ object QueriesR23 {
   }
 
   private def buildLshIndexStore(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "stream_lsh_maintain"), _ => {
-        import graft.dedup.Dedup
-        val d = t(s, dir, "documents")
-          .select(col("doc_id").cast("long").as("doc_id"), col("text"))
-        val store = java.nio.file.Files
-          .createTempDirectory("lsh_maintain")
-        val staged = store.resolve("in")
-        val mx = d.agg(max(col("doc_id"))).head().getLong(0)
-        // three id-sliced replay files with increasing mtimes → three
-        // in-order micro-batches under maxFilesPerTrigger=1
-        (0 until 3).foreach { i =>
-          val lo = mx * i / 3; val hi = mx * (i + 1) / 3
-          writeSingleParquet(
-            d.filter(col("doc_id") > lo && col("doc_id") <= hi ||
-              lit(i == 0) && col("doc_id") === 0L),
-            staged.resolve(f"b$i%d.parquet"))
-          java.nio.file.Files.setLastModifiedTime(
-            staged.resolve(f"b$i%d.parquet"),
-            java.nio.file.attribute.FileTime.fromMillis(
-              1700000000000L + i * 60000L))
-        }
-        val owners = store.resolve("owners").toString
-        val stream = s.readStream.schema(d.schema)
-          .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-        val q = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val delta = Dedup.bandOwners(Dedup.minhashBandRows(batch,
-              col("doc_id"), col("text"),
-              shingleWords = 3, k = 12, bands = 4))
-            val merged =
-              if (!java.nio.file.Files.exists(java.nio.file.Paths.get(owners)))
-                delta
-              else Dedup.mergeBandOwners(s.read.parquet(owners), delta)
-            // read-modify-write on the index path: materialize to a
-            // sibling then swap (the ParquetTarget discipline)
-            val next = s"$owners.next"
-            merged.write.mode("overwrite").parquet(next)
-            val old = new java.io.File(owners)
-            def rm(f: java.io.File): Unit = {
-              if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-            }
-            if (old.exists()) rm(old)
-            require(new java.io.File(next).renameTo(old),
-              s"index swap failed: $next -> $owners")
-            ()
+    Staged(s, dir, "stream_lsh_maintain") {
+      import graft.dedup.Dedup
+      val d = t(s, dir, "documents")
+        .select(col("doc_id").cast("long").as("doc_id"), col("text"))
+      val store = java.nio.file.Files
+        .createTempDirectory("lsh_maintain")
+      val staged = store.resolve("in")
+      val mx = d.agg(max(col("doc_id"))).head().getLong(0)
+      // three id-sliced replay files with increasing mtimes → three
+      // in-order micro-batches under maxFilesPerTrigger=1
+      (0 until 3).foreach { i =>
+        val lo = mx * i / 3; val hi = mx * (i + 1) / 3
+        writeSingleParquet(
+          d.filter(col("doc_id") > lo && col("doc_id") <= hi ||
+            lit(i == 0) && col("doc_id") === 0L),
+          staged.resolve(f"b$i%d.parquet"))
+        java.nio.file.Files.setLastModifiedTime(
+          staged.resolve(f"b$i%d.parquet"),
+          java.nio.file.attribute.FileTime.fromMillis(
+            1700000000000L + i * 60000L))
+      }
+      val owners = store.resolve("owners").toString
+      val stream = s.readStream.schema(d.schema)
+        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
+      val q = stream.writeStream
+        .foreachBatch { (batch: DataFrame, _: Long) =>
+          val delta = Dedup.bandOwners(Dedup.minhashBandRows(batch,
+            col("doc_id"), col("text"),
+            shingleWords = 3, k = 12, bands = 4))
+          val merged =
+            if (!java.nio.file.Files.exists(java.nio.file.Paths.get(owners)))
+              delta
+            else Dedup.mergeBandOwners(s.read.parquet(owners), delta)
+          // read-modify-write on the index path: materialize to a
+          // sibling then swap (the ParquetTarget discipline)
+          val next = s"$owners.next"
+          merged.write.mode("overwrite").parquet(next)
+          val old = new java.io.File(owners)
+          def rm(f: java.io.File): Unit = {
+            if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
           }
-          .start()
-        try {
-          q.processAllAvailable()
-          val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-          require(dataBatches >= 3,
-            s"per-file admission: want >= 3 data micro-batches, got $dataBatches")
-        } finally q.stop()
-        // THE maintenance law, checked hash-exact: the maintained index
-        // equals a from-scratch rebuild over the whole corpus
-        val idx = s.read.parquet(owners)
-        val rebuilt = Dedup.bandOwners(Dedup.minhashBandRows(d,
-          col("doc_id"), col("text"), shingleWords = 3, k = 12, bands = 4))
-        require(idx.exceptAll(rebuilt).isEmpty &&
-          rebuilt.exceptAll(idx).isEmpty,
-          "maintained index diverged from the batch rebuild")
-        owners
-      })
+          if (old.exists()) rm(old)
+          require(new java.io.File(next).renameTo(old),
+            s"index swap failed: $next -> $owners")
+          ()
+        }
+        .start()
+      try {
+        q.processAllAvailable()
+        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
+        require(dataBatches >= 3,
+          s"per-file admission: want >= 3 data micro-batches, got $dataBatches")
+      } finally q.stop()
+      // THE maintenance law, checked hash-exact: the maintained index
+      // equals a from-scratch rebuild over the whole corpus
+      val idx = s.read.parquet(owners)
+      val rebuilt = Dedup.bandOwners(Dedup.minhashBandRows(d,
+        col("doc_id"), col("text"), shingleWords = 3, k = 12, bands = 4))
+      require(idx.exceptAll(rebuilt).isEmpty &&
+        rebuilt.exceptAll(idx).isEmpty,
+        "maintained index diverged from the batch rebuild")
+      owners
+    }
 
   /** X62 (r13): near-dup candidates served from the STREAM-MAINTAINED
     * band index — the keep set under the index that foreachBatch

@@ -19,9 +19,6 @@ object QueriesR24 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
 
-  private val tableBuildMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, String), String]()
-
   // ---------------------------------------------------------------
   // C38 (r14): CDC replication INTO an Iceberg table — two
   // Pipeline.replicateIceberg runs (bootstrap createTable+append +
@@ -31,73 +28,77 @@ object QueriesR24 {
   // sequence N + staged rows at the same N) and rewrites NOTHING.
   // ---------------------------------------------------------------
 
-  private def buildCdcIcebergApply(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "cdc_iceberg_apply"), _ => {
-        import graft.cdc.Pipeline
-        val root = java.nio.file.Files.createTempDirectory("cdc_ice_apply")
-        val orders = t(s, dir, "orders").select(
-          col("o_orderkey").cast("long").as("o_orderkey"),
-          col("o_orderstatus"),
-          (col("o_totalprice").cast("decimal(12,2)") * 100)
-            .cast("long").as("cents"),
-          col("o_orderdate").cast("timestamp").as("__odate"))
-        val cutoff = lit("2000-01-01 00:00:00").cast("timestamp")
-        val src1 = orders.filter(col("__odate") < cutoff).select(
-          col("o_orderkey"), col("o_orderstatus"), col("cents"),
-          col("__odate").as("created_at"),
-          lit(null).cast("timestamp").as("updated_at"),
-          lit("N").as("is_deleted"))
-        val spec = Seq(Pipeline.TableSpec("orders_rep", Seq("o_orderkey")))
-        val (r1, wm1) = Pipeline.replicateIceberg(s, spec, Nil,
-          _ => src1, root.toString, Map.empty)
-        require(r1.processed == 1 && r1.failed == 0,
-          s"bootstrap run failed: ${r1.results}")
-        val tbl = s"$root/orders_rep"
-        val bootSnap = IcebergCatalog.state(s, tbl).snapshotId
-        val bootFiles = IcebergCatalog.state(s, tbl).files.map(_.path).toSet
-        // run 2: same change script as cdc_delta_apply — every 3rd key
-        // updated (+1000 cents, every 37th a soft delete), post-2000
-        // keys inserted (every 41st a source-side tombstone the insert
-        // guard must drop); untouched run-1 rows ride along and the
-        // watermark must filter them out
-        val touch = lit("2005-06-01 00:00:00").cast("timestamp")
-        val upd = src1.filter(col("o_orderkey") % 3 === 0).select(
-          col("o_orderkey"), lit("U").as("o_orderstatus"),
-          (col("cents") + 100000L).as("cents"),
-          col("created_at"), touch.as("updated_at"),
-          when(col("o_orderkey") % 37 === 0, "Y").otherwise("N")
-            .as("is_deleted"))
-        val ins = orders.filter(col("__odate") >= cutoff).select(
-          col("o_orderkey"), col("o_orderstatus"), col("cents"),
-          touch.as("created_at"),
-          lit(null).cast("timestamp").as("updated_at"),
-          when(col("o_orderkey") % 41 === 0, "Y").otherwise("N")
-            .as("is_deleted"))
-        val src2 = src1.unionByName(upd).unionByName(ins)
-        val (r2, _) = Pipeline.replicateIceberg(s, spec, Nil,
-          _ => src2, root.toString, wm1)
-        require(r2.processed == 1 && r2.failed == 0,
-          s"incremental run failed: ${r2.results}")
-        val st = IcebergCatalog.state(s, tbl)
-        // the MERGE snapshot's shape: one sequenced equality delete
-        // over the PK, every bootstrap file still live and untouched
-        // (pure merge-on-read — zero rewrite), staged rows sequenced
-        // WITH the delete so it cannot cover them
-        require(st.eqDeletes.size == 1, s"eq deletes: ${st.eqDeletes.size}")
-        val (_, edCols, edSeq) = st.eqDeletes.head
-        require(edCols == Seq("o_orderkey") && edSeq > 0L,
-          s"eq delete over pk at a real seq: cols=$edCols seq=$edSeq")
-        require(bootFiles.subsetOf(st.files.map(_.path).toSet),
-          "merge must not rewrite or drop the bootstrap files")
-        require(st.files.exists(_.seq == edSeq),
-          "staged rows must carry the merge's own sequence number")
-        // time travel below the merge still reads the bootstrap state
-        require(IcebergCatalog.read(s, tbl, Some(bootSnap)).count() ==
-          src1.count(),
-          "time travel to the bootstrap snapshot must see the full load")
-        tbl
-      })
+  private[graft] def buildCdcIcebergApply(s: SparkSession, dir: String): String =
+    Staged(s, dir, "cdc_iceberg_apply")(cdcIcebergApplyFresh(s, dir))
+
+  /** A fresh, unstaged copy of the cdc_iceberg_apply replica, for
+    * fixtures that change it.
+    */
+  private def cdcIcebergApplyFresh(s: SparkSession, dir: String): String = {
+    import graft.cdc.Pipeline
+    val root = java.nio.file.Files.createTempDirectory("cdc_ice_apply")
+    val orders = t(s, dir, "orders").select(
+      col("o_orderkey").cast("long").as("o_orderkey"),
+      col("o_orderstatus"),
+      (col("o_totalprice").cast("decimal(12,2)") * 100)
+        .cast("long").as("cents"),
+      col("o_orderdate").cast("timestamp").as("__odate"))
+    val cutoff = lit("2000-01-01 00:00:00").cast("timestamp")
+    val src1 = orders.filter(col("__odate") < cutoff).select(
+      col("o_orderkey"), col("o_orderstatus"), col("cents"),
+      col("__odate").as("created_at"),
+      lit(null).cast("timestamp").as("updated_at"),
+      lit("N").as("is_deleted"))
+    val spec = Seq(Pipeline.TableSpec("orders_rep", Seq("o_orderkey")))
+    val (r1, wm1) = Pipeline.replicateIceberg(s, spec, Nil,
+      _ => src1, root.toString, Map.empty)
+    require(r1.processed == 1 && r1.failed == 0,
+      s"bootstrap run failed: ${r1.results}")
+    val tbl = s"$root/orders_rep"
+    val bootSnap = IcebergCatalog.state(s, tbl).snapshotId
+    val bootFiles = IcebergCatalog.state(s, tbl).files.map(_.path).toSet
+    // run 2: same change script as cdc_delta_apply — every 3rd key
+    // updated (+1000 cents, every 37th a soft delete), post-2000
+    // keys inserted (every 41st a source-side tombstone the insert
+    // guard must drop); untouched run-1 rows ride along and the
+    // watermark must filter them out
+    val touch = lit("2005-06-01 00:00:00").cast("timestamp")
+    val upd = src1.filter(col("o_orderkey") % 3 === 0).select(
+      col("o_orderkey"), lit("U").as("o_orderstatus"),
+      (col("cents") + 100000L).as("cents"),
+      col("created_at"), touch.as("updated_at"),
+      when(col("o_orderkey") % 37 === 0, "Y").otherwise("N")
+        .as("is_deleted"))
+    val ins = orders.filter(col("__odate") >= cutoff).select(
+      col("o_orderkey"), col("o_orderstatus"), col("cents"),
+      touch.as("created_at"),
+      lit(null).cast("timestamp").as("updated_at"),
+      when(col("o_orderkey") % 41 === 0, "Y").otherwise("N")
+        .as("is_deleted"))
+    val src2 = src1.unionByName(upd).unionByName(ins)
+    val (r2, _) = Pipeline.replicateIceberg(s, spec, Nil,
+      _ => src2, root.toString, wm1)
+    require(r2.processed == 1 && r2.failed == 0,
+      s"incremental run failed: ${r2.results}")
+    val st = IcebergCatalog.state(s, tbl)
+    // the MERGE snapshot's shape: one sequenced equality delete
+    // over the PK, every bootstrap file still live and untouched
+    // (pure merge-on-read — zero rewrite), staged rows sequenced
+    // WITH the delete so it cannot cover them
+    require(st.eqDeletes.size == 1, s"eq deletes: ${st.eqDeletes.size}")
+    val (_, edCols, edSeq) = st.eqDeletes.head
+    require(edCols == Seq("o_orderkey") && edSeq > 0L,
+      s"eq delete over pk at a real seq: cols=$edCols seq=$edSeq")
+    require(bootFiles.subsetOf(st.files.map(_.path).toSet),
+      "merge must not rewrite or drop the bootstrap files")
+    require(st.files.exists(_.seq == edSeq),
+      "staged rows must carry the merge's own sequence number")
+    // time travel below the merge still reads the bootstrap state
+    require(IcebergCatalog.read(s, tbl, Some(bootSnap)).count() ==
+      src1.count(),
+      "time travel to the bootstrap snapshot must see the full load")
+    tbl
+  }
 
   /** C38 (r14): the Iceberg-target CDC apply end-to-end — the final
     * replica state of the engine-written v2 table (bootstrap append +
@@ -182,42 +183,41 @@ object QueriesR24 {
   }
 
   private def buildStreamDeltaApply(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "stream_delta_apply"), _ => {
-        import graft.sources.DeltaWrite
-        val root = java.nio.file.Files.createTempDirectory("stream_delta")
-        val (pre, Seq(b1, b2, b3)) = streamBatches(s, dir)
-        val tbl = s"$root/orders_rep"
-        // v0: bootstrap create (CDF on) — the initial full load, live rows
-        DeltaWrite.create(s, tbl,
-          pre.withColumn("is_deleted", lit("N")),
-          configuration = Map("delta.enableChangeDataFeed" -> "true"))
-        val staged = root.resolve("staged")
-        Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
-          writeSingleParquet(b, staged.resolve(f"b$i%d.parquet"),
-            1700000000000L + i * 60000L)
-        }
-        val batches = graft.streaming.Streams.cdcApplyDelta(s, tbl,
-          staged.toString, b1.schema, Seq("o_orderkey"), "__ts",
-          insertFilter = Some(col("is_deleted") === "N"))
-        require(batches >= 3,
-          s"per-file admission: want >= 3 data micro-batches, got $batches")
-        require(DeltaLog.state(s, tbl).version == 3L,
-          "three micro-batches must land exactly three merge commits")
-        // THE apply law, checked exact: the streamed table equals the
-        // same batches applied through the batch merge path
-        import graft.cdc.Cdc
-        val boot = pre.withColumn("is_deleted", lit("N"))
-        val expected = Seq(b1, b2, b3).foldLeft(boot) { (st0, b) =>
-          Cdc.mergeSoftDelete(st0, b.drop("__ts"), Seq("o_orderkey"))
-        }
-        val got = DeltaLog.read(s, tbl)
-          .select(boot.columns.map(col).toSeq: _*)
-        require(got.exceptAll(expected).isEmpty &&
-          expected.exceptAll(got).isEmpty,
-          "streamed Delta state diverged from the batch-applied state")
-        tbl
-      })
+    Staged(s, dir, "stream_delta_apply") {
+      import graft.sources.DeltaWrite
+      val root = java.nio.file.Files.createTempDirectory("stream_delta")
+      val (pre, Seq(b1, b2, b3)) = streamBatches(s, dir)
+      val tbl = s"$root/orders_rep"
+      // v0: bootstrap create (CDF on) — the initial full load, live rows
+      DeltaWrite.create(s, tbl,
+        pre.withColumn("is_deleted", lit("N")),
+        configuration = Map("delta.enableChangeDataFeed" -> "true"))
+      val staged = root.resolve("staged")
+      Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
+        writeSingleParquet(b, staged.resolve(f"b$i%d.parquet"),
+          1700000000000L + i * 60000L)
+      }
+      val batches = graft.streaming.Streams.cdcApplyDelta(s, tbl,
+        staged.toString, b1.schema, Seq("o_orderkey"), "__ts",
+        insertFilter = Some(col("is_deleted") === "N"))
+      require(batches >= 3,
+        s"per-file admission: want >= 3 data micro-batches, got $batches")
+      require(DeltaLog.state(s, tbl).version == 3L,
+        "three micro-batches must land exactly three merge commits")
+      // THE apply law, checked exact: the streamed table equals the
+      // same batches applied through the batch merge path
+      import graft.cdc.Cdc
+      val boot = pre.withColumn("is_deleted", lit("N"))
+      val expected = Seq(b1, b2, b3).foldLeft(boot) { (st0, b) =>
+        Cdc.mergeSoftDelete(st0, b.drop("__ts"), Seq("o_orderkey"))
+      }
+      val got = DeltaLog.read(s, tbl)
+        .select(boot.columns.map(col).toSeq: _*)
+      require(got.exceptAll(expected).isEmpty &&
+        expected.exceptAll(got).isEmpty,
+        "streamed Delta state diverged from the batch-applied state")
+      tbl
+    }
 
   /** X64 (r14): the streaming lake-target CDC apply end-to-end — the
     * recorded change feed of the engine's create + THREE foreachBatch
@@ -249,46 +249,45 @@ object QueriesR24 {
   // ---------------------------------------------------------------
 
   private def buildStreamIcebergApply(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "stream_iceberg_apply"), _ => {
-        val root = java.nio.file.Files.createTempDirectory("stream_ice")
-        val (pre, batches) = streamBatches(s, dir)
-        val tbl = s"$root/orders_rep"
-        val boot = pre.withColumn("is_deleted", lit("N"))
-        IcebergCatalog.createTable(tbl,
-          IcebergCatalog.icebergFields(boot.schema))
-        IcebergCatalog.commitAppend(s, tbl, boot,
-          IcebergCatalog.nextSnapshotId(tbl))
-        val staged = root.resolve("staged")
-        batches.zipWithIndex.foreach { case (b, i) =>
-          writeSingleParquet(b, staged.resolve(f"b$i%d.parquet"),
-            1700000000000L + i * 60000L)
-        }
-        val applied = graft.streaming.Streams.cdcApplyIceberg(s, tbl,
-          staged.toString, batches.head.schema, Seq("o_orderkey"), "__ts",
-          insertFilter = Some(col("is_deleted") === "N"))
-        require(applied >= 3,
-          s"per-file admission: want >= 3 data micro-batches, got $applied")
-        val st = IcebergCatalog.state(s, tbl)
-        // each update batch landed its own SEQUENCED delete; the
-        // sequence-scoping rule is what lets batch 3 re-delete rows
-        // batch 1 wrote (b2 is insert-only: no matched keys, no delete)
-        val seqs = st.eqDeletes.map(_._3).sorted
-        require(seqs.size == 2 && seqs == seqs.distinct,
-          s"two update batches must land two distinct-seq deletes: $seqs")
-        // THE apply law: the streamed table equals the same batches
-        // applied through the batch merge path
-        import graft.cdc.Cdc
-        val expected = batches.foldLeft(boot) { (st0, b) =>
-          Cdc.mergeSoftDelete(st0, b.drop("__ts"), Seq("o_orderkey"))
-        }
-        val got = IcebergCatalog.read(s, tbl)
-          .select(boot.columns.map(col).toSeq: _*)
-        require(got.exceptAll(expected).isEmpty &&
-          expected.exceptAll(got).isEmpty,
-          "streamed Iceberg state diverged from the batch-applied state")
-        tbl
-      })
+    Staged(s, dir, "stream_iceberg_apply") {
+      val root = java.nio.file.Files.createTempDirectory("stream_ice")
+      val (pre, batches) = streamBatches(s, dir)
+      val tbl = s"$root/orders_rep"
+      val boot = pre.withColumn("is_deleted", lit("N"))
+      IcebergCatalog.createTable(tbl,
+        IcebergCatalog.icebergFields(boot.schema))
+      IcebergCatalog.commitAppend(s, tbl, boot,
+        IcebergCatalog.nextSnapshotId(tbl))
+      val staged = root.resolve("staged")
+      batches.zipWithIndex.foreach { case (b, i) =>
+        writeSingleParquet(b, staged.resolve(f"b$i%d.parquet"),
+          1700000000000L + i * 60000L)
+      }
+      val applied = graft.streaming.Streams.cdcApplyIceberg(s, tbl,
+        staged.toString, batches.head.schema, Seq("o_orderkey"), "__ts",
+        insertFilter = Some(col("is_deleted") === "N"))
+      require(applied >= 3,
+        s"per-file admission: want >= 3 data micro-batches, got $applied")
+      val st = IcebergCatalog.state(s, tbl)
+      // each update batch landed its own SEQUENCED delete; the
+      // sequence-scoping rule is what lets batch 3 re-delete rows
+      // batch 1 wrote (b2 is insert-only: no matched keys, no delete)
+      val seqs = st.eqDeletes.map(_._3).sorted
+      require(seqs.size == 2 && seqs == seqs.distinct,
+        s"two update batches must land two distinct-seq deletes: $seqs")
+      // THE apply law: the streamed table equals the same batches
+      // applied through the batch merge path
+      import graft.cdc.Cdc
+      val expected = batches.foldLeft(boot) { (st0, b) =>
+        Cdc.mergeSoftDelete(st0, b.drop("__ts"), Seq("o_orderkey"))
+      }
+      val got = IcebergCatalog.read(s, tbl)
+        .select(boot.columns.map(col).toSeq: _*)
+      require(got.exceptAll(expected).isEmpty &&
+        expected.exceptAll(got).isEmpty,
+        "streamed Iceberg state diverged from the batch-applied state")
+      tbl
+    }
 
   /** X66 (r14): the streaming Iceberg-target CDC apply — the final
     * replica state after the bootstrap append + three foreachBatch
@@ -315,69 +314,68 @@ object QueriesR24 {
   // ---------------------------------------------------------------
 
   private def buildDeltaColmapEvolve(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "delta_colmap_evolve"), _ => {
-        import graft.sources.DeltaWrite
-        import org.apache.spark.sql.types.MetadataBuilder
-        val root = java.nio.file.Files.createTempDirectory("delta_cme")
-        val tbl = s"$root/supplier_rep"
-        def meta(id: Int, phys: String) = new MetadataBuilder()
-          .putLong("delta.columnMapping.id", id)
-          .putString("delta.columnMapping.physicalName", phys).build()
-        val sup = t(s, dir, "supplier").select(
-          col("s_suppkey").cast("long").as("k", meta(1, "col-9f1a")),
-          col("s_name").as("nm", meta(2, "col-22bd")),
-          (col("s_acctbal").cast("decimal(12,2)") * 100)
-            .cast("long").as("cents", meta(3, "col-77c0")))
-        // v0: a mapped CDF-enabled table — data files on disk carry
-        // ONLY physical names
-        DeltaWrite.create(s, tbl, sup, configuration = Map(
-          "delta.columnMapping.mode" -> "name",
-          "delta.columnMapping.maxColumnId" -> "3",
-          "delta.enableChangeDataFeed" -> "true"))
-        val base = sup.select(col("k"), col("nm"), col("cents"))
-        // v1: a NON-evolving merge on the mapped table (mapped CDF
-        // alone): every 4th key gets cents+40
-        val b1 = base.filter(col("k") % 4 === 0)
-          .withColumn("cents", col("cents") + 40L)
-        DeltaWrite.merge(s, tbl, b1, Seq("k"))
-        // v2: the EVOLVING merge — a new `segment` column rides in:
-        // every 6th key updates (cents+600, segment from the key),
-        // every 10th key inserts a fresh k+10000 row (segment 'T')
-        val b2u = base.filter(col("k") % 6 === 0)
-          .withColumn("cents", col("cents") + 600L)
-          .withColumn("segment",
-            concat(lit("S"), (col("k") % 9).cast("string")))
-        val b2i = base.filter(col("k") % 10 === 0)
-          .select((col("k") + 10000L).as("k"), col("nm"),
-            col("cents"), lit("T").as("segment"))
-        DeltaWrite.merge(s, tbl, b2u.unionByName(b2i), Seq("k"))
-        val st = graft.sources.DeltaLog.state(s, tbl)
-        require(st.version == 2L, s"want 3 commits, at v${st.version}")
-        // the evolved field carries a MINTED physical identity and the
-        // counter bumped with it
-        val seg = st.schema.fields.find(_.name == "segment").getOrElse(
-          throw new IllegalStateException("evolved column missing"))
-        require(seg.metadata.getString("delta.columnMapping.physicalName")
-          == "col-4" && seg.metadata.getLong("delta.columnMapping.id") == 4L,
-          "evolved column must mint physical name col-4 / id 4")
-        require(st.configuration("delta.columnMapping.maxColumnId") == "4",
-          "maxColumnId must bump with the minted id")
-        // physical names ON DISK for the new column — no logical leak
-        val merged = st.files.filter(_.path.startsWith("merge-2"))
-        require(merged.nonEmpty, "merge-2 data files missing")
-        val diskCols = s.read.parquet(
-          java.nio.file.Paths.get(tbl, merged.head.path).toString)
-          .columns.toSet
-        require(diskCols.contains("col-4") && !diskCols.contains("segment") &&
-          diskCols.contains("col-9f1a"),
-          s"merge-2 files must hold physical names only: $diskCols")
-        // time travel below the evolution sees the old shape
-        require(!graft.sources.DeltaLog.read(s, tbl, Some(1L))
-          .columns.contains("segment"),
-          "time travel below the evolution must see the old shape")
-        tbl
-      })
+    Staged(s, dir, "delta_colmap_evolve") {
+      import graft.sources.DeltaWrite
+      import org.apache.spark.sql.types.MetadataBuilder
+      val root = java.nio.file.Files.createTempDirectory("delta_cme")
+      val tbl = s"$root/supplier_rep"
+      def meta(id: Int, phys: String) = new MetadataBuilder()
+        .putLong("delta.columnMapping.id", id)
+        .putString("delta.columnMapping.physicalName", phys).build()
+      val sup = t(s, dir, "supplier").select(
+        col("s_suppkey").cast("long").as("k", meta(1, "col-9f1a")),
+        col("s_name").as("nm", meta(2, "col-22bd")),
+        (col("s_acctbal").cast("decimal(12,2)") * 100)
+          .cast("long").as("cents", meta(3, "col-77c0")))
+      // v0: a mapped CDF-enabled table — data files on disk carry
+      // ONLY physical names
+      DeltaWrite.create(s, tbl, sup, configuration = Map(
+        "delta.columnMapping.mode" -> "name",
+        "delta.columnMapping.maxColumnId" -> "3",
+        "delta.enableChangeDataFeed" -> "true"))
+      val base = sup.select(col("k"), col("nm"), col("cents"))
+      // v1: a NON-evolving merge on the mapped table (mapped CDF
+      // alone): every 4th key gets cents+40
+      val b1 = base.filter(col("k") % 4 === 0)
+        .withColumn("cents", col("cents") + 40L)
+      DeltaWrite.merge(s, tbl, b1, Seq("k"))
+      // v2: the EVOLVING merge — a new `segment` column rides in:
+      // every 6th key updates (cents+600, segment from the key),
+      // every 10th key inserts a fresh k+10000 row (segment 'T')
+      val b2u = base.filter(col("k") % 6 === 0)
+        .withColumn("cents", col("cents") + 600L)
+        .withColumn("segment",
+          concat(lit("S"), (col("k") % 9).cast("string")))
+      val b2i = base.filter(col("k") % 10 === 0)
+        .select((col("k") + 10000L).as("k"), col("nm"),
+          col("cents"), lit("T").as("segment"))
+      DeltaWrite.merge(s, tbl, b2u.unionByName(b2i), Seq("k"))
+      val st = graft.sources.DeltaLog.state(s, tbl)
+      require(st.version == 2L, s"want 3 commits, at v${st.version}")
+      // the evolved field carries a MINTED physical identity and the
+      // counter bumped with it
+      val seg = st.schema.fields.find(_.name == "segment").getOrElse(
+        throw new IllegalStateException("evolved column missing"))
+      require(seg.metadata.getString("delta.columnMapping.physicalName")
+        == "col-4" && seg.metadata.getLong("delta.columnMapping.id") == 4L,
+        "evolved column must mint physical name col-4 / id 4")
+      require(st.configuration("delta.columnMapping.maxColumnId") == "4",
+        "maxColumnId must bump with the minted id")
+      // physical names ON DISK for the new column — no logical leak
+      val merged = st.files.filter(_.path.startsWith("merge-2"))
+      require(merged.nonEmpty, "merge-2 data files missing")
+      val diskCols = s.read.parquet(
+        java.nio.file.Paths.get(tbl, merged.head.path).toString)
+        .columns.toSet
+      require(diskCols.contains("col-4") && !diskCols.contains("segment") &&
+        diskCols.contains("col-9f1a"),
+        s"merge-2 files must hold physical names only: $diskCols")
+      // time travel below the evolution sees the old shape
+      require(!graft.sources.DeltaLog.read(s, tbl, Some(1L))
+        .columns.contains("segment"),
+        "time travel below the evolution must see the old shape")
+      tbl
+    }
 
   /** F14s (r14): the evolving CDF merge on a column-mapped table,
     * end-to-end — the recorded change feed across the create + two
@@ -413,42 +411,41 @@ object QueriesR24 {
   // ---------------------------------------------------------------
 
   private def buildIcebergAddColumn(s: SparkSession, dir: String): String =
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_add_column"), _ => {
-        val root = java.nio.file.Files.createTempDirectory("ice_addcol")
-        val tbl = root.resolve("nation_rep").toString
-        IcebergCatalog.createTable(tbl,
-          Seq(("n_nationkey", "long", true), ("cents", "long", false)))
-        val nat = t(s, dir, "nation").select(
-          col("n_nationkey").cast("long").as("n_nationkey"),
+    Staged(s, dir, "iceberg_add_column") {
+      val root = java.nio.file.Files.createTempDirectory("ice_addcol")
+      val tbl = root.resolve("nation_rep").toString
+      IcebergCatalog.createTable(tbl,
+        Seq(("n_nationkey", "long", true), ("cents", "long", false)))
+      val nat = t(s, dir, "nation").select(
+        col("n_nationkey").cast("long").as("n_nationkey"),
+        (col("n_regionkey").cast("long") * 100 +
+          length(col("n_name")).cast("long")).as("cents"))
+      val preSnap = IcebergCatalog.commitAppend(s, tbl, nat,
+        IcebergCatalog.nextSnapshotId(tbl))
+      val sid = IcebergCatalog.addColumn(tbl, "tag", "string")
+      require(sid == 1, s"evolved schema-id: $sid")
+      IcebergCatalog.commitAppend(s, tbl,
+        t(s, dir, "nation").select(
+          (col("n_nationkey").cast("long") + 1000L).as("n_nationkey"),
           (col("n_regionkey").cast("long") * 100 +
-            length(col("n_name")).cast("long")).as("cents"))
-        val preSnap = IcebergCatalog.commitAppend(s, tbl, nat,
-          IcebergCatalog.nextSnapshotId(tbl))
-        val sid = IcebergCatalog.addColumn(tbl, "tag", "string")
-        require(sid == 1, s"evolved schema-id: $sid")
-        IcebergCatalog.commitAppend(s, tbl,
-          t(s, dir, "nation").select(
-            (col("n_nationkey").cast("long") + 1000L).as("n_nationkey"),
-            (col("n_regionkey").cast("long") * 100 +
-              length(col("n_name")).cast("long")).as("cents"),
-            concat(lit("R"), col("n_regionkey").cast("string")).as("tag")),
-          IcebergCatalog.nextSnapshotId(tbl))
-        // time travel BELOW the evolution reads the committed shape —
-        // no tag column at all, not a column of NULLs
-        val old = IcebergCatalog.read(s, tbl, Some(preSnap))
-        require(old.columns.toSeq == Seq("n_nationkey", "cents"),
-          s"pre-evolution snapshot must keep the old shape: " +
-            s"${old.columns.mkString(",")}")
-        require(old.count() == nat.count(),
-          "pre-evolution snapshot must hold the first append")
-        // the counter rule: the new field sits at the next free id
-        val st = IcebergCatalog.state(s, tbl)
-        require(st.schema.fieldNames.toSeq ==
-          Seq("n_nationkey", "cents", "tag"),
-          s"evolved read schema: ${st.schema.fieldNames.mkString(",")}")
-        tbl
-      })
+            length(col("n_name")).cast("long")).as("cents"),
+          concat(lit("R"), col("n_regionkey").cast("string")).as("tag")),
+        IcebergCatalog.nextSnapshotId(tbl))
+      // time travel BELOW the evolution reads the committed shape —
+      // no tag column at all, not a column of NULLs
+      val old = IcebergCatalog.read(s, tbl, Some(preSnap))
+      require(old.columns.toSeq == Seq("n_nationkey", "cents"),
+        s"pre-evolution snapshot must keep the old shape: " +
+          s"${old.columns.mkString(",")}")
+      require(old.count() == nat.count(),
+        "pre-evolution snapshot must hold the first append")
+      // the counter rule: the new field sits at the next free id
+      val st = IcebergCatalog.state(s, tbl)
+      require(st.schema.fieldNames.toSeq ==
+        Seq("n_nationkey", "cents", "tag"),
+        s"evolved read schema: ${st.schema.fieldNames.mkString(",")}")
+      tbl
+    }
 
   /** F15n (r14): the cross-evolution Iceberg read — pre-evolution
     * rows surface the added column as NULL (field-id-keyed schema
@@ -469,36 +466,31 @@ object QueriesR24 {
   // read-side anti-join amplification each commitMerge adds.
   // ---------------------------------------------------------------
 
-  private def buildIcebergCompact(s: SparkSession, dir: String): String = {
-    // built OUTSIDE the mapping function: a nested computeIfAbsent on
-    // the same memo map throws "Recursive update" (same-bin rule)
-    val base = buildCdcIcebergApply(s, dir)
-    tableBuildMemo.computeIfAbsent(
-      (s.sparkContext.applicationId, dir, "iceberg_compact"), _ => {
-        val tbl = base
-        val before = IcebergCatalog.state(s, tbl)
-        require(before.eqDeletes.nonEmpty,
-          "fixture must carry the merge's equality delete pre-compaction")
-        val preRows = IcebergCatalog.read(s, tbl)
-        val snap = IcebergCatalog.rewriteDataFiles(s, tbl,
-          IcebergCatalog.nextSnapshotId(tbl))
-        val after = IcebergCatalog.state(s, tbl)
-        // deletes folded in, only compacted files live, rows identical
-        require(after.eqDeletes.isEmpty && after.posDeletes.isEmpty,
-          "compaction must fold every delete in")
-        require(after.files.forall(_.path.contains(s"compact-$snap")),
-          s"live set must be the compacted files: ${after.files.map(_.path)}")
-        val now = IcebergCatalog.read(s, tbl)
-        require(now.exceptAll(preRows).isEmpty &&
-          preRows.exceptAll(now).isEmpty,
-          "compaction changed the table's rows")
-        // the pre-compaction snapshot still time-travels, deletes applied
-        require(IcebergCatalog.read(s, tbl, Some(before.snapshotId))
-          .count() == preRows.count(),
-          "pre-compaction snapshot must stay travelable")
-        tbl
-      })
-  }
+  private def buildIcebergCompact(s: SparkSession, dir: String): String =
+    Staged(s, dir, "iceberg_compact") {
+      val tbl = cdcIcebergApplyFresh(s, dir)
+      val before = IcebergCatalog.state(s, tbl)
+      require(before.eqDeletes.nonEmpty,
+        "fixture must carry the merge's equality delete pre-compaction")
+      val preRows = IcebergCatalog.read(s, tbl)
+      val snap = IcebergCatalog.rewriteDataFiles(s, tbl,
+        IcebergCatalog.nextSnapshotId(tbl))
+      val after = IcebergCatalog.state(s, tbl)
+      // deletes folded in, only compacted files live, rows identical
+      require(after.eqDeletes.isEmpty && after.posDeletes.isEmpty,
+        "compaction must fold every delete in")
+      require(after.files.forall(_.path.contains(s"compact-$snap")),
+        s"live set must be the compacted files: ${after.files.map(_.path)}")
+      val now = IcebergCatalog.read(s, tbl)
+      require(now.exceptAll(preRows).isEmpty &&
+        preRows.exceptAll(now).isEmpty,
+        "compaction changed the table's rows")
+      // the pre-compaction snapshot still time-travels, deletes applied
+      require(IcebergCatalog.read(s, tbl, Some(before.snapshotId))
+        .count() == preRows.count(),
+        "pre-compaction snapshot must stay travelable")
+      tbl
+    }
 
   /** F15p (r14): the compacted replica — [[cdcIcebergApply]]'s final
     * state after `rewriteDataFiles` folded the merge's equality delete

@@ -248,34 +248,26 @@ object QueriesR6 {
       .filter(col("src") < col("dst"))
   }
 
-  // Staged co-purchase graph, computed once per (SparkContext, data dir)
-  // and shared by every graph gate in the process. The build — a grouped
-  // lineitem self-join — costs ~4 s at sf0.1 and was being recomputed by
-  // each of the ~15 graph gates (and twice more by the bench's best-of-2
-  // runs); its canonical aggregate (src < dst, w = shared-order count) is
-  // ~1 row per distinct part pair, so one eager localCheckpoint holds the
-  // whole graph in executor storage at a fraction of one build's cost.
-  // Keyed by applicationId so a test suite that restarts the context can
-  // never see a stale RDD handle. At production scale the same staging is
-  // a cluster-store checkpoint or a bucketed parquet materialization.
-  private val coPurchaseMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
+  // Staged co-purchase graph, shared by every graph gate in the process.
+  // The build — a grouped lineitem self-join — costs ~4 s at sf0.1 and
+  // was being recomputed by each of the ~15 graph gates (and twice more
+  // by the bench's best-of-2 runs); its canonical aggregate (src < dst,
+  // w = shared-order count) is ~1 row per distinct part pair, so staging
+  // holds the whole graph in executor storage at a fraction of one
+  // build's cost. At production scale the same staging is a
+  // cluster-store checkpoint or a bucketed parquet materialization.
 
   /** Canonical weighted co-purchase edges: (src, dst, w), src < dst, one
     * row per distinct pair, w = number of shared orders. Exactly
     * `coPurchasePairs.groupBy(src, dst).count()` — the form every
     * consumer reduces to (the unweighted gates dedup, the weighted gates
-    * group-count), staged once per process per data dir.
+    * group-count). Cached columnar for the same reason as coPurchaseDir
+    * (r14).
     */
   private[graft] def coPurchaseWeighted(s: SparkSession, dir: String): DataFrame =
-    coPurchaseMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
-      // cached columnar for the same reason as coPurchaseDir (r14)
-      val d = coPurchasePairs(s, dir)
-        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w"))
-        .persist()
-      d.count()
-      d
-    })
+    Staged.frame(s, dir, "co_purchase_weighted")(
+      coPurchasePairs(s, dir)
+        .groupBy(col("src"), col("dst")).agg(count(lit(1)).as("w")))
 
   /** Distinct canonical co-purchase edge list (src < dst, deduped) off
     * the staged weighted table — the input shape of the unweighted graph
@@ -286,50 +278,38 @@ object QueriesR6 {
     coPurchaseWeighted(s, dir).select(col("src"), col("dst"))
 
   /** The canonical DOUBLED directed table (both (u,v) and (v,u), no
-    * self-loops, distinct), staged once per process — the exact input
-    * contract of the `*OnDir` operator entry points, skipping their
-    * defensive re-canonicalization (a full distinct + double +
-    * checkpoint per gate otherwise).
+    * self-loops, distinct) — the exact input contract of the `*OnDir`
+    * operator entry points, skipping their defensive
+    * re-canonicalization (a full distinct + double + checkpoint per gate
+    * otherwise).
+    *
+    * Cached columnar instead of localCheckpoint raw rows (r14, guide §5):
+    * every iterative graph gate re-scans this table 6-10 times per run;
+    * the checkpointed row form read back as ~191 MB of deserialized rows
+    * PER SCAN (8-15 CPU-s each), while the cached InMemoryRelation stores
+    * compressed columnar batches (~1/5 the bytes) that whole-stage
+    * codegen scans natively.
     */
-  private val coPurchaseDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   private[graft] def coPurchaseDir(s: SparkSession, dir: String): DataFrame =
-    coPurchaseDirMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
+    Staged.frame(s, dir, "co_purchase_dir") {
       val und = coPurchaseEdges(s, dir)
-      // Cached columnar instead of localCheckpoint raw rows (r14, guide
-      // §5): every iterative graph gate re-scans this table 6-10 times
-      // per run; the checkpointed row form read back as ~191 MB of
-      // deserialized rows PER SCAN (8-15 CPU-s each), while the cached
-      // InMemoryRelation stores compressed columnar batches (~1/5 the
-      // bytes) that whole-stage codegen scans natively — same
-      // once-per-process staging discipline, cheaper every read.
-      val d = und.select(col("src"), col("dst"))
+      und.select(col("src"), col("dst"))
         .unionAll(und.select(col("dst").as("src"), col("src").as("dst")))
-        .persist()
-      d.count()
-      d
-    })
+    }
 
   /** The DOUBLED directed WEIGHTED table (both (u,v,w) and (v,u,w), min-w
     * per distinct pair — trivially, the staged table is one row per pair
-    * — no self-loops), staged once per process: the input contract of
+    * — no self-loops): the input contract of
     * [[graft.operators.Graph.shortestPathsWeightedOnDir]], skipping its
     * defensive min-w canonicalization + doubling + checkpoint per call.
     */
-  private val coPurchaseWeightedDirMemo =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), DataFrame]()
-
   private[graft] def coPurchaseWeightedDir(s: SparkSession, dir: String): DataFrame =
-    coPurchaseWeightedDirMemo.computeIfAbsent((s.sparkContext.applicationId, dir), _ => {
+    Staged.frame(s, dir, "co_purchase_weighted_dir") {
       val und = coPurchaseWeighted(s, dir)
-      val d = und.select(col("src"), col("dst"), col("w"))
+      und.select(col("src"), col("dst"), col("w"))
         .unionAll(und.select(col("dst").as("src"), col("src").as("dst"),
           col("w")))
-        .persist()
-      d.count()
-      d
-    })
+    }
 
   /** R73: structural graph summary (see [[graft.operators.Graph.summary]])
     * — node/edge counts, degree extremes, mean degree ppm, component

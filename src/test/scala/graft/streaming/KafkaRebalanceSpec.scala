@@ -21,6 +21,38 @@ class KafkaRebalanceSpec extends AnyFunSuite {
     assert(!t1.isAlive && !t2.isAlive, "parallel group action hung")
   }
 
+  /** Drive `ms` through a rebalance the way polling consumers do: each
+    * member joins, then heartbeats and rejoins whenever the coordinator
+    * reports a rebalance, until every member holds a heartbeat-clean
+    * seat in one generation. A member whose join lands after the others
+    * closed their round thus pulls them back in; without the heartbeat
+    * it would wait out the join barrier alone and evict them.
+    */
+  private def settle(ms: GroupConsumer*): Unit = {
+    val seat = new java.util.concurrent.atomic.AtomicIntegerArray(ms.size)
+    (0 until ms.size).foreach(seat.set(_, -1))
+    def settled = {
+      val g = seat.get(0)
+      g >= 0 && (0 until ms.size).forall(seat.get(_) == g)
+    }
+    @volatile var err: Throwable = null
+    val ts = ms.zipWithIndex.map { case (m, i) => new Thread(() =>
+      try {
+        val deadline = System.currentTimeMillis() + 60000
+        m.rebalance()
+        while (!settled && err == null &&
+            System.currentTimeMillis() < deadline) {
+          if (m.heartbeat() == 0) seat.set(i, m.generation)
+          else { seat.set(i, -1); m.rebalance() }
+          Thread.sleep(10)
+        }
+      } catch { case e: Throwable => if (err == null) err = e })
+    }
+    ts.foreach(_.start()); ts.foreach(_.join(90000))
+    if (err != null) throw err
+    assert(ts.forall(!_.isAlive), "parallel group action hung")
+  }
+
   private def withBroker(parts: Int)(body: (KafkaBusServer.Handle, Int) => Unit): Unit = {
     val h = KafkaBusServer.serve(null, emptyPartitions = parts)
     try body(h, h.port) finally h.close()
@@ -213,35 +245,25 @@ class KafkaRebalanceSpec extends AnyFunSuite {
       while (!formed) {
         attempts += 1
         assert(attempts <= 8, "pair formation did not converge")
-        inParallel(a.rebalance(), b.rebalance())
+        settle(a, b)
         formed = a.generation == b.generation &&
           (a.assigned ++ b.assigned).sorted == (0 until 6)
       }
       // settle to the full target (a fresh formation may itself have
       // needed a second phase)
-      inParallel(a.rebalance(), b.rebalance())
+      settle(a, b)
       val aBefore = a.assigned.toSet
       val bBefore = b.assigned.toSet
       assert(aBefore.size == 3 && bBefore.size == 3)
       // C joins: phase 1 — incumbents keep all NON-moving partitions
       // (never an ownership gap on them), C waits
       val c = new GroupConsumer("127.0.0.1", port, group, "bus", "cooperative")
-      def par3(f: => Unit, g: => Unit, e: => Unit): Unit = {
-        @volatile var err: Throwable = null
-        def guard(body: => Unit): Runnable = () =>
-          try body catch { case x: Throwable => if (err == null) err = x }
-        val ts = Seq(new Thread(guard(f)), new Thread(guard(g)),
-          new Thread(guard(e)))
-        ts.foreach(_.start()); ts.foreach(_.join(60000))
-        if (err != null) throw err
-        assert(ts.forall(!_.isAlive), "parallel group action hung")
-      }
       attempts = 0
       var phase1 = false
       while (!phase1) {
         attempts += 1
         assert(attempts <= 8, "phase-1 rebalance did not converge")
-        par3(a.rebalance(), b.rebalance(), c.rebalance())
+        settle(a, b, c)
         phase1 = a.generation == b.generation && b.generation == c.generation
       }
       // phase 1 invariants: survivors only SHRANK (nothing new landed
@@ -257,7 +279,7 @@ class KafkaRebalanceSpec extends AnyFunSuite {
       while (!done) {
         attempts += 1
         assert(attempts <= 8, "phase-2 rebalance did not converge")
-        par3(a.rebalance(), b.rebalance(), c.rebalance())
+        settle(a, b, c)
         done = a.generation == b.generation && b.generation == c.generation &&
           (a.assigned ++ b.assigned ++ c.assigned).sorted == (0 until 6) &&
           Seq(a, b, c).forall(_.assigned.size == 2)
