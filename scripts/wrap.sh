@@ -2,7 +2,7 @@
 # End-of-round wrap gate: NO snapshot commit may land without this passing.
 #
 #   scripts/wrap.sh            # Test/compile + full sf0.001 gate (~5 min)
-#   scripts/wrap.sh --fast     # memo guard + Test/compile only (~30 s)
+#   scripts/wrap.sh --fast     # guards + Test/compile only (~30 s)
 #
 # Exit 0 = safe to commit. Any red build or gate failure exits non-zero.
 set -euo pipefail
@@ -15,6 +15,16 @@ export SBT_OPTS="${SBT_OPTS:--Dsbt.override.build.repos=true -Dsbt.repository.co
 # shared inputs are staged through graft.Staged only: no per-file memo maps
 if grep -nE 'computeIfAbsent|ConcurrentHashMap' src/main/scala/graft/Queries*.scala; then
   echo "[wrap] per-file memo in Queries*.scala — stage through graft.Staged"
+  exit 1
+fi
+
+# lake files are written and published through graft.sources.LakeWriter only
+if grep -nE 'createTempDirectory' src/main/scala/graft/sources/{DeltaLog,DeltaWrite,IcebergCatalog}.scala; then
+  echo "[wrap] temp-dir write in a lake file — write through graft.sources.LakeWriter"
+  exit 1
+fi
+if grep -nE 'writeSingleParquet' src/main/scala/graft/Queries*.scala; then
+  echo "[wrap] fixture parquet copy in Queries*.scala — use LakeWriter.writeParquetFile"
   exit 1
 fi
 

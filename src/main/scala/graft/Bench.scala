@@ -82,6 +82,27 @@ object Bench {
     "graph_eigenvector", "graph_assortativity", "graph_modularity",
     "graph_hits", "graph_link_predict")
 
+  /** A physical-plan string with its per-run noise stripped, keeping
+    * the operator tree: expression and plan ids; UUIDs; temp fixture
+    * paths and data paths under `dataRoot` (the dir holding the scale
+    * factor dirs), including a temp file list the plan cut short (its
+    * cut point moves with the temp dir name's length); the global
+    * counter suffix of higher-order-function lambda variables
+    * (`lambda x_5`); and the identity hash codes and lambda class
+    * numbers of objects a typed operator prints (`Foo$$Lambda$4077/0x…@642ebd4c`,
+    * `[D@c0248df`).
+    */
+  private[graft] def planNorm(plan: String, dataRoot: String): String = plan
+    .replaceAll("#\\d+L?", "")
+    .replaceAll(", \\[plan_id=\\d+\\]", "")
+    .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "UUID")
+    .replaceAll("(Location: \\w+\\(\\d+ paths?\\)\\[file:/tmp/)[^\\]]*?(?:\\]|\\.\\.\\.)", "$1X]")
+    .replaceAll("/tmp/[^\\s,\\]\\)]*", "/tmp/X")
+    .replaceAll(java.util.regex.Pattern.quote(dataRoot) + "/[^\\s,\\]\\)]*", "/data/X")
+    .replaceAll("\\b(lambda [A-Za-z_]\\w*?)_\\d+\\b", "$1")
+    .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+", "Lambda")
+    .replaceAll("@[0-9a-f]{1,8}\\b", "@X")
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -241,22 +262,16 @@ object Bench {
         "\"" + k + "\":" + f"$gc%.3f"
     }.mkString("{", ",", "}")
     // Per-gate PLAN HASH (r14, the r13 verdict's adjudication ask):
-    // sha-8 of the normalized physical-plan string, so "plan unchanged,
-    // time moved" is a one-line artifact diff instead of a PLANS.md
-    // archaeology session. Normalization strips the per-run noise —
-    // expression ids, plan ids, temp fixture paths, UUIDs — and keeps
-    // the operator tree. Plan-only (no execution): the fixtures are
-    // already staged by the timed runs above.
+    // sha-8 of the normalized physical-plan string (see [[planNorm]]),
+    // so "plan unchanged, time moved" is a one-line artifact diff
+    // instead of a PLANS.md archaeology session. Plan-only (no
+    // execution): the fixtures are already staged by the timed runs
+    // above.
+    val dataRoot = java.nio.file.Paths.get(sfDir).toAbsolutePath.getParent.toString
     def planSha(name: String): Option[String] =
       try {
-        val plan = SparkEntry.queries(name)(spark, sfDir)
-          .queryExecution.executedPlan.toString()
-        val norm = plan
-          .replaceAll("#\\d+L?", "")
-          .replaceAll(", \\[plan_id=\\d+\\]", "")
-          .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "UUID")
-          .replaceAll("/tmp/[^\\s,\\]\\)]*", "/tmp/X")
-          .replaceAll("/root/testdata/[^\\s,\\]\\)]*", "/data/X")
+        val norm = planNorm(SparkEntry.queries(name)(spark, sfDir)
+          .queryExecution.executedPlan.toString(), dataRoot)
         val d = java.security.MessageDigest.getInstance("SHA-256")
           .digest(norm.getBytes("UTF-8"))
         Some(d.take(4).map(b => f"$b%02x").mkString)

@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.Dataset
+import org.apache.spark.sql.{DataFrame, Dataset}
 
 /** Capture point for the physical plans of ITERATIVE loop state.
   *
@@ -42,6 +42,28 @@ object PlanProbe {
   def record(ds: Dataset[_]): Unit = if (active) synchronized {
     val p = normalize(ds.queryExecution.executedPlan.toString())
     shapes.update(p, shapes.getOrElse(p, 0) + 1)
+  }
+
+  /** Eager localCheckpoint that DROPS inherited plan statistics (and,
+    * unlike [[CkptOps.ckpt]], records nothing into the probe).
+    *
+    * Spark 4's `LogicalRDD.fromDataset` (inside localCheckpoint) rewrites
+    * the origin plan's size estimate onto the new leaf. A loop whose
+    * round plan MULTIPLIES its leaf's estimate — every join does — then
+    * compounds the estimate exponentially across rounds: by round ~14 of
+    * the 24-round BPE trainer the driver sat for minutes multiplying
+    * million-digit BigInts inside `SizeInBytesOnlyStatsPlanVisitor`
+    * (observed via jstack; the shorter graph loops stay under the radar
+    * only because their digit growth is 2^rounds with small rounds).
+    * Rebuilding the Dataset from the checkpointed RDD gives a leaf with
+    * default statistics; every size-sensitive join in the tokenizer
+    * rounds carries an explicit broadcast hint, so no planning decision
+    * there ever consulted the inherited estimate. Row-conversion cost is
+    * paid on VOCABULARY-sized data only.
+    */
+  def ckptFresh(df: DataFrame): DataFrame = {
+    val c = df.localCheckpoint(true)
+    df.sparkSession.createDataFrame(c.rdd, c.schema)
   }
 
   implicit class CkptOps[T](private val ds: Dataset[T]) extends AnyVal {

@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.operators.Bpe
-import graft.sources.Tables
+import graft.sources.{LakeWriter, Tables}
 
 /** Round-7 surface growth: true BPE tokenization (T34 — the r6 verdict's
   * top text gap) with the token-budget operators re-pointed at trained
@@ -434,19 +434,6 @@ object QueriesR16 {
   // handful of tiny writes.
   // ---------------------------------------------------------------
 
-  private def writeSingleParquet(df: DataFrame,
-                                 target: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("rt_part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val st = java.nio.file.Files.list(tmp)
-    val part = try st.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    finally st.close()
-    java.nio.file.Files.createDirectories(target.getParent)
-    java.nio.file.Files.move(part, target)
-  }
-
   private def esc(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
 
@@ -469,7 +456,7 @@ object QueriesR16 {
         // by position, so positions must be deterministic
         val adds = (0 until 5).map { b =>
           val rel = s"data/bucket=$b/f0.parquet"
-          writeSingleParquet(
+          LakeWriter.writeParquetFile(
             sup.filter(col("bucket") === b.toString).drop("bucket")
               .orderBy(col("s_suppkey")),
             t0.resolve(rel))
@@ -482,7 +469,7 @@ object QueriesR16 {
         java.nio.file.Files.writeString(logDir.resolve(f"${0L}%020d.json"),
           (meta +: adds).mkString("\n"))
         // v1: replace bucket 0 with bal + 10000 (the remove/re-add path)
-        writeSingleParquet(
+        LakeWriter.writeParquetFile(
           sup.filter(col("bucket") === "0").drop("bucket")
             .withColumn("bal_cents", col("bal_cents") + 10000L),
           t0.resolve("data/bucket=0/f1.parquet"))
@@ -583,7 +570,7 @@ object QueriesR16 {
         // (file, pos) address deterministic records
         val files = rks.map { r =>
           val rel = t0.resolve(s"data/rk=$r/f0.parquet")
-          writeSingleParquet(
+          LakeWriter.writeParquetFile(
             nest(n.filter(col("rk") === r).drop("rk")
               .orderBy(col("n_nationkey"))), rel)
           r -> rel.toString
@@ -595,7 +582,7 @@ object QueriesR16 {
         writeManifestList(ml1, Seq(m1))
         // snapshot 20: renumber region 0's nations by +1000
         val repl = t0.resolve("data/rk=0/f1.parquet")
-        writeSingleParquet(
+        LakeWriter.writeParquetFile(
           nest(n.filter(col("rk") === "0").drop("rk")
             .withColumn("n_nationkey", col("n_nationkey") + 1000L)),
           repl)
@@ -613,11 +600,11 @@ object QueriesR16 {
           ManifestEntry(0, p, 0, Map("rk" -> r)) } :+
           ManifestEntry(0, repl.toString, 0, Map("rk" -> "0"))
         val pd = t0.resolve("data/pd1.parquet")
-        writeSingleParquet(
+        LakeWriter.writeParquetFile(
           s.createDataFrame(Seq((files.toMap.apply("1"), 0L)))
             .toDF("file_path", "pos"), pd)
         val ed = t0.resolve("data/ed1.parquet")
-        writeSingleParquet(
+        LakeWriter.writeParquetFile(
           n.filter(col("n_nationkey") === 14).select(col("n_name")), ed)
         val m3 = mdir.resolve("m3.avro")
         writeManifestEntries(m3, Seq("rk"), live3 :+

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{LakeWriter, Tables}
 
 /** Round-11 surface growth: the real-lake tier the r10 verdict ranked —
   * Delta column mapping under the protocol guard (F14f: physical-name
@@ -16,20 +16,6 @@ import graft.sources.Tables
 object QueriesR21 {
   private def t(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-
-  private def writeSingleParquet(df: DataFrame,
-                                 target: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("rt_part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val st = java.nio.file.Files.list(tmp)
-    val part = try st.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    finally st.close()
-    java.nio.file.Files.createDirectories(target.getParent)
-    java.nio.file.Files.move(part, target)
-    graft.sources.DeltaLog.deleteTmp(tmp)
-  }
 
   private def esc(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
@@ -79,7 +65,7 @@ object QueriesR21 {
       val adds = (0 until 3).flatMap { b =>
         (0 until 2).map { half =>
           val rel = s"data/b$b-$half.parquet"
-          writeSingleParquet(
+          LakeWriter.writeParquetFile(
             sup.filter(col("bucket") === b.toString &&
                 pmod(col("s_suppkey"), lit(2)) === half).select(
               col("s_suppkey").as(phys("s_suppkey")),
@@ -152,7 +138,7 @@ object QueriesR21 {
         "s_suppkey BIGINT, cents BIGINT, bucket STRING")
       val adds = (0 until 2).map { b =>
         val rel = s"data/bucket=$b/f0.parquet"
-        writeSingleParquet(
+        LakeWriter.writeParquetFile(
           sup.filter(col("bucket") === b.toString).drop("bucket")
             .orderBy(col("s_suppkey")),
           t0.resolve(rel))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.Tables
+import graft.sources.{LakeWriter, Tables}
 
 /** Round-12 surface growth, per the r11 verdict's ranked gaps: Kafka
   * consumer-group REBALANCE (X58 — two consumers split partitions via
@@ -282,20 +282,6 @@ object QueriesR22 {
   private def esc(s: String): String =
     s.replace("\\", "\\\\").replace("\"", "\\\"")
 
-  private def writeSingleParquet(df: DataFrame,
-                                 target: java.nio.file.Path): Unit = {
-    import scala.jdk.CollectionConverters._
-    val tmp = java.nio.file.Files.createTempDirectory("rt_part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val st = java.nio.file.Files.list(tmp)
-    val part = try st.iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    finally st.close()
-    java.nio.file.Files.createDirectories(target.getParent)
-    java.nio.file.Files.move(part, target)
-    graft.sources.DeltaLog.deleteTmp(tmp)
-  }
-
   private def buildDeltaCdfActionsTable(s: SparkSession, dir: String): String =
     Staged(s, dir, "delta_cdf_actions") {
       val t0 = java.nio.file.Files.createTempDirectory("delta_cdfact")
@@ -312,7 +298,7 @@ object QueriesR22 {
       // the spec's DERIVED-insert shape, no cdc action on purpose)
       val adds = (0 until 2).map { b =>
         val rel = s"data/bucket=$b/f0.parquet"
-        writeSingleParquet(data(b), t0.resolve(rel))
+        LakeWriter.writeParquetFile(data(b), t0.resolve(rel))
         s"""{"add":{"path":"$rel","partitionValues":{"bucket":"$b"},"dataChange":true}}"""
       }
       val meta =
@@ -330,12 +316,12 @@ object QueriesR22 {
       val updated = b0.withColumn("cents",
         when(col("s_suppkey") % 5 === 0, col("cents") + 100)
           .otherwise(col("cents")))
-      writeSingleParquet(updated, t0.resolve("data/bucket=0/f1.parquet"))
+      LakeWriter.writeParquetFile(updated, t0.resolve("data/bucket=0/f1.parquet"))
       val pre = b0.filter(col("s_suppkey") % 5 === 0)
         .withColumn("_change_type", lit("update_preimage"))
       val post = updated.filter(col("s_suppkey") % 5 === 0)
         .withColumn("_change_type", lit("update_postimage"))
-      writeSingleParquet(pre.unionAll(post).orderBy(
+      LakeWriter.writeParquetFile(pre.unionAll(post).orderBy(
           col("_change_type"), col("s_suppkey")),
         t0.resolve("_change_data/cdc-v1.parquet"))
       java.nio.file.Files.writeString(logDir.resolve(f"${1L}%020d.json"), Seq(

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{DeltaLog, Tables}
+import graft.sources.{DeltaLog, LakeWriter, Tables}
 
 /** Round-13 surface growth, per the r12 verdict's ranked gaps: the
   * lake-target CDC apply (C36→F14o composite — the reference's own
@@ -270,17 +270,6 @@ object QueriesR23 {
   // after ≥3 micro-batches.
   // ---------------------------------------------------------------
 
-  private def writeSingleParquet(df: DataFrame,
-                                 target: java.nio.file.Path): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("r23_part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = graft.sources.DeltaLog.listParquet(tmp).headOption.getOrElse(
-      throw new IllegalStateException("no parquet part written"))
-    java.nio.file.Files.createDirectories(target.getParent)
-    java.nio.file.Files.move(part, target)
-    graft.sources.DeltaLog.deleteTmp(tmp)
-  }
-
   private def buildLshIndexStore(s: SparkSession, dir: String): String =
     Staged(s, dir, "stream_lsh_maintain") {
       import graft.dedup.Dedup
@@ -294,7 +283,7 @@ object QueriesR23 {
       // in-order micro-batches under maxFilesPerTrigger=1
       (0 until 3).foreach { i =>
         val lo = mx * i / 3; val hi = mx * (i + 1) / 3
-        writeSingleParquet(
+        LakeWriter.writeParquetFile(
           d.filter(col("doc_id") > lo && col("doc_id") <= hi ||
             lit(i == 0) && col("doc_id") === 0L),
           staged.resolve(f"b$i%d.parquet"))

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sources.{DeltaLog, IcebergCatalog, Tables}
+import graft.sources.{DeltaLog, IcebergCatalog, LakeWriter, Tables}
 
 /** Round-14 surface growth, per the r13 verdict's ranked gaps: the
   * Iceberg-target CDC apply (C38 — the reference's own
@@ -126,18 +126,15 @@ object QueriesR24 {
   // and the streamed table equals the batch-applied state hash-exact.
   // ---------------------------------------------------------------
 
-  private def writeSingleParquet(df: DataFrame,
-                                 target: java.nio.file.Path,
-                                 mtimeMs: Long): Unit = {
-    val tmp = java.nio.file.Files.createTempDirectory("r24_part")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = DeltaLog.listParquet(tmp).headOption.getOrElse(
-      throw new IllegalStateException("no parquet part written"))
-    java.nio.file.Files.createDirectories(target.getParent)
-    java.nio.file.Files.move(part, target)
-    DeltaLog.deleteTmp(tmp)
+  /** Stage change batch `i` as `b<i>.parquet` under `staged`, its
+    * mtime a minute after batch i-1's (the order the CDC drains read).
+    */
+  private def stageBatch(b: DataFrame, staged: java.nio.file.Path,
+                         i: Int): Unit = {
+    val target = staged.resolve(f"b$i%d.parquet")
+    LakeWriter.writeParquetFile(b, target)
     java.nio.file.Files.setLastModifiedTime(target,
-      java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
+      java.nio.file.attribute.FileTime.fromMillis(1700000000000L + i * 60000L))
   }
 
   /** The shared three-batch change script over `orders`: bootstrap
@@ -194,8 +191,7 @@ object QueriesR24 {
         configuration = Map("delta.enableChangeDataFeed" -> "true"))
       val staged = root.resolve("staged")
       Seq(b1, b2, b3).zipWithIndex.foreach { case (b, i) =>
-        writeSingleParquet(b, staged.resolve(f"b$i%d.parquet"),
-          1700000000000L + i * 60000L)
+        stageBatch(b, staged, i)
       }
       val batches = graft.streaming.Streams.cdcApplyDelta(s, tbl,
         staged.toString, b1.schema, Seq("o_orderkey"), "__ts",
@@ -260,8 +256,7 @@ object QueriesR24 {
         IcebergCatalog.nextSnapshotId(tbl))
       val staged = root.resolve("staged")
       batches.zipWithIndex.foreach { case (b, i) =>
-        writeSingleParquet(b, staged.resolve(f"b$i%d.parquet"),
-          1700000000000L + i * 60000L)
+        stageBatch(b, staged, i)
       }
       val applied = graft.streaming.Streams.cdcApplyIceberg(s, tbl,
         staged.toString, batches.head.schema, Seq("o_orderkey"), "__ts",

@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.PlanProbe.CkptOps
+import graft.PlanProbe.{CkptOps, ckptFresh}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -52,27 +52,6 @@ import org.apache.spark.sql.functions._
   * early exit (no data-dependent plan shape).
   */
 object Bpe {
-
-  /** Eager localCheckpoint that DROPS inherited plan statistics.
-    *
-    * Spark 4's `LogicalRDD.fromDataset` (inside localCheckpoint) rewrites
-    * the origin plan's size estimate onto the new leaf. A loop whose
-    * round plan MULTIPLIES its leaf's estimate — every join does — then
-    * compounds the estimate exponentially across rounds: by round ~14 of
-    * this 24-round trainer the driver sat for minutes multiplying
-    * million-digit BigInts inside `SizeInBytesOnlyStatsPlanVisitor`
-    * (observed via jstack; the shorter graph loops stay under the radar
-    * only because their digit growth is 2^rounds with small rounds).
-    * Rebuilding the Dataset from the checkpointed RDD gives a leaf with
-    * default statistics; every size-sensitive join in the round carries
-    * an explicit broadcast hint, so no planning decision here ever
-    * consulted the inherited estimate. Row-conversion cost is paid on
-    * VOCABULARY-sized data only.
-    */
-  private def ckptFresh(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(true)
-    df.sparkSession.createDataFrame(c.rdd, c.schema)
-  }
 
   /** One training round: (state, wordFreq, round) => (state', merge-row).
     * The merge-row is (mrank, l_sym, r_sym, cnt) — empty if the corpus

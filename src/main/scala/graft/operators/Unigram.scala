@@ -1,6 +1,6 @@
 package graft.operators
 
-import graft.PlanProbe.CkptOps
+import graft.PlanProbe.{CkptOps, ckptFresh}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -44,15 +44,6 @@ object Unigram {
   val MaxPiece = 4
   val Keep = 64
   val EmRounds = 2
-
-  /** Eager localCheckpoint dropping inherited plan statistics (see
-    * [[Bpe.ckptFresh]] — the Spark 4 stats-compounding hazard applies
-    * to any multi-round loop).
-    */
-  private def ckptFresh(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(true)
-    df.sparkSession.createDataFrame(c.rdd, c.schema)
-  }
 
   /** Space-pretokenized (word, freq) corpus vocabulary. */
   private def wordFreq(docs: DataFrame, text: Column): DataFrame =

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.PlanProbe.ckptFresh
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -24,11 +25,6 @@ import org.apache.spark.sql.functions._
   * trainer rejects them loudly).
   */
 object WordPiece {
-
-  private def ckptFresh(df: DataFrame): DataFrame = {
-    val c = df.localCheckpoint(true)
-    df.sparkSession.createDataFrame(c.rdd, c.schema)
-  }
 
   /** Greedy longest-match segmentation of every word in `words` under
     * the piece inventory `vocab`.

@@ -84,6 +84,22 @@ object DeltaLog {
       s""""${jsonEscape(k)}":${if (v == null) "null" else "\"" + jsonEscape(v) + "\""}"""
     }.mkString("{", ",", "}")
 
+  /** The `add.stats` JSON of one new file: numRecords, plus
+    * `minValues`/`maxValues` over `longCols` (non-null bounds only)
+    * when `withBounds`; a file the stats scan did not see records 0.
+    */
+  private[sources] def statsJson(s: Option[LakeWriter.FileStats],
+                                 longCols: Seq[String],
+                                 withBounds: Boolean): String = s match {
+    case None => """{"numRecords":0}"""
+    case Some(fs) if !withBounds => s"""{"numRecords":${fs.numRecords}}"""
+    case Some(fs) =>
+      def kv(m: Map[String, Long]): String =
+        longCols.flatMap(c => m.get(c).map(v => s""""$c":$v""")).mkString(",")
+      s"""{"numRecords":${fs.numRecords},""" +
+        s""""minValues":{${kv(fs.min)}},"maxValues":{${kv(fs.max)}}}"""
+  }
+
   /** One live data file after log replay. `stats` is the raw `add.stats`
     * JSON (numRecords/minValues/maxValues) when the writer recorded it —
     * decoded lazily by [[filesInRange]] for min/max file skipping.
@@ -733,17 +749,10 @@ object DeltaLog {
         st.files.map(f => Row(null, null,
           Row(f.path, f.partitionValues, true, f.stats.orNull,
             dvStruct(f.deletionVector))))
-    import scala.jdk.CollectionConverters._
-    def writeOne(slice: Seq[Row], target: java.nio.file.Path): Unit = {
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(slice, 1), ckSchema)
-      val tmp = Files.createTempDirectory("delta_ck")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = listParquet(tmp).headOption.get
-      Files.move(part, target,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      deleteTmp(tmp)
-    }
+    def writeOne(slice: Seq[Row], target: java.nio.file.Path): Unit =
+      LakeWriter.writeParquetFile(spark.createDataFrame(
+        spark.sparkContext.parallelize(slice, 1), ckSchema), target,
+        replace = true)
     val logDir = Paths.get(table, "_delta_log")
     if (parts == 1)
       writeOne(rows, logDir.resolve(f"${st.version}%020d.checkpoint.parquet"))
@@ -755,7 +764,7 @@ object DeltaLog {
         }, logDir.resolve(
           f"${st.version}%020d.checkpoint.$p%010d.$parts%010d.parquet"))
       }
-    Files.writeString(logDir.resolve("_last_checkpoint"),
+    LakeWriter.replaceAtomic(logDir.resolve("_last_checkpoint"),
       if (parts == 1) s"""{"version":${st.version},"size":${rows.size}}"""
       else s"""{"version":${st.version},"size":${rows.size},"parts":$parts}""")
     st.version
@@ -830,19 +839,11 @@ object DeltaLog {
               col("__pos") === col("__dvpos"), "left_anti")
             .select(dataSchema.fieldNames.map(col).toSeq: _*)
         }
-      val tmp = Files.createTempDirectory("delta_opt")
-      val writer = df.coalesce(1).write.mode("overwrite")
-      (if (maxRecordsPerFile > 0)
-        writer.option("maxRecordsPerFile", maxRecordsPerFile)
-      else writer).parquet(tmp.toString)
-      val parts = listParquet(tmp)
       val pvJson = pvJsonOf(pvals)
-      parts.zipWithIndex.foreach { case (p, k) =>
-        val rel = s"compact-$next-$gi-$k.parquet"
-        Files.move(p, Paths.get(table, rel))
-        newRels += ((rel, pvJson))
-      }
-      deleteTmp(tmp)
+      newRels ++= LakeWriter.writeParquet(df.coalesce(1),
+        maxRecordsPerFile = maxRecordsPerFile)(
+        (_, k) => Paths.get(table, s"compact-$next-$gi-$k.parquet"))
+        .map { case (p, _) => (p.getFileName.toString, pvJson) }
       files.foreach(f =>
         removes += s"""{"remove":{"path":"${f.path}","dataChange":false}}""")
     }
@@ -850,26 +851,12 @@ object DeltaLog {
     val rels = newRels.result()
     val longCols = dataSchema.fields
       .filter(_.dataType == LongType).map(_.name).toSeq
-    val statsByName: Map[String, String] = {
-      val df = spark.read.schema(dataSchema)
-        .parquet(rels.map(r => Paths.get(table, r._1).toString): _*)
-      val aggs = count(lit(1)).as("__n") +: longCols.flatMap(c =>
-        Seq(min(col(c)).as(s"__lo_$c"), max(col(c)).as(s"__hi_$c")))
-      df.groupBy(col("_metadata.file_path").as("__fp"))
-        .agg(aggs.head, aggs.tail: _*)
-        .collect().map { r =>
-          val name = r.getString(0).split("/").last
-          def kv(pre: String): String = longCols.flatMap { c =>
-            Option(r.getAs[Any](s"__${pre}_$c")).map(v => s""""$c":$v""")
-          }.mkString(",")
-          name -> (s"""{"numRecords":${r.getAs[Long]("__n")},""" +
-            s""""minValues":{${kv("lo")}},"maxValues":{${kv("hi")}}}""")
-        }.toMap
-    }
+    val stats = LakeWriter.fileStats(spark,
+      rels.map(r => Paths.get(table, r._1).toString), longCols, Some(dataSchema))
     val adds = rels.map { case (rel, pvJson) =>
-      val stats = statsByName.getOrElse(rel, """{"numRecords":0}""")
+      val statsLine = statsJson(stats.get(rel), longCols, withBounds = true)
       s"""{"add":{"path":"$rel","partitionValues":$pvJson,""" +
-        s""""dataChange":false,"stats":"${jsonEscape(stats)}"}}"""
+        s""""dataChange":false,"stats":"${jsonEscape(statsLine)}"}}"""
     }
     writeCommit(table, st, next, removes.result() ++ adds)
     next
@@ -1034,7 +1021,7 @@ object DeltaLog {
         val ts = math.max(base, prev.map(_ + 1).getOrElse(Long.MinValue))
         s"""{"commitInfo":{"inCommitTimestamp":$ts}}""" +: lines
       }
-    Files.writeString(
+    LakeWriter.publishNew(
       Paths.get(table, "_delta_log", f"$next%020d.json"),
       all.mkString("\n"))
   }
@@ -1443,13 +1430,7 @@ object DeltaLog {
           .drop("__pos")
           .withColumn("_change_type", lit("delete"))
         val rel = s"_change_data/cdc-$uuid.parquet"
-        val tmp = Files.createTempDirectory("delta_cdc")
-        deletedRows.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = listParquet(tmp).headOption.getOrElse(
-          throw new IllegalStateException("cdc write produced no parquet"))
-        Files.createDirectories(Paths.get(table, "_change_data"))
-        Files.move(part, Paths.get(table, rel))
-        deleteTmp(tmp)
+        LakeWriter.writeParquetFile(deletedRows, Paths.get(table, rel))
         val size = Files.size(Paths.get(table, rel))
         Some(s"""{"cdc":{"path":"$rel","partitionValues":$pvJson,""" +
           s""""size":$size,"dataChange":false}}""")

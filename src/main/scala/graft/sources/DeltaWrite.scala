@@ -305,32 +305,12 @@ object DeltaWrite {
     }.toSeq: _*)
     val partCols = st.partitionColumns.map(c =>
       if (mapped) physByLogical(c) else c)
-    val tmp = Files.createTempDirectory("delta_wr")
-    if (partCols.isEmpty)
-      ordered.write.mode("overwrite").parquet(tmp.toString)
-    else
-      ordered.write.partitionBy(partCols: _*)
-        .mode("overwrite").parquet(tmp.toString)
-    val written = DeltaLog.listParquet(tmp)
     val destDirBase = if (subdir.isEmpty) "" else subdir + "/"
-    if (subdir.nonEmpty)
-      Files.createDirectories(Paths.get(table, subdir))
-    import scala.jdk.CollectionConverters._
-    val moved = written.zipWithIndex.map { case (p, i) =>
-      val pv = tmp.relativize(p).iterator().asScala.toSeq.dropRight(1)
-        .map(_.toString.split("=", 2))
-        .map(kv => kv(0) ->
-          IcebergCatalog.unescapePartitionValue(kv(1))).toMap
-      val pvDir = pv.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"$k=$v/" }.mkString
-      val rel = s"$destDirBase$pvDir$prefix-$i.parquet"
-      val dst = Paths.get(table, rel)
-      Files.createDirectories(dst.getParent)
-      Files.move(p, dst)
-      (rel, pv)
-    }
-    DeltaLog.deleteTmp(tmp)
-    moved
+    def relOf(pv: Map[String, String], i: Int): String =
+      destDirBase + pv.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v/" }.mkString +
+        s"$prefix-$i.parquet"
+    LakeWriter.writeParquet(ordered, partCols)((pv, i) => Paths.get(table, relOf(pv, i)))
+      .zipWithIndex.map { case ((_, pv), i) => (relOf(pv, i), pv) }
   }
 
   /** The `add` action lines for freshly written files, carrying
@@ -348,37 +328,15 @@ object DeltaWrite {
       .filterNot(f => st.partitionColumns.contains(f.name))
     val longCols = dataFields.filter(_.dataType == LongType)
       .map(f => if (mapped) DeltaLog.physicalName(f) else f.name).toSeq
-    val statsByName: Map[String, String] =
-      if (longCols.isEmpty)
-        spark.read.parquet(written.map(w =>
-            Paths.get(table, w._1).toString): _*)
-          .groupBy(col("_metadata.file_path").as("__fp"))
-          .agg(count(lit(1)).as("__n"))
-          .collect().map(r => r.getString(0).split("/").last ->
-            s"""{"numRecords":${r.getLong(1)}}""").toMap
-      else {
-        val aggs = count(lit(1)).as("__n") +: longCols.flatMap(c =>
-          Seq(min(col(c)).as(s"__lo_$c"), max(col(c)).as(s"__hi_$c")))
-        spark.read
-          .parquet(written.map(w => Paths.get(table, w._1).toString): _*)
-          .groupBy(col("_metadata.file_path").as("__fp"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            val name = r.getString(0).split("/").last
-            def kv(pre: String): String = longCols.flatMap { c =>
-              Option(r.getAs[Any](s"__${pre}_$c")).map(v => s""""$c":$v""")
-            }.mkString(",")
-            name -> (s"""{"numRecords":${r.getAs[Long]("__n")},""" +
-              s""""minValues":{${kv("lo")}},"maxValues":{${kv("hi")}}}""")
-          }.toMap
-      }
+    val stats = LakeWriter.fileStats(spark,
+      written.map(w => Paths.get(table, w._1).toString), longCols)
     written.map { case (rel, pv) =>
-      val stats = statsByName.getOrElse(rel.split("/").last,
-        """{"numRecords":0}""")
+      val statsLine = DeltaLog.statsJson(stats.get(rel.split("/").last),
+        longCols, withBounds = longCols.nonEmpty)
       s"""{"add":{"path":"${DeltaLog.jsonEscape(rel)}",""" +
         s""""partitionValues":${DeltaLog.pvJsonOf(pv)},""" +
         s""""dataChange":$dataChange,""" +
-        s""""stats":"${DeltaLog.jsonEscape(stats)}"}}"""
+        s""""stats":"${DeltaLog.jsonEscape(statsLine)}"}}"""
     }
   }
 }

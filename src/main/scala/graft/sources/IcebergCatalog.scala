@@ -173,17 +173,49 @@ object IcebergCatalog {
     }
   }
 
-  /** Write one metadata.json ATOMICALLY (temp + rename) — a reader
-    * listing versions mid-commit must never parse a torn file; the
-    * `.tmp` name fails the `.metadata.json` suffix filter, so it is
-    * invisible until the rename lands. Iceberg's own commit rule.
+  /** Publish `md` as the metadata version after `base` — the file
+    * [[loadMetadata]] returned, which `md` was derived from. The JSON
+    * is linked in as `v<n+1>.metadata.json` and never replaces a file
+    * already there: when a concurrent commit from the same base took
+    * that version first this fails loudly and publishes nothing (the
+    * staged `.tmp` name fails the `.metadata.json` filter, so readers
+    * never see a torn file). `version-hint.text`, when the table keeps
+    * one, then moves to n+1 atomically. Returns n+1.
     */
-  private def writeMetadataAtomic(mdir: Path, name: String,
-                                  content: String): Unit = {
-    val tmp = mdir.resolve(name + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, mdir.resolve(name),
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+  private def publish(base: Path, md: JValue): Long = {
+    val ver = metaVersion(base.getFileName.toString)
+    require(ver >= 0, s"unversioned metadata file ${base.getFileName}")
+    val mdir = base.getParent
+    LakeWriter.publishNew(mdir.resolve(s"v${ver + 1}.metadata.json"),
+      JsonMethods.compact(JsonMethods.render(md)))
+    val hint = mdir.resolve("version-hint.text")
+    if (Files.exists(hint)) LakeWriter.replaceAtomic(hint, (ver + 1).toString)
+    ver + 1
+  }
+
+  /** A snapshot's (or ref's) `snapshot-id`; None when it has none. */
+  private def idOf(node: JValue): Option[Long] = (node \ "snapshot-id") match {
+    case JInt(v) => Some(v.toLong)
+    case _ => None
+  }
+
+  /** The table's `current-snapshot-id`; loud when it has none. */
+  private def currentId(md: JValue): Long = (md \ "current-snapshot-id") match {
+    case JInt(v) => v.toLong
+    case _ => throw new IllegalArgumentException("no current-snapshot-id")
+  }
+
+  /** `md` with `current-snapshot-id` — and the `main` ref, when the
+    * table carries one — at `id`: every move of the main branch.
+    */
+  private def withMainAt(md: JValue, id: Long): JValue = {
+    val cur = md merge JObject("current-snapshot-id" -> JInt(id))
+    (md \ "refs") match {
+      case JObject(fs) if fs.exists(_._1 == "main") =>
+        cur merge JObject("refs" -> JObject("main" -> JObject(
+          "snapshot-id" -> JInt(id), "type" -> JString("branch"))))
+      case _ => cur
+    }
   }
 
   /** Parse the newest metadata JSON: `version-hint.text` when present
@@ -293,12 +325,8 @@ object IcebergCatalog {
   def state(spark: SparkSession, table: String,
             snapshotId: Option[Long] = None): IceState = {
     val (md, _) = loadMetadata(table)
-    val current = snapshotId.getOrElse((md \ "current-snapshot-id") match {
-      case JInt(v) => v.toLong
-      case _ => throw new IllegalArgumentException("no current-snapshot-id")
-    })
-    val snap = (md \ "snapshots").children.find(s =>
-      (s \ "snapshot-id") match { case JInt(v) => v.toLong == current; case _ => false })
+    val current = snapshotId.getOrElse(currentId(md))
+    val snap = (md \ "snapshots").children.find(s => idOf(s).contains(current))
       .getOrElse(throw new IllegalArgumentException(s"snapshot $current not found"))
     val JString(mlist) = snap \ "manifest-list"
     // schema: v2 `schemas` + current-schema-id, v1 fallback `schema`.
@@ -707,14 +735,8 @@ object IcebergCatalog {
     // the reader's tail-anchored comparison holds after relocation
     val pdRel = s"data/pos-delete-$snapshotId.parquet"
     val pdAbs = Paths.get(table).toAbsolutePath.resolve(pdRel)
-    val tmp = Files.createTempDirectory("ice_pd")
-    positions.toSeq.map(p => (target.path, p))
-      .toDF("file_path", "pos")
-      .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = DeltaLog.listParquet(tmp).headOption.get
-    Files.createDirectories(pdAbs.getParent)
-    Files.move(part, pdAbs)
-    DeltaLog.deleteTmp(tmp)
+    LakeWriter.writeParquetFile(
+      positions.toSeq.map(p => (target.path, p)).toDF("file_path", "pos"), pdAbs)
     appendDeleteSnapshot(table, st,
       ManifestEntry(1, pdAbs.toString, 1, Map.empty), snapshotId)
   }
@@ -741,12 +763,7 @@ object IcebergCatalog {
     require(doomed.count() > 0, "empty equality delete: refuse a no-op commit")
     val edAbs = Paths.get(table).toAbsolutePath
       .resolve(s"data/eq-delete-$snapshotId.parquet")
-    val tmp = Files.createTempDirectory("ice_ed")
-    doomed.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = DeltaLog.listParquet(tmp).headOption.get
-    Files.createDirectories(edAbs.getParent)
-    Files.move(part, edAbs)
-    DeltaLog.deleteTmp(tmp)
+    LakeWriter.writeParquetFile(doomed, edAbs)
     appendDeleteSnapshot(table, st,
       ManifestEntry(1, edAbs.toString, 2, Map.empty, equalityIds = ids),
       snapshotId)
@@ -872,7 +889,6 @@ object IcebergCatalog {
                                filePrefix: String,
                                seq: Long): Seq[ManifestEntry] = {
     val ordered = rows.select(st.schema.fieldNames.map(col).toSeq: _*)
-    val tmp = Files.createTempDirectory("ice_append")
     // derive NON-IDENTITY partition values as extra columns (r11):
     // partitionBy drops exactly the spec-field columns from the data
     // files — identity sources leave (the reader reconstructs them),
@@ -892,25 +908,10 @@ object IcebergCatalog {
         df.withColumn(sf.name, IcebergTransforms.columnTyped(
           sf.transform, col(sf.sourceName), srcField.dataType))
       }
-    if (spec.isEmpty)
-      ordered.write.mode("overwrite").parquet(tmp.toString)
-    else
-      withParts.write.partitionBy(spec.map(_.name): _*)
-        .mode("overwrite").parquet(tmp.toString)
-    // collect the written part files + their partition-dir values
-    val written = DeltaLog.listParquet(tmp)
-    require(written.nonEmpty, "empty append: refuse a no-op commit")
     val dataDir = Paths.get(table).toAbsolutePath.resolve("data")
-    Files.createDirectories(dataDir)
-    val moved = written.zipWithIndex.map { case (p, i) =>
-      val pv = tmp.relativize(p).iterator().asScala.toSeq.dropRight(1)
-        .map(_.toString.split("=", 2))
-        .map(kv => kv(0) -> unescapePartitionValue(kv(1))).toMap
-      val dst = dataDir.resolve(s"$filePrefix-$i.parquet")
-      Files.move(p, dst)
-      (dst, pv)
-    }
-    DeltaLog.deleteTmp(tmp)
+    val moved = LakeWriter.writeParquet(withParts, spec.map(_.name))(
+      (_, i) => dataDir.resolve(s"$filePrefix-$i.parquet"))
+    require(moved.nonEmpty, "empty append: refuse a no-op commit")
     // per-file min/max bounds for long-typed data columns: one grouped
     // aggregate over the appended files only (file-scoped statistics,
     // never a table scan)
@@ -919,29 +920,18 @@ object IcebergCatalog {
       .filter(_.dataType == org.apache.spark.sql.types.LongType)
       .map(_.name).toSeq
     val idByName = schemaFieldIdsByName(table)
-    val boundsByFile: Map[String, Map[Int, (Long, Long)]] =
-      if (longCols.isEmpty) Map.empty
-      else {
-        val aggs = longCols.flatMap(c =>
-          Seq(min(col(c)).as(s"lo_$c"), max(col(c)).as(s"hi_$c")))
-        spark.read.parquet(moved.map(_._1.toString): _*)
-          .groupBy(col("_metadata.file_path").as("__fp"))
-          .agg(aggs.head, aggs.tail: _*)
-          .collect().map { r =>
-            val name = r.getString(0).split("/").last
-            val bounds = longCols.flatMap { c =>
-              val lo = r.getAs[Any](s"lo_$c"); val hi = r.getAs[Any](s"hi_$c")
-              if (lo == null || hi == null) None
-              else idByName.get(c).map(id =>
-                id -> (lo.asInstanceOf[Long], hi.asInstanceOf[Long]))
-            }.toMap
-            name -> bounds
-          }.toMap
+    val stats =
+      if (longCols.isEmpty) Map.empty[String, LakeWriter.FileStats]
+      else LakeWriter.fileStats(spark, moved.map(_._1.toString), longCols)
+    def boundsOf(name: String): Map[Int, (Long, Long)] =
+      stats.get(name).fold(Map.empty[Int, (Long, Long)]) { fs =>
+        longCols.flatMap(c => for {
+          lo <- fs.min.get(c); hi <- fs.max.get(c); id <- idByName.get(c)
+        } yield id -> (lo, hi)).toMap
       }
     moved.map { case (dst, pv) =>
       ManifestEntry(1, dst.toString, 0, pv,
-        boundsLong = boundsByFile.getOrElse(dst.getFileName.toString, Map.empty),
-        seq = seq)
+        boundsLong = boundsOf(dst.getFileName.toString), seq = seq)
     }
   }
 
@@ -1006,12 +996,7 @@ object IcebergCatalog {
           throw new IllegalArgumentException(s"column $c not in table schema")))
         val edAbs = Paths.get(table).toAbsolutePath
           .resolve(s"data/eq-delete-$snapshotId.parquet")
-        val tmp = Files.createTempDirectory("ice_merge_ed")
-        matchedKeys.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = DeltaLog.listParquet(tmp).headOption.get
-        Files.createDirectories(edAbs.getParent)
-        Files.move(part, edAbs)
-        DeltaLog.deleteTmp(tmp)
+        LakeWriter.writeParquetFile(matchedKeys, edAbs)
         Seq(ManifestEntry(1, edAbs.toString, 2, Map.empty,
           equalityIds = ids, seq = seq))
       }
@@ -1092,10 +1077,8 @@ object IcebergCatalog {
   /** The next free snapshot id: one above the table's largest. */
   def nextSnapshotId(table: String): Long = {
     val (md, _) = loadMetadata(table)
-    (md \ "snapshots").children.map(s => (s \ "snapshot-id") match {
-      case JInt(v) => v.toLong
-      case _ => 0L
-    }).foldLeft(0L)(math.max) + 1
+    (md \ "snapshots").children.map(idOf(_).getOrElse(0L))
+      .foldLeft(0L)(math.max) + 1
   }
 
   /** EVOLVE the partition spec (r13): append a NEW spec (fields =
@@ -1136,13 +1119,7 @@ object IcebergCatalog {
         f._1 == "partition-spec") ++
       List("partition-specs" -> JArray(existing :+ newSpec),
         "default-spec-id" -> JInt(newId)))
-    val ver = metaVersion(mdPath.getFileName.toString)
-    require(ver >= 0, s"unversioned metadata file ${mdPath.getFileName}")
-    val mdir = mdPath.getParent
-    writeMetadataAtomic(mdir, s"v${ver + 1}.metadata.json",
-      JsonMethods.compact(JsonMethods.render(newMd)))
-    val hint = mdir.resolve("version-hint.text")
-    if (Files.exists(hint)) Files.writeString(hint, (ver + 1).toString)
+    publish(mdPath, newMd)
     newId
   }
 
@@ -1196,13 +1173,7 @@ object IcebergCatalog {
       List("schemas" -> JArray(existing :+ newSchema),
         "current-schema-id" -> JInt(newSchemaId),
         "last-column-id" -> JInt(maxFieldId + 1)))
-    val ver = metaVersion(mdPath.getFileName.toString)
-    require(ver >= 0, s"unversioned metadata file ${mdPath.getFileName}")
-    val mdir = mdPath.getParent
-    writeMetadataAtomic(mdir, s"v${ver + 1}.metadata.json",
-      JsonMethods.compact(JsonMethods.render(newMd)))
-    val hint = mdir.resolve("version-hint.text")
-    if (Files.exists(hint)) Files.writeString(hint, (ver + 1).toString)
+    publish(mdPath, newMd)
     newSchemaId
   }
 
@@ -1223,34 +1194,15 @@ object IcebergCatalog {
           s"${all.keys.toSeq.sorted.mkString(",")}): $table"))
     require(tpe == "branch",
       s"ref '$branch' is a $tpe, not a branch: $table")
-    val cur = (md \ "current-snapshot-id") match {
-      case JInt(v) => v.toLong
-      case _ => throw new IllegalArgumentException("no current-snapshot-id")
-    }
+    val cur = currentId(md)
     require(target != cur,
       s"fast-forward to the current snapshot $cur is a no-op")
-    val order = (md \ "snapshots").children.map(s => (s \ "snapshot-id") match {
-      case JInt(v) => v.toLong
-      case _ => throw new IllegalArgumentException("snapshot without id")
-    })
+    val order = (md \ "snapshots").children.map(s => idOf(s).getOrElse(
+      throw new IllegalArgumentException("snapshot without id")))
     require(order.indexOf(cur) < order.indexOf(target),
       s"branch '$branch' head $target is not ahead of main's $cur: " +
         s"a fast-forward would lose main-only commits")
-    val withMain = (md \ "refs") match {
-      case JObject(fs) if fs.exists(_._1 == "main") =>
-        md merge JObject("refs" -> JObject("main" -> JObject(
-          "snapshot-id" -> JInt(target), "type" -> JString("branch"))))
-      case _ => md
-    }
-    val newMd = withMain merge JObject("current-snapshot-id" -> JInt(target))
-    val ver = metaVersion(mdPath.getFileName.toString)
-    require(ver >= 0, s"unversioned metadata file ${mdPath.getFileName}")
-    val mdir = mdPath.getParent
-    writeMetadataAtomic(mdir, s"v${ver + 1}.metadata.json",
-      JsonMethods.compact(JsonMethods.render(newMd)))
-    val hint = mdir.resolve("version-hint.text")
-    if (Files.exists(hint)) Files.writeString(hint, (ver + 1).toString)
-    ver + 1
+    publish(mdPath, withMainAt(md, target))
   }
 
   /** Shared commit tail: a new manifest with `entry`, a manifest list
@@ -1271,10 +1223,7 @@ object IcebergCatalog {
                              branch: String = "main",
                              replaceLive: Boolean = false): Long = {
     val (md, mdPath) = loadMetadata(table)
-    val snap = (md \ "snapshots").children.find(s =>
-      (s \ "snapshot-id") match {
-        case JInt(v) => v.toLong == st.snapshotId; case _ => false
-      }).get
+    val snap = (md \ "snapshots").children.find(idOf(_).contains(st.snapshotId)).get
     val JString(oldMl) = snap \ "manifest-list"
     // preserve each inherited manifest's spec-id (r13): a spec-evolved
     // table's old manifests keep meaning their own partitioning.
@@ -1313,29 +1262,15 @@ object IcebergCatalog {
         curSchemaId.map(id => "schema-id" -> JInt(id)).toList ++
         (if (timestampMs >= 0) List("timestamp-ms" -> JInt(timestampMs))
          else Nil)
+    // a main commit also re-points the explicit `main` ref when one
+    // exists (as fastForward/rollbackTo do) — otherwise readRef("main")
+    // and expireSnapshots' pin set diverge from read()
     val head =
-      if (branch == "main") {
-        // a main commit also re-points the explicit `main` ref when one
-        // exists (mirroring fastForward/rollbackTo) — otherwise
-        // readRef("main") and expireSnapshots' pin set diverge from read()
-        val base = JObject("current-snapshot-id" -> JInt(snapshotId))
-        (md \ "refs") match {
-          case JObject(fs) if fs.exists(_._1 == "main") =>
-            base merge JObject("refs" -> JObject("main" -> JObject(
-              "snapshot-id" -> JInt(snapshotId), "type" -> JString("branch"))))
-          case _ => base
-        }
-      }
-      else JObject("refs" -> JObject(branch -> JObject(
+      if (branch == "main") withMainAt(md, snapshotId)
+      else md merge JObject("refs" -> JObject(branch -> JObject(
         "snapshot-id" -> JInt(snapshotId), "type" -> JString("branch"))))
-    val newMd = md merge head merge JObject(
-      "snapshots" -> JArray(List(JObject(snapFields: _*))))
-    val ver = metaVersion(mdPath.getFileName.toString)
-    require(ver >= 0, s"unversioned metadata file ${mdPath.getFileName}")
-    writeMetadataAtomic(mdir, s"v${ver + 1}.metadata.json",
-      JsonMethods.compact(JsonMethods.render(newMd)))
-    val hint = mdir.resolve("version-hint.text")
-    if (Files.exists(hint)) Files.writeString(hint, (ver + 1).toString)
+    publish(mdPath, head merge JObject(
+      "snapshots" -> JArray(List(JObject(snapFields: _*)))))
     snapshotId
   }
 
@@ -1348,34 +1283,14 @@ object IcebergCatalog {
     */
   def rollbackTo(table: String, snapshotId: Long): Long = {
     val (md, mdPath) = loadMetadata(table)
-    val cur = (md \ "current-snapshot-id") match {
-      case JInt(v) => v.toLong
-      case _ => throw new IllegalArgumentException("no current-snapshot-id")
-    }
+    val cur = currentId(md)
     require(snapshotId != cur,
       s"rollback to the current snapshot $cur is a no-op")
-    require((md \ "snapshots").children.exists(s =>
-      (s \ "snapshot-id") match {
-        case JInt(v) => v.toLong == snapshotId; case _ => false
-      }), s"snapshot $snapshotId not in the table's history")
+    require((md \ "snapshots").children.exists(idOf(_).contains(snapshotId)),
+      s"snapshot $snapshotId not in the table's history")
     // the `main` BRANCH tracks the current snapshot by definition —
-    // re-point it too when the table carries refs (r12)
-    val withMain = (md \ "refs") match {
-      case JObject(fields) if fields.exists(_._1 == "main") =>
-        md merge JObject("refs" -> JObject("main" -> JObject(
-          "snapshot-id" -> JInt(snapshotId), "type" -> JString("branch"))))
-      case _ => md
-    }
-    val newMd = withMain merge JObject(
-      "current-snapshot-id" -> JInt(snapshotId))
-    val ver = metaVersion(mdPath.getFileName.toString)
-    require(ver >= 0, s"unversioned metadata file ${mdPath.getFileName}")
-    val mdir = mdPath.getParent
-    writeMetadataAtomic(mdir, s"v${ver + 1}.metadata.json",
-      JsonMethods.compact(JsonMethods.render(newMd)))
-    val hint = mdir.resolve("version-hint.text")
-    if (Files.exists(hint)) Files.writeString(hint, (ver + 1).toString)
-    ver + 1
+    // re-pointed too when the table carries refs (r12)
+    publish(mdPath, withMainAt(md, snapshotId))
   }
 
   /** Roll back to the snapshot a NAMED REF pins — how humans actually
@@ -1394,11 +1309,8 @@ object IcebergCatalog {
     val (md, _) = loadMetadata(table)
     (md \ "refs") match {
       case JObject(fields) => fields.map { case (name, v) =>
-        val id = (v \ "snapshot-id") match {
-          case JInt(i) => i.toLong
-          case _ => throw new IllegalArgumentException(
-            s"ref '$name' has no snapshot-id: $table")
-        }
+        val id = idOf(v).getOrElse(throw new IllegalArgumentException(
+          s"ref '$name' has no snapshot-id: $table"))
         val tpe = (v \ "type") match {
           case JString(t) => t
           case _ => throw new IllegalArgumentException(
@@ -1436,10 +1348,8 @@ object IcebergCatalog {
   def snapshotAtTimestamp(table: String, tsMillis: Long): Long = {
     val (md, _) = loadMetadata(table)
     val snaps = (md \ "snapshots").children.map { sn =>
-      val id = (sn \ "snapshot-id") match {
-        case JInt(v) => v.toLong
-        case _ => throw new IllegalArgumentException("snapshot without id")
-      }
+      val id = idOf(sn).getOrElse(
+        throw new IllegalArgumentException("snapshot without id"))
       val ts = (sn \ "timestamp-ms") match {
         case JInt(v) => Some(v.toLong)
         case _ => None
@@ -1479,20 +1389,10 @@ object IcebergCatalog {
       s"ref type must be branch|tag, got $refType")
     require(name.nonEmpty, "ref name must be non-empty")
     val (md, mdPath) = loadMetadata(table)
-    require((md \ "snapshots").children.exists(s =>
-      (s \ "snapshot-id") match {
-        case JInt(v) => v.toLong == snapshotId; case _ => false
-      }), s"snapshot $snapshotId not in the table's history")
-    val newMd = md merge JObject("refs" -> JObject(name -> JObject(
-      "snapshot-id" -> JInt(snapshotId), "type" -> JString(refType))))
-    val ver = metaVersion(mdPath.getFileName.toString)
-    require(ver >= 0, s"unversioned metadata file ${mdPath.getFileName}")
-    val mdir = mdPath.getParent
-    writeMetadataAtomic(mdir, s"v${ver + 1}.metadata.json",
-      JsonMethods.compact(JsonMethods.render(newMd)))
-    val hint = mdir.resolve("version-hint.text")
-    if (Files.exists(hint)) Files.writeString(hint, (ver + 1).toString)
-    ver + 1
+    require((md \ "snapshots").children.exists(idOf(_).contains(snapshotId)),
+      s"snapshot $snapshotId not in the table's history")
+    publish(mdPath, md merge JObject("refs" -> JObject(name -> JObject(
+      "snapshot-id" -> JInt(snapshotId), "type" -> JString(refType)))))
   }
 
   /** EXPIRE old snapshots (r11, F15h — the maintenance half of the
@@ -1520,23 +1420,16 @@ object IcebergCatalog {
     // expiration no matter how old — dangling a ref would turn every
     // later readRef into a corruption
     val pinned: Set[Long] = refs(table).values.map(_._1).toSet
-    def idOf(s: JValue): Long = (s \ "snapshot-id") match {
-      case JInt(v) => v.toLong
-      case _ => throw new IllegalArgumentException("snapshot without id")
-    }
     val (expired, kept) = {
       val (e0, k0) = snaps.splitAt(snaps.size - keepLast)
-      val (rescued, stillExpired) = e0.partition(s => pinned.contains(idOf(s)))
+      val (rescued, stillExpired) = e0.partition(s => pinned.contains(
+        idOf(s).getOrElse(throw new IllegalArgumentException("snapshot without id"))))
       (stillExpired, rescued ++ k0)
     }
     if (expired.isEmpty) return (kept.size, 0)
-    val curId = (md \ "current-snapshot-id") match {
-      case JInt(v) => v.toLong
-      case _ => throw new IllegalArgumentException("no current-snapshot-id")
-    }
-    require(kept.exists(s => (s \ "snapshot-id") match {
-      case JInt(v) => v.toLong == curId; case _ => false
-    }), s"current snapshot $curId would be expired (keepLast=$keepLast)")
+    val curId = currentId(md)
+    require(kept.exists(idOf(_).contains(curId)),
+      s"current snapshot $curId would be expired (keepLast=$keepLast)")
     // the filesystem paths one snapshot reaches: its manifest list,
     // that list's manifests, and data_file entry paths. For KEPT
     // snapshots only LIVE entries (status != 2) pin a data file — a
@@ -1560,21 +1453,14 @@ object IcebergCatalog {
     val keepPaths = kept.flatMap(reachable(_, liveOnly = true)).toSet
     val doomed =
       expired.flatMap(reachable(_, liveOnly = false)).toSet -- keepPaths
-    var deleted = 0
-    doomed.toSeq.sortBy(_.toString).foreach { p =>
-      if (Files.deleteIfExists(p)) deleted += 1
-    }
-    val newMd = JObject(md.asInstanceOf[JObject].obj.map {
+    // publish the trimmed metadata BEFORE deleting: a commit that loses
+    // its version to a concurrent writer throws here with every file
+    // still on disk, and the current metadata never names a deleted file
+    publish(mdPath, JObject(md.asInstanceOf[JObject].obj.map {
       case ("snapshots", _) => ("snapshots", JArray(kept.toList))
       case other => other
-    })
-    val ver = metaVersion(mdPath.getFileName.toString)
-    require(ver >= 0, s"unversioned metadata file ${mdPath.getFileName}")
-    val mdir = mdPath.getParent
-    writeMetadataAtomic(mdir, s"v${ver + 1}.metadata.json",
-      JsonMethods.compact(JsonMethods.render(newMd)))
-    val hint = mdir.resolve("version-hint.text")
-    if (Files.exists(hint)) Files.writeString(hint, (ver + 1).toString)
+    }))
+    val deleted = doomed.toSeq.sortBy(_.toString).count(Files.deleteIfExists(_))
     (kept.size, deleted)
   }
 
