@@ -1,7 +1,8 @@
 #!/usr/bin/env bash
 # End-of-round wrap gate: NO snapshot commit may land without this passing.
 #
-#   scripts/wrap.sh            # Test/compile + full sf0.001 gate (~5 min)
+#   scripts/wrap.sh            # Test/compile + full sf0.001 gate, default
+#                              # and forced-path dispatch (~15 min)
 #   scripts/wrap.sh --fast     # guards + Test/compile only (~30 s)
 #
 # Exit 0 = safe to commit. Any red build or gate failure exits non-zero.
@@ -28,6 +29,16 @@ if grep -nE 'writeSingleParquet' src/main/scala/graft/Queries*.scala; then
   exit 1
 fi
 
+# streams are staged, drained and read back through Streams.run only
+if grep -rn 'processAllAvailable' src/main --include='*.scala' \
+     | grep -v '^src/main/scala/graft/streaming/Streams.scala:' \
+   || awk '/private def run\(/ { h = 1 } h && /^  }$/ { h = 0 }
+           !h && /processAllAvailable/ { print FILENAME ":" FNR ": " $0; f = 1 }
+           END { exit !f }' src/main/scala/graft/streaming/Streams.scala; then
+  echo "[wrap] stream drain outside Streams.run — replay through the harness"
+  exit 1
+fi
+
 echo "[wrap] sbt Test/compile ..."
 sbt -batch Test/compile
 
@@ -40,5 +51,19 @@ if [[ "${1:-}" != "--fast" ]]; then
   RES=$(python3 scripts/check.py /root/testdata/sf0.001 "$OUT" | tail -1)
   echo "[wrap] $RES"
   echo "$RES" | grep -q " 0 failed" || { echo "[wrap] GATE RED — do not commit"; exit 1; }
+
+  # forced-path pass: every wave twin off, so the graph / dedup / CC
+  # gates run their distributed loops against the same oracles
+  SF=/root/testdata/sf0.001
+  OUT_FORCED=/tmp/wrap_vout_forced
+  rm -rf "$OUT_FORCED"
+  echo "[wrap] Verify dump at sf0.001, forced distributed paths ..."
+  SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" sbt -batch \
+    'set javaOptions ++= Seq("-Dspark.graft.graph.waveRows=-1","-Dspark.graft.graph.waveLabels=-1")' \
+    "runMain graft.Verify $SF $OUT_FORCED"
+  echo "[wrap] check.py gate (forced) ..."
+  RES=$(python3 scripts/check.py "$SF" "$OUT_FORCED" | tail -1)
+  echo "[wrap] forced: $RES"
+  echo "$RES" | grep -q " 0 failed" || { echo "[wrap] FORCED GATE RED — do not commit"; exit 1; }
 fi
 echo "[wrap] GREEN — safe to commit"

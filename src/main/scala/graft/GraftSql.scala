@@ -50,7 +50,7 @@ object GraftSql {
       // write side effects / persisted state at definition time
       "q_basket_incremental", "sketch_tdigest_incremental",
       "sketch_hll_incremental", "dedup_incremental", "jdbc_roundtrip",
-      // streaming harnesses (processAllAvailable at definition time)
+      // streaming harnesses (drained at definition time)
       "stream_cdc_apply") ++
       SparkEntry.queries.keys.filter(_.startsWith("stream_"))
     SparkEntry.queries.keys.toSeq.filterNot(eager).sorted

@@ -207,21 +207,15 @@ object QueriesR22 {
     */
   def deltaCdfStream(s: SparkSession, dir: String): DataFrame = {
     val t0 = buildDeltaTsTable(s, dir)
-    val name = s"gate_deltacdf_${System.nanoTime()}"
-    val stream = s.readStream.format("graft.sources.DeltaCdfProvider")
-      .option("table", t0)
-      .option("startingVersion", "0")
-      .option("maxVersionsPerTrigger", "1")
-      .load()
-    val q = stream.writeStream.outputMode("append")
-      .format("memory").queryName(name).start()
-    try {
-      q.processAllAvailable()
-      val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-      require(dataBatches >= 3,
-        s"per-commit admission: want >= 3 data micro-batches, got $dataBatches")
-    } finally q.stop()
-    s.table(name)
+    // per-commit admission: at least three data micro-batches
+    graft.streaming.Streams.replay(s, Nil, s"gate_deltacdf_${System.nanoTime()}",
+        "append", minBatches = 3) { (iso, _) =>
+      iso.readStream.format("graft.sources.DeltaCdfProvider")
+        .option("table", t0)
+        .option("startingVersion", "0")
+        .option("maxVersionsPerTrigger", "1")
+        .load()
+    }
       .orderBy(col("_commit_version"), col("_change_type"), col("s_suppkey"))
   }
 

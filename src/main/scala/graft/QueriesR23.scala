@@ -293,37 +293,27 @@ object QueriesR23 {
             1700000000000L + i * 60000L))
       }
       val owners = store.resolve("owners").toString
-      val stream = s.readStream.schema(d.schema)
-        .option("maxFilesPerTrigger", "1").parquet(staged.toString)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val delta = Dedup.bandOwners(Dedup.minhashBandRows(batch,
-            col("doc_id"), col("text"),
-            shingleWords = 3, k = 12, bands = 4))
-          val merged =
-            if (!java.nio.file.Files.exists(java.nio.file.Paths.get(owners)))
-              delta
-            else Dedup.mergeBandOwners(s.read.parquet(owners), delta)
-          // read-modify-write on the index path: materialize to a
-          // sibling then swap (the ParquetTarget discipline)
-          val next = s"$owners.next"
-          merged.write.mode("overwrite").parquet(next)
-          val old = new java.io.File(owners)
-          def rm(f: java.io.File): Unit = {
-            if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-          }
-          if (old.exists()) rm(old)
-          require(new java.io.File(next).renameTo(old),
-            s"index swap failed: $next -> $owners")
-          ()
-        }
-        .start()
-      try {
-        q.processAllAvailable()
-        val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-        require(dataBatches >= 3,
-          s"per-file admission: want >= 3 data micro-batches, got $dataBatches")
-      } finally q.stop()
+      // per-file admission: at least three data micro-batches
+      graft.streaming.Streams.drain(s, minBatches = 3) { (iso, _) =>
+        iso.readStream.schema(d.schema)
+          .option("maxFilesPerTrigger", "1").parquet(staged.toString)
+      } { (batch, _) =>
+        val delta = Dedup.bandOwners(Dedup.minhashBandRows(batch,
+          col("doc_id"), col("text"),
+          shingleWords = 3, k = 12, bands = 4))
+        val merged =
+          if (!java.nio.file.Files.exists(java.nio.file.Paths.get(owners)))
+            delta
+          else Dedup.mergeBandOwners(s.read.parquet(owners), delta)
+        // read-modify-write on the index path: materialize to a
+        // sibling then swap (the ParquetTarget discipline)
+        val next = s"$owners.next"
+        merged.write.mode("overwrite").parquet(next)
+        val old = new java.io.File(owners)
+        if (old.exists()) graft.sources.DeltaLog.deleteTmp(old.toPath)
+        require(new java.io.File(next).renameTo(old),
+          s"index swap failed: $next -> $owners")
+      }
       // THE maintenance law, checked hash-exact: the maintained index
       // equals a from-scratch rebuild over the whole corpus
       val idx = s.read.parquet(owners)

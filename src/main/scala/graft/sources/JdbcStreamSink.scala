@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.types.StructType
 
 /** X20/F11: exactly-once streaming CDC apply into a JDBC target.
@@ -107,24 +107,20 @@ object JdbcStreamSink {
                          queryName: String): Long = {
     ensureEpochTable(c)
     var applied = 0L
-    val q = spark.readStream.schema(schema).parquet(deltaPath)
-      .writeStream.outputMode("append")
-      .foreachBatch { (batch: DataFrame, epochId: Long) =>
-        if (!batch.isEmpty) {
-          JdbcMerge.execute(c, s"DELETE FROM $staging")
-          Jdbc.write(batch, c, staging)
-          val cols = batch.columns.toSeq
-          if (applyEpochOnce(c, queryName, epochId) { conn =>
-                val st = conn.createStatement()
-                try st.executeUpdate(
-                  JdbcMerge.mergeSoftDeleteSql(target, staging, pk, cols))
-                finally st.close()
-              }) applied += 1
-        }
-        ()
+    graft.streaming.Streams.drain(spark)((iso, _) =>
+      iso.readStream.schema(schema).parquet(deltaPath)) { (batch, epochId) =>
+      if (!batch.isEmpty) {
+        JdbcMerge.execute(c, s"DELETE FROM $staging")
+        Jdbc.write(batch, c, staging)
+        val cols = batch.columns.toSeq
+        if (applyEpochOnce(c, queryName, epochId) { conn =>
+              val st = conn.createStatement()
+              try st.executeUpdate(
+                JdbcMerge.mergeSoftDeleteSql(target, staging, pk, cols))
+              finally st.close()
+            }) applied += 1
       }
-      .queryName(queryName).start()
-    try q.processAllAvailable() finally q.stop()
+    }
     applied
   }
 }

@@ -1140,30 +1140,10 @@ object KafkaWire {
                   pt: org.apache.spark.sql.Column,
                   value: org.apache.spark.sql.Column,
                   batchSize: Int = 4096,
-                  codec: Int = CodecNone): Unit = {
-    val rows = df.select(pt.cast("int").as("pt"), value.cast("string").as("v"))
-    rows.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-      if (it.hasNext) {
-        val client = new Client(host, port)
-        try {
-          val buf = scala.collection.mutable.Map
-            .empty[Int, scala.collection.mutable.ArrayBuffer[Array[Byte]]]
-          def flush(p: Int): Unit = {
-            val b = buf(p)
-            if (b.nonEmpty) { client.produce(topic, p, b.toSeq, codec = codec); b.clear() }
-          }
-          it.foreach { r =>
-            val p = r.getInt(0)
-            val b = buf.getOrElseUpdate(p,
-              new scala.collection.mutable.ArrayBuffer[Array[Byte]])
-            b += r.getString(1).getBytes(UTF_8)
-            if (b.size >= batchSize) flush(p)
-          }
-          buf.keys.toSeq.sorted.foreach(flush)
-        } finally client.close()
-      }
-    }
-  }
+                  codec: Int = CodecNone): Unit =
+    produceRows(df.select(pt.cast("int"), value.cast("string")), host, port,
+      topic, batchSize, codec)(r =>
+      (r.getInt(0), (0L, null, r.getString(1).getBytes(UTF_8))))
 
   /** Timestamped produce sink (r10b): [[produceSink]] with each row's
     * CREATE-TIME column riding the wire in the record — the leg that
@@ -1178,9 +1158,39 @@ object KafkaWire {
                              ts: org.apache.spark.sql.Column,
                              value: org.apache.spark.sql.Column,
                              batchSize: Int = 4096,
-                             codec: Int = CodecNone): Unit = {
-    val rows = df.select(pt.cast("int").as("pt"), ts.cast("long").as("ts"),
-      value.cast("string").as("v"))
+                             codec: Int = CodecNone): Unit =
+    produceRows(df.select(pt.cast("int"), ts.cast("long"), value.cast("string")),
+      host, port, topic, batchSize, codec)(r =>
+      (r.getInt(0), (r.getLong(1), null, r.getString(2).getBytes(UTF_8))))
+
+  /** Keyed produce sink (r10): the DEFAULT-PARTITIONER contract — each
+    * row routes to `partitionForKey(murmur2(key))`, keys ride the wire
+    * in the records, so all records of one key land on one partition
+    * in produce order (the invariant log compaction and per-key
+    * consumers rest on). Executor-side like [[produceSink]].
+    */
+  def produceSinkKeyed(df: org.apache.spark.sql.DataFrame, host: String,
+                       port: Int, topic: String, numPartitions: Int,
+                       key: org.apache.spark.sql.Column,
+                       value: org.apache.spark.sql.Column,
+                       batchSize: Int = 4096,
+                       codec: Int = CodecNone): Unit =
+    produceRows(df.select(key.cast("string"), value.cast("string")), host, port,
+      topic, batchSize, codec) { r =>
+      val kb = r.getString(0).getBytes(UTF_8)
+      (partitionForKey(kb, numPartitions), (0L, kb, r.getString(1).getBytes(UTF_8)))
+    }
+
+  /** The produce loop behind the three sinks: each non-empty task opens
+    * one connection, `record` maps a row to its partition and its
+    * (create-time, key, value) record, records buffer per partition and
+    * flush as `batchSize`-record batches (then the rest, partitions in
+    * id order).
+    */
+  private def produceRows(rows: org.apache.spark.sql.DataFrame, host: String,
+                          port: Int, topic: String, batchSize: Int, codec: Int)(
+                          record: org.apache.spark.sql.Row =>
+                            (Int, (Long, Array[Byte], Array[Byte]))): Unit =
     rows.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
       if (it.hasNext) {
         val client = new Client(host, port)
@@ -1195,54 +1205,16 @@ object KafkaWire {
             }
           }
           it.foreach { r =>
-            val p = r.getInt(0)
+            val (p, rec) = record(r)
             val b = buf.getOrElseUpdate(p,
               new scala.collection.mutable.ArrayBuffer[(Long, Array[Byte], Array[Byte])])
-            b += ((r.getLong(1), null, r.getString(2).getBytes(UTF_8)))
+            b += rec
             if (b.size >= batchSize) flush(p)
           }
           buf.keys.toSeq.sorted.foreach(flush)
         } finally client.close()
       }
     }
-  }
-
-  /** Keyed produce sink (r10): the DEFAULT-PARTITIONER contract — each
-    * row routes to `partitionForKey(murmur2(key))`, keys ride the wire
-    * in the records, so all records of one key land on one partition
-    * in produce order (the invariant log compaction and per-key
-    * consumers rest on). Executor-side like [[produceSink]].
-    */
-  def produceSinkKeyed(df: org.apache.spark.sql.DataFrame, host: String,
-                       port: Int, topic: String, numPartitions: Int,
-                       key: org.apache.spark.sql.Column,
-                       value: org.apache.spark.sql.Column,
-                       batchSize: Int = 4096,
-                       codec: Int = CodecNone): Unit = {
-    val rows = df.select(key.cast("string").as("k"), value.cast("string").as("v"))
-    rows.foreachPartition { it: Iterator[org.apache.spark.sql.Row] =>
-      if (it.hasNext) {
-        val client = new Client(host, port)
-        try {
-          val buf = scala.collection.mutable.Map
-            .empty[Int, scala.collection.mutable.ArrayBuffer[(Array[Byte], Array[Byte])]]
-          def flush(p: Int): Unit = {
-            val b = buf(p)
-            if (b.nonEmpty) { client.produceKeyed(topic, p, b.toSeq, codec = codec); b.clear() }
-          }
-          it.foreach { r =>
-            val kb = r.getString(0).getBytes(UTF_8)
-            val p = partitionForKey(kb, numPartitions)
-            val b = buf.getOrElseUpdate(p,
-              new scala.collection.mutable.ArrayBuffer[(Array[Byte], Array[Byte])])
-            b += ((kb, r.getString(1).getBytes(UTF_8)))
-            if (b.size >= batchSize) flush(p)
-          }
-          buf.keys.toSeq.sorted.foreach(flush)
-        } finally client.close()
-      }
-    }
-  }
 }
 
 /** Test-harness broker: serves a [[BusSource.stage]]d directory over

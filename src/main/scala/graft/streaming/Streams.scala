@@ -3,9 +3,10 @@ package graft.streaming
 import graft.PlanProbe.CkptOps
 import graft.cdc.Cdc
 import java.nio.file.Files
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{DataStreamWriter, GroupState,
+  GroupStateTimeout, OutputMode}
 
 /** Event row for stateful sessionization (X3). */
 case class SessionEvent(user_id: Long, event_id: Long, ts_sec: Long)
@@ -19,37 +20,111 @@ case class BandClaimT(band: String, doc_id: Long, ts: java.sql.Timestamp)
 /** Per-key session counter state carried across micro-batches. */
 case class SessionState(nextSeq: Long, lastTs: Long)
 
-/** Structured Streaming operators. For the local harness a finite parquet
-  * table is replayed through the file stream source and drained with
-  * `processAllAvailable()` — the plans are exactly what a production
-  * readStream over an arriving directory/Kafka topic would run.
+/** Structured Streaming operators. Every operator is a finite replay run
+  * by one harness, [[run]]:
+  *  1. staging — its input tables are written once as parquet under one
+  *     temp dir, which is removed after the drain;
+  *  2. session — the query runs in an isolated child session with
+  *     [[StatePartitions]] state partitions (RocksDB state per
+  *     `rocksDb`);
+  *  3. running — the staged copies are read back as file streams, the
+  *     operator's pipeline is started on its sink and driven until all
+  *     input is processed, then stopped;
+  *  4. read-back — a memory sink's table, or the number of non-empty
+  *     micro-batches for a per-batch sink.
+  * The plans are exactly what a production readStream over an arriving
+  * directory/Kafka topic would run.
   */
 object Streams {
-  private def stageToTemp(df: DataFrame, name: String): String = {
-    val dir = Files.createTempDirectory(s"graft_$name").toString
-    df.write.mode("overwrite").parquet(s"$dir/in")
-    s"$dir/in"
-  }
-
   /** Stateful streaming queries fix their state-store partition count from
     * spark.sql.shuffle.partitions AT START, and every micro-batch then
     * pays per-partition store maintenance (snapshot, delta files) whether
-    * or not the partition holds data. Scope the stream's state partitions
-    * to the workload instead of inheriting the batch-tuned setting — and
-    * do it in an ISOLATED child session (`spark.newSession()`: same
-    * SparkContext and shared state, private SQL conf), not by mutating the
-    * shared session conf, which a concurrent batch or streaming query on
-    * the same session would silently pick up. `f` receives the child
-    * session and must build its readStream from it.
+    * or not the partition holds data. Every replay scopes its state
+    * partitions to this workload-sized count instead of inheriting the
+    * batch-tuned setting — in an ISOLATED child session
+    * (`spark.newSession()`: same SparkContext and shared state, private
+    * SQL conf), not by mutating the shared session conf, which a
+    * concurrent batch or streaming query on the same session would
+    * silently pick up. Memory-sink views live in that child session too,
+    * so none outlives the replay in the caller's catalog.
     */
-  private def withStateSession[T](spark: SparkSession, n: Int,
-                                  rocksDb: Boolean = UseRocksDb)(f: SparkSession => T): T = {
+  private val StatePartitions = 8
+
+  /** `f` on a fresh temp dir `graft_<prefix>…`, removed afterwards. */
+  private def withTempDir[T](prefix: String)(f: String => T): T = {
+    val dir = Files.createTempDirectory(s"graft_$prefix")
+    try f(dir.toString) finally graft.sources.DeltaLog.deleteTmp(dir)
+  }
+
+  /** The finite-replay harness (steps in the header). `query` gets the
+    * child session and the staged `inputs` read back as streams (reader
+    * options `read`) and builds the pipeline; `sink` lands it. `refill`,
+    * when given, runs on the staged dirs after the first drain, and a
+    * second drain consumes what it appended. Fails loudly when fewer
+    * than `minBatches` micro-batches carried data. Returns the child
+    * session and the number of non-empty micro-batches.
+    */
+  private def run(spark: SparkSession, inputs: Seq[DataFrame],
+                  sink: DataStreamWriter[Row] => DataStreamWriter[Row],
+                  rocksDb: Boolean = UseRocksDb,
+                  read: Map[String, String] = Map.empty,
+                  refill: Option[Seq[String] => Unit] = None,
+                  minBatches: Int = 0)(
+                  query: (SparkSession, Seq[DataFrame]) => DataFrame)
+      : (SparkSession, Int) = withTempDir("replay") { dir =>
+    val paths = inputs.indices.map(i => s"$dir/in$i")
+    inputs.zip(paths).foreach { case (df, p) => df.write.parquet(p) }
     val iso = spark.newSession()
-    iso.conf.set("spark.sql.shuffle.partitions", n.toString)
+    iso.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
     if (rocksDb) iso.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    f(iso)
+    val streams = inputs.zip(paths).map { case (df, p) =>
+      iso.readStream.schema(df.schema).options(read).parquet(p)
+    }
+    val q = sink(query(iso, streams).writeStream).start()
+    try {
+      q.processAllAvailable()
+      refill.foreach { f => f(paths); q.processAllAvailable() }
+    } finally q.stop()
+    val batches = q.recentProgress.count(_.numInputRows > 0)
+    require(batches >= minBatches,
+      s"replay admission: want >= $minBatches data micro-batches, got $batches")
+    (iso, batches)
   }
+
+  /** [[run]] into the memory table `queryName` in output `mode`; returns
+    * that table (its rows live on the driver, so it outlives the staged
+    * input).
+    */
+  private[graft] def replay(spark: SparkSession, inputs: Seq[DataFrame],
+                            queryName: String, mode: String,
+                            rocksDb: Boolean = UseRocksDb,
+                            read: Map[String, String] = Map.empty,
+                            refill: Option[Seq[String] => Unit] = None,
+                            minBatches: Int = 0)(
+                            query: (SparkSession, Seq[DataFrame]) => DataFrame)
+      : DataFrame =
+    run(spark, inputs, _.outputMode(mode).format("memory").queryName(queryName),
+      rocksDb, read, refill, minBatches)(query)._1.table(queryName)
+
+  /** [[run]] into `perBatch`, called with each micro-batch and its id;
+    * returns the number of non-empty micro-batches.
+    */
+  private[graft] def drain(spark: SparkSession, inputs: Seq[DataFrame] = Nil,
+                           minBatches: Int = 0)(
+                           query: (SparkSession, Seq[DataFrame]) => DataFrame)(
+                           perBatch: (DataFrame, Long) => Unit): Int =
+    run(spark, inputs, _.outputMode("append").foreachBatch(perBatch),
+      minBatches = minBatches)(query)._2
+
+  /** Source `format` read with `options`, admission capped at
+    * `maxRowsPerTrigger` rows per micro-batch.
+    */
+  private def readSource(iso: SparkSession, format: String,
+                         options: Map[String, String],
+                         maxRowsPerTrigger: Long): DataFrame =
+    iso.readStream.format(format).options(options)
+      .option("maxRowsPerTrigger", maxRowsPerTrigger.toString).load()
 
   /** State-store backend switch. The default HDFS-backed store keeps every
     * key in executor heap — fine for bounded-key workloads, fatal when
@@ -70,26 +145,19 @@ object Streams {
     * count, decimal-exact value sum.
     */
   def tumblingWindowAgg(spark: SparkSession, events: DataFrame, tsCol: String,
-                        typeCol: String, valueCol: String, queryName: String): DataFrame = {
-    val path = stageToTemp(events, "winagg")
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream.schema(events.schema).parquet(path)
-      val agg = stream
+                        typeCol: String, valueCol: String, queryName: String): DataFrame =
+    replay(spark, Seq(events), queryName, "complete") { (_, in) =>
+      in.head
         .withWatermark(tsCol, "1 hour")
         .groupBy(window(col(tsCol), "1 hour").as("win"), col(typeCol))
         .agg(count(lit(1)).as("n_events"),
           sum(col(valueCol).cast("decimal(18,2)")).as("sum_value_dec"))
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
       .select(
         (unix_timestamp(col("win.start")) / 3600L).cast("long").as("bucket_hour"),
         col(typeCol),
         col("n_events"),
         col("sum_value_dec").cast("double").as("sum_value"))
-  }
 
   /** X2: streaming CDC apply — the reference's incremental merge loop
     * (scripts/03_cdc_etl.py:259-346) as readStream → foreachBatch →
@@ -99,17 +167,10 @@ object Streams {
     */
   def cdcApply(spark: SparkSession, initialTarget: DataFrame, delta: DataFrame,
                pk: Seq[String], orderCols: Seq[Column]): DataFrame = {
-    val path = stageToTemp(delta, "cdcapply")
     var state = initialTarget.ckpt
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream.schema(delta.schema).parquet(path)
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val deduped = Cdc.latestPerKey(batch, pk, orderCols)
-          state = Cdc.mergeSoftDelete(state, deduped, pk).ckpt
-          ()
-        }.start()
-      try { q.processAllAvailable() } finally { q.stop() }
+    drain(spark, Seq(delta))((_, in) => in.head) { (batch, _) =>
+      state = Cdc.mergeSoftDelete(state, Cdc.latestPerKey(batch, pk, orderCols),
+        pk).ckpt
     }
     state
   }
@@ -167,22 +228,12 @@ object Streams {
                              schema: org.apache.spark.sql.types.StructType,
                              pk: Seq[String], orderCol: String)(
                              commit: (SparkSession, DataFrame) => Unit): Int =
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream.schema(schema)
+    drain(spark) { (iso, _) =>
+      iso.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(stagedDir)
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          if (!batch.isEmpty) {
-            val staged = Cdc.latestPerKey(batch, pk, Seq(col(orderCol)))
-              .drop(orderCol)
-            commit(batch.sparkSession, staged)
-          }
-          ()
-        }.start()
-      try {
-        q.processAllAvailable()
-        q.recentProgress.count(_.numInputRows > 0)
-      } finally q.stop()
+    } { (batch, _) =>
+      if (!batch.isEmpty) commit(batch.sparkSession,
+        Cdc.latestPerKey(batch, pk, Seq(col(orderCol))).drop(orderCol))
     }
 
   /** X44: streaming CDC apply FROM the message bus ([[BusSource]]) —
@@ -241,8 +292,7 @@ object Streams {
                               orderCols: Seq[Column], busPartitions: Int,
                               maxRowsPerTrigger: Long, format: String)(
                               connect: String => (Map[String, String] => DataFrame) => DataFrame)
-      : DataFrame = {
-    val root = Files.createTempDirectory("graft_buscdc").toString
+      : DataFrame = withTempDir("buscdc") { root =>
     val pt = pmod(hash(pk.map(col): _*), lit(busPartitions))
     BusSource.stage(
       delta.withColumn("__pt", pt)
@@ -250,21 +300,13 @@ object Streams {
       root, busPartitions, col("__pt"), col("__v"), orderCols: _*)
     connect(root) { options =>
       var state = initialTarget.ckpt
-      withStateSession(spark, 8) { iso =>
-        val stream = iso.readStream
-          .format(format)
-          .options(options)
-          .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
-          .load()
+      drain(spark) { (iso, _) =>
+        readSource(iso, format, options, maxRowsPerTrigger)
           .select(from_json(col("value"), delta.schema).as("__r"))
           .select(col("__r.*"))
-        val q = stream.writeStream.outputMode("append")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val deduped = Cdc.latestPerKey(batch, pk, orderCols)
-            state = Cdc.mergeSoftDelete(state, deduped, pk).ckpt
-            ()
-          }.start()
-        try { q.processAllAvailable() } finally { q.stop() }
+      } { (batch, _) =>
+        state = Cdc.mergeSoftDelete(state,
+          Cdc.latestPerKey(batch, pk, orderCols), pk).ckpt
       }
       state
     }
@@ -277,17 +319,10 @@ object Streams {
     */
   def streamingDedup(spark: SparkSession, docs: DataFrame, idCol: String,
                      fingerprintCol: String, queryName: String,
-                     rocksDb: Boolean = UseRocksDb): DataFrame = {
-    val path = stageToTemp(docs, "sdedup")
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(docs.schema).parquet(path)
-      val deduped = stream.dropDuplicates(Seq(fingerprintCol))
-      val q = deduped.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
+                     rocksDb: Boolean = UseRocksDb): DataFrame =
+    replay(spark, Seq(docs), queryName, "append", rocksDb) { (_, in) =>
+      in.head.dropDuplicates(Seq(fingerprintCol))
     }
-  }
 
   /** X11: streaming NEAR-dup band claims — the streaming twin of the
     * minhash/LSH pipeline (D2), beside X4's exact dedup. Band keys are
@@ -310,29 +345,24 @@ object Streams {
     import spark.implicits._
     // one file → in-order single-batch replay: "first claimant" is then
     // deterministic (= min doc_id), which the batch oracle reproduces
-    val path = stageToTemp(docs.coalesce(1).sortWithinPartitions(col(idCol)), "sneardup")
+    val staged = docs.coalesce(1).sortWithinPartitions(col(idCol))
     val claim = (band: String, rows: Iterator[BandClaim], state: GroupState[Long]) => {
       val ids = rows.map(_.doc_id).toSeq.sorted
       val owner = state.getOption.getOrElse(ids.head)
       state.update(owner)
       ids.iterator.map(id => (band, id, owner))
     }
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(docs.schema).parquet(path)
+    replay(spark, Seq(staged), queryName, "append", rocksDb) { (_, in) =>
       // aggregation-free staged band keys: the one-select signature form
       // re-inlines the shingle pipeline k times (the 50x hazard noted on
       // minhashSignatureTable), and a groupBy signature table would be a
       // second stateful operator in this query
-      val banded = Dedup.minhashBandRows(stream,
+      Dedup.minhashBandRows(in.head,
           col(idCol).cast("long"), col(textCol), shingleWords, k, bands)
         .select(col("band"), col("doc_id")).as[BandClaim]
-      val claims = banded.groupByKey(_.band)
+        .groupByKey(_.band)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(claim)
         .toDF("band", "doc_id", "owner")
-      val q = claims.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -358,7 +388,9 @@ object Streams {
     // stagedPath: a pre-written replay directory (files replay in
     // modification-time order — how specs script batch boundaries);
     // by default `docs` is staged as one batch
-    val path = Option(stagedPath).getOrElse(stageToTemp(docs, "sneardupttl"))
+    val read =
+      if (maxFilesPerTrigger > 0) Map("maxFilesPerTrigger" -> maxFilesPerTrigger.toString)
+      else Map.empty[String, String]
     val ttlMs = org.apache.spark.sql.catalyst.util.IntervalUtils
       .stringToInterval(org.apache.spark.unsafe.types.UTF8String.fromString(ttl))
     require(ttlMs.months == 0,
@@ -378,24 +410,20 @@ object Streams {
         sorted.iterator.map(r => (band, r.doc_id, owner))
       }
     }
-    withStateSession(spark, 8, rocksDb) { iso =>
-      var reader = iso.readStream.schema(docs.schema)
-      if (maxFilesPerTrigger > 0)
-        reader = reader.option("maxFilesPerTrigger", maxFilesPerTrigger.toString)
-      val stream = reader.parquet(path).withWatermark(tsCol, ttl)
+    replay(spark, if (stagedPath == null) Seq(docs) else Nil, queryName,
+        "append", rocksDb, read) { (iso, in) =>
+      val stream = in.headOption
+        .getOrElse(iso.readStream.schema(docs.schema).options(read).parquet(stagedPath))
+        .withWatermark(tsCol, ttl)
       // ts rides the staged band projections (carry) — joining the stream
       // to itself would be a SECOND stateful operator in this query
-      val banded = Dedup.minhashBandRows(stream,
+      Dedup.minhashBandRows(stream,
           col(idCol).cast("long"), col(textCol), shingleWords, k, bands,
           carry = Seq(col(tsCol).as("ts")))
         .select(col("band"), col("doc_id"), col("__c0").as("ts")).as[BandClaimT]
-      val claims = banded.groupByKey(_.band)
+        .groupByKey(_.band)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(claim)
         .toDF("band", "doc_id", "owner")
-      val q = claims.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -407,22 +435,12 @@ object Streams {
     * r_ts in [l_ts - gapSec, l_ts].
     */
   def intervalJoin(spark: SparkSession, left: DataFrame, right: DataFrame,
-                   gapSec: Long, queryName: String): DataFrame = {
-    val lPath = stageToTemp(left, "ivjoin_l")
-    val rPath = stageToTemp(right, "ivjoin_r")
-    withStateSession(spark, 8) { iso =>
-      val l = iso.readStream.schema(left.schema).parquet(lPath)
-        .withWatermark("l_ts", "1 hour")
-      val r = iso.readStream.schema(right.schema).parquet(rPath)
-        .withWatermark("r_ts", "1 hour")
-      val joined = l.join(r, expr(
-        s"l_key = r_key AND r_ts >= l_ts - INTERVAL $gapSec SECONDS AND r_ts <= l_ts"))
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
+                   gapSec: Long, queryName: String): DataFrame =
+    replay(spark, Seq(left, right), queryName, "append") { (_, in) =>
+      in(0).withWatermark("l_ts", "1 hour").join(
+        in(1).withWatermark("r_ts", "1 hour"), expr(
+          s"l_key = r_key AND r_ts >= l_ts - INTERVAL $gapSec SECONDS AND r_ts <= l_ts"))
     }
-  }
 
   /** X5b (r11): stream-stream LEFT OUTER interval join — the
     * enrichment-miss shape: every left event emits, matched rows as
@@ -480,15 +498,18 @@ object Streams {
       left.sparkSession.createDataFrame(
         java.util.List.of(org.apache.spark.sql.Row(
           -1L, -1L, new java.sql.Timestamp(ms))), schema)
-    val lPath = stageToTemp(
-      left.unionByName(sentinel(left.schema, flushMs)), "ivjoinL_l")
-    val rPath = stageToTemp(
-      right.unionByName(sentinel(right.schema, flushMs)), "ivjoinL_r")
-    withStateSession(spark, 8) { iso =>
-      val l = iso.readStream.schema(left.schema).parquet(lPath)
-        .withWatermark("l_ts", "1 hour")
-      val r = iso.readStream.schema(right.schema).parquet(rPath)
-        .withWatermark("r_ts", "1 hour")
+    // wave 2: a data batch under the already-raised watermark — the
+    // batch whose eviction emits the last unmatched rows
+    val wave2 = flushMs + 3600L * 1000L
+    val refill = (paths: Seq[String]) => {
+      sentinel(left.schema, wave2).coalesce(1)
+        .write.mode("append").parquet(paths(0))
+      sentinel(right.schema, wave2).coalesce(1)
+        .write.mode("append").parquet(paths(1))
+    }
+    replay(spark, Seq(left.unionByName(sentinel(left.schema, flushMs)),
+        right.unionByName(sentinel(right.schema, flushMs))),
+        queryName, "append", refill = Some(refill)) { (_, in) =>
       // NOTE: the sentinel filter must NOT live in the streaming plan —
       // `l_key != -1` would constraint-propagate through the equi-join
       // (inferring `r_key != -1`) and push below BOTH EventTimeWatermark
@@ -496,28 +517,15 @@ object Streams {
       // sentinels flow through the join (each wave's pair matches
       // itself, nothing else — no real key is -1) and filter from the
       // BATCH read of the sink table instead.
-      val joined = l.join(r, fexpr(
+      in(0).withWatermark("l_ts", "1 hour").join(
+        in(1).withWatermark("r_ts", "1 hour"), fexpr(
           s"l_key = r_key AND r_ts >= l_ts - INTERVAL $gapSec SECONDS AND r_ts <= l_ts"),
-          joinType)
-      val q = joined.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try {
-        q.processAllAvailable()
-        // wave 2: a data batch under the already-raised watermark —
-        // the batch whose eviction emits the last unmatched rows
-        val wave2 = flushMs + 3600L * 1000L
-        sentinel(left.schema, wave2).coalesce(1)
-          .write.mode("append").parquet(lPath)
-        sentinel(right.schema, wave2).coalesce(1)
-          .write.mode("append").parquet(rPath)
-        q.processAllAvailable()
-      } finally { q.stop() }
+        joinType)
+    }
       // null-safe: a full-outer row may carry null on either side, and
       // each wave's sentinels match each OTHER, never real rows
-      iso.table(queryName)
-        .filter(coalesce(col("l_key"), lit(0L)) =!= -1L &&
-          coalesce(col("r_key"), lit(0L)) =!= -1L)
-    }
+      .filter(coalesce(col("l_key"), lit(0L)) =!= -1L &&
+        coalesce(col("r_key"), lit(0L)) =!= -1L)
   }
 
   /** X6: stream-static join — each micro-batch of the stream joins the
@@ -526,15 +534,10 @@ object Streams {
     * standard enrichment shape (events against a replicated dimension).
     */
   def streamStaticJoin(spark: SparkSession, stream: DataFrame, static: DataFrame,
-                       joinCol: String, queryName: String): DataFrame = {
-    val path = stageToTemp(stream, "ssjoin")
-    val s = spark.readStream.schema(stream.schema).parquet(path)
-    val joined = s.join(broadcast(static), Seq(joinCol))
-    val q = joined.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    spark.table(queryName)
-  }
+                       joinCol: String, queryName: String): DataFrame =
+    replay(spark, Seq(stream), queryName, "append") { (_, in) =>
+      in.head.join(broadcast(static), Seq(joinCol))
+    }
 
   /** X3: stateful gap-based sessionization with flatMapGroupsWithState —
     * the custom-state path for when windowed builtins can't express the
@@ -548,7 +551,6 @@ object Streams {
     import spark.implicits._
     val typed = events.select(col("user_id").cast("long"), col("event_id").cast("long"),
       col("ts_sec").cast("long")).as[SessionEvent]
-    val path = stageToTemp(typed.toDF(), "sessionize")
 
     val assign = (_: Long, rows: Iterator[SessionEvent],
                   state: GroupState[SessionState]) => {
@@ -564,15 +566,10 @@ object Streams {
       out.iterator
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path).as[SessionEvent]
-      val sessions = stream.groupByKey(_.user_id)
+    replay(spark, Seq(typed.toDF()), queryName, "append", rocksDb) { (_, in) =>
+      in.head.as[SessionEvent].groupByKey(_.user_id)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(assign)
         .toDF("user_id", "event_id", "session_seq")
-      val q = sessions.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -588,20 +585,13 @@ object Streams {
                        pk: Seq[String], orderCols: Seq[Column],
                        groupCol: String, valueCol: String): (DataFrame, DataFrame) = {
     import graft.operators.Ivm
-    val path = stageToTemp(delta, "cdcivm")
     var state = initialTarget.ckpt
     var view = Ivm.sumCountView(state, groupCol, valueCol).ckpt
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream.schema(delta.schema).parquet(path)
-      val q = stream.writeStream.outputMode("append")
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val deduped = Cdc.latestPerKey(batch, pk, orderCols)
-          view = Ivm.maintainSumCount(view, state, deduped, pk, groupCol, valueCol)
-            .ckpt
-          state = Cdc.mergeSoftDelete(state, deduped, pk).ckpt
-          ()
-        }.start()
-      try { q.processAllAvailable() } finally { q.stop() }
+    drain(spark, Seq(delta))((_, in) => in.head) { (batch, _) =>
+      val deduped = Cdc.latestPerKey(batch, pk, orderCols)
+      view = Ivm.maintainSumCount(view, state, deduped, pk, groupCol, valueCol)
+        .ckpt
+      state = Cdc.mergeSoftDelete(state, deduped, pk).ckpt
     }
     (state, view)
   }
@@ -620,26 +610,20 @@ object Streams {
   def sessionWindowAgg(spark: SparkSession, events: DataFrame, tsCol: String,
                        keyCol: String, gap: String, queryName: String,
                        rocksDb: Boolean = UseRocksDb): DataFrame = {
-    val path = stageToTemp(events.coalesce(1), "sesswin") // one file → one micro-batch
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(events.schema).parquet(path)
-      val agg = stream
+    // one file → one micro-batch; session-window streaming aggregation
+    // supports append & complete; complete emits every closed-or-open
+    // session after the finite replay drains (append would hold back
+    // sessions the watermark hasn't passed)
+    replay(spark, Seq(events.coalesce(1)), queryName, "complete", rocksDb) { (_, in) =>
+      in.head
         .withWatermark(tsCol, "1 hour")
         .groupBy(session_window(col(tsCol), gap).as("sw"), col(keyCol))
         .agg(count(lit(1)).as("n_events"))
-      // session-window streaming aggregation supports append & complete;
-      // complete emits every closed-or-open session after the finite
-      // replay drains (append would hold back sessions the watermark
-      // hasn't passed)
-      val q = agg.writeStream.outputMode("complete")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-        .select(col(keyCol),
-          date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
-          date_format(col("sw.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
-          col("n_events"))
     }
+      .select(col(keyCol),
+        date_format(col("sw.start"), "yyyy-MM-dd HH:mm:ss").as("session_start"),
+        date_format(col("sw.end"), "yyyy-MM-dd HH:mm:ss").as("session_end"),
+        col("n_events"))
   }
 
   /** X8: streaming quantiles — a t-digest per key carried as
@@ -657,7 +641,6 @@ object Streams {
     import spark.implicits._
     val typed = rows.select(col("key").cast("string"), col("v").cast("double"))
       .as[(String, Double)]
-    val path = stageToTemp(typed.toDF("key", "v"), "stdigest")
 
     val update: (String, Iterator[(String, Double)], GroupState[TDigest.State]) =>
         (String, Long, Seq[Double]) = (key, batch, state) => {
@@ -671,20 +654,14 @@ object Streams {
       (key, compact.weights.sum, qs.map(q => TDigest.quantile(compact, q, compression)))
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Double)]
-      val digests = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "v")), queryName, "update", rocksDb) { (_, in) =>
+      in.head.as[(String, Double)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("key", "n_seen", "est")
-      val q = digests.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-        .groupBy("key")
-        .agg(max_by(col("est"), col("n_seen")).as("est"),
-          max(col("n_seen")).as("n_seen"))
     }
+      .groupBy("key")
+      .agg(max_by(col("est"), col("n_seen")).as("est"),
+        max(col("n_seen")).as("n_seen"))
   }
 
   /** X12: streaming heavy hitters — a Misra-Gries counter set per key as
@@ -705,7 +682,6 @@ object Streams {
     import spark.implicits._
     val typed = rows.select(col("key").cast("string"), col("item").cast("long"))
       .as[(String, Long)]
-    val path = stageToTemp(typed.toDF("key", "item"), "sfreq")
 
     val update: (String, Iterator[(String, Long)], GroupState[(FreqItems.Counters, Long)]) =>
         (String, Long, FreqItems.Counters) = (key, batch, state) => {
@@ -716,20 +692,14 @@ object Streams {
       (key, seen, st)
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Long)]
-      val sketches = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "item")), queryName, "update", rocksDb) { (_, in) =>
+      in.head.as[(String, Long)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("key", "n_seen", "sk")
-      val q = sketches.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-        .groupBy("key")
-        .agg(max_by(col("sk"), col("n_seen")).as("sk"),
-          max(col("n_seen")).as("n_seen"))
     }
+      .groupBy("key")
+      .agg(max_by(col("sk"), col("n_seen")).as("sk"),
+        max(col("n_seen")).as("n_seen"))
   }
 
   /** X13: streaming exact moments — per key, the integer running state
@@ -747,7 +717,6 @@ object Streams {
     import spark.implicits._
     val typed = rows.select(col("key").cast("string"), col("x").cast("long"))
       .as[(String, Long)]
-    val path = stageToTemp(typed.toDF("key", "x"), "smoments")
 
     val update: (String, Iterator[(String, Long)], GroupState[(Long, Long, Long)]) =>
         (String, Long, Long, Long) = (key, batch, state) => {
@@ -757,20 +726,14 @@ object Streams {
       (key, n, s1, s2)
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Long)]
-      val moments = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "x")), queryName, "update", rocksDb) { (_, in) =>
+      in.head.as[(String, Long)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("key", "n", "s1", "s2")
-      val q = moments.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-        .groupBy("key")
-        .agg(max(col("n")).as("n"), max_by(col("s1"), col("n")).as("s1"),
-          max_by(col("s2"), col("n")).as("s2"))
     }
+      .groupBy("key")
+      .agg(max(col("n")).as("n"), max_by(col("s1"), col("n")).as("s1"),
+        max_by(col("s2"), col("n")).as("s2"))
   }
 
   /** X14: streaming ordered funnel — per-user stage-completion times as
@@ -802,7 +765,6 @@ object Streams {
       .orderBy(col("tsu"), col("stage"), col("user"))
       .coalesce(1) // one ts-ordered file = ordered replay
       .as[(Long, Int, Long)]
-    val path = stageToTemp(typed.toDF("user", "stage", "tsu"), "sfunnel")
 
     val update: (Long, Iterator[(Long, Int, Long)], GroupState[Seq[Long]]) =>
         (Long, Seq[Long]) = (user, batch, state) => {
@@ -817,22 +779,17 @@ object Streams {
       (user, ts.toSeq)
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Int, Long)]
-      val chains = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("user", "stage", "tsu")), queryName, "update",
+        rocksDb) { (_, in) =>
+      in.head.as[(Long, Int, Long)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("user", "stage_ts")
-      val q = chains.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
+    }
       // stage times are immutable once set -> per user, the emit with the
       // most stages set is the final chain
-      iso.table(queryName)
-        .groupBy("user")
-        .agg(max_by(col("stage_ts"),
-          size(filter(col("stage_ts"), t => t =!= 0L))).as("stage_ts"))
-    }
+      .groupBy("user")
+      .agg(max_by(col("stage_ts"),
+        size(filter(col("stage_ts"), t => t =!= 0L))).as("stage_ts"))
   }
 
   /** X15: streaming session-transition counts — the incremental twin of
@@ -859,7 +816,6 @@ object Streams {
       .orderBy(col("seq"))
       .coalesce(1) // one seq-ordered file = ordered replay
       .as[(Long, Long, String, Long)]
-    val path = stageToTemp(typed.toDF("user", "seq", "typ", "ts_sec"), "stransit")
 
     // state: (lastTyp, lastTs, counts)
     val update: (Long, Iterator[(Long, Long, String, Long)],
@@ -878,25 +834,20 @@ object Streams {
       (user, counts.valuesIterator.sum, counts)
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, String, Long)]
-      val perUser = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("user", "seq", "typ", "ts_sec")), queryName,
+        "update", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, String, Long)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("user", "total", "counts")
-      val q = perUser.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // counts only grow -> per user, the emit with the largest total is final
-      iso.table(queryName)
-        .groupBy("user")
-        .agg(max_by(col("counts"), col("total")).as("counts"))
-        .select(explode(col("counts")).as(Seq("k", "n")))
-        .select(split(col("k"), "\\|").getItem(0).as("prev_type"),
-          split(col("k"), "\\|").getItem(1).as("next_type"), col("n"))
-        .groupBy(col("prev_type"), col("next_type"))
-        .agg(sum(col("n")).as("n_transitions"))
     }
+      // counts only grow -> per user, the emit with the largest total is final
+      .groupBy("user")
+      .agg(max_by(col("counts"), col("total")).as("counts"))
+      .select(explode(col("counts")).as(Seq("k", "n")))
+      .select(split(col("k"), "\\|").getItem(0).as("prev_type"),
+        split(col("k"), "\\|").getItem(1).as("next_type"), col("n"))
+      .groupBy(col("prev_type"), col("next_type"))
+      .agg(sum(col("n")).as("n_transitions"))
   }
 
   /** X39: streaming token-bucket rate limiter — R167's admission policy
@@ -918,7 +869,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("id"))
       .coalesce(1) // one ordered file = ordered replay
       .as[(Long, Long, Long)]
-    val path = stageToTemp(typed.toDF("key", "id", "ts_sec"), "sratelimit")
 
     val update: (Long, Iterator[(Long, Long, Long)],
         GroupState[(Long, Long)]) =>
@@ -936,17 +886,12 @@ object Streams {
       out.iterator
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long)]
-      val decisions = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "id", "ts_sec")), queryName, "append",
+        rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long)].groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.NoTimeout)(update)
         .toDF("key", "id", "ts_sec", "admitted", "tokens_milli")
-      val q = decisions.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -963,20 +908,17 @@ object Streams {
       col("vec_id").cast("long").as("vec_id"),
       transform(col("embedding").cast("array<double>"),
         x => floor(x * 1000).cast("long")).as("xs"))
-    val path = stageToTemp(arr, "sembdrift")
-    val s = spark.readStream.schema(arr.schema).parquet(path)
-    val sums = s
-      .select(col("label"), (col("vec_id") % 2 === 0).as("side"),
-        posexplode(col("xs")))
-      .groupBy(col("label"), col("side"), col("pos"))
-      .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
-    val q = sums.writeStream.outputMode("complete")
-      .format("memory").queryName(queryName).start()
-    try { q.processAllAvailable() } finally { q.stop() }
+    val sums = replay(spark, Seq(arr), queryName, "complete") { (_, in) =>
+      in.head
+        .select(col("label"), (col("vec_id") % 2 === 0).as("side"),
+          posexplode(col("xs")))
+        .groupBy(col("label"), col("side"), col("pos"))
+        .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
+    }
     // the memory view exposes the same attribute ids on both sides of a
     // self-join; project each side to fresh names before joining
     def side(even: Boolean, lbl: String, ps: String, c: String) =
-      spark.table(queryName)
+      sums
         .filter(if (even) col("side") else !col("side"))
         .select(col("label").as(lbl), col("pos").as(ps),
           when(col("s") >= 0, expr("s div n"))
@@ -1004,7 +946,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("id"))
       .coalesce(1) // one ordered file = ordered replay
       .as[(Long, Long, Long)]
-    val path = stageToTemp(typed.toDF("key", "id", "ts_sec"), "squeue")
 
     val update: (Long, Iterator[(Long, Long, Long)],
         GroupState[(Long, Long)]) =>
@@ -1020,17 +961,12 @@ object Streams {
       out.iterator
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long)]
-      val waits = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "id", "ts_sec")), queryName, "append",
+        rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long)].groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.NoTimeout)(update)
         .toDF("key", "id", "ts_sec", "wait_sec")
-      val q = waits.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -1049,7 +985,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("id"))
       .coalesce(1) // one ordered file = ordered replay
       .as[(Long, Long, Long, Long)]
-    val path = stageToTemp(typed.toDF("key", "id", "ts_sec", "x"), "sadstock")
 
     val update: (Long, Iterator[(Long, Long, Long, Long)],
         GroupState[(Long, Boolean)]) =>
@@ -1065,17 +1000,12 @@ object Streams {
       out.iterator
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long, Long)]
-      val levels = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "id", "ts_sec", "x")), queryName,
+        "append", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long, Long)].groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.NoTimeout)(update)
         .toDF("key", "id", "ts_sec", "x", "adstock_milli")
-      val q = levels.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -1117,7 +1047,6 @@ object Streams {
     import spark.implicits._
     val typed = rows.select(col("day").cast("long"), col("h").cast("long"))
       .as[(Long, Long)]
-    val path = stageToTemp(typed.toDF("day", "h"), "sdaykmv")
 
     val update: (Long, Iterator[(Long, Long)], GroupState[(Array[Long], Long)]) =>
         (Long, Long, Array[Long]) = (day, batch, state) => {
@@ -1127,20 +1056,14 @@ object Streams {
       (day, seen, sk)
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long)]
-      val sketches = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("day", "h")), queryName, "update", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("day", "n_seen", "sk")
-      val q = sketches.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-        .groupBy("day")
-        .agg(max_by(col("sk"), col("n_seen")).as("sk"),
-          max(col("n_seen")).as("n_seen"))
     }
+      .groupBy("day")
+      .agg(max_by(col("sk"), col("n_seen")).as("sk"),
+        max(col("n_seen")).as("n_seen"))
   }
 
   def streamingCusum(spark: SparkSession, rows: DataFrame,
@@ -1152,7 +1075,6 @@ object Streams {
       .orderBy(col("order"))
       .coalesce(1) // one ordered file = ordered replay
       .as[(String, Long, Long, Long)]
-    val path = stageToTemp(typed.toDF("key", "order", "x", "k"), "scusum")
 
     // state: (p, minP)
     val step: (String, Iterator[(String, Long, Long, Long)],
@@ -1168,16 +1090,11 @@ object Streams {
         out.iterator
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Long, Long, Long)]
-      val stats = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "order", "x", "k")), queryName,
+        "append", rocksDb) { (_, in) =>
+      in.head.as[(String, Long, Long, Long)].groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
         .toDF("key", "order", "s")
-      val q = stats.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -1201,7 +1118,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("id"))
       .coalesce(1) // one ordered file = ordered replay
       .as[(Long, Long, Long, Long)]
-    val path = stageToTemp(typed.toDF("key", "id", "ts_sec", "x"), "sewma")
 
     // state: the last smoothed milli-value, or None before the first tick
     val step: (Long, Iterator[(Long, Long, Long, Long)],
@@ -1219,16 +1135,11 @@ object Streams {
         out.iterator
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long, Long)]
-      val smoothed = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "id", "ts_sec", "x")), queryName,
+        "append", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long, Long)].groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
         .toDF("key", "id", "ts_sec", "x", "ewma_milli")
-      val q = smoothed.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -1252,7 +1163,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("id"))
       .coalesce(1) // one ordered file = ordered replay
       .as[(Long, Long, Long, Long)]
-    val path = stageToTemp(typed.toDF("key", "id", "ts_sec", "x"), "sholt")
 
     // state: (level, trend) milli-values, or None before the first tick
     val step: (Long, Iterator[(Long, Long, Long, Long)],
@@ -1276,18 +1186,13 @@ object Streams {
         out.iterator
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long, Long)]
-      val smoothed = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("key", "id", "ts_sec", "x")), queryName,
+        "append", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long, Long)].groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append,
           GroupStateTimeout.NoTimeout)(step)
         .toDF("key", "id", "ts_sec", "x", "level_milli", "trend_milli",
           "forecast_milli")
-      val q = smoothed.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -1307,8 +1212,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("event_id"))
       .coalesce(1) // one ordered file = ordered replay
       .as[(Long, Long, Long, String)]
-    val path = stageToTemp(
-      typed.toDF("user_id", "event_id", "ts_sec", "event_type"), "scumdist")
 
     val step: (Long, Iterator[(Long, Long, Long, String)],
         GroupState[Set[String]]) => Iterator[(Long, Long, String, Long)] =
@@ -1323,16 +1226,11 @@ object Streams {
         out.iterator
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long, String)]
-      val counts = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("user_id", "event_id", "ts_sec", "event_type")),
+        queryName, "append", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long, String)].groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
         .toDF("user_id", "event_id", "event_type", "n_types_seen")
-      val q = counts.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -1351,8 +1249,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("event_id"))
       .coalesce(1)
       .as[(Long, Long, Long, String)]
-    val path = stageToTemp(
-      typed.toDF("user_id", "event_id", "ts_sec", "event_type"), "sstreak")
 
     // state: (curType, curLen, bestLen, bestType)
     val step: (Long, Iterator[(Long, Long, Long, String)],
@@ -1370,22 +1266,17 @@ object Streams {
         (user, bestL, bestT)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long, String)]
-      val best = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("user_id", "event_id", "ts_sec", "event_type")),
+        queryName, "update", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long, String)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("user_id", "longest_streak", "streak_type")
-      val q = best.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // streak stats only grow → per user the max (len, type) emit is final
-      iso.table(queryName)
-        .groupBy("user_id")
-        .agg(max(struct(col("longest_streak"), col("streak_type"))).as("b"))
-        .select(col("user_id"), col("b.longest_streak").as("longest_streak"),
-          col("b.streak_type").as("streak_type"))
     }
+      // streak stats only grow → per user the max (len, type) emit is final
+      .groupBy("user_id")
+      .agg(max(struct(col("longest_streak"), col("streak_type"))).as("b"))
+      .select(col("user_id"), col("b.longest_streak").as("longest_streak"),
+        col("b.streak_type").as("streak_type"))
   }
 
   /** X23: streaming golden record — C31's survivorship merge maintained
@@ -1403,8 +1294,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("event_id"))
       .coalesce(1)
       .as[(Long, Long, Long, String, Option[Long])]
-    val path = stageToTemp(typed.toDF(
-      "user_id", "event_id", "ts_sec", "event_type", "cents_p"), "sgolden")
 
     // state: (lastEid, lastType, lastCents (MinValue = none), n, nMissing)
     val step: (Long, Iterator[(Long, Long, Long, String, Option[Long])],
@@ -1426,28 +1315,24 @@ object Streams {
           if (cents == Long.MinValue) None else Some(cents), n, miss)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long, String, Option[Long])]
-      val golden = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF(
+        "user_id", "event_id", "ts_sec", "event_type", "cents_p")),
+        queryName, "update", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long, String, Option[Long])].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("user_id", "last_event_id", "last_event_type", "last_cents",
           "n_events", "n_missing")
-      val q = golden.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // n_events only grows → per user the max-n emit is final
-      iso.table(queryName)
-        .groupBy("user_id")
-        .agg(max_by(struct(col("last_event_id"), col("last_event_type"),
-          col("last_cents"), col("n_events"), col("n_missing")),
-          col("n_events")).as("g"))
-        .select(col("user_id"), col("g.last_event_id").as("last_event_id"),
-          col("g.last_event_type").as("last_event_type"),
-          col("g.last_cents").as("last_cents"),
-          col("g.n_events").as("n_events"),
-          col("g.n_missing").as("n_missing"))
     }
+      // n_events only grows → per user the max-n emit is final
+      .groupBy("user_id")
+      .agg(max_by(struct(col("last_event_id"), col("last_event_type"),
+        col("last_cents"), col("n_events"), col("n_missing")),
+        col("n_events")).as("g"))
+      .select(col("user_id"), col("g.last_event_id").as("last_event_id"),
+        col("g.last_event_type").as("last_event_type"),
+        col("g.last_cents").as("last_cents"),
+        col("g.n_events").as("n_events"),
+        col("g.n_missing").as("n_missing"))
   }
 
   /** X19: streaming first/last-touch attribution — the incremental twin
@@ -1476,8 +1361,6 @@ object Streams {
       .orderBy(col("ts_sec"), col("event_id"))
       .coalesce(1) // one ordered file = ordered replay
       .as[(Long, Long, Long, String, Long)]
-    val path = stageToTemp(
-      typed.toDF("user_id", "event_id", "ts_sec", "event_type", "cents"), "sattr")
 
     // state: (firstType, lastTs, lastType); "" = unset
     val step: (Long, Iterator[(Long, Long, Long, String, Long)],
@@ -1505,16 +1388,11 @@ object Streams {
         out.iterator
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, Long, String, Long)]
-      val attributed = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("user_id", "event_id", "ts_sec", "event_type",
+        "cents")), queryName, "append", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, Long, String, Long)].groupByKey(_._1)
         .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(step)
         .toDF("user_id", "event_id", "first_touch", "last_touch", "cents")
-      val q = attributed.writeStream.outputMode("append")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
     }
   }
 
@@ -1543,8 +1421,6 @@ object Streams {
     val typed = rows.select(col("event_type").cast("string"),
         col("day").cast("long"), col("user_id").cast("long"))
       .as[(String, Long, Long)]
-    val path = stageToTemp(
-      typed.toDF("event_type", "day", "user_id"), "skanon")
 
     val step: ((String, Long), Iterator[(String, Long, Long)],
         GroupState[Set[Long]]) => (String, Long, Long) =
@@ -1555,24 +1431,19 @@ object Streams {
         (key._1, key._2, seen.size.toLong)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Long, Long)]
-      val counts = stream.groupByKey(r => (r._1, r._2))
+    replay(spark, Seq(typed.toDF("event_type", "day", "user_id")), queryName,
+        "update", rocksDb) { (_, in) =>
+      in.head.as[(String, Long, Long)].groupByKey(r => (r._1, r._2))
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("event_type", "day", "n_users")
-      val q = counts.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // group counts only grow → the max emit per group is its final state
-      iso.table(queryName)
-        .groupBy(col("event_type"), col("day"))
-        .agg(max(col("n_users")).as("n_users"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_groups"),
-          sum(when(col("n_users") < k, 1L).otherwise(0L)).as("n_risky_groups"),
-          min(col("n_users")).as("min_group_users"))
     }
+      // group counts only grow → the max emit per group is its final state
+      .groupBy(col("event_type"), col("day"))
+      .agg(max(col("n_users")).as("n_users"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_groups"),
+        sum(when(col("n_users") < k, 1L).otherwise(0L)).as("n_risky_groups"),
+        min(col("n_users")).as("min_group_users"))
   }
 
   /** X30: streaming total-variation drift monitor — R122's exact TV
@@ -1594,7 +1465,6 @@ object Streams {
     val typed = rows.select(col("grp").cast("string"),
         col("cat").cast("string"), col("s").cast("boolean"))
       .as[(String, String, Boolean)]
-    val path = stageToTemp(typed.toDF("grp", "cat", "s"), "sdrifttv")
 
     val step: ((String, String, Boolean),
         Iterator[(String, String, Boolean)], GroupState[Long]) =>
@@ -1605,27 +1475,22 @@ object Streams {
         (key._1, key._2, key._3, n)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, String, Boolean)]
-      val counts = stream.groupByKey(identity)
+    // localCheckpoint: the TV tail self-joins the cell table, and a
+    // MemorySink plan reused on both sides trips Catalyst's conflicting-
+    // reference check — breaking lineage gives each side fresh attrs
+    val cells = replay(spark, Seq(typed.toDF("grp", "cat", "s")), queryName,
+        "update", rocksDb) { (_, in) =>
+      in.head.as[(String, String, Boolean)].groupByKey(identity)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("grp", "cat", "s", "n_emit")
-      val q = counts.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // localCheckpoint: the TV tail self-joins the cell table, and a
-      // MemorySink plan reused on both sides trips Catalyst's conflicting-
-      // reference check — breaking lineage gives each side fresh attrs
-      val cells = iso.table(queryName)
-        .groupBy(col("grp"), col("cat"), col("s"))
-        .agg(max(col("n_emit")).as("n"))
-        .groupBy(col("grp"), col("cat"))
-        .agg(sum(when(col("s"), col("n")).otherwise(0L)).as("c_a"),
-          sum(when(!col("s"), col("n")).otherwise(0L)).as("c_b"))
-        .localCheckpoint()
-      graft.operators.RankStats.tvFromCells(cells)
     }
+      .groupBy(col("grp"), col("cat"), col("s"))
+      .agg(max(col("n_emit")).as("n"))
+      .groupBy(col("grp"), col("cat"))
+      .agg(sum(when(col("s"), col("n")).otherwise(0L)).as("c_a"),
+        sum(when(!col("s"), col("n")).otherwise(0L)).as("c_b"))
+      .localCheckpoint()
+    graft.operators.RankStats.tvFromCells(cells)
   }
 
   /** X34: streaming Welch monitor — R141's exact two-sample t²
@@ -1647,7 +1512,6 @@ object Streams {
     val typed = rows.select(col("grp").cast("string"),
         col("s").cast("boolean"), col("v").cast("long"))
       .as[(String, Boolean, Long)]
-    val path = stageToTemp(typed.toDF("grp", "s", "v"), "swelch")
 
     val update: ((String, Boolean), Iterator[(String, Boolean, Long)],
         GroupState[(Long, Long, Long)]) =>
@@ -1658,25 +1522,20 @@ object Streams {
       (key._1, key._2, n, sx, qx)
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Boolean, Long)]
-      val moments = stream.groupByKey(r => (r._1, r._2))
+    // localCheckpoint: the Welch tail splits the cell table into the
+    // two sides and full-outer-joins them — a MemorySink plan reused
+    // on both sides trips Catalyst's conflicting-reference check
+    val cells = replay(spark, Seq(typed.toDF("grp", "s", "v")), queryName,
+        "update", rocksDb) { (_, in) =>
+      in.head.as[(String, Boolean, Long)].groupByKey(r => (r._1, r._2))
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("grp", "s", "n", "sx", "qx")
-      val q = moments.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // localCheckpoint: the Welch tail splits the cell table into the
-      // two sides and full-outer-joins them — a MemorySink plan reused
-      // on both sides trips Catalyst's conflicting-reference check
-      val cells = iso.table(queryName)
-        .groupBy(col("grp"), col("s"))
-        .agg(max(col("n")).as("n"), max_by(col("sx"), col("n")).as("sx"),
-          max_by(col("qx"), col("n")).cast("decimal(38,0)").as("qx"))
-        .localCheckpoint()
-      graft.operators.RankStats.welchFromMoments(cells)
     }
+      .groupBy(col("grp"), col("s"))
+      .agg(max(col("n")).as("n"), max_by(col("sx"), col("n")).as("sx"),
+        max_by(col("qx"), col("n")).cast("decimal(38,0)").as("qx"))
+      .localCheckpoint()
+    graft.operators.RankStats.welchFromMoments(cells)
   }
 
   /** X36: streaming net-change squash — C35 maintained from
@@ -1699,8 +1558,6 @@ object Streams {
     val typed = rows.select(col("key").cast("long"), col("seq").cast("long"),
         col("op").cast("string"), col("payload").cast("long"))
       .as[(Long, Long, String, Long)]
-    val path = stageToTemp(typed.toDF("key", "seq", "op", "payload"),
-      "snetchg")
 
     val update: (Long, Iterator[(Long, Long, String, Long)],
         GroupState[(Long, Long, String, Long, String, Long)]) =>
@@ -1716,23 +1573,18 @@ object Streams {
       (key, n, fo, lo, lp)
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(Long, Long, String, Long)]
-      val agg = stream.groupByKey(_._1)
+    val snap = replay(spark, Seq(typed.toDF("key", "seq", "op", "payload")),
+        queryName, "update", rocksDb) { (_, in) =>
+      in.head.as[(Long, Long, String, Long)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("key", "n_ops", "first_op", "last_op", "__pl")
-      val q = agg.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      val snap = iso.table(queryName)
-        .groupBy(col("key"))
-        .agg(max(col("n_ops")).as("n_ops"),
-          max_by(col("first_op"), col("n_ops")).as("first_op"),
-          max_by(col("last_op"), col("n_ops")).as("last_op"),
-          max_by(col("__pl"), col("n_ops")).as("__pl"))
-      graft.cdc.Cdc.netDecision(snap)
     }
+      .groupBy(col("key"))
+      .agg(max(col("n_ops")).as("n_ops"),
+        max_by(col("first_op"), col("n_ops")).as("first_op"),
+        max_by(col("last_op"), col("n_ops")).as("last_op"),
+        max_by(col("__pl"), col("n_ops")).as("__pl"))
+    graft.cdc.Cdc.netDecision(snap)
   }
 
   /** X35: streaming score-quality monitor — R150/R151's Brier + ECE
@@ -1755,7 +1607,6 @@ object Streams {
     val typed = rows.select(col("grp").cast("string"),
         col("y").cast("boolean"), col("p").cast("long"))
       .as[(String, Boolean, Long)]
-    val path = stageToTemp(typed.toDF("grp", "y", "p"), "squality")
 
     val update: ((String, Long), Iterator[(String, Long, Boolean, Long)],
         GroupState[(Long, Long, Long, Long, Long)]) =>
@@ -1769,27 +1620,23 @@ object Streams {
       (key._1, key._2, n, sp, sp2, sy, spy)
     }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Boolean, Long)]
+    val cells = replay(spark, Seq(typed.toDF("grp", "y", "p")), queryName,
+        "update", rocksDb) { (_, in) =>
+      in.head.as[(String, Boolean, Long)]
         .map { case (g, y, p) =>
           (g, math.min(p * bins / 1000000L, bins - 1L), y, p)
         }
-      val moments = stream.groupByKey(r => (r._1, r._2))
+        .groupByKey(r => (r._1, r._2))
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(update)
         .toDF("grp", "bin", "n", "sp", "sp2", "sy", "spy")
-      val q = moments.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      val cells = iso.table(queryName)
-        .groupBy(col("grp"), col("bin"))
-        .agg(max(col("n")).as("n"), max_by(col("sp"), col("n")).as("sp"),
-          max_by(col("sp2"), col("n")).cast("decimal(38,0)").as("sp2"),
-          max_by(col("sy"), col("n")).as("sy"),
-          max_by(col("spy"), col("n")).as("spy"))
-        .localCheckpoint()
-      graft.operators.Eval.scoreQualityFromCells(cells)
     }
+      .groupBy(col("grp"), col("bin"))
+      .agg(max(col("n")).as("n"), max_by(col("sp"), col("n")).as("sp"),
+        max_by(col("sp2"), col("n")).cast("decimal(38,0)").as("sp2"),
+        max_by(col("sy"), col("n")).as("sy"),
+        max_by(col("spy"), col("n")).as("spy"))
+      .localCheckpoint()
+    graft.operators.Eval.scoreQualityFromCells(cells)
   }
 
   /** X31: streaming quantile-shift monitor — R129's two-sample type-1
@@ -1812,7 +1659,6 @@ object Streams {
     val typed = rows.select(col("grp").cast("string"),
         col("s").cast("boolean"), col("v").cast("long"))
       .as[(String, Boolean, Long)]
-    val path = stageToTemp(typed.toDF("grp", "s", "v"), "squantshift")
 
     val step: ((String, Boolean, Long), Iterator[(String, Boolean, Long)],
         GroupState[Long]) => (String, Boolean, Long, Long) =
@@ -1822,26 +1668,21 @@ object Streams {
         (key._1, key._2, key._3, n)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Boolean, Long)]
-      val counts = stream.groupByKey(identity)
+    // localCheckpoint: the quantile tail windows + self-references the
+    // MemorySink snapshot — break lineage as in streamingDriftTv
+    val cells = replay(spark, Seq(typed.toDF("grp", "s", "v")), queryName,
+        "update", rocksDb) { (_, in) =>
+      in.head.as[(String, Boolean, Long)].groupByKey(identity)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("grp", "s", "v", "n_emit")
-      val q = counts.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // localCheckpoint: the quantile tail windows + self-references the
-      // MemorySink snapshot — break lineage as in streamingDriftTv
-      val cells = iso.table(queryName)
-        .groupBy(col("grp"), col("s"), col("v"))
-        .agg(max(col("n_emit")).as("n"))
-        .groupBy(col("grp"), col("v"))
-        .agg(sum(when(col("s"), col("n")).otherwise(0L)).as("c_a"),
-          sum(when(!col("s"), col("n")).otherwise(0L)).as("c_b"))
-        .localCheckpoint()
-      graft.operators.RankStats.quantileShiftFromCells(cells, ps)
     }
+      .groupBy(col("grp"), col("s"), col("v"))
+      .agg(max(col("n_emit")).as("n"))
+      .groupBy(col("grp"), col("v"))
+      .agg(sum(when(col("s"), col("n")).otherwise(0L)).as("c_a"),
+        sum(when(!col("s"), col("n")).otherwise(0L)).as("c_b"))
+      .localCheckpoint()
+    graft.operators.RankStats.quantileShiftFromCells(cells, ps)
   }
 
   /** X33: streaming log-rank monitor — R132's survival A/B test
@@ -1863,7 +1704,6 @@ object Streams {
         col("s").cast("boolean"), col("t").cast("long"),
         col("obs").cast("boolean"))
       .as[(String, Boolean, Long, Boolean)]
-    val path = stageToTemp(typed.toDF("grp", "s", "t", "obs"), "slogrank")
 
     val step: ((String, Boolean, Long, Boolean),
         Iterator[(String, Boolean, Long, Boolean)], GroupState[Long]) =>
@@ -1874,29 +1714,24 @@ object Streams {
         (key._1, key._2, key._3, key._4, n)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Boolean, Long, Boolean)]
-      val counts = stream.groupByKey(identity)
+    // localCheckpoint: the log-rank tail windows + joins the snapshot
+    // twice — break the MemorySink lineage as in streamingDriftTv
+    val grid = replay(spark, Seq(typed.toDF("grp", "s", "t", "obs")), queryName,
+        "update", rocksDb) { (_, in) =>
+      in.head.as[(String, Boolean, Long, Boolean)].groupByKey(identity)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("grp", "s", "t", "obs", "n_emit")
-      val q = counts.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // localCheckpoint: the log-rank tail windows + joins the snapshot
-      // twice — break the MemorySink lineage as in streamingDriftTv
-      val grid = iso.table(queryName)
-        .groupBy(col("grp"), col("s"), col("t"), col("obs"))
-        .agg(max(col("n_emit")).as("n"))
-        .groupBy(col("grp"), col("t"))
-        .agg(sum(col("n")).as("arr"),
-          sum(when(col("s"), col("n")).otherwise(0L)).as("arr_a"),
-          sum(when(col("obs"), col("n")).otherwise(0L)).as("d"),
-          sum(when(col("s") && col("obs"), col("n")).otherwise(0L))
-            .as("d_a"))
-        .localCheckpoint()
-      graft.operators.Survival.logRankFromGrid(grid)
     }
+      .groupBy(col("grp"), col("s"), col("t"), col("obs"))
+      .agg(max(col("n_emit")).as("n"))
+      .groupBy(col("grp"), col("t"))
+      .agg(sum(col("n")).as("arr"),
+        sum(when(col("s"), col("n")).otherwise(0L)).as("arr_a"),
+        sum(when(col("obs"), col("n")).otherwise(0L)).as("d"),
+        sum(when(col("s") && col("obs"), col("n")).otherwise(0L))
+          .as("d_a"))
+      .localCheckpoint()
+    graft.operators.Survival.logRankFromGrid(grid)
   }
 
   /** X25: streaming class-balance monitor — R83's label-share/Gini
@@ -1913,7 +1748,6 @@ object Streams {
                             rocksDb: Boolean = UseRocksDb): DataFrame = {
     import spark.implicits._
     val typed = rows.select(col("label").cast("long")).as[Long]
-    val path = stageToTemp(typed.toDF("label"), "sclassbal")
 
     val step: (Long, Iterator[Long], GroupState[Long]) => (Long, Long) =
       (label, batch, state) => {
@@ -1922,24 +1756,18 @@ object Streams {
         (label, n)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path).as[Long]
-      val counts = stream.groupByKey(identity)
+    val w = org.apache.spark.sql.expressions.Window.partitionBy()
+    replay(spark, Seq(typed.toDF("label")), queryName, "update", rocksDb) { (_, in) =>
+      in.head.as[Long].groupByKey(identity)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("label", "n_emit")
-      val q = counts.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      val snap = iso.table(queryName)
-        .groupBy(col("label")).agg(max(col("n_emit")).as("n"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy()
-      snap
-        .withColumn("n_total", sum(col("n")).over(w))
-        .withColumn("share_ppm", expr("n * 1000000 div n_total"))
-        .withColumn("gini_ppm",
-          expr("1000000 - sum(n * n) OVER () * 1000000 div (n_total * n_total)"))
-        .select(col("label"), col("n"), col("share_ppm"), col("gini_ppm"))
     }
+      .groupBy(col("label")).agg(max(col("n_emit")).as("n"))
+      .withColumn("n_total", sum(col("n")).over(w))
+      .withColumn("share_ppm", expr("n * 1000000 div n_total"))
+      .withColumn("gini_ppm",
+        expr("1000000 - sum(n * n) OVER () * 1000000 div (n_total * n_total)"))
+      .select(col("label"), col("n"), col("share_ppm"), col("gini_ppm"))
   }
 
   /** X26: streaming backfill-gap monitor — C28's planner maintained
@@ -1960,7 +1788,6 @@ object Streams {
     import spark.implicits._
     val typed = rows.select(col("event_type").cast("string"),
       col("hr").cast("long")).as[(String, Long)]
-    val path = stageToTemp(typed.toDF("event_type", "hr"), "sbackfill")
 
     // state: (observed hours, update counter)
     val step: (String, Iterator[(String, Long)],
@@ -1978,28 +1805,23 @@ object Streams {
           missing.size.toLong, missing.headOption, missing.lastOption)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Long)]
-      val reports = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("event_type", "hr")), queryName, "update",
+        rocksDb) { (_, in) =>
+      in.head.as[(String, Long)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("event_type", "ver", "n_slot_hours", "n_missing_hours",
           "first_missing_hr", "last_missing_hr")
-      val q = reports.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      // latest state per type = the max update counter's emit
-      iso.table(queryName)
-        .groupBy(col("event_type"))
-        .agg(max(struct(col("ver"), col("n_slot_hours"),
-          col("n_missing_hours"), col("first_missing_hr"),
-          col("last_missing_hr"))).as("s"))
-        .filter(col("s.n_missing_hours") > 0)
-        .select(col("event_type"), col("s.n_slot_hours").as("n_slot_hours"),
-          col("s.n_missing_hours").as("n_missing_hours"),
-          col("s.first_missing_hr").as("first_missing_hr"),
-          col("s.last_missing_hr").as("last_missing_hr"))
     }
+      // latest state per type = the max update counter's emit
+      .groupBy(col("event_type"))
+      .agg(max(struct(col("ver"), col("n_slot_hours"),
+        col("n_missing_hours"), col("first_missing_hr"),
+        col("last_missing_hr"))).as("s"))
+      .filter(col("s.n_missing_hours") > 0)
+      .select(col("event_type"), col("s.n_slot_hours").as("n_slot_hours"),
+        col("s.n_missing_hours").as("n_missing_hours"),
+        col("s.first_missing_hr").as("first_missing_hr"),
+        col("s.last_missing_hr").as("last_missing_hr"))
   }
 
   /** X28: streaming record-linkage scoring — D16's Fellegi–Sunter
@@ -2025,13 +1847,9 @@ object Streams {
     val staged = arrivals.repartition(
       spark.sparkContext.defaultParallelism,
       arrivals.columns.map(col).toIndexedSeq: _*)
-    val path = stageToTemp(staged, "slinkage")
-    val s = spark.readStream.schema(arrivals.schema).parquet(path)
-    val scored = score(s.join(broadcast(staticRef), Seq(blockCol)))
-    val q = scored.writeStream.outputMode("append")
-      .format("memory").queryName(queryName).start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    spark.table(queryName)
+    replay(spark, Seq(staged), queryName, "append") { (_, in) =>
+      score(in.head.join(broadcast(staticRef), Seq(blockCol)))
+    }
   }
 
   /** X37: streaming spatial enrich — arriving points emit every static
@@ -2067,30 +1885,29 @@ object Streams {
     val arrivals = points.select(col("id").cast("long").as("id"),
       col("x").cast("long").as("x"), col("y").cast("long").as("y"))
       .repartition(spark.sparkContext.defaultParallelism, col("id"))
-    val path = stageToTemp(arrivals, "sspatial")
-    val s = spark.readStream.schema(arrivals.schema).parquet(path)
     def cx(c: Column) = floor(c / r).cast("long")
     val home = ref.select(col("id").cast("long").as("ref_id"),
       col("x").cast("long").as("xr"), col("y").cast("long").as("yr"))
       .withColumn("gx", cx(col("xr"))).withColumn("gy", cx(col("yr")))
-    val probe = s
-      .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
-      .select(col("id"), col("x"), col("y"),
-        (cx(col("x")) + col("dx")).as("gx"),
-        (cx(col("y")) + col("dy")).as("gy"))
-    val joined = probe.join(broadcast(home), Seq("gx", "gy"))
-      .withColumn("dist_sq",
-        (col("x") - col("xr")) * (col("x") - col("xr")) +
-          (col("y") - col("yr")) * (col("y") - col("yr")))
-      .filter(col("dist_sq") <= r * r)
-      .select(col("id"), col("ref_id"), col("dist_sq"))
+    // the output dir stays: the result below reads it lazily
     val outDir = Files.createTempDirectory(s"graft_${queryName}_out").toString
-    val q = joined.writeStream.outputMode("append")
+    run(spark, Seq(arrivals), _.outputMode("append")
       .format("parquet").option("path", s"$outDir/out")
       .option("checkpointLocation", s"$outDir/ckpt")
-      .queryName(queryName).start()
-    try { q.processAllAvailable() } finally { q.stop() }
+      .queryName(queryName)) { (_, in) =>
+      in.head
+        .withColumn("dx", explode(array(lit(-1L), lit(0L), lit(1L))))
+        .withColumn("dy", explode(array(lit(-1L), lit(0L), lit(1L))))
+        .select(col("id"), col("x"), col("y"),
+          (cx(col("x")) + col("dx")).as("gx"),
+          (cx(col("y")) + col("dy")).as("gy"))
+        .join(broadcast(home), Seq("gx", "gy"))
+        .withColumn("dist_sq",
+          (col("x") - col("xr")) * (col("x") - col("xr")) +
+            (col("y") - col("yr")) * (col("y") - col("yr")))
+        .filter(col("dist_sq") <= r * r)
+        .select(col("id"), col("ref_id"), col("dist_sq"))
+    }
     spark.read.parquet(s"$outDir/out")
   }
 
@@ -2150,22 +1967,17 @@ object Streams {
     val centRow = seedSet
       .agg(sort_array(collect_list(struct(col("vec_id").as("cid"),
         col("xs").as("cx")))).as("__cents"))
-    val path = stageToTemp(arr, "skmeans")
-    val s = spark.readStream.schema(arr.schema).parquet(path)
-    val assigned = s.crossJoin(broadcast(centRow))
-      .withColumn("__best", array_min(expr(
-        """transform(__cents, c -> struct(
-          |  aggregate(zip_with(xs, c.cx, (a, b) -> (a - b) * (a - b)),
-          |    0L, (acc, e) -> acc + e) AS d,
-          |  c.cid AS cid))""".stripMargin)))
-      .select(col("__best.cid").as("cid"), posexplode(col("xs")))
-      .select(col("cid"), col("pos"), col("col").as("x"))
-    val sums = assigned.groupBy(col("cid"), col("pos"))
-      .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
-    val q = sums.writeStream.outputMode("complete")
-      .format("memory").queryName(queryName).start()
-    try { q.processAllAvailable() } finally { q.stop() }
-    spark.table(queryName)
+    replay(spark, Seq(arr), queryName, "complete") { (_, in) =>
+      in.head.crossJoin(broadcast(centRow))
+        .withColumn("__best", array_min(expr(
+          """transform(__cents, c -> struct(
+            |  aggregate(zip_with(xs, c.cx, (a, b) -> (a - b) * (a - b)),
+            |    0L, (acc, e) -> acc + e) AS d,
+            |  c.cid AS cid))""".stripMargin)))
+        .select(col("__best.cid").as("cid"), posexplode(col("xs")))
+        .groupBy(col("cid"), col("pos"))
+        .agg(sum(col("col")).as("s"), count(lit(1)).as("n"))
+    }
       .select(col("cid"), (col("pos") + 1).cast("long").as("dim"),
         when(col("s") >= 0, expr("s div n"))
           .otherwise(-expr("(-s) div n")).as("cx_milli"))
@@ -2198,7 +2010,6 @@ object Streams {
     import spark.implicits._
     val typed = rows.select(col("event_type").cast("string"),
       col("hr").cast("long")).as[(String, Long)]
-    val path = stageToTemp(typed.toDF("event_type", "hr"), "sbackfillh")
 
     val nWords = (horizon + 63) >> 6
     val capacity = nWords.toLong * 64
@@ -2260,28 +2071,23 @@ object Streams {
         (et, ver, n.toLong, nMiss, firstMiss, lastMiss)
       }
 
-    withStateSession(spark, 8, rocksDb) { iso =>
-      val stream = iso.readStream.schema(typed.schema).parquet(path)
-        .as[(String, Long)]
-      val reports = stream.groupByKey(_._1)
+    replay(spark, Seq(typed.toDF("event_type", "hr")), queryName, "update",
+        rocksDb) { (_, in) =>
+      in.head.as[(String, Long)].groupByKey(_._1)
         .mapGroupsWithState(GroupStateTimeout.NoTimeout)(step)
         .toDF("event_type", "ver", "n_window_hours", "n_missing_hours",
           "first_missing_hr", "last_missing_hr")
-      val q = reports.writeStream.outputMode("update")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-        .groupBy(col("event_type"))
-        .agg(max(struct(col("ver"), col("n_window_hours"),
-          col("n_missing_hours"), col("first_missing_hr"),
-          col("last_missing_hr"))).as("s"))
-        .filter(col("s.n_missing_hours") > 0)
-        .select(col("event_type"),
-          col("s.n_window_hours").as("n_window_hours"),
-          col("s.n_missing_hours").as("n_missing_hours"),
-          col("s.first_missing_hr").as("first_missing_hr"),
-          col("s.last_missing_hr").as("last_missing_hr"))
     }
+      .groupBy(col("event_type"))
+      .agg(max(struct(col("ver"), col("n_window_hours"),
+        col("n_missing_hours"), col("first_missing_hr"),
+        col("last_missing_hr"))).as("s"))
+      .filter(col("s.n_missing_hours") > 0)
+      .select(col("event_type"),
+        col("s.n_window_hours").as("n_window_hours"),
+        col("s.n_missing_hours").as("n_missing_hours"),
+        col("s.first_missing_hr").as("first_missing_hr"),
+        col("s.last_missing_hr").as("last_missing_hr"))
   }
 
   /** X43: replay a staged message bus ([[BusSource]]) through a
@@ -2298,17 +2104,8 @@ object Streams {
     */
   def busReplay(spark: SparkSession, bus: String, maxRowsPerTrigger: Long,
                 queryName: String)(pipe: DataFrame => DataFrame): DataFrame =
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream
-        .format("graft.streaming.BusSourceProvider")
-        .option("path", bus)
-        .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
-        .load()
-      val q = pipe(stream).writeStream.outputMode("complete")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-    }
+    sourceReplay(spark, "graft.streaming.BusSourceProvider", Map("path" -> bus),
+      maxRowsPerTrigger, queryName)(pipe)
 
   /** [[busReplay]] over the NETWORK transport ([[SocketBusProvider]]):
     * same admission control and termination contract, arrivals fetched
@@ -2317,18 +2114,9 @@ object Streams {
   def socketBusReplay(spark: SparkSession, host: String, port: Int,
                       maxRowsPerTrigger: Long, queryName: String)
                      (pipe: DataFrame => DataFrame): DataFrame =
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream
-        .format("graft.streaming.SocketBusProvider")
-        .option("host", host)
-        .option("port", port.toString)
-        .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
-        .load()
-      val q = pipe(stream).writeStream.outputMode("complete")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-    }
+    sourceReplay(spark, "graft.streaming.SocketBusProvider",
+      Map("host" -> host, "port" -> port.toString), maxRowsPerTrigger,
+      queryName)(pipe)
 
   /** [[socketBusReplay]]'s twin over the KAFKA wire protocol ([[KafkaWire]]):
     * same admission control, same offsets, rows fetched as
@@ -2339,19 +2127,8 @@ object Streams {
                      topic: String, maxRowsPerTrigger: Long,
                      queryName: String)
                     (pipe: DataFrame => DataFrame): DataFrame =
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream
-        .format("graft.streaming.KafkaWireProvider")
-        .option("host", host)
-        .option("port", port.toString)
-        .option("topic", topic)
-        .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
-        .load()
-      val q = pipe(stream).writeStream.outputMode("complete")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-    }
+    sourceReplay(spark, KafkaFormat, kafkaOptions(host, port, topic),
+      maxRowsPerTrigger, queryName)(pipe)
 
   /** [[kafkaBusReplay]] seeking its START by record CREATE-TIME (r10b):
     * first offsets come from the broker's ListOffsets time lookup
@@ -2362,21 +2139,9 @@ object Streams {
                          topic: String, startTimestamp: Long,
                          maxRowsPerTrigger: Long, queryName: String)
                         (pipe: DataFrame => DataFrame): DataFrame =
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream
-        .format("graft.streaming.KafkaWireProvider")
-        .option("host", host)
-        .option("port", port.toString)
-        .option("topic", topic)
-        .option("startTimestamp", startTimestamp.toString)
-        .option("includeTimestamp", "true")
-        .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
-        .load()
-      val q = pipe(stream).writeStream.outputMode("complete")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-    }
+    sourceReplay(spark, KafkaFormat, kafkaOptions(host, port, topic) ++ Map(
+      "startTimestamp" -> startTimestamp.toString, "includeTimestamp" -> "true"),
+      maxRowsPerTrigger, queryName)(pipe)
 
   /** X57 (r11): consumer-group kill-and-resume over the Kafka wire —
     * NO checkpoint directory carries state between the two queries;
@@ -2399,40 +2164,32 @@ object Streams {
                           topic: String, groupId: String,
                           maxRowsPerTrigger: Long, queryName: String)
                          (pipe: DataFrame => DataFrame): DataFrame = {
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream
-        .format("graft.streaming.KafkaWireProvider")
-        .option("host", host)
-        .option("port", port.toString)
-        .option("topic", topic)
-        .option("groupId", groupId)
-        .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
-        .load()
-      val q = stream.writeStream
-        .foreachBatch { (df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-          if (id == 0L) { df.count(); () }
-          else throw new IllegalStateException(
-            "simulated consumer crash after the first committed batch")
-        }
-        .start()
-      try q.awaitTermination()
-      catch {
-        case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
-      }
+    val options = kafkaOptions(host, port, topic) + ("groupId" -> groupId)
+    try drain(spark)((iso, _) =>
+      readSource(iso, KafkaFormat, options, maxRowsPerTrigger)) { (df, id) =>
+      if (id == 0L) df.count()
+      else throw new IllegalStateException(
+        "simulated consumer crash after the first committed batch")
+    } catch {
+      case _: org.apache.spark.sql.streaming.StreamingQueryException => ()
     }
-    withStateSession(spark, 8) { iso =>
-      val stream = iso.readStream
-        .format("graft.streaming.KafkaWireProvider")
-        .option("host", host)
-        .option("port", port.toString)
-        .option("topic", topic)
-        .option("groupId", groupId)
-        .option("maxRowsPerTrigger", maxRowsPerTrigger.toString)
-        .load()
-      val q = pipe(stream).writeStream.outputMode("complete")
-        .format("memory").queryName(queryName).start()
-      try { q.processAllAvailable() } finally { q.stop() }
-      iso.table(queryName)
-    }
+    sourceReplay(spark, KafkaFormat, options, maxRowsPerTrigger, queryName)(pipe)
   }
+
+  private val KafkaFormat = "graft.streaming.KafkaWireProvider"
+
+  private def kafkaOptions(host: String, port: Int,
+                           topic: String): Map[String, String] =
+    Map("host" -> host, "port" -> port.toString, "topic" -> topic)
+
+  /** The replay behind the bus and Kafka consumers: source `format` with
+    * its transport `options` through `pipe`, drained in complete mode.
+    */
+  private def sourceReplay(spark: SparkSession, format: String,
+                           options: Map[String, String],
+                           maxRowsPerTrigger: Long, queryName: String)
+                          (pipe: DataFrame => DataFrame): DataFrame =
+    replay(spark, Nil, queryName, "complete") { (iso, _) =>
+      pipe(readSource(iso, format, options, maxRowsPerTrigger))
+    }
 }

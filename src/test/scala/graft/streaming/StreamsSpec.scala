@@ -222,4 +222,35 @@ class StreamsSpec extends AnyFunSuite {
       .orderBy("id").as[(Long, String, String)].collect().toSeq
     assert(got == Seq((1L, "v1", "Y"), (2L, "v2b", "N"), (3L, "v3", "N")))
   }
+
+  test("replays remove their staged input: no graft_* dir outlives the call") {
+    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def graftDirs() = tmp.listFiles().map(_.getName).filter(_.startsWith("graft_")).toSet
+    val before = graftDirs()
+    val docs = Seq((1L, "a"), (2L, "b"), (3L, "a")).toDF("id", "fp")
+    assert(Streams.streamingDedup(spark, docs, "id", "fp",
+      queryName = s"spec_leak_dedup_${System.nanoTime()}").count() == 2L)
+    val ts = (s: Long) => new java.sql.Timestamp(s * 1000L)
+    val left = Seq((1L, 10L, ts(100L))).toDF("l_key", "l_id", "l_ts")
+    val right = Seq((1L, 20L, ts(90L))).toDF("r_key", "r_id", "r_ts")
+    assert(Streams.intervalJoinLeftOuter(spark, left, right, gapSec = 60L,
+      queryName = s"spec_leak_ivjoin_${System.nanoTime()}").count() == 1L)
+    val leaked = graftDirs() -- before
+    assert(leaked.isEmpty, s"staged input left behind: $leaked")
+  }
+
+  test("memory-sink views stay out of the caller's session") {
+    val events = Seq((1L, 7L), (2L, 8L)).toDF("k", "e")
+    val dim = Seq((1L, "one")).toDF("k", "name")
+    val joinName = s"spec_view_ssjoin_${System.nanoTime()}"
+    assert(Streams.streamStaticJoin(spark, events, dim, "k", joinName)
+      .as[(Long, Long, String)].collect().toSeq == Seq((1L, 7L, "one")))
+    val vecs = Seq((0L, Seq(1.0f, 2.0f)), (1L, Seq(3.0f, 4.0f)))
+      .toDF("vec_id", "embedding")
+    val kmName = s"spec_view_kmeans_${System.nanoTime()}"
+    assert(Streams.streamingKmeansUpdate(spark, vecs, seedMod = 2L, kmName)
+      .count() == 2L)
+    assert(!spark.catalog.tableExists(joinName))
+    assert(!spark.catalog.tableExists(kmName))
+  }
 }
