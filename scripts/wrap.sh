@@ -39,6 +39,13 @@ if grep -rn 'processAllAvailable' src/main --include='*.scala' \
   exit 1
 fi
 
+# replication has one FK scheduler: Pipeline.replicateScheduled
+if grep -rn 'replicateParallel' src --include='*.scala' \
+   || (( $(grep -c 'TopoSort\.' src/main/scala/graft/cdc/Pipeline.scala) > 1 )); then
+  echo "[wrap] second FK scheduler in graft.cdc.Pipeline — run tables through replicateScheduled"
+  exit 1
+fi
+
 echo "[wrap] sbt Test/compile ..."
 sbt -batch Test/compile
 

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions._
   * (scripts/03_cdc_etl.py:203-379) re-expressed as one declarative pass per
   * table:
   *
-  *   discover → topo-order (parents first) → per table:
+  *   discover → FK schedule (a table starts once its parents have landed,
+  *   tables with no FK path between them at the same time) → per table:
   *     read delta (watermark predicate pushed into the scan)
   *     → dedup to latest-per-key (the staging step, minus the staging table:
   *       Spark's shuffle IS the stage)
@@ -16,11 +17,11 @@ import org.apache.spark.sql.functions._
   *     → advance watermark to MAX(change_ts)
   *     → record stats
   *
-  * Every target shares that one per-table step and the FK-ordered run
-  * around it; a target supplies only its write step for the staged batch
-  * (parquet read-merge-write, JDBC stage + DB-side MERGE, a Delta commit,
-  * an Iceberg snapshot), so the same run drives a lakehouse replica, a
-  * database, or a test fixture.
+  * Every target shares that one per-table step and the one FK scheduler
+  * around it; a target supplies only its write step for the staged
+  * batch (parquet read-merge-write, JDBC stage + DB-side MERGE, a Delta
+  * commit, an Iceberg snapshot), so the same run drives a lakehouse
+  * replica, a database, or a test fixture.
   * Failure isolation matches the reference: a failing table is recorded and
   * the run continues (:348-352).
   */
@@ -32,13 +33,16 @@ object Pipeline {
       createdAt: String = Cdc.CreatedAt,
       updatedAt: String = Cdc.UpdatedAt)
 
-  /** Per-table outcome, mirroring the reference's table_stats. */
+  /** Per-table outcome, mirroring the reference's table_stats, plus when
+    * the step started (seconds from the run's start) and its wall time. */
   final case class TableResult(
       table: String,
       status: String, // "processed" | "no_changes" | "failed"
       rowsProcessed: Long,
       newWatermark: Option[Timestamp],
-      error: Option[String] = None)
+      error: Option[String] = None,
+      started: Double = 0.0,
+      seconds: Double = 0.0)
 
   /** Run summary, mirroring the reference's final report (:357-371). */
   final case class RunReport(results: Seq[TableResult]) {
@@ -78,7 +82,8 @@ object Pipeline {
       s"""{"table":"${esc(r.table)}","status":"${r.status}",""" +
         s""""rows":${r.rowsProcessed},"watermark":${r.newWatermark
           .map(t => "\"" + t.toString + "\"").getOrElse("null")},""" +
-        s""""error":${r.error.map(e => "\"" + esc(e) + "\"").getOrElse("null")}}"""
+        s""""error":${r.error.map(e => "\"" + esc(e) + "\"").getOrElse("null")},""" +
+        """"started":%.3f,"seconds":%.3f}""".formatLocal(java.util.Locale.ROOT, r.started, r.seconds)
     } :+ (s"""{"summary":{"processed":${report.processed},""" +
       s""""no_changes":${report.noChanges},"failed":${report.failed},""" +
       s""""rows":${report.totalRows},"run_at":"$runAt"}}""")
@@ -86,7 +91,8 @@ object Pipeline {
     f
   }
 
-  /** Incremental replication of all tables, parents before children.
+  /** Incremental replication of all tables through the FK scheduler: a
+    * table starts once its FK parents have landed.
     *
     * @param readSource   source table by name (CDC columns present)
     * @param readTarget   current replica state, None if not yet created
@@ -101,68 +107,60 @@ object Pipeline {
       readTarget: String => Option[DataFrame],
       writeTarget: (String, DataFrame) => Unit,
       watermarks: Map[String, Timestamp]): (RunReport, Map[String, Timestamp]) =
-    replicateInFkOrder(tables, fkEdges, readSource, watermarks)(
+    replicateScheduled(SparkSession.active, tables, fkEdges, readSource, watermarks)(
       mergeReplica(readTarget, writeTarget))
 
-  /** Level-parallel replication: tables with no FK path between them sit
-    * in the same topological level and replicate CONCURRENTLY (the
-    * reference loads strictly serially, :203-379). On a cluster each
-    * table is an independent chain of Spark jobs, so in-level parallelism
-    * hides source latency and fills executor slack; the level barrier
-    * still guarantees parents land before children. Identical results and
-    * watermark semantics to [[replicate]].
+  /** The one FK scheduler every target shares. A table's [[replicateTable]]
+    * step starts as soon as every FK parent's step has finished, failed
+    * ones included (a failure is recorded and the run goes on), with at
+    * most `defaultParallelism` steps in flight; tables on an FK cycle run
+    * after all others, one at a time. Each step runs on a thread the
+    * caller starts, so it sees the caller's Spark local properties (job
+    * group, pool). Results keep the topological order, and the watermark
+    * map advances by the tables that processed. A non-`Exception` failure
+    * is rethrown once the steps in flight have ended.
     */
-  def replicateParallel(
-      tables: Seq[TableSpec],
-      fkEdges: Seq[(String, String)],
-      readSource: String => DataFrame,
-      readTarget: String => Option[DataFrame],
-      writeTarget: (String, DataFrame) => Unit,
-      watermarks: Map[String, Timestamp],
-      parallelism: Int = 4): (RunReport, Map[String, Timestamp]) = {
-    import java.util.concurrent.Executors
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    val byName = tables.map(t => t.name -> t).toMap
-    val byLevel = TopoSort.levels(tables.map(_.name), fkEdges)
-      .groupBy(_._2).toSeq.sortBy(_._1)
-    val apply = mergeReplica(readTarget, writeTarget) _
-    val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
-    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-    try {
-      val results = byLevel.flatMap { case (_, names) =>
-        val fs = names.flatMap(n => byName.get(n._1)).map(spec =>
-          Future(replicateTable(spec, readSource, watermarks)(apply)))
-        fs.map(Await.result(_, Duration.Inf)) // level barrier
-      }
-      (RunReport(results), advanceMap(watermarks, results))
-    } finally pool.shutdown()
-  }
-
-  private def advanceMap(watermarks: Map[String, Timestamp],
-                         results: Seq[TableResult]): Map[String, Timestamp] =
-    results.foldLeft(watermarks) { (acc, r) =>
-      r.newWatermark match {
-        case Some(ts) if r.status == "processed" => acc + (r.table -> ts)
-        case _ => acc
-      }
-    }
-
-  /** The serial run every target shares: tables in FK order (parents
-    * first), one [[replicateTable]] step each, then the watermark map
-    * advanced by the tables that processed.
-    */
-  private def replicateInFkOrder(
+  private def replicateScheduled(
+      spark: SparkSession,
       tables: Seq[TableSpec],
       fkEdges: Seq[(String, String)],
       readSource: String => DataFrame,
       watermarks: Map[String, Timestamp])(
       apply: (TableSpec, DataFrame) => Unit): (RunReport, Map[String, Timestamp]) = {
     val byName = tables.map(t => t.name -> t).toMap
-    val order = TopoSort.order(tables.map(_.name), fkEdges)
-    val results = order.flatMap(byName.get).map(spec =>
-      replicateTable(spec, readSource, watermarks)(apply))
-    (RunReport(results), advanceMap(watermarks, results))
+    val levels = TopoSort.levels(tables.map(_.name), fkEdges)
+    val acyclic = levels.collect { case (n, l) if l >= 0 => n }
+    val cyclic = levels.collect { case (n, -1) => n }
+    val t0 = System.nanoTime()
+    def step(name: String): TableResult = {
+      val s = System.nanoTime()
+      replicateTable(byName(name), readSource, watermarks)(apply)
+        .copy(started = (s - t0) / 1e9, seconds = (System.nanoTime() - s) / 1e9)
+    }
+    val slots = math.max(1, math.min(spark.sparkContext.defaultParallelism, acyclic.size))
+    val done = new java.util.concurrent.LinkedBlockingQueue[(String, Either[Throwable, TableResult])]
+    val finished = scala.collection.mutable.Map[String, TableResult]()
+    var waiting = acyclic
+    var running = 0
+    try while (finished.size < acyclic.size) {
+      // a self-reference never blocks a table, as TopoSort ignores it
+      val start = waiting.filter(n => fkEdges.forall { case (p, c) =>
+        c != n || p == n || !byName.contains(p) || finished.contains(p) }).take(slots - running)
+      waiting = waiting.filterNot(start.contains)
+      start.foreach { n =>
+        new Thread(() => done.put(n -> (try Right(step(n)) catch { case e: Throwable => Left(e) })),
+          s"graft-cdc-$n").start()
+        running += 1
+      }
+      val (n, r) = done.take()
+      running -= 1
+      finished(n) = r.fold(e => throw e, identity)
+    } finally while (running > 0) { done.take(); running -= 1 }
+    val results = acyclic.map(finished) ++ cyclic.map(step)
+    (RunReport(results), results.foldLeft(watermarks) {
+      case (acc, r) if r.status == "processed" => acc ++ r.newWatermark.map(r.table -> _)
+      case (acc, _) => acc
+    })
   }
 
   /** The per-table CDC step: the rows changed since the table's watermark
@@ -243,7 +241,7 @@ object Pipeline {
       dialect: graft.sources.JdbcMerge.Dialect = graft.sources.JdbcMerge.StandardDialect)
       : (RunReport, Map[String, Timestamp]) = {
     import graft.sources.{Jdbc, JdbcMerge}
-    replicateInFkOrder(tables, fkEdges, Jdbc.read(spark, source, _), watermarks) {
+    replicateScheduled(spark, tables, fkEdges, Jdbc.read(spark, source, _), watermarks) {
       (spec, staged) =>
         val staging = s"STG_${spec.name}"
         ensureJdbcTable(target, spec.name, staged.schema, spec.pk)
@@ -286,7 +284,7 @@ object Pipeline {
       watermarks: Map[String, Timestamp],
       checkpointEvery: Int = 10): (RunReport, Map[String, Timestamp]) = {
     import graft.sources.DeltaWrite
-    replicateInFkOrder(tables, fkEdges, readSource, watermarks) { (spec, staged) =>
+    replicateScheduled(spark, tables, fkEdges, readSource, watermarks) { (spec, staged) =>
       val path = s"$targetDir/${spec.name}"
       val v =
         if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path, "_delta_log")))
@@ -322,7 +320,7 @@ object Pipeline {
       targetDir: String,
       watermarks: Map[String, Timestamp]): (RunReport, Map[String, Timestamp]) = {
     import graft.sources.IcebergCatalog
-    replicateInFkOrder(tables, fkEdges, readSource, watermarks) { (spec, staged) =>
+    replicateScheduled(spark, tables, fkEdges, readSource, watermarks) { (spec, staged) =>
       val path = s"$targetDir/${spec.name}"
       if (!java.nio.file.Files.isDirectory(java.nio.file.Paths.get(path, "metadata"))) {
         IcebergCatalog.createTable(path, IcebergCatalog.icebergFields(staged.schema))

@@ -24,12 +24,15 @@ object TopoSort {
     var frontier = ns.filter(inDeg(_) == 0).toList
     frontier.foreach(level(_) = 0)
     val remaining = scala.collection.mutable.Map(inDeg.toSeq: _*)
+    // a node gets its level only once every parent has one: a cycle that
+    // hangs under a root stays a leftover, as in Kahn's algorithm
+    val longest = scala.collection.mutable.Map[String, Int]()
     while (frontier.nonEmpty) {
       val next = scala.collection.mutable.ListBuffer[String]()
       for (n <- frontier; (p, c) <- es if p == n) {
-        level(c) = math.max(level.getOrElse(c, 0), level(n) + 1)
+        longest(c) = math.max(longest.getOrElse(c, 0), level(n) + 1)
         remaining(c) -= 1
-        if (remaining(c) == 0) next += c
+        if (remaining(c) == 0) { level(c) = longest(c); next += c }
       }
       frontier = next.toList
     }

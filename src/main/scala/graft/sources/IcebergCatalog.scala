@@ -977,8 +977,9 @@ object IcebergCatalog {
     val kcheck = src.agg(count(lit(1)).as("n"),
       count_distinct(pk.map(col).head, pk.map(col).tail: _*).as("d")).head()
     require(kcheck.getAs[Long]("n") == kcheck.getAs[Long]("d"),
-      s"staged batch holds duplicate pk tuples — dedup with " +
-        s"latestPerKey before merge: $table")
+      s"staged batch holds duplicate pk tuples (${kcheck.getAs[Long]("n")}" +
+        s" rows over ${kcheck.getAs[Long]("d")} distinct keys) — dedup " +
+        s"with latestPerKey before merge: $table")
     val liveKeys = read(spark, table).select(pk.map(col): _*).distinct()
     val matchedKeys = src.select(pk.map(col): _*).join(liveKeys, pk, "left_semi")
     val matched = src.join(liveKeys, pk, "left_semi")

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import scala.jdk.CollectionConverters._
 
 /** Drives the full replication loop across two incremental runs — the
   * scenario the reference pipeline exists for.
@@ -66,33 +67,89 @@ class PipelineSpec extends AnyFunSuite {
     assert(wm2("ord") == wm1("ord")) // untouched watermark survives
   }
 
-  test("level-parallel replication matches the serial run (same data, watermarks, order guarantees)") {
-    // 4 tables, 2 levels: {a, b} then {c, d} (c ← a, d ← b)
-    val pSpecs = Seq("a", "b", "c", "d").map(n => Pipeline.TableSpec(n, Seq("id")))
-    val pEdges = Seq("a" -> "c", "b" -> "d")
-    val src = Map(
-      "a" -> customers(Seq((1L, "x", "2024-01-01 00:00:00", None, "N"))),
-      "b" -> customers(Seq((2L, "y", "2024-01-02 00:00:00", None, "N"))),
-      "c" -> customers(Seq((3L, "z", "2024-01-03 00:00:00", None, "N"))),
-      "d" -> customers(Seq((4L, "w", "2024-01-04 00:00:00", None, "N"))))
-    def freshTarget() = new Pipeline.ParquetTarget(spark,
-      Files.createTempDirectory("graft_par").toString)
-    val tSer = freshTarget(); val tPar = freshTarget()
-    val (serial, wmS) = Pipeline.replicate(pSpecs, pEdges, src(_),
-      tSer.read, tSer.write, Map.empty)
-    val (par, wmP) = Pipeline.replicateParallel(pSpecs, pEdges, src(_),
-      tPar.read, tPar.write, Map.empty, parallelism = 4)
-    assert(par.processed == 4 && par.failed == 0)
-    assert(wmP == wmS)
-    assert(par.results.map(r => r.table -> r.status).toMap ==
-      serial.results.map(r => r.table -> r.status).toMap)
-    for (t <- Seq("a", "b", "c", "d"))
-      assert(tPar.read(t).get.orderBy("id").collect().toSeq ==
-        tSer.read(t).get.orderBy("id").collect().toSeq)
-    // parents' level completes before children start (level barrier):
-    // result order groups level 0 before level 1
-    val order = par.results.map(_.table)
-    assert(order.indexOf("a") < order.indexOf("c") && order.indexOf("b") < order.indexOf("d"))
+  test("the FK scheduler: parents first, independent roots together, failures isolated, cycles last") {
+    import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+    // roots a, b and f (f's source fails); c <- a; d <- a, b; g <- f;
+    // x <-> y form an FK cycle under b
+    val names = Seq("a", "b", "c", "d", "f", "g", "x", "y")
+    val sSpecs = names.map(n => Pipeline.TableSpec(n, Seq("id")))
+    val sEdges = Seq("a" -> "c", "a" -> "d", "b" -> "d", "f" -> "g",
+      "b" -> "x", "x" -> "y", "y" -> "x")
+    val src = names.zipWithIndex.map { case (n, i) =>
+      n -> customers(Seq((i.toLong, n, s"2024-01-0${i + 1} 00:00:00", None, "N")))
+    }.toMap
+    val fWatermark = ts("2023-12-31 00:00:00")
+    val target = new Pipeline.ParquetTarget(spark,
+      Files.createTempDirectory("graft_sched").toString)
+    // write-step start and end times, the caller's local property as each
+    // step sees it, and a latch both independent roots must reach
+    val spans = new ConcurrentHashMap[String, (Long, Long)]()
+    val seenProp = new ConcurrentHashMap[String, String]()
+    val roots = new CountDownLatch(2)
+    val rootsMet = new ConcurrentHashMap[String, java.lang.Boolean]()
+    def write(t: String, df: DataFrame): Unit = {
+      val t0 = System.nanoTime()
+      seenProp.put(t, String.valueOf(spark.sparkContext.getLocalProperty("graft.spec.caller")))
+      if (t == "a" || t == "b") {
+        roots.countDown()
+        rootsMet.put(t, roots.await(60, TimeUnit.SECONDS))
+      }
+      target.write(t, df)
+      spans.put(t, (t0, System.nanoTime()))
+    }
+    spark.sparkContext.setLocalProperty("graft.spec.caller", "pipeline-spec")
+    val (rep, wm) = try Pipeline.replicate(sSpecs, sEdges,
+        t => if (t == "f") throw new RuntimeException("boom: f unavailable") else src(t),
+        target.read, write, Map("f" -> fWatermark))
+      finally spark.sparkContext.setLocalProperty("graft.spec.caller", null)
+
+    // results in TopoSort.order; every table but f processed
+    assert(rep.results.map(_.table) == TopoSort.order(names, sEdges))
+    assert(rep.results.map(r => r.table -> r.status).toMap ==
+      names.map(n => n -> (if (n == "f") "failed" else "processed")).toMap)
+    // the failed parent keeps its own watermark; the rest advance to their
+    // one row's change ts
+    assert(rep.results.find(_.table == "f").get.newWatermark == Some(fWatermark))
+    assert(wm == names.zipWithIndex.map { case (n, i) =>
+      n -> (if (n == "f") fWatermark else ts(s"2024-01-0${i + 1} 00:00:00"))
+    }.toMap)
+    for (n <- names.filter(_ != "f"))
+      assert(target.read(n).get.orderBy("id").collect().toSeq ==
+        src(n).collect().toSeq, n)
+    // the two independent roots were in their write steps at the same time
+    assert(rootsMet.get("a") && rootsMet.get("b"), rootsMet)
+    // a child starts only after all its parents have ended (f wrote nothing)
+    for ((p, c) <- sEdges if p != "f" && !Set(p, c).subsetOf(Set("x", "y")))
+      assert(spans.get(p)._2 < spans.get(c)._1, s"$p -> $c")
+    // FK-cycle tables start after every acyclic table, one at a time
+    val acyclicEnd = Seq("a", "b", "c", "d", "g").map(spans.get(_)._2).max
+    assert(acyclicEnd < spans.get("x")._1 && spans.get("x")._2 < spans.get("y")._1)
+    // every step saw the caller's local property
+    assert(seenProp.asScala.toMap == names.filter(_ != "f").map(_ -> "pipeline-spec").toMap)
+    // per-table timing: a child started after its parent's step ended
+    val timing = rep.results.map(r => r.table -> (r.started, r.seconds)).toMap
+    assert(timing.values.forall { case (s, w) => s >= 0 && w > 0 }, timing)
+    assert(timing("a")._1 + timing("a")._2 <= timing("c")._1, timing)
+  }
+
+  test("the FK scheduler rethrows a fatal error only after the steps in flight end") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val bStarted = new CountDownLatch(1)
+    @volatile var aEnded = false
+    val target = new Pipeline.ParquetTarget(spark,
+      Files.createTempDirectory("graft_sched_fatal").toString)
+    val src = customers(Seq((1L, "a", "2024-01-01 00:00:00", None, "N")))
+    intercept[NotImplementedError] {
+      Pipeline.replicate(Seq("a", "b").map(n => Pipeline.TableSpec(n, Seq("id"))), Nil,
+        t => if (t == "b") { bStarted.countDown(); throw new NotImplementedError("b") } else src,
+        target.read, (t, df) => {
+          bStarted.await(60, TimeUnit.SECONDS)
+          Thread.sleep(200)
+          target.write(t, df)
+          aEnded = true
+        }, Map.empty)
+    }
+    assert(aEnded, "a step in flight outlived the call")
   }
 
   test("schema evolution: source adds a column mid-stream; target backfills nulls") {
@@ -217,9 +274,9 @@ class PipelineSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("graft_runlog").toString
     val rep = Pipeline.RunReport(Seq(
       Pipeline.TableResult("cust", "processed", 5,
-        Some(java.sql.Timestamp.valueOf("2024-01-02 00:00:00"))),
+        Some(java.sql.Timestamp.valueOf("2024-01-02 00:00:00")), started = 0.25, seconds = 3.5),
       Pipeline.TableResult("ord", "failed", 0, None,
-        error = Some("boom: \"quoted\"\r\n\tline2"))))
+        error = Some("boom: \"quoted\"\r\n\tline2"), started = 3.75, seconds = 0.0625)))
     val at = java.time.Instant.parse("2024-01-02T03:04:05Z")
     val f = Pipeline.writeRunReport(rep, dir, at)
     assert(f.getName == "cdc_run_20240102_030405_000000000.jsonl")
@@ -232,6 +289,10 @@ class PipelineSpec extends AnyFunSuite {
     assert(lines(1).contains("\\\"quoted\\\"") &&
       lines(1).contains("\\u000d\\u000a\\u0009"))
     assert(lines(2).contains("\"processed\":1") && lines(2).contains("\"failed\":1"))
+    // per-table start (seconds from the run's start) and wall time
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    assert(lines.take(2).map(json.readTree).map(j =>
+      (j.get("started").asDouble, j.get("seconds").asDouble)) == Seq((0.25, 3.5), (3.75, 0.063)))
     // runs in the SAME second land in distinct files (nanosecond field)
     val f2 = Pipeline.writeRunReport(rep, dir, at.plusNanos(1))
     assert(f2.exists() && f.exists() && f2.getName != f.getName)

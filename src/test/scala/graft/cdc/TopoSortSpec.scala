@@ -24,6 +24,13 @@ class TopoSortSpec extends AnyFunSuite {
     assert(lv.head._1 == "d") // resolvable nodes first, leftovers appended
   }
 
+  test("a cycle hanging under a root is a -1 leftover too (Kahn's leftovers)") {
+    // r resolves; x<->y never reaches in-degree 0 although r feeds x
+    val lv = TopoSort.levels(Seq("r", "x", "y", "z"),
+      Seq("r" -> "x", "x" -> "y", "y" -> "x", "y" -> "z"))
+    assert(lv == Seq("r" -> 0, "x" -> -1, "y" -> -1, "z" -> -1))
+  }
+
   test("deterministic: same input, same order") {
     val e = Tables.fkEdges
     assert(TopoSort.order(Tables.all, e) == TopoSort.order(Tables.all.reverse, e.reverse))

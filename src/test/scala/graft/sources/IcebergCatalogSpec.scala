@@ -827,7 +827,9 @@ class IcebergCatalogSpec extends AnyFunSuite {
         Seq((2L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"),
         IcebergCatalog.nextSnapshotId(t.toString))
     }
-    assert(e.getMessage.contains("duplicate"))
+    // the counts match DeltaWrite.merge's message
+    assert(e.getMessage.contains("duplicate pk tuples (2 rows over 1 distinct keys)"),
+      e.getMessage)
   }
 
   test("rewriteDataFiles folds deletes in; history stays travelable (r14)") {
