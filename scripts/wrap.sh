@@ -46,6 +46,19 @@ if grep -rn 'replicateParallel' src --include='*.scala' \
   exit 1
 fi
 
+# deletion vectors are written by DeltaLog.markDeleted only (the encode,
+# the deletion_vector_*.bin write and the action lines) and applied by
+# DeltaLog.minusDvs only (the one DV anti-join in DeltaLog.scala)
+if awk '/def markDeleted\(/ { h = 1 } h && /^  }$/ { h = 0 }
+        !h && ((/encodePortable64\(/ && !/def encodePortable64\(/) ||
+               (/deletion_vector_/ && /Files\.write|writeParquetFile|publishNew|replaceAtomic/)) {
+          print FILENAME ":" FNR ": " $0; f = 1 }
+        END { exit !f }' src/main/scala/graft/sources/*.scala \
+   || (( $(grep -c '"left_anti"' src/main/scala/graft/sources/DeltaLog.scala) > 1 )); then
+  echo "[wrap] second DV write or apply step in graft.sources — use DeltaLog.markDeleted / minusDvs"
+  exit 1
+fi
+
 echo "[wrap] sbt Test/compile ..."
 sbt -batch Test/compile
 

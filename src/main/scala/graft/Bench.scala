@@ -96,7 +96,7 @@ object Bench {
     .replaceAll("#\\d+L?", "")
     .replaceAll(", \\[plan_id=\\d+\\]", "")
     .replaceAll("[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}", "UUID")
-    .replaceAll("(Location: \\w+\\(\\d+ paths?\\)\\[file:/tmp/)[^\\]]*?(?:\\]|\\.\\.\\.)", "$1X]")
+    .replaceAll("(Location: \\w+\\(\\d+ paths?\\)\\[file:/tmp/)[^\\]]*?(?:\\]|\\.{3,})", "$1X]")
     .replaceAll("/tmp/[^\\s,\\]\\)]*", "/tmp/X")
     .replaceAll(java.util.regex.Pattern.quote(dataRoot) + "/[^\\s,\\]\\)]*", "/data/X")
     .replaceAll("\\b(lambda [A-Za-z_]\\w*?)_\\d+\\b", "$1")

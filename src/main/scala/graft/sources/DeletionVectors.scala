@@ -27,8 +27,9 @@ import java.nio.ByteOrder.{BIG_ENDIAN, LITTLE_ENDIAN}
   * WRITE path (r10): [[encodePortable64]] is the house encoder of the
   * same portable format (no-run form — byte-identical to the canonical
   * library's own no-run serialization, spec-pinned), consumed by
-  * `DeltaLog.deleteWithDv` to emit DV deletes instead of rewriting
-  * files.
+  * `DeltaLog.markDeleted` — the one DV write step behind
+  * `DeltaLog.deleteWithDv` and merge-on-read `DeltaWrite.merge` — to
+  * mark rows deleted instead of rewriting files.
   */
 object DeletionVectors {
 

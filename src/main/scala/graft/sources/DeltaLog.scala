@@ -3,7 +3,7 @@ package graft.sources
 import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
@@ -20,8 +20,10 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - `metaData`: schemaString (Spark JSON schema) + partitionColumns;
   *    the LAST metaData wins (schema evolution).
   *  - `add`: data file path + partitionValues; `remove`: the path
-  *    leaves the live set. Replay order = version order; the protocol
-  *    guarantees a path is not both added and removed in one commit.
+  *    leaves the live set. Replay order = version order, then line
+  *    order: a commit may remove a path and re-add it with a new
+  *    deletion vector (PROTOCOL.md reconciles on (path, DV id)), and
+  *    the re-add wins.
   *  - checkpoint: a parquet file of the same actions pre-folded;
   *    replay starts from the newest checkpoint ≤ the requested version
   *    and applies only later JSON commits (how real readers bound log
@@ -537,11 +539,12 @@ object DeltaLog {
 
   /** [[read]] over an already-replayed state; `tagRel = true` keeps a
     * `__graft_rel` column holding each row's table-relative data-file
-    * path (the `add.path` it came from) — what [[DeltaWrite.merge]]
-    * needs to know WHICH files a key match touches. The tag is an
-    * expression over `_metadata.file_path` (the DV join's own
-    * anchoring rule), not a per-file scan — one plan per partition
-    * group regardless of file count.
+    * path (the `add.path` it came from) and a `__graft_pos` column
+    * holding its parquet row index — what [[DeltaWrite.merge]] needs
+    * to know WHICH files (and, on a DV table, which rows) a key match
+    * touches. The tag is an expression over `_metadata.file_path` (the
+    * DV filter's own anchoring rule), not a per-file scan — one plan
+    * per partition group regardless of file count.
     */
   private[sources] def readInternal(spark: SparkSession, table: String,
                                     st: State,
@@ -566,18 +569,19 @@ object DeltaLog {
       .sortBy(_._1.toSeq.sorted.mkString(","))
     val outSchema =
       if (!tagRel) st.schema
-      else StructType(st.schema.fields :+
+      else StructType(st.schema.fields ++ Seq(
         org.apache.spark.sql.types.StructField("__graft_rel",
-          org.apache.spark.sql.types.StringType))
+          org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("__graft_pos",
+          org.apache.spark.sql.types.LongType)))
     if (groups.isEmpty)
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], outSchema)
     // deletion vectors (F14c): when any live file carries one, tag rows
-    // with their file + row index and anti-join the decoded positions —
-    // the Iceberg positional-delete shape. DVs decode in EXECUTORS (one
-    // task per DV-bearing file); the driver holds only descriptors.
-    val hasDv = liveFiles.exists(_.deletionVector.isDefined)
-    val needMeta = hasDv || tagRel
+    // with their file + row index and drop the marked positions
+    // ([[minusDvs]], the one DV apply step)
+    val dvs = liveFiles.flatMap(f => f.deletionVector.map(f.path -> _))
+    val needMeta = dvs.nonEmpty || tagRel
     val metaCols =
       if (needMeta) Seq(col("_metadata.file_path").as("__fp"),
         col("_metadata.row_index").as("__pos"))
@@ -599,32 +603,65 @@ object DeltaLog {
         df.withColumn(c0, lit(pvals.getOrElse(pvKey, null)).cast(f.dataType))
       }.select(keep.map(col): _*)
     }
-    var df = parts.reduce(_ unionByName _)
-    // the path tail under the table dir (the Iceberg relocation-safe
-    // anchoring rule) — shared by the DV join and the __graft_rel tag
-    val anchor = Paths.get(table).toAbsolutePath.getFileName.toString
-    if (hasDv) {
-      import spark.implicits._
-      val descriptors = liveFiles.flatMap(f =>
-        f.deletionVector.map(dvJson => (f.path, dvJson)))
-      val positions = spark.createDataset(descriptors)
-        .repartition(math.max(1, descriptors.size))
-        .flatMap { case (relPath, dvJson) =>
-          decodeDvPositions(table, dvJson).map(pos => (relPath, pos))
-        }.toDF("__dvp", "__dvpos")
-      df = df.join(positions,
-        substring_index(col("__fp"), "/" + anchor + "/", -1) === col("__dvp") &&
-          col("__pos") === col("__dvpos"), "left_anti")
-        .select(keep.map(col): _*)
-    }
+    var df = minusDvs(spark, table, parts.reduce(_ unionByName _), dvs)
     if (tagRel)
-      df = df.withColumn("__graft_rel",
-        substring_index(col("__fp"), "/" + anchor + "/", -1))
+      df = df.withColumn("__graft_rel", relOf(table))
+        .withColumn("__graft_pos", col("__pos"))
     df = df.select(outSchema.fieldNames.map(col).toSeq: _*)
     val residual = ranges.map { case (c, (lo, hi)) =>
       col(c) >= lo && col(c) <= hi
     }.reduceOption(_ && _).getOrElse(lit(true))
     df.filter(residual)
+  }
+
+  /** A tagged row's table-relative data-file path: the tail of its
+    * `__fp` (`_metadata.file_path`) under the table directory (the
+    * Iceberg relocation-safe anchoring rule) — shared by the DV apply
+    * step and [[DeltaWrite.merge]]'s `__graft_rel` tag.
+    */
+  private def relOf(table: String): Column = {
+    val anchor = Paths.get(table).toAbsolutePath.getFileName.toString
+    substring_index(col("__fp"), "/" + anchor + "/", -1)
+  }
+
+  /** The one DV APPLY step: drop from `df` — rows tagged with `__fp`
+    * (`_metadata.file_path`) and `__pos` (parquet row index) — every
+    * position the deletion vectors `dvs` ((table-relative path,
+    * descriptor) per file) mark. It dispatches like the wave twins, on
+    * Σ descriptor `cardinality` against [[graft.operators.Wave.rowCap]],
+    * so deciding decodes nothing. At or below the cap the driver
+    * decodes every DV and the scan filters in place, each marked file
+    * keeping the rows whose index is not in its set. Above it the DVs
+    * decode in executors (one task per DV-bearing file) and apply as a
+    * (file, row index) anti-join, the Iceberg positional-delete shape,
+    * with only the descriptors on the driver.
+    */
+  private def minusDvs(spark: SparkSession, table: String, df: DataFrame,
+                       dvs: Seq[(String, String)]): DataFrame = {
+    if (dvs.isEmpty) return df
+    val rel = relOf(table)
+    val marked = dvs.map { case (_, d) =>
+      BigInt("\"cardinality\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(d)
+        .map(_.group(1)).getOrElse(Long.MaxValue.toString))
+    }.sum
+    if (marked <= graft.operators.Wave.rowCap(spark)) {
+      val keep = dvs.map { case (path, d) => path -> decodeDvPositions(table, d) }
+        .filter(_._2.nonEmpty)
+        .foldLeft(Option.empty[Column]) { case (acc, (path, pos)) =>
+          val live = !col("__pos").isInCollection(pos.toSeq)
+          Some(acc.fold(when(rel === path, live))(_.when(rel === path, live)))
+        }
+      keep.fold(df)(k => df.filter(k.otherwise(true)))
+    } else {
+      import spark.implicits._
+      val positions = spark.createDataset(dvs)
+        .repartition(dvs.size)
+        .flatMap { case (path, d) =>
+          decodeDvPositions(table, d).map(pos => (path, pos))
+        }.toDF("__dvp", "__dvpos")
+      df.join(positions,
+        rel === col("__dvp") && col("__pos") === col("__dvpos"), "left_anti")
+    }
   }
 
   /** Positions of one `deletionVector` descriptor: `u` (z85 UUID →
@@ -650,17 +687,8 @@ object DeltaLog {
         val data = DeletionVectors.z85Decode(payload)
         require(data.length >= size, s"inline DV shorter than sizeInBytes")
         DeletionVectors.decodeData(java.util.Arrays.copyOf(data, size))
-      case "u" =>
-        // optional random prefix before the 20-char z85 uuid
-        val (prefix, uuidPart) = payload.splitAt(payload.length - 20)
-        val uuid = DeletionVectors.z85Uuid(uuidPart)
-        val rel =
-          (if (prefix.nonEmpty) prefix.stripSuffix("/") + "/" else "") +
-            s"deletion_vector_$uuid.bin"
-        val bytes = Files.readAllBytes(Paths.get(table, rel))
-        DeletionVectors.decodeAt(bytes, num("offset").getOrElse(1L).toInt, size)
-      case "p" =>
-        val bytes = Files.readAllBytes(Paths.get(payload))
+      case "u" | "p" =>
+        val bytes = Files.readAllBytes(dvBinPath(table, dvJson).get)
         DeletionVectors.decodeAt(bytes, num("offset").getOrElse(1L).toInt, size)
       case other =>
         throw new IllegalArgumentException(s"deletionVector storageType '$other' unsupported")
@@ -785,14 +813,13 @@ object DeltaLog {
     * new version.
     *
     * Scale shape: one distributed read+write per partition group (the
-    * group's files scan in parallel, DV anti-joins run in executors);
+    * group's files scan in parallel, DVs apply through [[minusDvs]]);
     * the commit itself is file METADATA, driver-side like every log
     * operation.
     */
   def compact(spark: SparkSession, table: String,
               maxRecordsPerFile: Long = 0L): Long = {
     import org.apache.spark.sql.types.{LongType, StructType => SType}
-    import spark.implicits._
     val st = state(spark, table)
     writerGuard(st, table, "compact")
     // columnMapping=name WRITE path (r12): data files — the ones read
@@ -815,30 +842,18 @@ object DeltaLog {
     require(groups.nonEmpty,
       "nothing to compact: every partition group is a single DV-free file")
     val next = st.version + 1
-    val anchor = Paths.get(table).toAbsolutePath.getFileName.toString
     val removes = Seq.newBuilder[String]
     val newRels = Seq.newBuilder[(String, String)] // (relPath, pvJson)
     groups.zipWithIndex.foreach { case ((pvals, files), gi) =>
       val base0 = spark.read.schema(dataSchema)
         .parquet(files.map(f => Paths.get(table, f.path).toString): _*)
-      val hasDv = files.exists(_.deletionVector.isDefined)
+      val dvs = files.flatMap(f => f.deletionVector.map(f.path -> _))
       val df =
-        if (!hasDv) base0
-        else {
-          val tagged = base0.select(base0.columns.map(col).toSeq :+
+        if (dvs.isEmpty) base0
+        else minusDvs(spark, table, base0.select(base0.columns.map(col).toSeq :+
             col("_metadata.file_path").as("__fp") :+
-            col("_metadata.row_index").as("__pos"): _*)
-          val descriptors = files.flatMap(f =>
-            f.deletionVector.map(dv => (f.path, dv)))
-          val positions = spark.createDataset(descriptors)
-            .flatMap { case (rel, dvJson) =>
-              decodeDvPositions(table, dvJson).map(p => (rel, p))
-            }.toDF("__dvp", "__dvpos")
-          tagged.join(positions,
-            substring_index(col("__fp"), "/" + anchor + "/", -1) === col("__dvp") &&
-              col("__pos") === col("__dvpos"), "left_anti")
-            .select(dataSchema.fieldNames.map(col).toSeq: _*)
-        }
+            col("_metadata.row_index").as("__pos"): _*), dvs)
+          .select(dataSchema.fieldNames.map(col).toSeq: _*)
       val pvJson = pvJsonOf(pvals)
       newRels ++= LakeWriter.writeParquet(df.coalesce(1),
         maxRecordsPerFile = maxRecordsPerFile)(
@@ -1075,8 +1090,9 @@ object DeltaLog {
   /** Resolve a DV descriptor's on-disk `.bin` path (absolute,
     * normalized): 'u' storage is table-relative (optional prefix +
     * z85 uuid), 'p' is an absolute path; inline ('i') has no file.
-    * Used by [[vacuum]]'s referenced set and [[restore]]'s
-    * exists-before-re-add check so both agree on resolution.
+    * Used by [[decodeDvPositions]], [[vacuum]]'s referenced set and
+    * [[restore]]'s exists-before-re-add check so all agree on
+    * resolution.
     */
   private[sources] def dvBinPath(table: String,
                                  dvJson: String): Option[java.nio.file.Path] = {
@@ -1254,14 +1270,8 @@ object DeltaLog {
       }
     def ordered(df: DataFrame): DataFrame =
       df.select((st.schema.fieldNames.toSeq :+ "_change_type").map(col): _*)
-    def minusDv(df: DataFrame, dvJson: Option[String]): DataFrame = dvJson match {
-      case None => df.drop("__pos")
-      case Some(d) =>
-        import spark.implicits._
-        val pos = spark.createDataset(decodeDvPositions(table, d).toSeq)
-          .toDF("__pos")
-        df.join(pos, Seq("__pos"), "left_anti").drop("__pos")
-    }
+    def minusDv(df: DataFrame, path: String, dvJson: Option[String]): DataFrame =
+      minusDvs(spark, table, df, dvJson.map(path -> _).toSeq).drop("__fp", "__pos")
     val perVersion = (math.max(fromV + 1, 0L) to toV).flatMap { v =>
       val acts = commitActions(table, v)
       val cdc = acts.filter(_.kind == "cdc")
@@ -1295,8 +1305,9 @@ object DeltaLog {
             val pv = priorFile.map(_.partitionValues).getOrElse(a.pv)
             val df = spark.read.schema(dataSchema)
               .parquet(Paths.get(table, a.path).toString)
-              .select(col("_metadata.row_index").as("__pos"), col("*"))
-            ordered(attachPv(toLogical(minusDv(df, priorDv), Nil), pv)
+              .select(col("_metadata.file_path").as("__fp"),
+                col("_metadata.row_index").as("__pos"), col("*"))
+            ordered(attachPv(toLogical(minusDv(df, a.path, priorDv), Nil), pv)
               .withColumn("_change_type", lit("delete")))
           }.reduce(_ unionAll _))
         } else if (adds.isEmpty && removes.isEmpty) {
@@ -1352,21 +1363,52 @@ object DeltaLog {
     } else perVersion.reduce(_ unionByName _)
   }
 
+  /** The one DV WRITE step: mark row positions `fresh` of live file
+    * `file` deleted. The file's existing DV (if any) decodes and UNIONS
+    * with `fresh`, so the new descriptor covers every generation of
+    * deletes; the union encodes as a portable RoaringBitmapArray
+    * ([[DeletionVectors.encodePortable64]], the house encoder pinned
+    * against the canonical library in the spec) into
+    * `deletion_vector_<uuid>.bin` under the table root, and the
+    * superseded `.bin` stays on disk for time travel. Returns the
+    * action lines — `remove` (path, old DV) then `add` (path, the
+    * file's stats, new DV), PROTOCOL.md's (path, DV id) reconciliation
+    * — and the positions not already marked (what a change feed
+    * records as newly deleted).
+    */
+  private[sources] def markDeleted(table: String, file: LiveFile,
+                                   fresh: Iterable[Long], dataChange: Boolean,
+                                   uuid: java.util.UUID = java.util.UUID.randomUUID())
+      : (Seq[String], Set[Long]) = {
+    val existing = file.deletionVector.toSeq
+      .flatMap(decodeDvPositions(table, _)).toSet
+    val newly = fresh.toSet -- existing
+    val positions = (existing ++ newly).toArray.sorted
+    val (bin, offset, size) =
+      DeletionVectors.dvFileBytes(DeletionVectors.encodePortable64(positions))
+    Files.write(Paths.get(table, s"deletion_vector_$uuid.bin"), bin)
+    val id = java.nio.ByteBuffer.allocate(16)
+      .putLong(uuid.getMostSignificantBits)
+      .putLong(uuid.getLeastSignificantBits).array()
+    val dv = s"""{"storageType":"u","pathOrInlineDv":"${DeletionVectors.z85Encode(id)}",""" +
+      s""""offset":$offset,"sizeInBytes":$size,"cardinality":${positions.length}}"""
+    val path = jsonEscape(file.path)
+    val oldDv = file.deletionVector.map(d => s""","deletionVector":$d""").getOrElse("")
+    val stats = file.stats.map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("")
+    (Seq(s"""{"remove":{"path":"$path","dataChange":$dataChange$oldDv}}""",
+      s"""{"add":{"path":"$path","partitionValues":${pvJsonOf(file.partitionValues)},""" +
+        s""""dataChange":$dataChange$stats,"deletionVector":$dv}}"""),
+      newly)
+  }
+
   /** DELETE rows from one live data file via a DELETION VECTOR (r10 —
     * the modern Delta delete: emit a Roaring DV instead of rewriting
     * the file). Reads `relPath` with parquet row indexes, evaluates
-    * `predicate` over the data columns, encodes the matching positions
-    * as a portable RoaringBitmapArray ([[DeletionVectors
-    * .encodePortable64]] — house encoder, canonical-library-pinned in
-    * the spec), writes `deletion_vector_<uuid>.bin` under the table
-    * root, and appends a commit re-adding the file with `dataChange:
-    * false` and the `u`-storage descriptor. Returns the new version.
-    *
-    * Re-delete on a file that ALREADY carries a DV (r11): the existing
-    * bitmap decodes and UNIONS with the new positions — what real
-    * engines do on a hot file — so the re-added descriptor covers both
-    * generations of deletes; the earlier DV file stays on disk for
-    * time travel.
+    * `predicate` over the data columns and marks the matching
+    * positions through [[markDeleted]] (the one DV write step: the
+    * file's existing DV unions in, `remove` + `add` with its stats and
+    * the new descriptor, both `dataChange: false`). Returns the new
+    * version.
     *
     * Scale shape: the position set is per-FILE (Delta's own DV writer
     * materializes one bitmap per file too) — bounded by one file's
@@ -1407,20 +1449,9 @@ object DeltaLog {
     require(!cdfEnabled || st.columnMappingMode == "none",
       s"deleteWithDv with changeDataFeed on a column-mapped table is " +
         s"not in the stated subset: $table")
-    val existing = target.deletionVector.toSeq
-      .flatMap(dvJson => decodeDvPositions(table, dvJson)).toSet
     // the CDF records NEWLY deleted rows only — a predicate re-matching
     // an already-deleted row deletes nothing (exactly-once feed)
-    val newly = fresh.toSet -- existing
-    val positions = (fresh.toSet ++ existing).toArray.sorted
-    val bitmap = DeletionVectors.encodePortable64(positions)
-    val (dvFile, dvOff, dvSize) = DeletionVectors.dvFileBytes(bitmap)
-    Files.write(Paths.get(table, s"deletion_vector_$uuid.bin"), dvFile)
-    val ub = java.nio.ByteBuffer.allocate(16)
-    ub.putLong(uuid.getMostSignificantBits)
-    ub.putLong(uuid.getLeastSignificantBits)
-    val z85 = DeletionVectors.z85Encode(ub.array())
-    val pvJson = pvJsonOf(target.partitionValues)
+    val (dvLines, newly) = markDeleted(table, target, fresh, dataChange = false, uuid)
     val cdcLine: Option[String] =
       if (!cdfEnabled || newly.isEmpty) None
       else {
@@ -1432,16 +1463,11 @@ object DeltaLog {
         val rel = s"_change_data/cdc-$uuid.parquet"
         LakeWriter.writeParquetFile(deletedRows, Paths.get(table, rel))
         val size = Files.size(Paths.get(table, rel))
-        Some(s"""{"cdc":{"path":"$rel","partitionValues":$pvJson,""" +
+        Some(s"""{"cdc":{"path":"$rel","partitionValues":${pvJsonOf(target.partitionValues)},""" +
           s""""size":$size,"dataChange":false}}""")
       }
-    val commit =
-      s"""{"add":{"path":"$relPath","partitionValues":$pvJson,""" +
-        s""""dataChange":false,"deletionVector":{"storageType":"u",""" +
-        s""""pathOrInlineDv":"$z85","offset":$dvOff,"sizeInBytes":$dvSize,""" +
-        s""""cardinality":${positions.length}}}}"""
     val next = st.version + 1
-    writeCommit(table, st, next, commit +: cdcLine.toSeq)
+    writeCommit(table, st, next, dvLines ++ cdcLine.toSeq)
     next
   }
 }

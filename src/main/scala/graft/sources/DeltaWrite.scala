@@ -24,19 +24,32 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *  - unmatched target rows pass through untouched — files holding no
   *    matched key are NEVER rewritten.
   *
-  * Scale shape: the classic lake MERGE plan — one distributed
-  * semi-join finds the TOUCHED files (driver holds only their paths,
-  * bounded by file count), only those files rewrite (survivors
-  * anti-join + updated rows + inserts, one distributed write), and the
-  * commit itself is metadata. Untouched files stay byte-identical, so
-  * steady-state incremental merges cost O(touched data), not O(table).
+  * Scale shape: one distributed semi-join finds the TOUCHED files, and
+  * the commit itself is metadata. How a touched file changes depends
+  * on the table's own configuration:
+  *  - copy-on-write (the default): the driver holds only the touched
+  *    paths (bounded by file count), and those files rewrite (survivors
+  *    anti-join + updated rows + inserts, one distributed write), so a
+  *    merge costs O(touched files);
+  *  - merge-on-read (`delta.enableDeletionVectors=true`, how
+  *    [[graft.cdc.Pipeline.replicateDelta]] creates replicas): the
+  *    driver holds the matched rows' (file, row index) pairs (bounded
+  *    by the batch), only updated rows and inserts are written, and
+  *    each touched file is re-added with a deletion vector over its
+  *    matched rows ([[DeltaLog.markDeleted]]), so a merge costs
+  *    O(changed rows). Readers drop the marked rows, and
+  *    [[DeltaLog.compact]] folds them away.
+  * Untouched files stay byte-identical either way.
   */
 object DeltaWrite {
 
   /** CREATE a new Delta table at `path` from `df` — v0: data files,
     * the metaData action (schema, partition columns, configuration),
-    * and an optional protocol action when the configuration enables
-    * feature-gated behavior (inCommitTimestamps ⇒ v7 writer feature).
+    * and a protocol action when the configuration enables
+    * feature-gated behavior (deletion vectors ⇒ reader v3 with the
+    * `deletionVectors` reader feature; deletion vectors or
+    * inCommitTimestamps ⇒ writer v7 listing every active writer
+    * feature).
     * Partition column types are bounded to string/int/long (the
     * stated subset: their string form round-trips the
     * `partitionValues` map losslessly). Returns version 0.
@@ -68,12 +81,22 @@ object DeltaWrite {
         s""""partitionColumns":[${partitionColumns.map(c =>
           "\"" + DeltaLog.jsonEscape(c) + "\"").mkString(",")}],""" +
         s""""configuration":$confJson}}"""
+    // a feature-gated table (deletion vectors, in-commit timestamps)
+    // declares writer v7 listing every active writer feature, and DVs
+    // also reader v3; CDF alone keeps the legacy default protocol
+    def on(key: String) = configuration.getOrElse(key, "false") == "true"
+    val dvs = on("delta.enableDeletionVectors")
+    val writerFeatures = Seq(
+      "deletionVectors" -> "delta.enableDeletionVectors",
+      "changeDataFeed" -> "delta.enableChangeDataFeed",
+      "inCommitTimestamp" -> "delta.enableInCommitTimestamps")
+      .collect { case (f, k) if on(k) => "\"" + f + "\"" }
     val proto =
-      if (configuration.getOrElse("delta.enableInCommitTimestamps",
-          "false") == "true")
-        Seq(s"""{"protocol":{"minReaderVersion":1,"minWriterVersion":7,""" +
-          s""""writerFeatures":["inCommitTimestamp"]}}""")
-      else Seq.empty
+      if (!dvs && !on("delta.enableInCommitTimestamps")) Seq.empty
+      else Seq(s"""{"protocol":{"minReaderVersion":${if (dvs) 3 else 1},""" +
+        s""""minWriterVersion":7,""" +
+        (if (dvs) s""""readerFeatures":["deletionVectors"],""" else "") +
+        s""""writerFeatures":[${writerFeatures.mkString(",")}]}}""")
     val adds = addLines(spark, path, st, written, dataChange = true)
     DeltaLog.writeCommit(path, st, 0L, proto ++ Seq(meta) ++ adds, nowMs)
     0L
@@ -106,8 +129,9 @@ object DeltaWrite {
     * records its cdc actions: `update_preimage`/`update_postimage`
     * for every matched key (the staged values count as the update,
     * exactly the real MERGE contract) and `insert` for the new keys;
-    * the rewritten files' add/remove actions stay `dataChange: true`
-    * and the recorded feed overrides their derivation. Returns the
+    * the touched files' add/remove actions (rewrites, or re-adds with a
+    * deletion vector on a DV table) stay `dataChange: true` and the
+    * recorded feed overrides their derivation. Returns the
     * new version — or the CURRENT version when the staged batch
     * matches nothing and inserts nothing (an all-tombstones-for-
     * absent-keys delta is a legitimate CDC outcome, not an error).
@@ -200,13 +224,21 @@ object DeltaWrite {
         s"with latestPerKey before merge: $table")
     val srcKeys = src.select(pk.map(col): _*).distinct()
     val snap = DeltaLog.readInternal(spark, table, st,
-      _ => true, Map.empty, tagRel = true) // cols + __graft_rel
+      _ => true, Map.empty, tagRel = true) // cols + __graft_rel, __graft_pos
+    // merge-on-read when the table's own configuration enables DVs:
+    // matched rows are MARKED in their files instead of rewritten
+    val dvMode = st.configuration.getOrElse(
+      "delta.enableDeletionVectors", "false") == "true"
     // the TOUCHED files: every file holding at least one matched key —
-    // one distributed semi-join, driver collects only file paths
-    val affected = snap.join(srcKeys, pk, "left_semi")
-      .select("__graft_rel").distinct()
-      .collect().map(_.getString(0)).toSet
-    val snapCols = snap.drop("__graft_rel")
+    // one distributed semi-join; the driver collects the file paths
+    // (copy-on-write, bounded by file count) or the matched rows'
+    // (file, row index) pairs (DV mode, bounded by the batch)
+    val hits = snap.join(srcKeys, pk, "left_semi")
+      .select((if (dvMode) Seq("__graft_rel", "__graft_pos")
+        else Seq("__graft_rel")).map(col): _*)
+      .distinct().collect()
+    val affected = hits.map(_.getString(0)).toSet
+    val snapCols = snap.drop("__graft_rel", "__graft_pos")
     val liveKeys = snapCols.select(pk.map(col): _*).distinct()
     val preimages = snapCols.join(srcKeys, pk, "left_semi")
     val postimages = src.join(liveKeys, pk, "left_semi")
@@ -236,19 +268,30 @@ object DeltaWrite {
       DeltaLog.writeCommit(table, st, next, metaLines, nowMs)
       return next
     }
-    val survivors = snap
-      .filter(col("__graft_rel").isInCollection(
-        if (affected.isEmpty) Set("") else affected))
-      .join(srcKeys, pk, "left_anti")
-      .drop("__graft_rel")
     val next = st.version + 1
+    // copy-on-write rewrites each touched file's surviving rows next to
+    // the postimages and inserts; DV mode writes only the new rows and
+    // marks the matched ones through the one DV write step
+    val (kept, fileLines) =
+      if (dvMode) {
+        val byPath = st.files.map(f => f.path -> f).toMap
+        (Seq.empty[DataFrame], hits.groupBy(_.getString(0)).toSeq.sortBy(_._1)
+          .flatMap { case (rel, rows) =>
+            DeltaLog.markDeleted(table, byPath(rel), rows.map(_.getLong(1)),
+              dataChange = true)._1
+          })
+      } else (Seq(snap
+        .filter(col("__graft_rel").isInCollection(
+          if (affected.isEmpty) Set("") else affected))
+        .join(srcKeys, pk, "left_anti")
+        .drop("__graft_rel", "__graft_pos")),
+        affected.toSeq.sorted.map { rel =>
+          s"""{"remove":{"path":"${DeltaLog.jsonEscape(rel)}","dataChange":true}}"""
+        })
     val written = writeDataFiles(spark, table, st,
-      survivors.unionByName(postimages).unionByName(inserts)
+      (kept :+ postimages :+ inserts).reduce(_ unionByName _)
         .select(cols.map(col): _*),
       s"merge-$next")
-    val removes = affected.toSeq.sorted.map { rel =>
-      s"""{"remove":{"path":"${DeltaLog.jsonEscape(rel)}","dataChange":true}}"""
-    }
     val adds = addLines(spark, table, st, written, dataChange = true)
     val cdcLines: Seq[String] =
       if (!cdfEnabled) Seq.empty
@@ -274,7 +317,7 @@ object DeltaWrite {
         }
       }
     DeltaLog.writeCommit(table, st, next,
-      metaLines ++ removes ++ adds ++ cdcLines, nowMs)
+      metaLines ++ fileLines ++ adds ++ cdcLines, nowMs)
     next
   }
 

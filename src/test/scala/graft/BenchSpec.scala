@@ -33,4 +33,14 @@ class BenchSpec extends AnyFunSuite {
       .replace("Filter (k#9 < 10)", "Filter (k#9 < 11)"), "/srv/testdata")
     assert(other != a)
   }
+
+  test("a temp file list cut just after a dot normalizes like any other cut") {
+    def scan(shown: String) = Bench.planNorm(
+      s"+- FileScan parquet [id#1L] Location: InMemoryFileIndex(2 paths)[file:$shown, PartitionFilters: []",
+      "/srv/testdata")
+    val afterDot = scan("/tmp/t1/data/a." + "...")
+    val elsewhere = scan("/tmp/t12/data/a.parq" + "...")
+    assert(afterDot == elsewhere, s"\n$afterDot\n$elsewhere")
+    assert(afterDot.contains("[file:/tmp/X], PartitionFilters"), afterDot)
+  }
 }
