@@ -59,6 +59,19 @@ if awk '/def markDeleted\(/ { h = 1 } h && /^  }$/ { h = 0 }
   exit 1
 fi
 
+# the _delta_log format has one codec, sources/DeltaActions.scala: no
+# Spark JSON replay of the log, no hand-built action line and no regex
+# over a log field anywhere else in graft.sources
+CODEC=src/main/scala/graft/sources/DeltaActions.scala
+if grep -n 'spark\.read\.json' src/main/scala/graft/sources/DeltaLog.scala \
+   || grep -nE '\{\\?"(add|remove|cdc|metaData|protocol|commitInfo)\\?":' \
+        src/main/scala/graft/sources/*.scala | grep -v "^$CODEC:" \
+   || grep -nE '\\\\s\*:|(storageType|pathOrInlineDv|sizeInBytes|cardinality|inCommitTimestamp).*(\.r\b|findFirstMatchIn|Regex)' \
+        src/main/scala/graft/sources/*.scala | grep -v "^$CODEC:"; then
+  echo "[wrap] second _delta_log parser or writer in graft.sources — use DeltaActions"
+  exit 1
+fi
+
 echo "[wrap] sbt Test/compile ..."
 sbt -batch Test/compile
 

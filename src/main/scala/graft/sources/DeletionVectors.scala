@@ -18,9 +18,10 @@ import java.nio.ByteOrder.{BIG_ENDIAN, LITTLE_ENDIAN}
   * Storage forms honored: `u` (z85-encoded UUID →
   * `deletion_vector_<uuid>.bin` under the table root, the production
   * form), `p` (absolute path), `i` (inline: z85 of magic+bitmap).
-  * On-disk DV files: 1-byte version (1); at `offset` a BE i32
-  * dataSize, the data (LE i32 magic 1681511377 + portable bitmap),
-  * then a BE i32 CRC-32 of the data — size, magic, and checksum all
+  * On-disk DV files: 1-byte version (1), then one or more DVs back to
+  * back, each at its descriptor's `offset`: a BE i32 dataSize, the
+  * data (LE i32 magic 1681511377 + portable bitmap), then a BE i32
+  * CRC-32 of the data — size, magic, and checksum all
   * verified loudly (stated interpretation of the wrapper; the BITMAP
   * bytes themselves are pinned against the canonical library).
   *
@@ -271,15 +272,26 @@ object DeletionVectors {
     * (fileBytes, offset, sizeInBytes) for the descriptor.
     */
   def dvFileBytes(bitmapPortable: Array[Byte]): (Array[Byte], Int, Int) = {
-    val data = ByteBuffer.allocate(4 + bitmapPortable.length)
-      .order(LITTLE_ENDIAN).putInt(Magic).put(bitmapPortable).array()
-    val crc = new java.util.zip.CRC32
-    crc.update(data)
-    val out = ByteBuffer.allocate(1 + 4 + data.length + 4)
+    val (file, Seq((offset, size))) = dvFileBytes(Seq(bitmapPortable))
+    (file, offset, size)
+  }
+
+  /** Multi-DV form: one DV file holding every bitmap in turn (version
+    * byte, then per DV its BE size, data and BE CRC-32). Returns the
+    * file bytes and each DV's (offset, sizeInBytes).
+    */
+  def dvFileBytes(bitmaps: Seq[Array[Byte]]): (Array[Byte], Seq[(Int, Int)]) = {
+    val datas = bitmaps.map(b => ByteBuffer.allocate(4 + b.length)
+      .order(LITTLE_ENDIAN).putInt(Magic).put(b).array())
+    val out = ByteBuffer.allocate(1 + datas.map(4 + _.length + 4).sum).order(BIG_ENDIAN)
     out.put(1.toByte)
-    out.order(BIG_ENDIAN).putInt(data.length)
-    out.put(data)
-    out.order(BIG_ENDIAN).putInt(crc.getValue.toInt)
-    (out.array(), 1, data.length)
+    val slots = datas.map { data =>
+      val crc = new java.util.zip.CRC32
+      crc.update(data)
+      val offset = out.position()
+      out.putInt(data.length).put(data).putInt(crc.getValue.toInt)
+      (offset, data.length)
+    }
+    (out.array(), slots)
   }
 }

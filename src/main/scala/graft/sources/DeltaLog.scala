@@ -7,14 +7,19 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, StructType}
 
+import DeltaActions._
+
 /** F14: Delta Lake table reader — open-table-format interop from the
   * PUBLIC Delta transaction-log protocol (delta.io PROTOCOL.md: a table
   * is a directory of parquet data files plus `_delta_log/` holding
   * ordered JSON commit files `%020d.json`, optionally compacted into
   * `%020d.checkpoint.parquet` files). Lakehouse users arrive with Delta
   * tables (the r6 verdict's interop gap); this reads them with zero
-  * extra dependencies — the log is JSON (parsed by Spark's own json
-  * reader) and the checkpoint is parquet.
+  * extra dependencies. Every log line, read or written, goes through
+  * one codec, [[DeltaActions]]: JSON commits decode on the driver (no
+  * Spark job per commit, and a line that does not parse fails the
+  * replay naming its version and line), and a checkpoint is one Spark
+  * read of its parts whose rows decode through the same decoder.
   *
   * Protocol subset honored (the read path):
   *  - `metaData`: schemaString (Spark JSON schema) + partitionColumns;
@@ -27,8 +32,7 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *  - checkpoint: a parquet file of the same actions pre-folded;
   *    replay starts from the newest checkpoint ≤ the requested version
   *    and applies only later JSON commits (how real readers bound log
-  *    replay). Tombstones in the checkpoint fold as removes — a no-op
-  *    on the live set, kept only for protocol fidelity.
+  *    replay). Its adds are the live set, so tombstones are not read.
   *  - `versionAsOf`: time travel by stopping the replay early.
   *
   * Scale shape: the log (file METADATA) is driver-side — bounded by
@@ -42,22 +46,6 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * partition index.
   */
 object DeltaLog {
-
-  /** JSON string-body escape for hand-built commit lines: backslash and
-    * double-quote (the two structural escapes), plus control chars as
-    * `\u00XX` — a partition VALUE holding a quote must not corrupt the
-    * `_delta_log` line it rides in.
-    */
-  private[sources] def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '\\' => sb.append("\\\\")
-      case '"' => sb.append("\\\"")
-      case c if c < ' ' => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.toString
-  }
 
   /** List a staging dir's parquet part files with the directory stream
     * CLOSED (an unclosed `Files.list`/`Files.walk` leaks a handle per
@@ -81,11 +69,6 @@ object DeltaLog {
     all.sortBy(-_.getNameCount).foreach(Files.deleteIfExists(_))
   }
 
-  private[sources] def pvJsonOf(pvals: Map[String, String]): String =
-    pvals.toSeq.sortBy(_._1).map { case (k, v) =>
-      s""""${jsonEscape(k)}":${if (v == null) "null" else "\"" + jsonEscape(v) + "\""}"""
-    }.mkString("{", ",", "}")
-
   /** The `add.stats` JSON of one new file: numRecords, plus
     * `minValues`/`maxValues` over `longCols` (non-null bounds only)
     * when `withBounds`; a file the stats scan did not see records 0.
@@ -108,14 +91,16 @@ object DeltaLog {
     */
   final case class LiveFile(path: String, partitionValues: Map[String, String],
                             stats: Option[String] = None,
-                            deletionVector: Option[String] = None)
+                            deletionVector: Option[Dv] = None)
 
   /** Replayed table state at a version. `configuration` is the last
     * metaData action's table configuration (columnMapping mode lives
     * there); `minReaderVersion`/`readerFeatures` are the last protocol
     * action's reader requirements (validated in [[state]] — a reader
     * MUST refuse a table whose protocol it does not fully understand
-    * rather than silently misread it).
+    * rather than silently misread it). `metaDataId` is the last
+    * metaData action's table id, which every rewrite of the metaData
+    * keeps (PROTOCOL.md: the id is stable for the table's life).
     */
   final case class State(version: Long, schema: StructType,
                          partitionColumns: Seq[String], files: Seq[LiveFile],
@@ -123,9 +108,12 @@ object DeltaLog {
                          minReaderVersion: Int = 1,
                          readerFeatures: Seq[String] = Seq.empty,
                          minWriterVersion: Int = 1,
-                         writerFeatures: Seq[String] = Seq.empty) {
+                         writerFeatures: Seq[String] = Seq.empty,
+                         metaDataId: String = "") {
     def columnMappingMode: String =
       configuration.getOrElse("delta.columnMapping.mode", "none")
+    private[sources] def metaData: MetaData =
+      MetaData(metaDataId, schema.json, partitionColumns, configuration)
   }
 
   /** Reader features this subset actually implements — the allowlist the
@@ -255,92 +243,6 @@ object DeltaLog {
         s"delta.appendOnly=true forbids $op (it deletes data rows): $table")
   }
 
-  /** Fold one batch of action rows (a JSON commit or a checkpoint) into
-    * the live-file map + metadata slot. JSON infers `partitionValues`
-    * as a struct, checkpoints may store a map — `from_json(to_json(…))`
-    * canonicalizes both to map&lt;string,string&gt;.
-    */
-  private def fold(df: DataFrame,
-                   live: collection.mutable.LinkedHashMap[String, (Map[String, String], Option[String], Option[String])],
-                   meta: Array[Option[(StructType, Seq[String], Map[String, String])]],
-                   proto: Array[Option[(Int, Seq[String], Int, Seq[String])]]): Unit = {
-    val roots = df.columns.toSet
-    def sub(root: String, path: String) =
-      if (roots.contains(root)) expr(path) else lit(null).cast("string")
-    val addFields =
-      if (roots.contains("add"))
-        df.select("add.*").columns.toSet else Set.empty[String]
-    val metaFields =
-      if (roots.contains("metaData"))
-        df.select("metaData.*").columns.toSet else Set.empty[String]
-    val protoFields =
-      if (roots.contains("protocol"))
-        df.select("protocol.*").columns.toSet else Set.empty[String]
-    // an unpartitioned table writes `"partitionValues":{}` — Spark's
-    // JSON inference prunes the empty struct, so guard on the field
-    val pv =
-      if (addFields.contains("partitionValues"))
-        expr("from_json(to_json(add.partitionValues), 'map<string,string>')")
-      else lit(null).cast("map<string,string>")
-    val pc =
-      if (roots.contains("metaData"))
-        expr("metaData.partitionColumns")
-      else lit(null).cast("array<string>")
-    val stats =
-      if (addFields.contains("stats")) expr("add.stats")
-      else lit(null).cast("string")
-    val dv =
-      if (addFields.contains("deletionVector"))
-        expr("to_json(add.deletionVector)")
-      else lit(null).cast("string")
-    val conf =
-      if (metaFields.contains("configuration"))
-        expr("from_json(to_json(metaData.configuration), 'map<string,string>')")
-      else lit(null).cast("map<string,string>")
-    val mrv =
-      if (protoFields.contains("minReaderVersion"))
-        expr("protocol.minReaderVersion").cast("int")
-      else lit(null).cast("int")
-    val rfeat =
-      if (protoFields.contains("readerFeatures"))
-        expr("protocol.readerFeatures").cast("array<string>")
-      else lit(null).cast("array<string>")
-    val mwv =
-      if (protoFields.contains("minWriterVersion"))
-        expr("protocol.minWriterVersion").cast("int")
-      else lit(null).cast("int")
-    val wfeat =
-      if (protoFields.contains("writerFeatures"))
-        expr("protocol.writerFeatures").cast("array<string>")
-      else lit(null).cast("array<string>")
-    df.select(sub("add", "add.path"), pv, sub("remove", "remove.path"),
-        sub("metaData", "metaData.schemaString"), pc, stats, dv,
-        conf, mrv, rfeat, mwv, wfeat)
-      .collect().foreach { r =>
-        if (!r.isNullAt(3)) {
-          val sch = DataType.fromJson(r.getString(3)).asInstanceOf[StructType]
-          val cols = if (r.isNullAt(4)) Seq.empty[String] else r.getSeq[String](4)
-          val cfg = if (r.isNullAt(7)) Map.empty[String, String]
-                    else r.getMap[String, String](7).toMap
-          meta(0) = Some((sch, cols, cfg))
-        }
-        if (!r.isNullAt(8)) {
-          val feats = if (r.isNullAt(9)) Seq.empty[String] else r.getSeq[String](9)
-          val mwv0 = if (r.isNullAt(10)) 1 else r.getInt(10)
-          val wfeats = if (r.isNullAt(11)) Seq.empty[String] else r.getSeq[String](11)
-          proto(0) = Some((r.getInt(8), feats, mwv0, wfeats))
-        }
-        if (!r.isNullAt(2)) live.remove(r.getString(2))
-        if (!r.isNullAt(0)) {
-          val m = if (r.isNullAt(1)) Map.empty[String, String]
-                  else r.getMap[String, String](1).toMap
-          live.put(r.getString(0), (m,
-            if (r.isNullAt(5)) None else Some(r.getString(5)),
-            if (r.isNullAt(6)) None else Some(r.getString(6))))
-        }
-      }
-  }
-
   /** Replay the log to `versionAsOf` (or the latest commit).
     *
     * Checkpoint handling (r8, the reject-loudly posture of the Iceberg
@@ -356,7 +258,6 @@ object DeltaLog {
     */
   def state(spark: SparkSession, table: String,
             versionAsOf: Option[Long] = None): State = {
-    import spark.implicits._
     val dir = Paths.get(table, "_delta_log")
     require(Files.isDirectory(dir), s"not a delta table: $table")
     val entries = {
@@ -364,8 +265,7 @@ object DeltaLog {
       try st.iterator().asScala.map(_.getFileName.toString).toSeq.sorted
       finally st.close()
     }
-    val commits = entries.filter(_.matches("\\d{20}\\.json"))
-      .map(n => n.take(20).toLong -> n)
+    val commits = entries.filter(_.matches("\\d{20}\\.json")).map(_.take(20).toLong)
     val singleCkpts = entries.filter(_.matches("\\d{20}\\.checkpoint\\.parquet"))
       .map(n => n.take(20).toLong -> Seq(n))
     // multi-part: V.checkpoint.P.N.parquet — usable only when all N
@@ -385,23 +285,23 @@ object DeltaLog {
     // see it, replay would silently start too early, so fail loudly.
     val lastCkptFile = dir.resolve("_last_checkpoint")
     if (Files.exists(lastCkptFile)) {
-      val txt = Files.readString(lastCkptFile)
-      val v = "\"version\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(txt)
-        .map(_.group(1).toLong).getOrElse(throw new IllegalArgumentException(
-          s"unparseable _last_checkpoint: $table"))
+      val v = try readLastCheckpoint(Files.readString(lastCkptFile)) catch {
+        case e: Exception => throw new IllegalArgumentException(
+          s"unparseable _last_checkpoint: $table", e)
+      }
       require(checkpoints.exists(_._1 == v),
         s"_last_checkpoint points at version $v but no usable checkpoint " +
           s"files exist for it: $table")
     }
     val upTo = versionAsOf.getOrElse(
-      (commits.map(_._1) ++ checkpoints.map(_._1)).maxOption.getOrElse(
+      (commits ++ checkpoints.map(_._1)).maxOption.getOrElse(
         throw new IllegalArgumentException(s"empty delta log: $table")))
     // A table's state at a version is IMMUTABLE once committed (commit
     // jsons are write-once, the delta atomic-rename contract), so
     // replaying the same log prefix again in one process is pure
-    // recompute — r14 measured the CDF streaming source paying ~25
-    // spark.read.json jobs PER MICRO-BATCH in repeated replays. Memoize
-    // by (table, version, log listing WITH per-file size+mtime,
+    // recompute — a checkpoint still costs a Spark read, and the CDF
+    // streaming source replays the same prefixes every micro-batch.
+    // Memoize by (table, version, log listing WITH per-file size+mtime,
     // _last_checkpoint content): any trim / new checkpoint / new commit
     // — or an in-place edit — changes the key, so the reject-loudly
     // validations re-run exactly when the log changed. The production
@@ -413,41 +313,42 @@ object DeltaLog {
       (if (Files.exists(lastCkptFile)) Files.readString(lastCkptFile) else "")
     val cached = stateMemo.get(memoKey)
     if (cached != null) return cached
-    val live = collection.mutable.LinkedHashMap[String, (Map[String, String], Option[String], Option[String])]()
-    val meta = Array[Option[(StructType, Seq[String], Map[String, String])]](None)
-    val proto = Array[Option[(Int, Seq[String], Int, Seq[String])]](None)
+    val live = collection.mutable.LinkedHashMap[String, LiveFile]()
+    var meta = Option.empty[MetaData]
+    var proto = Protocol(1, 1)
+    def replay(actions: Seq[Action]): Unit = actions.foreach {
+      case m: MetaData => meta = Some(m)
+      case p: Protocol => proto = p
+      case r: Remove => live.remove(r.path)
+      case a: Add =>
+        live.put(a.path, LiveFile(a.path, a.partitionValues, a.stats, a.deletionVector))
+      case _ =>
+    }
     val ckpt = checkpoints.filter(_._1 <= upTo).maxByOption(_._1)
     ckpt.foreach { case (_, parts) =>
-      fold(spark.read.parquet(parts.map(n => dir.resolve(n).toString): _*),
-        live, meta, proto)
+      replay(readCheckpoint(spark, table, parts.map(dir.resolve)))
     }
     val fromV = ckpt.map(_._1 + 1).getOrElse(0L)
-    val haveV = commits.map(_._1).toSet
+    val haveV = commits.toSet
     val missing = (fromV to upTo).filterNot(haveV.contains)
     require(missing.isEmpty,
       s"delta log not contiguous: versions ${missing.take(5).mkString(",")}" +
         s"${if (missing.size > 5) ",..." else ""} missing between " +
         s"checkpoint $fromV and $upTo (retention-trimmed log with an " +
         s"unrecognized checkpoint?): $table")
-    commits.filter { case (v, _) => v >= fromV && v <= upTo }
-      .sortBy(_._1)
-      .foreach { case (_, name) =>
-        val lines = Files.readAllLines(dir.resolve(name)).asScala.toSeq
-          .filter(_.nonEmpty)
-        if (lines.nonEmpty) fold(spark.read.json(lines.toDS), live, meta, proto)
-      }
-    val (schema, partCols, config) = meta(0).getOrElse(
+    (fromV to upTo).foreach(v => replay(readCommit(table, v)))
+    val md = meta.getOrElse(
       throw new IllegalArgumentException(s"no metaData action in log: $table"))
+    val config = md.configuration
     // PROTOCOL GUARD: refuse a table whose reader requirements this
     // subset does not fully implement — silently misreading a
     // column-mapped or feature-gated table is the one failure mode the
     // protocol action exists to prevent.
-    val (mrv, feats, mwv, wfeats) =
-      proto(0).getOrElse((1, Seq.empty[String], 1, Seq.empty[String]))
+    val mrv = proto.minReaderVersion
     require(mrv <= 3,
       s"delta protocol minReaderVersion=$mrv exceeds 3 (the newest this " +
         s"reader implements): $table")
-    val unknown = feats.filterNot(SupportedReaderFeatures.contains)
+    val unknown = proto.readerFeatures.filterNot(SupportedReaderFeatures.contains)
     require(unknown.isEmpty,
       s"delta readerFeatures ${unknown.mkString(",")} not implemented by " +
         s"this reader (supported: ${SupportedReaderFeatures.toSeq.sorted.mkString(",")}): $table")
@@ -455,9 +356,9 @@ object DeltaLog {
     require(cmMode == "none" || cmMode == "name",
       s"delta.columnMapping.mode=$cmMode not supported (this reader " +
         s"implements none|name; id-mode needs parquet field-id matching): $table")
-    val out = State(upTo, schema, partCols,
-      live.toSeq.map { case (p, (m, st, dv)) => LiveFile(p, m, st, dv) },
-      config, mrv, feats, mwv, wfeats)
+    val out = State(upTo, md.schema, md.partitionColumns, live.values.toSeq,
+      config, mrv, proto.readerFeatures, proto.minWriterVersion,
+      proto.writerFeatures, md.id)
     stateMemo.put(memoKey, out)
     out
   }
@@ -637,13 +538,10 @@ object DeltaLog {
     * with only the descriptors on the driver.
     */
   private def minusDvs(spark: SparkSession, table: String, df: DataFrame,
-                       dvs: Seq[(String, String)]): DataFrame = {
+                       dvs: Seq[(String, Dv)]): DataFrame = {
     if (dvs.isEmpty) return df
     val rel = relOf(table)
-    val marked = dvs.map { case (_, d) =>
-      BigInt("\"cardinality\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(d)
-        .map(_.group(1)).getOrElse(Long.MaxValue.toString))
-    }.sum
+    val marked = dvs.map { case (_, d) => BigInt(d.cardinality) }.sum
     if (marked <= graft.operators.Wave.rowCap(spark)) {
       val keep = dvs.map { case (path, d) => path -> decodeDvPositions(table, d) }
         .filter(_._2.nonEmpty)
@@ -668,32 +566,18 @@ object DeltaLog {
     * `deletion_vector_<uuid>.bin` under the table root, an optional
     * random prefix honored), `p` (absolute path), `i` (inline).
     */
-  private[sources] def decodeDvPositions(table: String,
-                                         dvJson: String): Array[Long] = {
-    def field(name: String): Option[String] =
-      ("\"" + name + "\"\\s*:\\s*\"([^\"]*)\"").r
-        .findFirstMatchIn(dvJson).map(_.group(1))
-    def num(name: String): Option[Long] =
-      ("\"" + name + "\"\\s*:\\s*(-?\\d+)").r
-        .findFirstMatchIn(dvJson).map(_.group(1).toLong)
-    val storage = field("storageType").getOrElse(
-      throw new IllegalArgumentException(s"deletionVector missing storageType: $dvJson"))
-    val payload = field("pathOrInlineDv").getOrElse(
-      throw new IllegalArgumentException(s"deletionVector missing pathOrInlineDv: $dvJson"))
-    val size = num("sizeInBytes").getOrElse(
-      throw new IllegalArgumentException(s"deletionVector missing sizeInBytes: $dvJson")).toInt
-    storage match {
+  private[sources] def decodeDvPositions(table: String, dv: Dv): Array[Long] =
+    dv.storageType match {
       case "i" =>
-        val data = DeletionVectors.z85Decode(payload)
-        require(data.length >= size, s"inline DV shorter than sizeInBytes")
-        DeletionVectors.decodeData(java.util.Arrays.copyOf(data, size))
+        val data = DeletionVectors.z85Decode(dv.pathOrInlineDv)
+        require(data.length >= dv.sizeInBytes, s"inline DV shorter than sizeInBytes")
+        DeletionVectors.decodeData(java.util.Arrays.copyOf(data, dv.sizeInBytes))
       case "u" | "p" =>
-        val bytes = Files.readAllBytes(dvBinPath(table, dvJson).get)
-        DeletionVectors.decodeAt(bytes, num("offset").getOrElse(1L).toInt, size)
+        val bytes = Files.readAllBytes(dvBinPath(table, dv).get)
+        DeletionVectors.decodeAt(bytes, dv.offset.getOrElse(1), dv.sizeInBytes)
       case other =>
         throw new IllegalArgumentException(s"deletionVector storageType '$other' unsupported")
     }
-  }
 
   /** Write a classic single-part CHECKPOINT of the CURRENT state (r10
     * — the write half of the r8 checkpoint reader): one
@@ -721,46 +605,9 @@ object DeltaLog {
   def writeCheckpoint(spark: SparkSession, table: String, parts: Int): Long = {
     require(parts >= 1, s"parts must be >= 1, got $parts")
     import org.apache.spark.sql.Row
-    import org.apache.spark.sql.types._
     val st = state(spark, table)
     writerGuard(st, table, "checkpoint")
-    val dvType = StructType(Seq(
-      StructField("storageType", StringType),
-      StructField("pathOrInlineDv", StringType),
-      StructField("offset", LongType),
-      StructField("sizeInBytes", LongType),
-      StructField("cardinality", LongType)))
-    val addType = StructType(Seq(
-      StructField("path", StringType),
-      StructField("partitionValues", MapType(StringType, StringType)),
-      StructField("dataChange", BooleanType),
-      StructField("stats", StringType),
-      StructField("deletionVector", dvType)))
-    val metaType = StructType(Seq(
-      StructField("id", StringType),
-      StructField("schemaString", StringType),
-      StructField("partitionColumns", ArrayType(StringType)),
-      StructField("configuration", MapType(StringType, StringType))))
-    val protoType = StructType(Seq(
-      StructField("minReaderVersion", IntegerType),
-      StructField("readerFeatures", ArrayType(StringType)),
-      StructField("minWriterVersion", IntegerType),
-      StructField("writerFeatures", ArrayType(StringType))))
-    val ckSchema = StructType(Seq(
-      StructField("metaData", metaType, nullable = true),
-      StructField("protocol", protoType, nullable = true),
-      StructField("add", addType, nullable = true)))
-    def dvStruct(json: Option[String]): Row = json match {
-      case None => null
-      case Some(j) =>
-        def f(n: String) = ("\"" + n + "\"\\s*:\\s*\"([^\"]*)\"").r
-          .findFirstMatchIn(j).map(_.group(1)).orNull
-        def num(n: String) = ("\"" + n + "\"\\s*:\\s*(-?\\d+)").r
-          .findFirstMatchIn(j).map(_.group(1).toLong)
-          .map(java.lang.Long.valueOf).orNull
-        Row(f("storageType"), f("pathOrInlineDv"),
-          num("offset"), num("sizeInBytes"), num("cardinality"))
-    }
+    val md = st.metaData
     // the checkpoint must carry the FULL protocol action — dropping the
     // writer half would let a post-checkpoint replay under-guard writes
     val protoRow: Option[Row] =
@@ -772,14 +619,15 @@ object DeltaLog {
           if (st.writerFeatures.isEmpty) null else st.writerFeatures), null))
       else None
     val rows =
-      (Row(Row("graft-ck", st.schema.json, st.partitionColumns,
-        st.configuration), null, null) +: protoRow.toSeq) ++
+      (Row(Row(md.id, md.schemaString, md.partitionColumns, md.configuration),
+        null, null) +: protoRow.toSeq) ++
         st.files.map(f => Row(null, null,
           Row(f.path, f.partitionValues, true, f.stats.orNull,
-            dvStruct(f.deletionVector))))
+            f.deletionVector.map(d => Row(d.storageType, d.pathOrInlineDv,
+              d.offset.map(o => o.toLong: Any).orNull, d.sizeInBytes.toLong, d.cardinality)).orNull)))
     def writeOne(slice: Seq[Row], target: java.nio.file.Path): Unit =
       LakeWriter.writeParquetFile(spark.createDataFrame(
-        spark.sparkContext.parallelize(slice, 1), ckSchema), target,
+        spark.sparkContext.parallelize(slice, 1), CheckpointSchema), target,
         replace = true)
     val logDir = Paths.get(table, "_delta_log")
     if (parts == 1)
@@ -793,8 +641,7 @@ object DeltaLog {
           f"${st.version}%020d.checkpoint.$p%010d.$parts%010d.parquet"))
       }
     LakeWriter.replaceAtomic(logDir.resolve("_last_checkpoint"),
-      if (parts == 1) s"""{"version":${st.version},"size":${rows.size}}"""
-      else s"""{"version":${st.version},"size":${rows.size},"parts":$parts}""")
+      LastCheckpoint(st.version, rows.size, Some(parts).filter(_ > 1)).json)
     st.version
   }
 
@@ -842,8 +689,8 @@ object DeltaLog {
     require(groups.nonEmpty,
       "nothing to compact: every partition group is a single DV-free file")
     val next = st.version + 1
-    val removes = Seq.newBuilder[String]
-    val newRels = Seq.newBuilder[(String, String)] // (relPath, pvJson)
+    val removes = Seq.newBuilder[Action]
+    val newRels = Seq.newBuilder[(String, Map[String, String])]
     groups.zipWithIndex.foreach { case ((pvals, files), gi) =>
       val base0 = spark.read.schema(dataSchema)
         .parquet(files.map(f => Paths.get(table, f.path).toString): _*)
@@ -854,13 +701,11 @@ object DeltaLog {
             col("_metadata.file_path").as("__fp") :+
             col("_metadata.row_index").as("__pos"): _*), dvs)
           .select(dataSchema.fieldNames.map(col).toSeq: _*)
-      val pvJson = pvJsonOf(pvals)
       newRels ++= LakeWriter.writeParquet(df.coalesce(1),
         maxRecordsPerFile = maxRecordsPerFile)(
         (_, k) => Paths.get(table, s"compact-$next-$gi-$k.parquet"))
-        .map { case (p, _) => (p.getFileName.toString, pvJson) }
-      files.foreach(f =>
-        removes += s"""{"remove":{"path":"${f.path}","dataChange":false}}""")
+        .map { case (p, _) => (p.getFileName.toString, pvals) }
+      files.foreach(f => removes += Remove(f.path, dataChange = false))
     }
     // per-new-file stats (numRecords + long min/max) in ONE grouped scan
     val rels = newRels.result()
@@ -868,12 +713,11 @@ object DeltaLog {
       .filter(_.dataType == LongType).map(_.name).toSeq
     val stats = LakeWriter.fileStats(spark,
       rels.map(r => Paths.get(table, r._1).toString), longCols, Some(dataSchema))
-    val adds = rels.map { case (rel, pvJson) =>
-      val statsLine = statsJson(stats.get(rel), longCols, withBounds = true)
-      s"""{"add":{"path":"$rel","partitionValues":$pvJson,""" +
-        s""""dataChange":false,"stats":"${jsonEscape(statsLine)}"}}"""
+    val adds = rels.map { case (rel, pvals) =>
+      Add(rel, pvals, dataChange = false,
+        Some(statsJson(stats.get(rel), longCols, withBounds = true)))
     }
-    writeCommit(table, st, next, removes.result() ++ adds)
+    writeCommit(table, st, next, (removes.result() ++ adds).map(_.json))
     next
   }
 
@@ -936,12 +780,10 @@ object DeltaLog {
       // unreadable anyway, so their cdc files are fair game. A retained
       // version whose json was checkpoint-trimmed has no cdc to keep.
       (fromV to cur)
-        .filter(v => Files.exists(
-          Paths.get(table, "_delta_log", f"$v%020d.json")))
-        .flatMap { v =>
-          commitActions(table, v).filter(_.kind == "cdc")
-            .map(a => Paths.get(table, a.path).toAbsolutePath.normalize)
-        }
+        .filter(v => Files.exists(commitFile(table, v)))
+        .flatMap(v => readCommit(table, v).collect {
+          case c: Cdc => Paths.get(table, c.path).toAbsolutePath.normalize
+        })
     val root = Paths.get(table).toAbsolutePath.normalize
     val walk = Files.walk(root)
     val all = try walk.iterator().asScala
@@ -1004,21 +846,14 @@ object DeltaLog {
       "delta.enableInCommitTimestamps", "false") == "true"
 
   /** The `commitInfo.inCommitTimestamp` of commit `v`, if the commit
-    * recorded one — driver-side regex over one json commit
-    * (metadata-sized); None for legacy commits and trimmed logs.
+    * recorded one — one decoded json commit (metadata-sized); None for
+    * legacy commits and trimmed logs.
     */
-  private[graft] def ictOf(table: String, v: Long): Option[Long] = {
-    val p = Paths.get(table, "_delta_log", f"$v%020d.json")
-    if (!Files.exists(p)) None
-    else {
-      val txt = Files.readString(p)
-      if (!txt.contains("\"commitInfo\"")) None
-      else "\"inCommitTimestamp\"\\s*:\\s*(\\d+)".r
-        .findFirstMatchIn(txt).map(_.group(1).toLong)
-    }
-  }
+  private[graft] def ictOf(table: String, v: Long): Option[Long] =
+    if (!Files.exists(commitFile(table, v))) None
+    else readCommit(table, v).collectFirst { case CommitInfo(Some(ts)) => ts }
 
-  /** Write commit `next`'s json, stamping a `commitInfo` action with
+  /** Write commit `next`'s json from its encoded action lines, stamping a `commitInfo` action with
     * `inCommitTimestamp` when the feature is enabled (r13, task 4:
     * mtimes don't survive log copy/restore; the in-commit form is the
     * durable one). The stamp is forced monotonic past the previous
@@ -1034,11 +869,9 @@ object DeltaLog {
         val prev = if (next == 0L) None else ictOf(table, next - 1)
         val base = if (nowMs >= 0) nowMs else System.currentTimeMillis()
         val ts = math.max(base, prev.map(_ + 1).getOrElse(Long.MinValue))
-        s"""{"commitInfo":{"inCommitTimestamp":$ts}}""" +: lines
+        CommitInfo(Some(ts)).json +: lines
       }
-    LakeWriter.publishNew(
-      Paths.get(table, "_delta_log", f"$next%020d.json"),
-      all.mkString("\n"))
+    LakeWriter.publishNew(commitFile(table, next), all.mkString("\n"))
   }
 
   /** TIME TRAVEL BY TIMESTAMP (r12, the r11 verdict's #3 gap: "users
@@ -1094,23 +927,17 @@ object DeltaLog {
     * [[restore]]'s exists-before-re-add check so all agree on
     * resolution.
     */
-  private[sources] def dvBinPath(table: String,
-                                 dvJson: String): Option[java.nio.file.Path] = {
-    def fld(n: String) = ("\"" + n + "\"\\s*:\\s*\"([^\"]*)\"").r
-      .findFirstMatchIn(dvJson).map(_.group(1))
-    fld("storageType") match {
-      case Some("u") => fld("pathOrInlineDv").map { payload =>
-        val (prefix, uuidPart) = payload.splitAt(payload.length - 20)
+  private[sources] def dvBinPath(table: String, dv: Dv): Option[java.nio.file.Path] =
+    dv.storageType match {
+      case "u" =>
+        val (prefix, uuidPart) = dv.pathOrInlineDv.splitAt(dv.pathOrInlineDv.length - 20)
         val uuid = DeletionVectors.z85Uuid(uuidPart)
         val rel = (if (prefix.nonEmpty) prefix.stripSuffix("/") + "/" else "") +
           s"deletion_vector_$uuid.bin"
-        Paths.get(table, rel).toAbsolutePath.normalize
-      }
-      case Some("p") =>
-        fld("pathOrInlineDv").map(Paths.get(_).toAbsolutePath.normalize)
+        Some(Paths.get(table, rel).toAbsolutePath.normalize)
+      case "p" => Some(Paths.get(dv.pathOrInlineDv).toAbsolutePath.normalize)
       case _ => None // inline: nothing on disk
     }
-  }
 
   def restore(spark: SparkSession, table: String, toVersion: Long): Long = {
     val cur = state(spark, table)
@@ -1136,18 +963,11 @@ object DeltaLog {
         require(Files.exists(dv),
           s"cannot restore v$toVersion: DV $dv no longer exists (vacuumed?)"))
     }
-    val lines =
-      removes.map(f =>
-        s"""{"remove":{"path":"${jsonEscape(f.path)}","dataChange":true}}""") ++
-      adds.map { f =>
-        val stats = f.stats.map(s =>
-          s""","stats":"${jsonEscape(s)}"""").getOrElse("")
-        val dv = f.deletionVector.map(d =>
-          s""","deletionVector":$d""").getOrElse("")
-        s"""{"add":{"path":"${jsonEscape(f.path)}","partitionValues":${pvJsonOf(f.partitionValues)},"dataChange":true$stats$dv}}"""
-      }
     val next = cur.version + 1
-    writeCommit(table, cur, next, lines)
+    writeCommit(table, cur, next,
+      (removes.map(f => Remove(f.path, dataChange = true)) ++ adds.map(f =>
+        Add(f.path, f.partitionValues, dataChange = true, f.stats, f.deletionVector)))
+        .map(_.json))
     next
   }
 
@@ -1166,50 +986,6 @@ object DeltaLog {
       tableChanges(spark, table, v, v + 1)
         .withColumn("_commit_version", lit(v + 1))
     }.reduce(_ unionByName _)
-  }
-
-  /** One parsed file action of a single commit (F14n). */
-  private final case class CommitAction(kind: String, path: String,
-                                        pv: Map[String, String],
-                                        dataChange: Boolean,
-                                        dv: Option[String])
-
-  /** The file actions of commit `v` — driver-side parse of ONE json
-    * commit (metadata-sized by contract).
-    */
-  private def commitActions(table: String, v: Long): Seq[CommitAction] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-    val p = Paths.get(table, "_delta_log", f"$v%020d.json")
-    require(Files.exists(p), s"commit v$v missing: $table")
-    Files.readAllLines(p).asScala.filter(_.nonEmpty).toSeq.flatMap { line =>
-      val j = JsonMethods.parse(line)
-      Seq("cdc", "add", "remove").flatMap { k =>
-        (j \ k) match {
-          case JNothing => None
-          case a =>
-            val path = (a \ "path") match {
-              case JString(s) => s
-              case _ => throw new IllegalArgumentException(
-                s"$k action without path in v$v: $table")
-            }
-            val pv = (a \ "partitionValues") match {
-              case JObject(fs) =>
-                fs.collect { case (n, JString(s)) => n -> s }.toMap
-              case _ => Map.empty[String, String]
-            }
-            val dc = (a \ "dataChange") match {
-              case JBool(b) => b
-              case _ => true
-            }
-            val dvj = (a \ "deletionVector") match {
-              case JNothing => None
-              case d => Some(JsonMethods.compact(JsonMethods.render(d)))
-            }
-            Some(CommitAction(k, path, pv, dc, dvj))
-        }
-      }
-    }
   }
 
   /** F14n (r12): the RECORDED change feed — per-commit changes exactly
@@ -1270,27 +1046,27 @@ object DeltaLog {
       }
     def ordered(df: DataFrame): DataFrame =
       df.select((st.schema.fieldNames.toSeq :+ "_change_type").map(col): _*)
-    def minusDv(df: DataFrame, path: String, dvJson: Option[String]): DataFrame =
-      minusDvs(spark, table, df, dvJson.map(path -> _).toSeq).drop("__fp", "__pos")
+    def minusDv(df: DataFrame, path: String, dv: Option[Dv]): DataFrame =
+      minusDvs(spark, table, df, dv.map(path -> _).toSeq).drop("__fp", "__pos")
     val perVersion = (math.max(fromV + 1, 0L) to toV).flatMap { v =>
-      val acts = commitActions(table, v)
-      val cdc = acts.filter(_.kind == "cdc")
-      val adds = acts.filter(a => a.kind == "add" && a.dataChange)
-      val removes = acts.filter(a => a.kind == "remove" && a.dataChange)
+      val acts = readCommit(table, v)
+      val cdc = acts.collect { case c: Cdc => c }
+      val adds = acts.collect { case a: Add if a.dataChange => a }
+      val removes = acts.collect { case r: Remove if r.dataChange => r }
       val changes: Option[DataFrame] =
         if (cdc.nonEmpty) Some(cdc.map { a =>
           val df = spark.read.schema(cdcSchema)
             .parquet(Paths.get(table, a.path).toString)
-          ordered(attachPv(toLogical(df, Seq("_change_type")), a.pv))
+          ordered(attachPv(toLogical(df, Seq("_change_type")), a.partitionValues))
         }.reduce(_ unionAll _))
         else if (adds.nonEmpty && removes.isEmpty) {
-          require(adds.forall(_.dv.isEmpty),
+          require(adds.forall(_.deletionVector.isEmpty),
             s"add-only commit v$v carries a deletion vector: the CDF " +
               s"derivation for that shape is not in the stated subset: $table")
           Some(adds.map { a =>
             val df = spark.read.schema(dataSchema)
               .parquet(Paths.get(table, a.path).toString)
-            ordered(attachPv(toLogical(df, Nil), a.pv)
+            ordered(attachPv(toLogical(df, Nil), a.partitionValues)
               .withColumn("_change_type", lit("insert")))
           }.reduce(_ unionAll _))
         } else if (removes.nonEmpty && adds.isEmpty) {
@@ -1301,8 +1077,9 @@ object DeltaLog {
             // remove actions routinely OMIT partitionValues (this
             // repo's own compact/restore removes do) — the prior
             // version's live entry is the authoritative source (r13;
-            // a.pv is the fallback for foreign logs that carry it)
-            val pv = priorFile.map(_.partitionValues).getOrElse(a.pv)
+            // the remove's own values are the fallback for foreign logs
+            // that carry them)
+            val pv = priorFile.map(_.partitionValues).getOrElse(a.partitionValues)
             val df = spark.read.schema(dataSchema)
               .parquet(Paths.get(table, a.path).toString)
               .select(col("_metadata.file_path").as("__fp"),
@@ -1317,18 +1094,19 @@ object DeltaLog {
           // exactly from the DV position delta instead of yielding a
           // silently empty feed (r13). No growth (metadata-only bump,
           // pure re-delete) = genuinely empty, not an error.
-          val dvAdds = acts.filter(a =>
-            a.kind == "add" && !a.dataChange && a.dv.isDefined)
+          val dvAdds = acts.collect {
+            case a: Add if !a.dataChange && a.deletionVector.isDefined => a
+          }
           lazy val prior = state(spark, table, Some(v - 1))
           val grown = dvAdds.flatMap { a =>
             val priorFile = prior.files.find(_.path == a.path)
-            val newPos = decodeDvPositions(table, a.dv.get).toSet
+            val newPos = decodeDvPositions(table, a.deletionVector.get).toSet
             val oldPos = priorFile.flatMap(_.deletionVector)
               .map(d => decodeDvPositions(table, d).toSet)
               .getOrElse(Set.empty[Long])
             val delta = newPos -- oldPos
             if (delta.isEmpty) None
-            else Some((a, priorFile.map(_.partitionValues).getOrElse(a.pv),
+            else Some((a, priorFile.map(_.partitionValues).getOrElse(a.partitionValues),
               delta))
           }
           if (grown.isEmpty) None
@@ -1363,42 +1141,45 @@ object DeltaLog {
     } else perVersion.reduce(_ unionByName _)
   }
 
-  /** The one DV WRITE step: mark row positions `fresh` of live file
-    * `file` deleted. The file's existing DV (if any) decodes and UNIONS
-    * with `fresh`, so the new descriptor covers every generation of
-    * deletes; the union encodes as a portable RoaringBitmapArray
-    * ([[DeletionVectors.encodePortable64]], the house encoder pinned
-    * against the canonical library in the spec) into
-    * `deletion_vector_<uuid>.bin` under the table root, and the
-    * superseded `.bin` stays on disk for time travel. Returns the
-    * action lines — `remove` (path, old DV) then `add` (path, the
-    * file's stats, new DV), PROTOCOL.md's (path, DV id) reconciliation
-    * — and the positions not already marked (what a change feed
-    * records as newly deleted).
+  /** The one DV WRITE step: for each (live file, positions) in `marks`,
+    * mark those positions deleted. A file's existing DV (if any)
+    * decodes and UNIONS with its new positions, so the new descriptor
+    * covers every generation of deletes; each union encodes as a
+    * portable RoaringBitmapArray ([[DeletionVectors.encodePortable64]],
+    * the house encoder pinned against the canonical library in the
+    * spec), and all of them go into ONE `deletion_vector_<uuid>.bin`
+    * under the table root at distinct offsets (PROTOCOL.md lets one DV
+    * file hold many), so a commit writes one `.bin` however many files
+    * it touches; superseded `.bin`s stay on disk for time travel.
+    * Returns the actions — per file `remove` (path, old DV) then `add`
+    * (path, the file's stats, new DV), PROTOCOL.md's (path, DV id)
+    * reconciliation — and per file the positions not already marked
+    * (what a change feed records as newly deleted).
     */
-  private[sources] def markDeleted(table: String, file: LiveFile,
-                                   fresh: Iterable[Long], dataChange: Boolean,
+  private[sources] def markDeleted(table: String,
+                                   marks: Seq[(LiveFile, Iterable[Long])],
+                                   dataChange: Boolean,
                                    uuid: java.util.UUID = java.util.UUID.randomUUID())
-      : (Seq[String], Set[Long]) = {
-    val existing = file.deletionVector.toSeq
-      .flatMap(decodeDvPositions(table, _)).toSet
-    val newly = fresh.toSet -- existing
-    val positions = (existing ++ newly).toArray.sorted
-    val (bin, offset, size) =
-      DeletionVectors.dvFileBytes(DeletionVectors.encodePortable64(positions))
+      : (Seq[Action], Seq[Set[Long]]) = {
+    if (marks.isEmpty) return (Seq.empty, Seq.empty)
+    val unions = marks.map { case (file, fresh) =>
+      val existing = file.deletionVector.toSeq
+        .flatMap(decodeDvPositions(table, _)).toSet
+      val newly = fresh.toSet -- existing
+      (file, (existing ++ newly).toArray.sorted, newly)
+    }
+    val (bin, slots) = DeletionVectors.dvFileBytes(
+      unions.map(u => DeletionVectors.encodePortable64(u._2)))
     Files.write(Paths.get(table, s"deletion_vector_$uuid.bin"), bin)
-    val id = java.nio.ByteBuffer.allocate(16)
+    val id = DeletionVectors.z85Encode(java.nio.ByteBuffer.allocate(16)
       .putLong(uuid.getMostSignificantBits)
-      .putLong(uuid.getLeastSignificantBits).array()
-    val dv = s"""{"storageType":"u","pathOrInlineDv":"${DeletionVectors.z85Encode(id)}",""" +
-      s""""offset":$offset,"sizeInBytes":$size,"cardinality":${positions.length}}"""
-    val path = jsonEscape(file.path)
-    val oldDv = file.deletionVector.map(d => s""","deletionVector":$d""").getOrElse("")
-    val stats = file.stats.map(s => s""","stats":"${jsonEscape(s)}"""").getOrElse("")
-    (Seq(s"""{"remove":{"path":"$path","dataChange":$dataChange$oldDv}}""",
-      s"""{"add":{"path":"$path","partitionValues":${pvJsonOf(file.partitionValues)},""" +
-        s""""dataChange":$dataChange$stats,"deletionVector":$dv}}"""),
-      newly)
+      .putLong(uuid.getLeastSignificantBits).array())
+    val actions = unions.zip(slots).flatMap { case ((file, positions, _), (offset, size)) =>
+      Seq(Remove(file.path, dataChange, file.deletionVector),
+        Add(file.path, file.partitionValues, dataChange, file.stats,
+          Some(Dv("u", id, Some(offset), size, positions.length))))
+    }
+    (actions, unions.map(_._3))
   }
 
   /** DELETE rows from one live data file via a DELETION VECTOR (r10 —
@@ -1407,7 +1188,8 @@ object DeltaLog {
     * `predicate` over the data columns and marks the matching
     * positions through [[markDeleted]] (the one DV write step: the
     * file's existing DV unions in, `remove` + `add` with its stats and
-    * the new descriptor, both `dataChange: false`). Returns the new
+    * the new descriptor, both `dataChange: false`; the `.bin` is named
+    * after `uuid`). Returns the new
     * version.
     *
     * Scale shape: the position set is per-FILE (Delta's own DV writer
@@ -1451,8 +1233,9 @@ object DeltaLog {
         s"not in the stated subset: $table")
     // the CDF records NEWLY deleted rows only — a predicate re-matching
     // an already-deleted row deletes nothing (exactly-once feed)
-    val (dvLines, newly) = markDeleted(table, target, fresh, dataChange = false, uuid)
-    val cdcLine: Option[String] =
+    val (dvActions, Seq(newly)) =
+      markDeleted(table, Seq(target -> fresh), dataChange = false, uuid)
+    val cdc: Option[Cdc] =
       if (!cdfEnabled || newly.isEmpty) None
       else {
         import spark.implicits._
@@ -1462,12 +1245,11 @@ object DeltaLog {
           .withColumn("_change_type", lit("delete"))
         val rel = s"_change_data/cdc-$uuid.parquet"
         LakeWriter.writeParquetFile(deletedRows, Paths.get(table, rel))
-        val size = Files.size(Paths.get(table, rel))
-        Some(s"""{"cdc":{"path":"$rel","partitionValues":${pvJsonOf(target.partitionValues)},""" +
-          s""""size":$size,"dataChange":false}}""")
+        Some(Cdc(rel, target.partitionValues, Some(Files.size(Paths.get(table, rel))),
+          dataChange = false))
       }
     val next = st.version + 1
-    writeCommit(table, st, next, dvLines ++ cdcLine.toSeq)
+    writeCommit(table, st, next, (dvActions ++ cdc.toSeq).map(_.json))
     next
   }
 }

@@ -6,6 +6,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructType}
 
+import DeltaActions.{Action, Add, Cdc, Protocol, Remove}
+
 /** F14o (r13): the Delta WRITE side beyond maintenance — CREATE,
   * APPEND, and the key-based MERGE/upsert that points the reference's
   * own replication loop (scripts/03_cdc_etl.py:203-379: per-table
@@ -36,8 +38,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *    driver holds the matched rows' (file, row index) pairs (bounded
   *    by the batch), only updated rows and inserts are written, and
   *    each touched file is re-added with a deletion vector over its
-  *    matched rows ([[DeltaLog.markDeleted]]), so a merge costs
-  *    O(changed rows). Readers drop the marked rows, and
+  *    matched rows ([[DeltaLog.markDeleted]], one `.bin` for all of
+  *    the commit's DVs), so a merge costs O(changed rows). Readers drop the marked rows, and
   *    [[DeltaLog.compact]] folds them away.
   * Untouched files stay byte-identical either way.
   */
@@ -70,17 +72,8 @@ object DeltaWrite {
     }
     Files.createDirectories(Paths.get(path, "_delta_log"))
     val st = DeltaLog.State(0L, schema, partitionColumns,
-      Seq.empty, configuration)
+      Seq.empty, configuration, metaDataId = s"graft-${path.split('/').last}")
     val written = writeDataFiles(spark, path, st, df, "part-0")
-    val confJson = configuration.toSeq.sortBy(_._1).map { case (k, v) =>
-      s""""${DeltaLog.jsonEscape(k)}":"${DeltaLog.jsonEscape(v)}""""
-    }.mkString("{", ",", "}")
-    val meta =
-      s"""{"metaData":{"id":"graft-${path.split('/').last}",""" +
-        s""""schemaString":"${DeltaLog.jsonEscape(schema.json)}",""" +
-        s""""partitionColumns":[${partitionColumns.map(c =>
-          "\"" + DeltaLog.jsonEscape(c) + "\"").mkString(",")}],""" +
-        s""""configuration":$confJson}}"""
     // a feature-gated table (deletion vectors, in-commit timestamps)
     // declares writer v7 listing every active writer feature, and DVs
     // also reader v3; CDF alone keeps the legacy default protocol
@@ -90,15 +83,13 @@ object DeltaWrite {
       "deletionVectors" -> "delta.enableDeletionVectors",
       "changeDataFeed" -> "delta.enableChangeDataFeed",
       "inCommitTimestamp" -> "delta.enableInCommitTimestamps")
-      .collect { case (f, k) if on(k) => "\"" + f + "\"" }
+      .collect { case (f, k) if on(k) => f }
     val proto =
       if (!dvs && !on("delta.enableInCommitTimestamps")) Seq.empty
-      else Seq(s"""{"protocol":{"minReaderVersion":${if (dvs) 3 else 1},""" +
-        s""""minWriterVersion":7,""" +
-        (if (dvs) s""""readerFeatures":["deletionVectors"],""" else "") +
-        s""""writerFeatures":[${writerFeatures.mkString(",")}]}}""")
-    val adds = addLines(spark, path, st, written, dataChange = true)
-    DeltaLog.writeCommit(path, st, 0L, proto ++ Seq(meta) ++ adds, nowMs)
+      else Seq(Protocol(if (dvs) 3 else 1, 7,
+        if (dvs) Seq("deletionVectors") else Seq.empty, writerFeatures))
+    val adds = addActions(spark, path, st, written, dataChange = true)
+    DeltaLog.writeCommit(path, st, 0L, (proto ++ Seq(st.metaData) ++ adds).map(_.json), nowMs)
     0L
   }
 
@@ -118,7 +109,7 @@ object DeltaWrite {
       df.select(st.schema.fieldNames.map(col).toSeq: _*), s"part-$next")
     require(written.nonEmpty, "empty append: refuse a no-op commit")
     DeltaLog.writeCommit(table, st, next,
-      addLines(spark, table, st, written, dataChange = true), nowMs)
+      addActions(spark, table, st, written, dataChange = true).map(_.json), nowMs)
     next
   }
 
@@ -246,54 +237,41 @@ object DeltaWrite {
     val inserts = insertFilter.map(inserts0.filter).getOrElse(inserts0)
     // the evolved schema rides the same commit as its first data —
     // readers at this version and later see the new column (NULL for
-    // pre-evolution rows), time travel below it sees the old shape
-    val metaLines: Seq[String] =
-      if (newFields.isEmpty) Seq.empty
-      else {
-        val confJson = st.configuration.toSeq.sortBy(_._1).map { case (c, v) =>
-          s""""${DeltaLog.jsonEscape(c)}":"${DeltaLog.jsonEscape(v)}""""
-        }.mkString("{", ",", "}")
-        Seq(s"""{"metaData":{"id":"graft-${table.split('/').last}",""" +
-          s""""schemaString":"${DeltaLog.jsonEscape(st.schema.json)}",""" +
-          s""""partitionColumns":[${st.partitionColumns.map(c =>
-            "\"" + DeltaLog.jsonEscape(c) + "\"").mkString(",")}],""" +
-          s""""configuration":$confJson}}""")
-      }
+    // pre-evolution rows), time travel below it sees the old shape; the
+    // table id stays the one the log already carries
+    val metaActions: Seq[Action] =
+      if (newFields.isEmpty) Seq.empty else Seq(st.metaData)
     if (affected.isEmpty && inserts.isEmpty) {
       // nothing matched and nothing inserts — but a batch that CARRIES a
       // schema evolution must not silently defer it (the caller's
       // watermark advances either way): commit the metaData-only change
       if (newFields.isEmpty) return st.version
       val next = st.version + 1
-      DeltaLog.writeCommit(table, st, next, metaLines, nowMs)
+      DeltaLog.writeCommit(table, st, next, metaActions.map(_.json), nowMs)
       return next
     }
     val next = st.version + 1
     // copy-on-write rewrites each touched file's surviving rows next to
     // the postimages and inserts; DV mode writes only the new rows and
     // marks the matched ones through the one DV write step
-    val (kept, fileLines) =
+    val (kept, fileActions) =
       if (dvMode) {
         val byPath = st.files.map(f => f.path -> f).toMap
-        (Seq.empty[DataFrame], hits.groupBy(_.getString(0)).toSeq.sortBy(_._1)
-          .flatMap { case (rel, rows) =>
-            DeltaLog.markDeleted(table, byPath(rel), rows.map(_.getLong(1)),
-              dataChange = true)._1
-          })
+        val marks = hits.groupBy(_.getString(0)).toSeq.sortBy(_._1)
+          .map { case (rel, rows) => byPath(rel) -> rows.map(_.getLong(1)).toSeq }
+        (Seq.empty[DataFrame], DeltaLog.markDeleted(table, marks, dataChange = true)._1)
       } else (Seq(snap
         .filter(col("__graft_rel").isInCollection(
           if (affected.isEmpty) Set("") else affected))
         .join(srcKeys, pk, "left_anti")
         .drop("__graft_rel", "__graft_pos")),
-        affected.toSeq.sorted.map { rel =>
-          s"""{"remove":{"path":"${DeltaLog.jsonEscape(rel)}","dataChange":true}}"""
-        })
+        affected.toSeq.sorted.map(Remove(_, dataChange = true)))
     val written = writeDataFiles(spark, table, st,
       (kept :+ postimages :+ inserts).reduce(_ unionByName _)
         .select(cols.map(col): _*),
       s"merge-$next")
-    val adds = addLines(spark, table, st, written, dataChange = true)
-    val cdcLines: Seq[String] =
+    val adds = addActions(spark, table, st, written, dataChange = true)
+    val cdcActions: Seq[Action] =
       if (!cdfEnabled) Seq.empty
       else {
         val changes = preimages
@@ -310,14 +288,10 @@ object DeltaWrite {
           changes.select((dataCols :+ "_change_type").map(col) ++
             st.partitionColumns.map(col): _*),
           s"cdc-$next", subdir = "_change_data")
-        cdcFiles.map { case (rel, pv) =>
-          s"""{"cdc":{"path":"${DeltaLog.jsonEscape(rel)}",""" +
-            s""""partitionValues":${DeltaLog.pvJsonOf(pv)},""" +
-            s""""dataChange":false}}"""
-        }
+        cdcFiles.map { case (rel, pv) => Cdc(rel, pv, None, dataChange = false) }
       }
     DeltaLog.writeCommit(table, st, next,
-      metaLines ++ fileLines ++ adds ++ cdcLines, nowMs)
+      (metaActions ++ fileActions ++ adds ++ cdcActions).map(_.json), nowMs)
     next
   }
 
@@ -356,15 +330,15 @@ object DeltaWrite {
       .zipWithIndex.map { case ((_, pv), i) => (relOf(pv, i), pv) }
   }
 
-  /** The `add` action lines for freshly written files, carrying
+  /** The `add` actions for freshly written files, carrying
     * numRecords + long-column min/max stats (one grouped scan over the
     * NEW files only — file-scoped statistics, never a table scan) so
     * [[DeltaLog.filesInRange]] skipping works on engine-written files.
     */
-  private def addLines(spark: SparkSession, table: String,
-                       st: DeltaLog.State,
-                       written: Seq[(String, Map[String, String])],
-                       dataChange: Boolean): Seq[String] = {
+  private def addActions(spark: SparkSession, table: String,
+                         st: DeltaLog.State,
+                         written: Seq[(String, Map[String, String])],
+                         dataChange: Boolean): Seq[Add] = {
     if (written.isEmpty) return Seq.empty
     val mapped = st.columnMappingMode == "name"
     val dataFields = st.schema.fields
@@ -374,12 +348,8 @@ object DeltaWrite {
     val stats = LakeWriter.fileStats(spark,
       written.map(w => Paths.get(table, w._1).toString), longCols)
     written.map { case (rel, pv) =>
-      val statsLine = DeltaLog.statsJson(stats.get(rel.split("/").last),
-        longCols, withBounds = longCols.nonEmpty)
-      s"""{"add":{"path":"${DeltaLog.jsonEscape(rel)}",""" +
-        s""""partitionValues":${DeltaLog.pvJsonOf(pv)},""" +
-        s""""dataChange":$dataChange,""" +
-        s""""stats":"${DeltaLog.jsonEscape(statsLine)}"}}"""
+      Add(rel, pv, dataChange, Some(DeltaLog.statsJson(stats.get(rel.split("/").last),
+        longCols, withBounds = longCols.nonEmpty)))
     }
   }
 }

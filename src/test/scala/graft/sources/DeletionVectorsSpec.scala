@@ -245,11 +245,9 @@ class DeletionVectorsSpec extends AnyFunSuite {
     assert(after == (0L until 30L).filter(_ % 3 == 2).toSet,
       "second DV commit must union with the first")
     val st2 = DeltaLog.state(spark, t2)
-    val dvJson = st2.files.head.deletionVector.get
-    val sizeField = "\"sizeInBytes\"\\s*:\\s*(\\d+)".r
-      .findFirstMatchIn(dvJson).get.group(1).toInt
-    val uuidZ85 = "\"pathOrInlineDv\"\\s*:\\s*\"([^\"]*)\"".r
-      .findFirstMatchIn(dvJson).get.group(1)
+    val dv = st2.files.head.deletionVector.get
+    val sizeField = dv.sizeInBytes
+    val uuidZ85 = dv.pathOrInlineDv
     val mergedRaw = Files.readAllBytes(java.nio.file.Paths.get(t2,
       s"deletion_vector_${DeletionVectors.z85Uuid(uuidZ85)}.bin"))
     val mergedBm = java.util.Arrays.copyOfRange(

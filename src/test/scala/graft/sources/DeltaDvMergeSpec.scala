@@ -54,9 +54,6 @@ class DeltaDvMergeSpec extends AnyFunSuite {
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
 
-  private def cardinality(dv: String): Long =
-    "\"cardinality\"\\s*:\\s*(\\d+)".r.findFirstMatchIn(dv).get.group(1).toLong
-
   test("a DV replica and a copy-on-write replica of the same batches agree") {
     val cow = replica(dv = false)
     val dv = replica(dv = true)
@@ -74,7 +71,7 @@ class DeltaDvMergeSpec extends AnyFunSuite {
     val v0 = DeltaLog.state(spark, dv, Some(0L)).files
     assert(v0.map(_.path).toSet.subsetOf(st.files.map(_.path).toSet))
     val b0 = st.files.find(f => f.path == v0.find(_.partitionValues("part") == "b").get.path).get
-    assert(b0.deletionVector.map(cardinality).contains(3L)) // k = 1, 3, 5
+    assert(b0.deletionVector.map(_.cardinality).contains(3L)) // k = 1, 3, 5
     assert(b0.stats.exists(_.contains("\"numRecords\":10")), "the re-add keeps the file's stats")
     val cowV0 = DeltaLog.state(spark, cow, Some(0L)).files
     assert(!DeltaLog.state(spark, cow).files.exists(cowV0.contains),
@@ -154,5 +151,50 @@ class DeltaDvMergeSpec extends AnyFunSuite {
     assert(!driverJoins && executorJoins, "each cap side takes its own path")
     assert(driver == executor)
     assert(driver.size == 22)
+  }
+
+  test("one merge writes one DV file for all the files it touches") {
+    val t = Files.createTempDirectory("dvmerge_bin").toString
+    DeltaWrite.create(spark, t, rows((0L until 20L).map(k => (k, k * 10, "N")): _*)
+      .coalesce(1), partitionColumns = Seq("part"),
+      configuration = Map("delta.enableDeletionVectors" -> "true"))
+    def bins = {
+      val st = Files.list(Paths.get(t))
+      try st.iterator().asScala.filter(_.getFileName.toString.startsWith("deletion_vector_"))
+        .map(_.toAbsolutePath.normalize).toSet
+      finally st.close()
+    }
+    def liveBins = DeltaLog.state(spark, t).files
+      .flatMap(_.deletionVector).flatMap(DeltaLog.dvBinPath(t, _)).toSet
+    var expect = (0L until 20L).map(k => k -> k * 10).toMap
+    def check(): Unit = assert(DeltaLog.read(spark, t).select("k", "cents")
+      .as[(Long, Long)].collect().toSet == expect.toSet)
+    def mergeRow(k: Long, c: Long): Unit = {
+      DeltaWrite.merge(spark, t, rows((k, c, "N")), Seq("k"))
+      expect += k -> c
+    }
+    // k = 1 and 2 live in the part=b and part=a files: one .bin, two DVs
+    DeltaWrite.merge(spark, t, rows((1L, 11L, "N"), (2L, 21L, "N")), Seq("k"))
+    expect ++= Map(1L -> 11L, 2L -> 21L)
+    val first = bins
+    assert(first.size == 1, first)
+    val dvs = DeltaLog.state(spark, t).files.flatMap(_.deletionVector)
+    assert(dvs.size == 2 && dvs.map(_.offset).distinct.size == 2, dvs)
+    assert(dvs.flatMap(DeltaLog.dvBinPath(t, _)).toSet == first)
+    check()
+    // re-touch only the part=b file: the part=a file still references
+    // the first .bin, so vacuum keeps it
+    mergeRow(3L, 31L)
+    assert(bins.size == 2 && first.subsetOf(liveBins))
+    DeltaLog.vacuum(spark, t, retainLast = 1)
+    assert(bins == liveBins && first.subsetOf(bins))
+    check()
+    // re-touch the part=a file too: nothing live references the first
+    // .bin any more, and vacuum drops it
+    mergeRow(4L, 41L)
+    assert(!first.exists(liveBins.contains))
+    DeltaLog.vacuum(spark, t, retainLast = 1)
+    assert(bins == liveBins && !first.exists(bins.contains))
+    check()
   }
 }

@@ -14,6 +14,12 @@ case class CkRemove(path: String)
 case class CkMeta(schemaString: String, partitionColumns: Seq[String])
 case class CkRow(add: Option[CkAdd], remove: Option[CkRemove],
                  metaData: Option[CkMeta])
+// a DV descriptor typed as PROTOCOL.md's checkpoint schema has it
+case class CkDv(storageType: String, pathOrInlineDv: String, offset: Int,
+                sizeInBytes: Int, cardinality: Long)
+case class CkDvAdd(path: String, partitionValues: Map[String, String],
+                   dataChange: Boolean, deletionVector: CkDv)
+case class CkDvRow(add: Option[CkDvAdd], metaData: Option[CkMeta])
 
 /** F14: the Delta-log reader against a protocol-faithful hand-built
   * table: partitioned adds, removes, schema evolution, checkpoint
@@ -282,6 +288,28 @@ class DeltaLogSpec extends AnyFunSuite {
       .select("id").as[Long].collect().toSet
     assert(got == (0L until 12L).filterNot(_ % 4 == 2).toSet,
       "DV descriptor lost through the checkpoint")
+  }
+
+  test("a foreign checkpoint with int DV offset and size replays") {
+    val t = Files.createTempDirectory("deltackdvint")
+    writeDataFile((0L until 12L).map(i => (i, s"v$i")).toDF("id", "v")
+      .orderBy("id"), t, "f0.parquet")
+    val schema = StructType(schemaV0.fields.take(2))
+    writeCommit(t, 0L, Seq(
+      s"""{"metaData":{"id":"ckdvint","schemaString":"${esc(schema.json)}","partitionColumns":[]}}""",
+      """{"add":{"path":"f0.parquet","partitionValues":{},"dataChange":true}}"""))
+    DeltaLog.deleteWithDv(spark, t.toString, "f0.parquet",
+      org.apache.spark.sql.functions.col("id") % 4 === 2)
+    val dv = DeltaLog.state(spark, t.toString).files.head.deletionVector.get
+    writeParquetAs(Seq(
+      CkDvRow(None, Some(CkMeta(schema.json, Nil))),
+      CkDvRow(Some(CkDvAdd("f0.parquet", Map.empty, dataChange = true,
+        CkDv(dv.storageType, dv.pathOrInlineDv, dv.offset.get, dv.sizeInBytes,
+          dv.cardinality))), None)).toDS.toDF(),
+      t.resolve("_delta_log").resolve(f"${1L}%020d.checkpoint.parquet"))
+    (0L to 1L).foreach(i => Files.delete(t.resolve("_delta_log").resolve(f"$i%020d.json")))
+    assert(DeltaLog.read(spark, t.toString).select("id").as[Long].collect().toSet ==
+      (0L until 12L).filterNot(_ % 4 == 2).toSet)
   }
 
   // ---- r11: vacuum + change feed ----
@@ -608,5 +636,72 @@ class DeltaLogSpec extends AnyFunSuite {
     assert(st.minWriterVersion == 7 &&
       st.writerFeatures == Seq("deletionVectors"),
       s"writer protocol lost through the checkpoint: $st")
+  }
+
+  /** Spark jobs started by `body` on this thread. A tagged marker job
+    * runs after it: the listener bus delivers events in order, so once
+    * the marker's start arrives every job of `body` has been counted.
+    */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val tag = s"jobs-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("graft.test.tag")))
+          .foreach(seen.add)
+    }
+    def tagged[A](t: String)(f: => A): A = {
+      sc.setLocalProperty("graft.test.tag", t)
+      try f finally sc.setLocalProperty("graft.test.tag", null)
+    }
+    sc.addSparkListener(listener)
+    try {
+      tagged(tag)(body)
+      tagged(tag + "-end")(sc.parallelize(Seq(1), 1).count())
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(tag + "-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(tag + "-end"), "marker job never reached the listener")
+      seen.asScala.count(_ == tag)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("replay decodes JSON commits on the driver: no Spark job; a checkpoint costs one") {
+    val t = buildTable()
+    assert(jobsDuring(DeltaLog.state(spark, t.toString, versionAsOf = Some(2L))) == 0)
+    val d = Files.createTempDirectory("deltajobs").resolve("t").toString
+    DeltaWrite.create(spark, d, Seq((1L, "a"), (2L, "b")).toDF("id", "v"))
+    DeltaLog.writeCheckpoint(spark, d)
+    DeltaWrite.append(spark, d, Seq((3L, "c")).toDF("id", "v"))
+    DeltaWrite.append(spark, d, Seq((4L, "d")).toDF("id", "v"))
+    var st: DeltaLog.State = null
+    assert(jobsDuring { st = DeltaLog.state(spark, d) } <= 1)
+    assert(st.version == 2L && st.files.size == 4)
+  }
+
+  test("a torn commit line fails the replay, naming the version") {
+    val t = buildTable()
+    val v2 = t.resolve("_delta_log").resolve(f"${2L}%020d.json")
+    val txt = Files.readString(v2)
+    Files.writeString(v2, txt.take(txt.length - 20))
+    val e = intercept[IllegalArgumentException](DeltaLog.state(spark, t.toString))
+    assert(e.getMessage.contains("commit v2") && e.getMessage.contains("line 2"), e.getMessage)
+  }
+
+  test("compact escapes a quote in a file name: the row count holds and the log replays") {
+    val t = Files.createTempDirectory("deltaquote")
+    writeDataFile((1L to 5L).map(i => (i, "q")).toDF("id", "v"), t, "a\"b.parquet")
+    writeDataFile((6L to 8L).map(i => (i, "p")).toDF("id", "v"), t, "c.parquet")
+    val schema = StructType(schemaV0.fields.take(2))
+    writeCommit(t, 0L, Seq(
+      s"""{"metaData":{"id":"q","schemaString":"${esc(schema.json)}","partitionColumns":[]}}""",
+      s"""{"add":{"path":"${esc("a\"b.parquet")}","partitionValues":{},"dataChange":true}}""",
+      """{"add":{"path":"c.parquet","partitionValues":{},"dataChange":true}}"""))
+    assert(DeltaLog.read(spark, t.toString).count() == 8L)
+    assert(DeltaLog.compact(spark, t.toString) == 1L)
+    val st = DeltaLog.state(spark, t.toString)
+    assert(st.files.map(_.path).forall(_.startsWith("compact-")), st.files)
+    assert(DeltaLog.read(spark, t.toString).count() == 8L)
   }
 }

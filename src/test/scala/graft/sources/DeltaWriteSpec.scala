@@ -284,4 +284,20 @@ class DeltaWriteSpec extends AnyFunSuite {
       .select("k").as[Long].collect().toSet
     assert(got == (0L until 25L).toSet, s"${got.size} keys after trim")
   }
+
+  test("a foreign table id survives a checkpoint and an evolving merge") {
+    val t = mkTable()
+    val v0 = Paths.get(t, "_delta_log", f"${0L}%020d.json")
+    val ours = s""""id":"graft-${Paths.get(t).getFileName}""""
+    assert(Files.readString(v0).contains(ours))
+    Files.writeString(v0, Files.readString(v0).replace(ours, "\"id\":\"cm\""))
+    assert(DeltaLog.writeCheckpoint(spark, t) == 0L)
+    Files.delete(v0)
+    assert(DeltaLog.state(spark, t).metaDataId == "cm", "id lost through the checkpoint")
+    assert(DeltaWrite.merge(spark, t, Seq((1L, "a", 150L, "hot", "N"))
+      .toDF("id", "part", "cents", "note", "is_deleted"), Seq("id")) == 1L)
+    val v1 = Files.readString(Paths.get(t, "_delta_log", f"${1L}%020d.json"))
+    assert(v1.contains("\"metaData\":{\"id\":\"cm\""), v1)
+    assert(DeltaLog.state(spark, t).metaDataId == "cm", "id lost through the evolving merge")
+  }
 }
