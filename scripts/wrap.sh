@@ -46,6 +46,15 @@ if grep -rn 'replicateParallel' src --include='*.scala' \
   exit 1
 fi
 
+# lake replicas validate and split a merge batch through Cdc.splitMerge
+# only: no parquet read-modify-write target, and no second duplicate-key
+# check in graft.sources
+if grep -rnE 'ParquetTarget|mergeReplica|alignSchemas' src \
+   || grep -rniE 'count_?distinct|count\(distinct|duplicate pk' src/main/scala/graft/sources; then
+  echo "[wrap] second soft-delete merge step — validate and split through graft.cdc.Cdc.splitMerge"
+  exit 1
+fi
+
 # deletion vectors are written by DeltaLog.markDeleted only (the encode,
 # the deletion_vector_*.bin write and the action lines) and applied by
 # DeltaLog.minusDvs only (the one DV anti-join in DeltaLog.scala)

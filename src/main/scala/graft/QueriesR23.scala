@@ -306,7 +306,7 @@ object QueriesR23 {
             delta
           else Dedup.mergeBandOwners(s.read.parquet(owners), delta)
         // read-modify-write on the index path: materialize to a
-        // sibling then swap (the ParquetTarget discipline)
+        // sibling then swap, as no write may overwrite the files it reads
         val next = s"$owners.next"
         merged.write.mode("overwrite").parquet(next)
         val old = new java.io.File(owners)

@@ -93,6 +93,41 @@ object Cdc {
       .select(out: _*)
   }
 
+  /** [[mergeSoftDelete]]'s contract as the row sets a lake commit writes
+    * (`DeltaWrite.merge`, `IcebergCatalog.commitMerge`). `target` is the
+    * table's live rows; `staged` is projected onto its columns and must
+    * be unique per `pk`: null key parts and duplicate key tuples reject
+    * loudly, counted in one aggregate (`count_distinct` skips a null
+    * part, so it would otherwise read as a duplicate).
+    */
+  private[graft] def splitMerge(target: DataFrame, staged: DataFrame, pk: Seq[String],
+                                insertFilter: Option[Column], table: String): MergeSplit = {
+    require(pk.nonEmpty && pk.forall(target.columns.contains),
+      s"merge pk ${pk.mkString(",")} not in table columns")
+    val src = staged.select(target.columns.map(col).toSeq: _*)
+    val kcheck = src.agg(count(lit(1)), count_distinct(col(pk.head), pk.tail.map(col): _*),
+      count(when(pk.map(col(_).isNull).reduce(_ || _), lit(1)))).head()
+    val (n, d, z) = (kcheck.getLong(0), kcheck.getLong(1), kcheck.getLong(2))
+    require(z == 0, s"staged batch holds $z rows with a null pk part " +
+      s"(${pk.mkString(",")}) — a null key matches no row: $table")
+    require(n == d, s"staged batch holds duplicate pk tuples ($n rows over $d " +
+      s"distinct keys) — dedup with latestPerKey before merge: $table")
+    val liveKeys = target.select(pk.map(col): _*).distinct()
+    val inserts = src.join(liveKeys, pk, "left_anti")
+    new MergeSplit(src.select(pk.map(col): _*).distinct(), src.join(liveKeys, pk, "left_semi"),
+      insertFilter.map(inserts.filter).getOrElse(inserts), target, pk)
+  }
+
+  /** [[splitMerge]]'s row sets: the distinct staged `keys`; `postimages`,
+    * the staged rows of keys the target holds (they take every staged
+    * value); `inserts`, the other staged rows that pass the insert guard
+    * (the reference MERGE's `WHERE s.IS_DELETED = 'N'`); and, built on
+    * first use, `preimages`, the target rows of the staged keys. */
+  private[graft] final class MergeSplit(val keys: DataFrame, val postimages: DataFrame,
+                                        val inserts: DataFrame, target: DataFrame, pk: Seq[String]) {
+    lazy val preimages: DataFrame = target.join(keys, pk, "left_semi")
+  }
+
   /** C34: tombstone vacuum with a retention watermark — soft deletes
     * ([[mergeSoftDelete]]'s 'Y' rows) must outlive the longest consumer
     * lag so downstream delta readers see the delete, then they are pure

@@ -13,15 +13,15 @@ import org.apache.spark.sql.functions._
   *     read delta (watermark predicate pushed into the scan)
   *     → dedup to latest-per-key (the staging step, minus the staging table:
   *       Spark's shuffle IS the stage)
-  *     → full-outer merge with soft-delete semantics
+  *     → soft-delete merge (matched keys take the staged row, new live
+  *       keys insert)
   *     → advance watermark to MAX(change_ts)
   *     → record stats
   *
   * Every target shares that one per-table step and the one FK scheduler
   * around it; a target supplies only its write step for the staged
-  * batch (parquet read-merge-write, JDBC stage + DB-side MERGE, a Delta
-  * commit, an Iceberg snapshot), so the same run drives a lakehouse
-  * replica, a database, or a test fixture.
+  * batch (JDBC stage + DB-side MERGE, a Delta commit, an Iceberg
+  * snapshot), so the same run drives a lakehouse replica or a database.
   * Failure isolation matches the reference: a failing table is recorded and
   * the run continues (:348-352).
   */
@@ -91,25 +91,6 @@ object Pipeline {
     f
   }
 
-  /** Incremental replication of all tables through the FK scheduler: a
-    * table starts once its FK parents have landed.
-    *
-    * @param readSource   source table by name (CDC columns present)
-    * @param readTarget   current replica state, None if not yet created
-    * @param writeTarget  persist the merged replica state
-    * @param watermarks   last watermark per table (absent = initial full load)
-    * @return             report + the advanced watermark map
-    */
-  def replicate(
-      tables: Seq[TableSpec],
-      fkEdges: Seq[(String, String)],
-      readSource: String => DataFrame,
-      readTarget: String => Option[DataFrame],
-      writeTarget: (String, DataFrame) => Unit,
-      watermarks: Map[String, Timestamp]): (RunReport, Map[String, Timestamp]) =
-    replicateScheduled(SparkSession.active, tables, fkEdges, readSource, watermarks)(
-      mergeReplica(readTarget, writeTarget))
-
   /** The one FK scheduler every target shares. A table's [[replicateTable]]
     * step starts as soon as every FK parent's step has finished, failed
     * ones included (a failure is recorded and the run goes on), with at
@@ -120,7 +101,7 @@ object Pipeline {
     * map advances by the tables that processed. A non-`Exception` failure
     * is rethrown once the steps in flight have ended.
     */
-  private def replicateScheduled(
+  private[cdc] def replicateScheduled(
       spark: SparkSession,
       tables: Seq[TableSpec],
       fkEdges: Seq[(String, String)],
@@ -206,30 +187,14 @@ object Pipeline {
     * a tombstone for a key the replica never had is not inserted. */
   private def live: Column = col(Cdc.IsDeleted) === "N"
 
-  /** Parquet write step: soft-delete merge of the staged batch into the
-    * current replica (schemas aligned first), or its live rows on the
-    * initial load.
-    */
-  private def mergeReplica(
-      readTarget: String => Option[DataFrame],
-      writeTarget: (String, DataFrame) => Unit)(spec: TableSpec, staged: DataFrame): Unit = {
-    val merged = readTarget(spec.name) match {
-      case Some(target) =>
-        val (t2, s2) = alignSchemas(target, staged)
-        Cdc.mergeSoftDelete(t2, s2, spec.pk)
-      case None => staged.filter(live)
-    }
-    writeTarget(spec.name, merged)
-  }
-
   /** Database-to-database replication — the reference's exact architecture
     * (JDBC source → Spark transform → JDBC staging table → DB-side MERGE →
     * watermark advance), with missing target/staging tables created from
     * the source schema (the 02_clone_schema_structure.py step, inline).
-    * Unlike [[replicate]] the merge runs INSIDE the target database: only
-    * the delta crosses the wire, the replica never round-trips through
-    * Spark — the right trade when the target is an operational RDBMS
-    * rather than a lakehouse.
+    * Unlike the lake targets the merge runs INSIDE the target database:
+    * only the delta crosses the wire, the replica never round-trips
+    * through Spark — the right trade when the target is an operational
+    * RDBMS rather than a lakehouse.
     */
   def replicateJdbc(
       spark: SparkSession,
@@ -265,8 +230,7 @@ object Pipeline {
     * later merge records its images, and deletion vectors enabled so
     * every later merge is merge-on-read.
     *
-    * Unlike [[replicate]]'s read-modify-write parquet target, the
-    * merge rewrites NO existing file: matched rows are marked with a
+    * The merge rewrites NO existing file: matched rows are marked with a
     * deletion vector in their files and only updated rows and inserts
     * are written — steady-state incremental runs cost O(changed rows),
     * and downstream consumers get the recorded change feed for free.
@@ -378,68 +342,4 @@ object Pipeline {
         finally st.close()
       }
     }
-
-  /** Schema evolution between runs (the incremental form of the reference's
-    * schema clone, 02_clone_schema_structure.py): a column added on the
-    * source appears on the target as NULL for pre-existing rows; a column
-    * dropped from the source is RETAINED on the target (replicas never lose
-    * data silently) and staged rows carry NULL for it.
-    */
-  def alignSchemas(target: DataFrame, staged: DataFrame): (DataFrame, DataFrame) = {
-    val tCols = target.columns.toSeq
-    val sByName = staged.schema.fields.map(f => f.name -> f).toMap
-    val tByName = target.schema.fields.map(f => f.name -> f).toMap
-    val newCols = staged.columns.toSeq.filterNot(tByName.contains)
-    val droppedCols = tCols.filterNot(sByName.contains)
-    val t2 = newCols.foldLeft(target)((d, c) =>
-      d.withColumn(c, lit(null).cast(sByName(c).dataType)))
-    val s2 = droppedCols.foldLeft(staged)((d, c) =>
-      d.withColumn(c, lit(null).cast(tByName(c).dataType)))
-    (t2, s2.select(t2.columns.map(col): _*))
-  }
-
-  /** The DDL a SQL target (the reference's Oracle schema) would need before
-    * [[alignSchemas]]-shaped data lands: ADD for source-added columns,
-    * nothing for source-dropped columns (replicas retain them). Types come
-    * from [[SchemaClone.sqlType]] — the same mapping the full clone uses.
-    */
-  def migrationDdl(target: DataFrame, staged: DataFrame, table: String): Seq[String] = {
-    val tCols = target.schema.fieldNames.toSet
-    staged.schema.fields.toSeq.filterNot(f => tCols.contains(f.name)).map { f =>
-      s"ALTER TABLE $table ADD ${f.name} ${SchemaClone.sqlType(f.dataType)}"
-    }
-  }
-
-  /** Parquet-directory replica store: each table a subdirectory. The local
-    * stand-in for "target Oracle schema" — at scale this is the lakehouse
-    * path and writes are partitioned.
-    */
-  final class ParquetTarget(spark: SparkSession, dir: String) {
-    def read(name: String): Option[DataFrame] = {
-      val p = new java.io.File(s"$dir/$name")
-      if (p.exists()) Some(spark.read.parquet(p.toString)) else None
-    }
-    def write(name: String, df: DataFrame): Unit = {
-      // read-modify-write on the same path needs a materialized source
-      val tmp = new java.io.File(s"$dir/.tmp_$name")
-      df.write.mode("overwrite").parquet(tmp.toString)
-      val dest = new java.io.File(s"$dir/$name")
-      val bak = new java.io.File(s"$dir/.bak_$name")
-      // a failed swap fails the table (its watermark stays put) instead of
-      // leaving the old replica in place under a "processed" result
-      if (dest.exists()) {
-        if (bak.exists()) delete(bak)
-        require(dest.renameTo(bak), s"ParquetTarget: rename failed: $dest -> $bak")
-      }
-      if (!tmp.renameTo(dest)) {
-        bak.renameTo(dest) // put the previous replica back
-        throw new IllegalStateException(s"ParquetTarget: rename failed: $tmp -> $dest")
-      }
-      delete(bak)
-    }
-    private def delete(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(delete)
-      f.delete()
-    }
-  }
 }

@@ -4,7 +4,7 @@ import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructType}
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import DeltaActions.{Action, Add, Cdc, Protocol, Remove}
 
@@ -114,9 +114,9 @@ object DeltaWrite {
   }
 
   /** Key-based MERGE of `staged` into the table (soft-delete CDC
-    * semantics above). `staged` must be unique per `pk` (use
-    * [[graft.cdc.Cdc.latestPerKey]] first) and share the table's
-    * column set. When `delta.enableChangeDataFeed` is set, the commit
+    * semantics above, split by [[graft.cdc.Cdc.splitMerge]]). `staged`
+    * must be unique per `pk` (use [[graft.cdc.Cdc.latestPerKey]] first).
+    * When `delta.enableChangeDataFeed` is set, the commit
     * records its cdc actions: `update_preimage`/`update_postimage`
     * for every matched key (the staged values count as the update,
     * exactly the real MERGE contract) and `insert` for the new keys;
@@ -137,10 +137,9 @@ object DeltaWrite {
     // data files simply lack it, and the schema-pinned scans read the
     // missing column as NULL for pre-evolution rows (parquet's own
     // rule); a column the source DROPPED is retained (replicas never
-    // lose data silently) and staged rows carry NULL for it — exactly
-    // [[graft.cdc.Pipeline.alignSchemas]]'s contract, applied at the
-    // transaction log. Out of the stated subset: evolving a PARTITION
-    // or PK column, and type changes (same name, new type) — loud.
+    // lose data silently) and staged rows carry NULL for it. Out of
+    // the stated subset: evolving a PARTITION or PK column, and type
+    // changes (same name, new type) — loud.
     val newFields0 = staged.schema.fields
       .filterNot(f => st0.schema.fieldNames.contains(f.name))
     staged.schema.fields.foreach { f =>
@@ -183,8 +182,6 @@ object DeltaWrite {
       else st0.copy(schema = StructType(st0.schema.fields ++ newFields),
         configuration = evolvedConf)
     val cols = st.schema.fieldNames.toSeq
-    require(pk.nonEmpty && pk.forall(cols.contains),
-      s"merge pk ${pk.mkString(",")} not in table columns")
     require(pk.forall(k => newFields.forall(_.name != k)),
       s"merge pk ${pk.mkString(",")} cannot be a newly added column")
     // staged rows align to the (possibly evolved) table schema:
@@ -203,19 +200,10 @@ object DeltaWrite {
     // [[DeltaLog.tableChangesCdf]] maps them back on read
     val cdfEnabled = st.configuration.getOrElse(
       "delta.enableChangeDataFeed", "false") == "true"
-    val src = stagedAligned.select(cols.map(col): _*)
-    // staged batches must be unique per pk (the latestPerKey contract) —
-    // a duplicate key would silently write two postimage/insert rows, so
-    // check count vs distinct-count in ONE aggregate and reject loudly
-    val kcheck = src.agg(count(lit(1)).as("n"),
-      count_distinct(pk.map(col).head, pk.map(col).tail: _*).as("d")).head()
-    require(kcheck.getAs[Long]("n") == kcheck.getAs[Long]("d"),
-      s"staged batch holds duplicate pk tuples (${kcheck.getAs[Long]("n")}" +
-        s" rows over ${kcheck.getAs[Long]("d")} distinct keys) — dedup " +
-        s"with latestPerKey before merge: $table")
-    val srcKeys = src.select(pk.map(col): _*).distinct()
     val snap = DeltaLog.readInternal(spark, table, st,
       _ => true, Map.empty, tagRel = true) // cols + __graft_rel, __graft_pos
+    val split = graft.cdc.Cdc.splitMerge(snap.drop("__graft_rel", "__graft_pos"),
+      stagedAligned, pk, insertFilter, table)
     // merge-on-read when the table's own configuration enables DVs:
     // matched rows are MARKED in their files instead of rewritten
     val dvMode = st.configuration.getOrElse(
@@ -224,33 +212,26 @@ object DeltaWrite {
     // one distributed semi-join; the driver collects the file paths
     // (copy-on-write, bounded by file count) or the matched rows'
     // (file, row index) pairs (DV mode, bounded by the batch)
-    val hits = snap.join(srcKeys, pk, "left_semi")
+    val hits = snap.join(split.keys, pk, "left_semi")
       .select((if (dvMode) Seq("__graft_rel", "__graft_pos")
         else Seq("__graft_rel")).map(col): _*)
       .distinct().collect()
     val affected = hits.map(_.getString(0)).toSet
-    val snapCols = snap.drop("__graft_rel", "__graft_pos")
-    val liveKeys = snapCols.select(pk.map(col): _*).distinct()
-    val preimages = snapCols.join(srcKeys, pk, "left_semi")
-    val postimages = src.join(liveKeys, pk, "left_semi")
-    val inserts0 = src.join(liveKeys, pk, "left_anti")
-    val inserts = insertFilter.map(inserts0.filter).getOrElse(inserts0)
     // the evolved schema rides the same commit as its first data —
     // readers at this version and later see the new column (NULL for
     // pre-evolution rows), time travel below it sees the old shape; the
     // table id stays the one the log already carries
     val metaActions: Seq[Action] =
       if (newFields.isEmpty) Seq.empty else Seq(st.metaData)
-    if (affected.isEmpty && inserts.isEmpty) {
+    val next = st.version + 1
+    if (affected.isEmpty && split.inserts.isEmpty) {
       // nothing matched and nothing inserts — but a batch that CARRIES a
       // schema evolution must not silently defer it (the caller's
       // watermark advances either way): commit the metaData-only change
       if (newFields.isEmpty) return st.version
-      val next = st.version + 1
       DeltaLog.writeCommit(table, st, next, metaActions.map(_.json), nowMs)
       return next
     }
-    val next = st.version + 1
     // copy-on-write rewrites each touched file's surviving rows next to
     // the postimages and inserts; DV mode writes only the new rows and
     // marks the matched ones through the one DV write step
@@ -263,28 +244,26 @@ object DeltaWrite {
       } else (Seq(snap
         .filter(col("__graft_rel").isInCollection(
           if (affected.isEmpty) Set("") else affected))
-        .join(srcKeys, pk, "left_anti")
+        .join(split.keys, pk, "left_anti")
         .drop("__graft_rel", "__graft_pos")),
         affected.toSeq.sorted.map(Remove(_, dataChange = true)))
     val written = writeDataFiles(spark, table, st,
-      (kept :+ postimages :+ inserts).reduce(_ unionByName _)
+      (kept :+ split.postimages :+ split.inserts).reduce(_ unionByName _)
         .select(cols.map(col): _*),
       s"merge-$next")
     val adds = addActions(spark, table, st, written, dataChange = true)
     val cdcActions: Seq[Action] =
       if (!cdfEnabled) Seq.empty
       else {
-        val changes = preimages
+        val changes = split.preimages
           .withColumn("_change_type", lit("update_preimage"))
-          .unionByName(postimages
+          .unionByName(split.postimages
             .withColumn("_change_type", lit("update_postimage")))
-          .unionByName(inserts.withColumn("_change_type", lit("insert")))
+          .unionByName(split.inserts.withColumn("_change_type", lit("insert")))
         val dataCols = cols.filterNot(st.partitionColumns.contains)
         val cdcFiles = writeDataFiles(spark, table,
-          st.copy(schema = StructType(st.schema.fields.filter(f =>
-            dataCols.contains(f.name) || st.partitionColumns.contains(f.name)) :+
-            org.apache.spark.sql.types.StructField("_change_type",
-              org.apache.spark.sql.types.StringType))),
+          st.copy(schema = StructType(st.schema.fields :+
+            StructField("_change_type", StringType))),
           changes.select((dataCols :+ "_change_type").map(col) ++
             st.partitionColumns.map(col): _*),
           s"cdc-$next", subdir = "_change_data")

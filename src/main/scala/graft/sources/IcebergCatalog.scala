@@ -942,9 +942,8 @@ object IcebergCatalog {
     * at `nextSeq` — the delete (covering strictly-older files only)
     * removes the matched keys' old rows, the appended rows carry their
     * new values, and nothing is rewritten. Soft deletes stay as
-    * flagged rows (the replica contract); unmatched staged rows insert
-    * only when they pass `insertFilter` (the reference MERGE's
-    * `WHERE s.IS_DELETED = 'N'` guard).
+    * flagged rows; [[graft.cdc.Cdc.splitMerge]] validates the batch and
+    * splits it into updates and guarded inserts.
     *
     * Scale shape: PURE merge-on-read — the commit writes O(staged)
     * bytes (one delete parquet + the staged rows), touches no existing
@@ -964,30 +963,16 @@ object IcebergCatalog {
                   timestampMs: Long = -1L): Long = {
     val st = state(spark, table)
     val cols = st.schema.fieldNames.toSeq
-    require(pk.nonEmpty && pk.forall(cols.contains),
-      s"merge pk ${pk.mkString(",")} not in table columns")
     require(staged.columns.toSet == cols.toSet,
       s"merge schema mismatch: table=${cols.mkString(",")} " +
         s"staged=${staged.columns.mkString(",")}")
     require(st.eqDeletes.forall(_._3 > 0L),
       "merge into a table with unsequenced equality deletes: they scope " +
         "the WHOLE live set and would retroactively cover the merged rows")
-    val src = staged.select(cols.map(col): _*)
-    // staged batches must be unique per pk — one aggregate, loud reject
-    val kcheck = src.agg(count(lit(1)).as("n"),
-      count_distinct(pk.map(col).head, pk.map(col).tail: _*).as("d")).head()
-    require(kcheck.getAs[Long]("n") == kcheck.getAs[Long]("d"),
-      s"staged batch holds duplicate pk tuples (${kcheck.getAs[Long]("n")}" +
-        s" rows over ${kcheck.getAs[Long]("d")} distinct keys) — dedup " +
-        s"with latestPerKey before merge: $table")
-    val liveKeys = read(spark, table).select(pk.map(col): _*).distinct()
-    val matchedKeys = src.select(pk.map(col): _*).join(liveKeys, pk, "left_semi")
-    val matched = src.join(liveKeys, pk, "left_semi")
-    val inserts0 = src.join(liveKeys, pk, "left_anti")
-    val inserts = insertFilter.map(inserts0.filter).getOrElse(inserts0)
+    val split = graft.cdc.Cdc.splitMerge(read(spark, table), staged, pk, insertFilter, table)
+    val matchedKeys = split.postimages.select(pk.map(col): _*)
     val nMatched = matchedKeys.count()
-    val toWrite = matched.unionByName(inserts)
-    if (nMatched == 0 && inserts.isEmpty) return st.snapshotId
+    if (nMatched == 0 && split.inserts.isEmpty) return st.snapshotId
     val seq = nextSeq(st)
     val delEntries =
       if (nMatched == 0) Seq.empty
@@ -1001,7 +986,8 @@ object IcebergCatalog {
         Seq(ManifestEntry(1, edAbs.toString, 2, Map.empty,
           equalityIds = ids, seq = seq))
       }
-    val dataEntries = writeDataEntries(spark, table, st, toWrite,
+    val dataEntries = writeDataEntries(spark, table, st,
+      split.postimages.unionByName(split.inserts),
       s"merge-$snapshotId", seq)
     appendSnapshot(table, st, delEntries ++ dataEntries, snapshotId,
       "merge", timestampMs)

@@ -1,9 +1,10 @@
 package graft.cdc
 
 import graft.SparkTestSession
-import java.nio.file.Files
+import graft.TempDirs.withTempDir
+import graft.sources.DeltaLog
 import java.sql.Timestamp
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
@@ -31,40 +32,41 @@ class PipelineSpec extends AnyFunSuite {
   val edges = Seq("cust" -> "ord")
 
   test("two incremental runs converge the replica and advance watermarks") {
-    val dir = Files.createTempDirectory("graft_pipe").toString
-    val target = new Pipeline.ParquetTarget(spark, dir)
+    withTempDir("graft_pipe") { dir =>
+      def read(t: String) = DeltaLog.read(spark, s"$dir/$t")
 
-    // ── run 1: initial full load ──
-    val src1 = Map(
-      "cust" -> customers(Seq(
-        (1L, "alice", "2024-01-01 00:00:00", None, "N"),
-        (2L, "bob", "2024-01-02 00:00:00", None, "N"))),
-      "ord" -> customers(Seq(
-        (10L, "o-alice", "2024-01-03 00:00:00", None, "N"))))
-    val (rep1, wm1) = Pipeline.replicate(specs, edges, src1(_),
-      target.read, target.write, Map.empty)
-    assert(rep1.processed == 2 && rep1.failed == 0)
-    assert(target.read("cust").get.count() == 2)
-    assert(wm1("cust") == ts("2024-01-02 00:00:00"))
-    // parents load before children
-    assert(rep1.results.map(_.table) == Seq("cust", "ord"))
+      // ── run 1: initial full load ──
+      val src1 = Map(
+        "cust" -> customers(Seq(
+          (1L, "alice", "2024-01-01 00:00:00", None, "N"),
+          (2L, "bob", "2024-01-02 00:00:00", None, "N"))),
+        "ord" -> customers(Seq(
+          (10L, "o-alice", "2024-01-03 00:00:00", None, "N"))))
+      val (rep1, wm1) = Pipeline.replicateDelta(spark, specs, edges, src1(_),
+        dir.toString, Map.empty)
+      assert(rep1.processed == 2 && rep1.failed == 0)
+      assert(read("cust").count() == 2)
+      assert(wm1("cust") == ts("2024-01-02 00:00:00"))
+      // parents load before children
+      assert(rep1.results.map(_.table) == Seq("cust", "ord"))
 
-    // ── run 2: update, insert, soft delete, and one unchanged table ──
-    val src2 = Map(
-      "cust" -> customers(Seq(
-        (1L, "alice", "2024-01-01 00:00:00", None, "N"),                       // unchanged (pre-watermark)
-        (2L, "bob2", "2024-01-02 00:00:00", Some("2024-02-01 00:00:00"), "N"), // update
-        (3L, "carol", "2024-02-02 00:00:00", None, "N"),                       // insert
-        (1L, "alice", "2024-01-01 00:00:00", Some("2024-02-03 00:00:00"), "Y"))), // soft delete (new version row)
-      "ord" -> src1("ord")) // no changes
-    val (rep2, wm2) = Pipeline.replicate(specs, edges, src2(_),
-      target.read, target.write, wm1)
-    assert(rep2.processed == 1 && rep2.noChanges == 1)
-    val cust = target.read("cust").get.orderBy("id")
-      .select("id", "name", "is_deleted").as[(Long, String, String)].collect().toSeq
-    assert(cust == Seq((1L, "alice", "Y"), (2L, "bob2", "N"), (3L, "carol", "N")))
-    assert(wm2("cust") == ts("2024-02-03 00:00:00"))
-    assert(wm2("ord") == wm1("ord")) // untouched watermark survives
+      // ── run 2: update, insert, soft delete, and one unchanged table ──
+      val src2 = Map(
+        "cust" -> customers(Seq(
+          (1L, "alice", "2024-01-01 00:00:00", None, "N"),                       // unchanged (pre-watermark)
+          (2L, "bob2", "2024-01-02 00:00:00", Some("2024-02-01 00:00:00"), "N"), // update
+          (3L, "carol", "2024-02-02 00:00:00", None, "N"),                       // insert
+          (1L, "alice", "2024-01-01 00:00:00", Some("2024-02-03 00:00:00"), "Y"))), // soft delete (new version row)
+        "ord" -> src1("ord")) // no changes
+      val (rep2, wm2) = Pipeline.replicateDelta(spark, specs, edges, src2(_),
+        dir.toString, wm1)
+      assert(rep2.processed == 1 && rep2.noChanges == 1)
+      val cust = read("cust").orderBy("id")
+        .select("id", "name", "is_deleted").as[(Long, String, String)].collect().toSeq
+      assert(cust == Seq((1L, "alice", "Y"), (2L, "bob2", "N"), (3L, "carol", "N")))
+      assert(wm2("cust") == ts("2024-02-03 00:00:00"))
+      assert(wm2("ord") == wm1("ord")) // untouched watermark survives
+    }
   }
 
   test("the FK scheduler: parents first, independent roots together, failures isolated, cycles last") {
@@ -79,28 +81,29 @@ class PipelineSpec extends AnyFunSuite {
       n -> customers(Seq((i.toLong, n, s"2024-01-0${i + 1} 00:00:00", None, "N")))
     }.toMap
     val fWatermark = ts("2023-12-31 00:00:00")
-    val target = new Pipeline.ParquetTarget(spark,
-      Files.createTempDirectory("graft_sched").toString)
-    // write-step start and end times, the caller's local property as each
-    // step sees it, and a latch both independent roots must reach
+    // the rows each write step was handed, its start and end times, the
+    // caller's local property as it sees it, and a latch both
+    // independent roots must reach
+    val written = new ConcurrentHashMap[String, Seq[Row]]()
     val spans = new ConcurrentHashMap[String, (Long, Long)]()
     val seenProp = new ConcurrentHashMap[String, String]()
     val roots = new CountDownLatch(2)
     val rootsMet = new ConcurrentHashMap[String, java.lang.Boolean]()
-    def write(t: String, df: DataFrame): Unit = {
+    def write(spec: Pipeline.TableSpec, staged: DataFrame): Unit = {
+      val t = spec.name
       val t0 = System.nanoTime()
       seenProp.put(t, String.valueOf(spark.sparkContext.getLocalProperty("graft.spec.caller")))
       if (t == "a" || t == "b") {
         roots.countDown()
         rootsMet.put(t, roots.await(60, TimeUnit.SECONDS))
       }
-      target.write(t, df)
+      written.put(t, staged.orderBy("id").collect().toSeq)
       spans.put(t, (t0, System.nanoTime()))
     }
     spark.sparkContext.setLocalProperty("graft.spec.caller", "pipeline-spec")
-    val (rep, wm) = try Pipeline.replicate(sSpecs, sEdges,
+    val (rep, wm) = try Pipeline.replicateScheduled(spark, sSpecs, sEdges,
         t => if (t == "f") throw new RuntimeException("boom: f unavailable") else src(t),
-        target.read, write, Map("f" -> fWatermark))
+        Map("f" -> fWatermark))(write)
       finally spark.sparkContext.setLocalProperty("graft.spec.caller", null)
 
     // results in TopoSort.order; every table but f processed
@@ -114,8 +117,7 @@ class PipelineSpec extends AnyFunSuite {
       n -> (if (n == "f") fWatermark else ts(s"2024-01-0${i + 1} 00:00:00"))
     }.toMap)
     for (n <- names.filter(_ != "f"))
-      assert(target.read(n).get.orderBy("id").collect().toSeq ==
-        src(n).collect().toSeq, n)
+      assert(written.get(n) == src(n).collect().toSeq, n)
     // the two independent roots were in their write steps at the same time
     assert(rootsMet.get("a") && rootsMet.get("b"), rootsMet)
     // a child starts only after all its parents have ended (f wrote nothing)
@@ -136,85 +138,74 @@ class PipelineSpec extends AnyFunSuite {
     import java.util.concurrent.{CountDownLatch, TimeUnit}
     val bStarted = new CountDownLatch(1)
     @volatile var aEnded = false
-    val target = new Pipeline.ParquetTarget(spark,
-      Files.createTempDirectory("graft_sched_fatal").toString)
     val src = customers(Seq((1L, "a", "2024-01-01 00:00:00", None, "N")))
     intercept[NotImplementedError] {
-      Pipeline.replicate(Seq("a", "b").map(n => Pipeline.TableSpec(n, Seq("id"))), Nil,
+      Pipeline.replicateScheduled(spark, Seq("a", "b").map(n => Pipeline.TableSpec(n, Seq("id"))), Nil,
         t => if (t == "b") { bStarted.countDown(); throw new NotImplementedError("b") } else src,
-        target.read, (t, df) => {
+        Map.empty) { (_, staged) =>
           bStarted.await(60, TimeUnit.SECONDS)
           Thread.sleep(200)
-          target.write(t, df)
+          staged.collect()
           aEnded = true
-        }, Map.empty)
+        }
     }
     assert(aEnded, "a step in flight outlived the call")
   }
 
   test("schema evolution: source adds a column mid-stream; target backfills nulls") {
-    val dir = Files.createTempDirectory("graft_pipe3").toString
-    val target = new Pipeline.ParquetTarget(spark, dir)
-    val onlyCust = Seq(Pipeline.TableSpec("cust", Seq("id")))
-    val src1 = Map("cust" -> customers(Seq(
-      (1L, "alice", "2024-01-01 00:00:00", None, "N"))))
-    val (_, wm1) = Pipeline.replicate(onlyCust, Nil, src1(_), target.read, target.write, Map.empty)
+    withTempDir("graft_pipe3") { dir =>
+      val onlyCust = Seq(Pipeline.TableSpec("cust", Seq("id")))
+      val src1 = Map("cust" -> customers(Seq(
+        (1L, "alice", "2024-01-01 00:00:00", None, "N"))))
+      val (_, wm1) = Pipeline.replicateDelta(spark, onlyCust, Nil, src1(_), dir.toString, Map.empty)
 
-    // run 2: source gained a `tier` column
-    val src2 = customers(Seq(
-      (2L, "bob", "2024-02-01 00:00:00", None, "N")))
-      .withColumn("tier", lit("gold"))
-    val (rep2, _) = Pipeline.replicate(onlyCust, Nil, _ => src2, target.read, target.write, wm1)
-    assert(rep2.processed == 1)
-    val got = target.read("cust").get.orderBy("id")
-      .select("id", "name", "tier").as[(Long, String, Option[String])].collect().toSeq
-    assert(got == Seq((1L, "alice", None), (2L, "bob", Some("gold"))))
-  }
-
-  test("migrationDdl emits ADD for source-added columns only") {
-    val target = Seq((1L, "a")).toDF("id", "name")
-    val staged = Seq((2L, 3.5, true)).toDF("id", "score", "active") // name dropped
-    val ddl = Pipeline.migrationDdl(target, staged, "CUST")
-    assert(ddl == Seq(
-      "ALTER TABLE CUST ADD score DOUBLE",
-      "ALTER TABLE CUST ADD active BOOLEAN"))
+      // run 2: source gained a `tier` column
+      val src2 = customers(Seq(
+        (2L, "bob", "2024-02-01 00:00:00", None, "N")))
+        .withColumn("tier", lit("gold"))
+      val (rep2, _) = Pipeline.replicateDelta(spark, onlyCust, Nil, _ => src2, dir.toString, wm1)
+      assert(rep2.processed == 1)
+      val got = DeltaLog.read(spark, s"$dir/cust").orderBy("id")
+        .select("id", "name", "tier").as[(Long, String, Option[String])].collect().toSeq
+      assert(got == Seq((1L, "alice", None), (2L, "bob", Some("gold"))))
+    }
   }
 
   test("a failing table is isolated; the run continues (reference :348-352)") {
-    val dir = Files.createTempDirectory("graft_pipe2").toString
-    val target = new Pipeline.ParquetTarget(spark, dir)
-    val src: String => DataFrame = {
-      case "cust" => customers(Seq((1L, "a", "2024-01-01 00:00:00", None, "N")))
-      case "ord"  => throw new RuntimeException("boom: source unavailable")
+    withTempDir("graft_pipe2") { dir =>
+      val src: String => DataFrame = {
+        case "cust" => customers(Seq((1L, "a", "2024-01-01 00:00:00", None, "N")))
+        case "ord"  => throw new RuntimeException("boom: source unavailable")
+      }
+      val (rep, wm) = Pipeline.replicateDelta(spark, specs, edges, src, dir.toString, Map.empty)
+      assert(rep.processed == 1 && rep.failed == 1)
+      assert(rep.results.find(_.table == "ord").get.error.get.contains("boom"))
+      assert(wm.contains("cust") && !wm.contains("ord"))
     }
-    val (rep, wm) = Pipeline.replicate(specs, edges, src, target.read, target.write, Map.empty)
-    assert(rep.processed == 1 && rep.failed == 1)
-    assert(rep.results.find(_.table == "ord").get.error.get.contains("boom"))
-    assert(wm.contains("cust") && !wm.contains("ord"))
   }
 
   test("a failure with a null message still yields a writable run report") {
-    val dir = Files.createTempDirectory("graft_pipe_nullmsg").toString
-    val target = new Pipeline.ParquetTarget(spark, dir)
-    val src: String => DataFrame = {
-      case "cust" => customers(Seq((1L, "a", "2024-01-01 00:00:00", None, "N")))
-      case "ord"  => throw new IllegalStateException()
+    withTempDir("graft_pipe_nullmsg") { dir =>
+      val src: String => DataFrame = {
+        case "cust" => customers(Seq((1L, "a", "2024-01-01 00:00:00", None, "N")))
+        case "ord"  => throw new IllegalStateException()
+      }
+      val (rep, _) = Pipeline.replicateDelta(spark, specs, edges, src, s"$dir/lake", Map.empty)
+      val err = rep.results.find(_.table == "ord").get.error
+      assert(err == Some("java.lang.IllegalStateException"), err)
+      val f = Pipeline.writeRunReport(rep, s"$dir/runlog")
+      val lines = {
+        val s = scala.io.Source.fromFile(f); try s.getLines().toVector finally s.close()
+      }
+      assert(lines.size == 3)
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      assert(json.readTree(lines(1)).get("error").asText() == "java.lang.IllegalStateException")
+      lines.foreach(json.readTree)
     }
-    val (rep, _) = Pipeline.replicate(specs, edges, src, target.read, target.write, Map.empty)
-    val err = rep.results.find(_.table == "ord").get.error
-    assert(err == Some("java.lang.IllegalStateException"), err)
-    val f = Pipeline.writeRunReport(rep, Files.createTempDirectory("graft_runlog2").toString)
-    val lines = {
-      val s = scala.io.Source.fromFile(f); try s.getLines().toVector finally s.close()
-    }
-    assert(lines.size == 3)
-    val json = new com.fasterxml.jackson.databind.ObjectMapper()
-    assert(json.readTree(lines(1)).get("error").asText() == "java.lang.IllegalStateException")
-    lines.foreach(json.readTree)
   }
 
-  test("parquet, Delta and Iceberg targets agree through the shared CDC step") {
-    import graft.sources.{DeltaLog, IcebergCatalog}
+  test("Delta and Iceberg targets agree with the mergeSoftDelete reference") {
+    import graft.sources.IcebergCatalog
     val run1 = Map(
       "cust" -> customers(Seq(
         (1L, "alice", "2024-01-01 00:00:00", None, "N"),
@@ -245,56 +236,65 @@ class PipelineSpec extends AnyFunSuite {
     def liveChecksums(read: String => DataFrame) = Seq("cust", "ord").map(t =>
       Cdc.tableChecksum(read(t).filter(col(Cdc.IsDeleted) === "N"), cols).head())
 
-    val pq = new Pipeline.ParquetTarget(spark, Files.createTempDirectory("graft_par_pq").toString)
-    val deltaDir = Files.createTempDirectory("graft_par_delta").toString
-    val icebergDir = Files.createTempDirectory("graft_par_ice").toString
-    val viaParquet = twoRuns((src, wm) =>
-      Pipeline.replicate(specs, edges, src(_), pq.read, pq.write, wm))
-    val viaDelta = twoRuns((src, wm) =>
-      Pipeline.replicateDelta(spark, specs, edges, src(_), deltaDir, wm))
-    val viaIceberg = twoRuns((src, wm) =>
-      Pipeline.replicateIceberg(spark, specs, edges, src(_), icebergDir, wm))
+    // the reference replica: the live rows on the first load, then
+    // Cdc.mergeSoftDelete of each staged batch into the kept state
+    val reference = new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
+    val viaReference = twoRuns((src, wm) =>
+      Pipeline.replicateScheduled(spark, specs, edges, src(_), wm) { (spec, staged) =>
+        reference.put(spec.name, Option(reference.get(spec.name))
+          .fold(staged.filter(col(Cdc.IsDeleted) === "N"))(Cdc.mergeSoftDelete(_, staged, spec.pk)))
+      })
+    withTempDir("graft_par_delta") { deltaDir =>
+      withTempDir("graft_par_ice") { icebergDir =>
+        val viaDelta = twoRuns((src, wm) =>
+          Pipeline.replicateDelta(spark, specs, edges, src(_), deltaDir.toString, wm))
+        val viaIceberg = twoRuns((src, wm) =>
+          Pipeline.replicateIceberg(spark, specs, edges, src(_), icebergDir.toString, wm))
 
-    val (reports, watermarks) = viaParquet
-    assert(reports(1) == Seq(
-      ("cust", "processed", 5L, Some(ts("2024-02-03 00:00:00"))),
-      ("ord", "no_changes", 0L, Some(ts("2024-01-04 00:00:00")))), reports)
-    assert(watermarks(1) == Map(
-      "cust" -> ts("2024-02-03 00:00:00"), "ord" -> ts("2024-01-04 00:00:00")))
-    assert(viaDelta == viaParquet)
-    assert(viaIceberg == viaParquet)
+        val (reports, watermarks) = viaReference
+        assert(reports(1) == Seq(
+          ("cust", "processed", 5L, Some(ts("2024-02-03 00:00:00"))),
+          ("ord", "no_changes", 0L, Some(ts("2024-01-04 00:00:00")))), reports)
+        assert(watermarks(1) == Map(
+          "cust" -> ts("2024-02-03 00:00:00"), "ord" -> ts("2024-01-04 00:00:00")))
+        assert(viaDelta == viaReference)
+        assert(viaIceberg == viaReference)
 
-    val want = liveChecksums(t => pq.read(t).get)
-    assert(want.map(_.getLong(0)) == Seq(3L, 2L)) // cust 2,3,4 and both orders live
-    assert(liveChecksums(t => DeltaLog.read(spark, s"$deltaDir/$t")) == want)
-    assert(liveChecksums(t => IcebergCatalog.read(spark, s"$icebergDir/$t")) == want)
+        val want = liveChecksums(reference.get)
+        assert(want.map(_.getLong(0)) == Seq(3L, 2L)) // cust 2,3,4 and both orders live
+        assert(liveChecksums(t => DeltaLog.read(spark, s"$deltaDir/$t")) == want)
+        assert(liveChecksums(t => IcebergCatalog.read(spark, s"$icebergDir/$t")) == want)
+      }
+    }
   }
 
   test("writeRunReport persists a timestamped JSONL artifact per run") {
-    val dir = Files.createTempDirectory("graft_runlog").toString
-    val rep = Pipeline.RunReport(Seq(
-      Pipeline.TableResult("cust", "processed", 5,
-        Some(java.sql.Timestamp.valueOf("2024-01-02 00:00:00")), started = 0.25, seconds = 3.5),
-      Pipeline.TableResult("ord", "failed", 0, None,
-        error = Some("boom: \"quoted\"\r\n\tline2"), started = 3.75, seconds = 0.0625)))
-    val at = java.time.Instant.parse("2024-01-02T03:04:05Z")
-    val f = Pipeline.writeRunReport(rep, dir, at)
-    assert(f.getName == "cdc_run_20240102_030405_000000000.jsonl")
-    val lines = {
-      val s = scala.io.Source.fromFile(f); try s.getLines().toVector finally s.close()
+    withTempDir("graft_runlog") { runlog =>
+      val dir = runlog.toString
+      val rep = Pipeline.RunReport(Seq(
+        Pipeline.TableResult("cust", "processed", 5,
+          Some(java.sql.Timestamp.valueOf("2024-01-02 00:00:00")), started = 0.25, seconds = 3.5),
+        Pipeline.TableResult("ord", "failed", 0, None,
+          error = Some("boom: \"quoted\"\r\n\tline2"), started = 3.75, seconds = 0.0625)))
+      val at = java.time.Instant.parse("2024-01-02T03:04:05Z")
+      val f = Pipeline.writeRunReport(rep, dir, at)
+      assert(f.getName == "cdc_run_20240102_030405_000000000.jsonl")
+      val lines = {
+        val s = scala.io.Source.fromFile(f); try s.getLines().toVector finally s.close()
+      }
+      assert(lines.size == 3)
+      assert(lines(0).contains("\"table\":\"cust\"") && lines(0).contains("\"rows\":5"))
+      // every control char escaped — the artifact must stay parseable JSONL
+      assert(lines(1).contains("\\\"quoted\\\"") &&
+        lines(1).contains("\\u000d\\u000a\\u0009"))
+      assert(lines(2).contains("\"processed\":1") && lines(2).contains("\"failed\":1"))
+      // per-table start (seconds from the run's start) and wall time
+      val json = new com.fasterxml.jackson.databind.ObjectMapper()
+      assert(lines.take(2).map(json.readTree).map(j =>
+        (j.get("started").asDouble, j.get("seconds").asDouble)) == Seq((0.25, 3.5), (3.75, 0.063)))
+      // runs in the SAME second land in distinct files (nanosecond field)
+      val f2 = Pipeline.writeRunReport(rep, dir, at.plusNanos(1))
+      assert(f2.exists() && f.exists() && f2.getName != f.getName)
     }
-    assert(lines.size == 3)
-    assert(lines(0).contains("\"table\":\"cust\"") && lines(0).contains("\"rows\":5"))
-    // every control char escaped — the artifact must stay parseable JSONL
-    assert(lines(1).contains("\\\"quoted\\\"") &&
-      lines(1).contains("\\u000d\\u000a\\u0009"))
-    assert(lines(2).contains("\"processed\":1") && lines(2).contains("\"failed\":1"))
-    // per-table start (seconds from the run's start) and wall time
-    val json = new com.fasterxml.jackson.databind.ObjectMapper()
-    assert(lines.take(2).map(json.readTree).map(j =>
-      (j.get("started").asDouble, j.get("seconds").asDouble)) == Seq((0.25, 3.5), (3.75, 0.063)))
-    // runs in the SAME second land in distinct files (nanosecond field)
-    val f2 = Pipeline.writeRunReport(rep, dir, at.plusNanos(1))
-    assert(f2.exists() && f.exists() && f2.getName != f.getName)
   }
 }

@@ -28,6 +28,15 @@ class SchemaCloneSpec extends AnyFunSuite {
     assert(ddls.head == "ALTER TABLE t1 ADD COLUMN amount DECIMAL(12,2)")
   }
 
+  test("migrationDdl emits ADD for source-added columns only") {
+    val target = StructType(Seq(StructField("id", LongType), StructField("name", StringType)))
+    val staged = StructType(Seq(StructField("id", LongType), // name dropped
+      StructField("score", DoubleType), StructField("active", BooleanType)))
+    assert(SchemaClone.migrationDdl("CUST", staged, target) == Seq(
+      "ALTER TABLE CUST ADD COLUMN score DOUBLE",
+      "ALTER TABLE CUST ADD COLUMN active BOOLEAN"))
+  }
+
   test("round trip: ddl for every test table type is non-empty") {
     Seq(IntegerType, FloatType, DoubleType, BooleanType, DateType, BinaryType,
       MapType(StringType, LongType)).foreach { dt =>

@@ -54,13 +54,9 @@ class DeltaLogSpec extends AnyFunSuite {
   }
 
   private def writeDataFile(df: DataFrame, table: Path, rel: String): Unit = {
-    val tmp = Files.createTempDirectory("deltafile")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
     val target = table.resolve(rel)
     Files.createDirectories(target.getParent)
-    Files.move(part, target)
+    writeParquetAs(df, target)
   }
 
   /** The shared fixture table, log as JSON commits only:
@@ -128,12 +124,8 @@ class DeltaLogSpec extends AnyFunSuite {
       CkRow(None, Some(CkRemove("part=a/f1.parquet")), None),
       CkRow(None, None, Some(CkMeta(schemaV0.json, Seq("part")))))
     val ckDf = ckRows.toDS.toDF()
-    val tmp = Files.createTempDirectory("deltack")
-    ckDf.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
     val logDir = t.resolve("_delta_log")
-    Files.move(part, logDir.resolve(f"${2L}%020d.checkpoint.parquet"))
+    writeParquetAs(ckDf, logDir.resolve(f"${2L}%020d.checkpoint.parquet"))
     Seq(0L, 1L, 2L).foreach(v =>
       Files.delete(logDir.resolve(f"$v%020d.json")))
     assert(rows(DeltaLog.read(spark, t.toString)) == full)
@@ -150,13 +142,14 @@ class DeltaLogSpec extends AnyFunSuite {
       CkRow(None, None, Some(CkMeta(schemaV0.json, Seq("part")))))
   }
 
-  private def writeParquetAs(df: DataFrame, target: Path): Unit = {
-    val tmp = Files.createTempDirectory("deltack")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    Files.move(part, target)
-  }
+  /** `df` as the one parquet file `target`; Spark's output dir is removed. */
+  private def writeParquetAs(df: DataFrame, target: Path): Unit =
+    graft.TempDirs.withTempDir("deltafile") { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      Files.move(part, target)
+    }
 
   test("retention-trimmed log with no recognizable checkpoint fails loudly") {
     val t = buildTable()

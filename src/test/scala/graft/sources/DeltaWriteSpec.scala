@@ -166,10 +166,22 @@ class DeltaWriteSpec extends AnyFunSuite {
     assert(e.getMessage.contains("appendOnly"), e.getMessage)
   }
 
+  test("merge rejects a staged null key by its own message") {
+    val t = mkTable()
+    val e = intercept[IllegalArgumentException] {
+      DeltaWrite.merge(spark, t,
+        Seq((Option.empty[Long], "a", 1L, "N")).toDF("id", "part", "cents", "is_deleted"),
+        Seq("id"))
+    }
+    assert(e.getMessage.contains("1 rows with a null pk part (id)") &&
+      e.getMessage.endsWith(t), e.getMessage)
+    assert(DeltaLog.state(spark, t).version == 0L)
+  }
+
   test("merge schema evolution: added column joins the log, dropped column retained (r13)") {
     val t = mkTable()
-    // staged ADDS `note` and DROPS `cents` — alignSchemas' contract at
-    // the transaction log
+    // staged ADDS `note` and DROPS `cents`: the new column joins the table,
+    // the dropped one is retained with NULL for the staged rows
     val staged = Seq((1L, "a", "hot", "N"), (5L, "a", "new", "N"))
       .toDF("id", "part", "note", "is_deleted")
     val v = DeltaWrite.merge(spark, t, staged, Seq("id"),

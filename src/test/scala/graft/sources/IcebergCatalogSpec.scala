@@ -69,16 +69,16 @@ class IcebergCatalogSpec extends AnyFunSuite {
     w.close()
   }
 
-  private def writeDataFile(df: DataFrame, table: Path, rel: String): String = {
-    val tmp = Files.createTempDirectory("icefile")
-    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-    val part = Files.list(tmp).iterator().asScala
-      .find(_.getFileName.toString.endsWith(".parquet")).get
-    val target = table.resolve(rel)
-    Files.createDirectories(target.getParent)
-    Files.move(part, target)
-    target.toString
-  }
+  private def writeDataFile(df: DataFrame, table: Path, rel: String): String =
+    graft.TempDirs.withTempDir("icefile") { tmp =>
+      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = Files.list(tmp).iterator().asScala
+        .find(_.getFileName.toString.endsWith(".parquet")).get
+      val target = table.resolve(rel)
+      Files.createDirectories(target.getParent)
+      Files.move(part, target)
+      target.toString
+    }
 
   private def metadataJson(current: Long,
                            snaps: Seq[(Long, Path)]): String = {
@@ -830,6 +830,24 @@ class IcebergCatalogSpec extends AnyFunSuite {
     // the counts match DeltaWrite.merge's message
     assert(e.getMessage.contains("duplicate pk tuples (2 rows over 1 distinct keys)"),
       e.getMessage)
+  }
+
+  test("commitMerge rejects a staged null key part by its own message") {
+    graft.TempDirs.withTempDir("ice_nullkey") { dir =>
+      val t = dir.toString
+      IcebergCatalog.createTable(t, Seq(("id", "long", true), ("v", "string", false)))
+      val s1 = IcebergCatalog.commitAppend(spark, t, Seq((1L, "a")).toDF("id", "v"),
+        IcebergCatalog.nextSnapshotId(t))
+      // one null part of a two-column key: count_distinct skips the row
+      val e = intercept[IllegalArgumentException] {
+        IcebergCatalog.commitMerge(spark, t,
+          Seq((1L, Some("a")), (2L, None)).toDF("id", "v"), Seq("id", "v"),
+          IcebergCatalog.nextSnapshotId(t))
+      }
+      assert(e.getMessage.contains("1 rows with a null pk part (id,v)") &&
+        e.getMessage.endsWith(t), e.getMessage)
+      assert(IcebergCatalog.state(spark, t).snapshotId == s1)
+    }
   }
 
   test("rewriteDataFiles folds deletes in; history stays travelable (r14)") {
